@@ -56,7 +56,7 @@ class Size:
 
 SIZES = {
     "full": Size(serve_docs=1000, warm_docs=50, batch_docs=300,
-                 sel_rate=0.6, heavy_rate=0.1, decode_probes=12),
+                 sel_rate=1.2, heavy_rate=0.1, decode_probes=12),
     "tiny": Size(serve_docs=300, warm_docs=50, batch_docs=100,
                  sel_rate=0.2, heavy_rate=0.1, decode_probes=2),
 }
