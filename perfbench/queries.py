@@ -30,10 +30,12 @@ WARMUP_SEED_OFFSET = 1_000_003
 
 SELECTIVE_SHAPES = ("search", "prefix", "fuzzy", "suggest", "conj", "group", "mlt", "url")
 HEAVY_SHAPES = ("sort", "wand", "auto", "dv_filter", "dv_sort", "facet")
-# ingest-fresh cycle: plain head-term searches (the sort placement) are half
-# the mix.  They are the commonest head-term query, and with one shape in the
-# majority the median falls inside that shape's latencies instead of on the
-# boundary between two shapes, where it moves with the seed.
+# Both cycles give plain searches half the slots.  They are the commonest
+# query, and with one shape in the majority the median falls inside that
+# shape's latencies instead of on the boundary between two shapes, where it
+# moves with the seed.
+SELECTIVE_CYCLE = ("search", "prefix", "search", "fuzzy", "search", "suggest", "search",
+                   "conj", "search", "group", "search", "mlt", "search", "url")
 HEAVY_CYCLE = ("sort", "wand", "sort", "auto", "sort", "dv_filter", "sort", "dv_sort",
                "sort", "facet")
 
@@ -86,8 +88,15 @@ def write_parquet(tbl: pa.Table, path: str) -> str:
 
 
 def _zipf_stream(rng: np.random.Generator, pool: list, n: int) -> list:
+    """``n`` draws from ``pool`` in which the query of rank r appears in
+    proportion to 1/r.  The counts are fixed by ``n`` (largest remainder), not
+    sampled, so every seed repeats its queries in the same pattern; the seed
+    picks the queries and their order."""
     w = 1.0 / np.arange(1, len(pool) + 1)
-    idx = rng.choice(len(pool), size=n, p=w / w.sum())
+    share = n * w / w.sum()
+    counts = np.floor(share).astype(int)
+    counts[np.argsort(counts - share, kind="stable")[: n - counts.sum()]] += 1
+    idx = rng.permutation(np.repeat(np.arange(len(pool)), counts))
     return [pool[i] for i in idx]
 
 
@@ -107,7 +116,7 @@ def _misspell(rng: np.random.Generator, term: str) -> str:
 
 
 def selective_queries(seed: int, reps: int, docs: Corpus) -> list[Query]:
-    """``reps`` queries of each interactive shape, in a fixed shape cycle."""
+    """``reps`` passes over SELECTIVE_CYCLE of interactive queries."""
     rng = np.random.default_rng([seed, 1])
     vocab = vocabulary()
 
@@ -120,7 +129,8 @@ def selective_queries(seed: int, reps: int, docs: Corpus) -> list[Query]:
             Query("search", " ".join(words(int(rng.integers(2, 4)))), skip=10 if i % 3 == 2 else 0)
             for i in range(POOL)
         ],
-        "prefix": [Query("prefix", w[: int(rng.integers(2, 4))]) for w in words(POOL)],
+        # every third prefix has two letters, the rest three
+        "prefix": [Query("prefix", w[: 2 if i % 3 == 2 else 3]) for i, w in enumerate(words(POOL))],
         "fuzzy": [Query("fuzzy", _misspell(rng, w)) for w in words(POOL)],
         "suggest": [Query("suggest", _misspell(rng, w)) for w in words(POOL)],
         "conj": [Query("conj", " ".join(words(2, CONJ_RANKS))) for _ in range(POOL)],
@@ -131,7 +141,7 @@ def selective_queries(seed: int, reps: int, docs: Corpus) -> list[Query]:
         ],
         "url": [Query("url", " ".join(words(2))) for _ in range(POOL)],
     }
-    return _interleave(rng, pools, SELECTIVE_SHAPES, reps)
+    return _interleave(rng, pools, SELECTIVE_CYCLE, reps)
 
 
 def heavy_queries(seed: int, reps: int) -> list[Query]:

@@ -33,8 +33,9 @@ if ROOT not in sys.path:
     sys.path.insert(0, ROOT)
 
 # Session settings, pinned in one place: local[nproc], a driver heap sized
-# for a 15 GB box without swap, no console progress bar, scratch space that
-# is wiped with the run.
+# for a 15 GB box without swap and committed from the start (so the JVM's
+# peak RSS does not depend on when the collector grows the heap), no console
+# progress bar, scratch space that is wiped with the run.
 CPUS = len(os.sched_getaffinity(0))
 DRIVER_MEM = "1g"
 PROBE_ITERS = 2_000_000
@@ -64,7 +65,7 @@ def _pin_environment(work: str) -> dict:
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
         # no hsperfdata file in /tmp: the run writes only inside the checkout
         "spark.driver.extraJavaOptions":
-            f"-Djava.io.tmpdir={tmp} -Dderby.system.home={tmp} -XX:-UsePerfData",
+            f"-Xms{DRIVER_MEM} -Djava.io.tmpdir={tmp} -Dderby.system.home={tmp} -XX:-UsePerfData",
     }
 
 
