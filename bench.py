@@ -115,16 +115,8 @@ def main():
     from search_engine_spark.operators.fulltext import _mf_index_for
 
     mf_tag = sf_dir.strip("/").replace("/", "_")
-    # ses_mfidxdv_ is the live cache prefix (_mf_index_for); ses_mfidx_ /
-    # ses_mfidxp_ were the pre-positional / pre-docvalues layouts — clear
-    # all so the timed build is real
-    for d in (
-        f"/tmp/ses_mfcorp_{mf_tag}",
-        f"/tmp/ses_mfcorpdv_{mf_tag}",
-        f"/tmp/ses_mfidx_{mf_tag}",
-        f"/tmp/ses_mfidxp_{mf_tag}",
-        f"/tmp/ses_mfidxdv_{mf_tag}",
-    ):
+    # clear the live cache (_mf_index_for) so the timed build is real
+    for d in (f"/tmp/ses_mfcorpdv_{mf_tag}", f"/tmp/ses_mfidxdv_{mf_tag}"):
         shutil.rmtree(d, ignore_errors=True)
     timed("index_build_multifield", lambda: _mf_index_for(spark, sf_dir))
 

@@ -970,35 +970,6 @@ def build_index(
         _mark("plan_phase1")
         doc_stats.write.mode("overwrite").parquet(cat.doc_stats)
         _mark("doc_stats")
-        # value histograms for LOW-CARDINALITY string doc-values columns
-        # (Lucene-style index stats powering query planning): the engine
-        # uses them to estimate an equals/exists clause's selectivity and
-        # flip the filter join to the null-safe COMPLEMENT anti-join when
-        # the predicate keeps most docs — the build side becomes the small
-        # minority instead of the corpus-sized majority.  approx-count
-        # gate first so a high-cardinality column (urls, ids) never pays
-        # an exact full groupBy.
-        dv_value_stats: dict = {}
-        if dv_cols:
-            ds_df = spark.read.parquet(cat.doc_stats)
-            dtypes = dict(ds_df.dtypes)
-            for c in dv_cols:
-                if dtypes.get(c) != "string":
-                    continue
-                approx = ds_df.agg(
-                    F.approx_count_distinct(c).alias("n")
-                ).collect()[0]["n"]
-                if approx > 72:  # > 64 with rsd headroom
-                    continue
-                rows = ds_df.groupBy(c).count().collect()
-                if sum(1 for r in rows if r[c] is not None) > 64:
-                    continue
-                dv_value_stats[c] = {
-                    "values": {r[c]: int(r["count"]) for r in rows
-                               if r[c] is not None},
-                    "n_null": sum(int(r["count"]) for r in rows
-                                  if r[c] is None),
-                }
         agg = spark.read.parquet(cat.doc_stats).agg(
             F.count("*").alias("n_docs"),
             F.sum("dl").alias("total_dl"),
@@ -1089,7 +1060,6 @@ def build_index(
                 "corpus_path": corpus_path,
                 "with_positions": bool(use_pos),
                 **({"docvalues_cols": list(dv_cols)} if dv_cols else {}),
-                **({"docvalues_stats": dv_value_stats} if dv_value_stats else {}),
                 **(
                     {
                         "field_cols": list(field_cols),

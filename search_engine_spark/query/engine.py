@@ -6,7 +6,12 @@ search_utils.py:104-151 compound must/should, search_utils.py:157-171 boosts,
 pipelines.py:27-42 facet count + skip/limit pagination) — rank-identically to
 the pure-Python oracle.
 
-Two physical strategies:
+Every search surface (``search``, ``search_fields``, ``facet_fields``)
+compiles to one internal query (``_Query``: must/should/must_not clauses of
+posting keys, minimum_should_match, per-key idf).  One planner places it on
+the driver kernel (small candidate sets), the distributed kernel, or WAND,
+and one finisher ranks and pages every placement's candidates.  The
+distributed physical strategies:
 
 - ``mode="sort"`` (correctness baseline): decode candidate blocks -> vectorized
   BM25 -> groupBy(doc_id) with ascending-term-order float summation ->
@@ -59,12 +64,91 @@ AVAIL_BOOST = 10.0  # reference search_utils.py:157
 GROUP_MOD = 53
 
 _SCORED_SCHEMA = "doc_id long, term string, score double, dl int"
+# the engine-owned page columns: one dtype each, empty page or populated
+_PAGE_DTYPES = {"doc_id": "int64", "score": "float64", "g_id": "int64",
+                "n_docs": "int64", "first_pos": "int64"}
 
 
 @dataclass
 class SearchResult:
     total: int
     page: pd.DataFrame  # columns: doc_id, score (ranked)
+
+
+@dataclass
+class _Query:
+    """The one internal query form every search surface compiles to.
+
+    Clauses hold PRESENT posting keys only: ``must`` carries must AND
+    filter clauses (filter keys score with weight 0), at least ``msm``
+    ``should`` clauses must match, and any ``must_not`` hit excludes the
+    doc.  ``idf`` is per key with the clause boost folded in, ``avgdl`` the
+    per-key field avgdl (None: the corpus avgdl).  ``keys`` stays empty when
+    no document can match.  The rest is the page request plus the
+    single-field extras, carried through unchanged.
+    """
+
+    keys: list = ()
+    dfs: dict | None = None
+    idf: dict | None = None
+    avgdl: dict | None = None
+    must: list = ()
+    should: list = ()
+    must_not: list = ()
+    msm: int = 0
+    k: int = 10
+    skip: int = 0
+    mode: str = "sort"
+    force_distributed: bool = False
+    dv_pred: object = None
+    sort_path: str | None = None
+    sort_desc: bool = True
+    constant_boost: bool = False
+    avail_boost: bool = False
+    group_by: bool = False
+    highlight: bool = False
+    first_pos: bool = False  # phrase highlight: the page carries first_pos
+    with_url: bool = False
+    total_mode: str = "exact"
+
+    def occur(self):
+        """How the kernels decide membership, cheapest form first:
+
+        - ``None``: pure-should with msm <= 1 — every decoded doc matches;
+        - ``("==", n)`` / ``(">=", m)``: one key per clause, all must or all
+          should, together covering every key — the per-doc matched-key
+          count decides (conjunctive / m-of-n);
+        - ``"clauses"``: anything else — one membership flag per clause.
+        """
+        if not self.must and not self.must_not and self.msm <= 1:
+            return None
+        if self.must_not or (self.must and self.should):
+            return "clauses"
+        cl = self.must or self.should
+        if all(len(c) == 1 for c in cl) and sorted(c[0] for c in cl) == self.keys:
+            return ("==", len(cl)) if self.must else (">=", self.msm)
+        return "clauses"
+
+    @property
+    def wand_shaped(self) -> bool:
+        """WAND's θ-pruning scope: page 1 of a score-ranked, ungrouped,
+        unfiltered query whose membership is a count (or nothing)."""
+        return (
+            not self.skip and not self.group_by and self.dv_pred is None
+            and self.sort_path is None and self.occur() != "clauses"
+        )
+
+    @property
+    def boost_ceiling(self) -> float:
+        return (CONSTANT_BOOST if self.constant_boost else 0.0) + (
+            AVAIL_BOOST if self.avail_boost else 0.0
+        )
+
+    @property
+    def reads_dl(self) -> bool:
+        """The dl-derived boosts and group key are the only readers of the
+        per-doc max(dl); every other query skips it."""
+        return self.constant_boost or self.avail_boost or self.group_by
 
 
 def _math_idf(n_docs: int, df: int) -> float:
@@ -340,11 +424,6 @@ class SearchEngine:
         # per-doc attributes stored on doc_stats for Atlas range/equals
         # filter clauses.  Empty = no doc values baked.
         self.docvalues_cols: tuple = tuple(self.stats.get("docvalues_cols") or ())
-        # build-time value histograms for low-cardinality string dv columns
-        # (builder dv_value_stats): power the semi-vs-anti filter-join plan
-        self.docvalues_stats: dict = dict(self.stats.get("docvalues_stats") or {})
-        # observability: the last dv filter plan ({"fraction", "anti"})
-        self.last_dv_plan: dict | None = None
         self._segments_df = spark.read.parquet(self.cat.segments)
         # doc_stats pinned at construction like the segments frame: dv
         # filters / field sorts / facets / url hydration all read it, and
@@ -797,36 +876,6 @@ class SearchEngine:
             score_blocks, schema=_SCORED_SCHEMA
         )
 
-    def _scored_docs(
-        self,
-        terms: list[str],
-        idf: dict[str, float],
-        ssegs: list[int] | None = None,
-        theta: float | None = None,
-        boost_ceiling: float = 0.0,
-        rest_bounds: dict | None = None,
-        avgdl_map: dict[str, float] | None = None,
-    ) -> DataFrame:
-        """Per-doc BM25: partial scores folded in ascending term order."""
-        scored = self._scored_rows(
-            terms, idf, ssegs=ssegs, theta=theta, boost_ceiling=boost_ceiling,
-            rest_bounds=rest_bounds, avgdl_map=avgdl_map,
-        )
-        # deterministic ascending-term-order float summation (JVM-side fold)
-        parts = F.sort_array(F.collect_list(F.struct("term", "score")))
-        return (
-            scored.groupBy("doc_id")
-            .agg(parts.alias("parts"), F.max("dl").alias("dl"))
-            .select(
-                "doc_id",
-                F.aggregate(
-                    "parts", F.lit(0.0), lambda acc, x: acc + x["score"]
-                ).alias("score"),
-                F.size("parts").alias("n_terms"),
-                "dl",
-            )
-        )
-
     def _apply_boosts(
         self, scored: DataFrame, constant_boost: bool, avail_boost: bool
     ) -> DataFrame:
@@ -835,6 +884,8 @@ class SearchEngine:
         Mirrors reference A6 (constant-score should clause, constants.py:16)
         and A8 (post-search availability boost, search_utils.py:157-165).
         """
+        if not (constant_boost or avail_boost):
+            return scored
         s = F.col("score")
         if constant_boost:
             s = s + F.when(F.col("dl") % 37 == 0, F.lit(CONSTANT_BOOST)).otherwise(F.lit(0.0))
@@ -846,7 +897,7 @@ class SearchEngine:
     # A query whose candidate posting count is tiny relative to the cluster
     # does not earn a shuffle: decode + score at the driver in one collect
     # (the same call pattern Lucene serves from a single searcher).  The
-    # distributed WAND path takes over when Σ df of the matched terms exceeds
+    # distributed kernel takes over when Σ df of the matched terms exceeds
     # this; at web scale every head-term query does.
     SMALL_QUERY_POSTINGS = 2_000_000
     # mode="auto" picks WAND iff total_dc - RATIO*predicted_dc >= MIN_SAVED.
@@ -880,8 +931,9 @@ class SearchEngine:
     # prunable query clears MIN_SAVED by orders of magnitude there.
     WAND_DECODE_COST_RATIO = 3.0
     WAND_AUTO_MIN_SAVED = 21_000_000
-    # populated by the last mode="auto" dispatch: {"mode", "total_dc",
-    # "predicted_dc", "theta_lb", "n_ranges"} — bench/test introspection
+    # set by every mode="auto" query: {"mode", "total_dc", "predicted_dc",
+    # "theta_lb", "n_ranges"} — bench/test introspection; queries the cost
+    # model never ran on record mode "sort" with total_dc = Σdf
     last_dispatch: dict | None = None
     # populated by the last _wand_scored call that built a full plan:
     # {"theta_floor", "theta", "n_ranges", "n_phase1", "n_rest_alive"};
@@ -891,99 +943,361 @@ class SearchEngine:
 
     def _pick_wand(self, est: dict) -> bool:
         """The auto-dispatch decision: cost-ratio rule over the metadata-only
-        estimate (see WAND_DECODE_COST_RATIO).  One definition for both the
-        single-field and compound dispatch sites."""
+        estimate (see WAND_DECODE_COST_RATIO), applied by the planner."""
         return (
             est["total_dc"] > 0
             and est["total_dc"] - self.WAND_DECODE_COST_RATIO * est["predicted_dc"]
             >= self.WAND_AUTO_MIN_SAVED
         )
 
-    def _driver_search(
-        self,
-        terms: list[str],
-        idf: dict[str, float],
-        conjunctive: bool,
-        constant_boost: bool,
-        avail_boost: bool,
-        k: int,
-        skip: int,
-        group_by: bool = False,
-        min_should_match: int = 0,
-    ) -> SearchResult:
-        rows = (
-            self._candidate_segments(terms)
-            .select("term", "postings")
-            .collect()
+    # --------------------------------------------------- planner and kernels
+    def _query(
+        self, must=(), should=(), must_not=(), msm: int = 0,
+        weight: dict | None = None, **extras,
+    ) -> _Query:
+        """Expanded clause key lists -> the one query form.
+
+        Applies Lucene's minimum_should_match rule (no shoulds -> 0;
+        shoulds with no required clause -> at least 1), drops absent keys
+        and clauses left with none, and derives per-key idf (the field's
+        doc_count on a multi-field index) times the clause ``weight`` —
+        default 1 for every positive key; a key only filter/must_not names
+        weighs 0: decoded for membership, contributing exactly nothing to
+        the fold.  ``keys`` stays empty when no document can match: every
+        key absent, a must clause with no present key, or more required
+        shoulds than should clauses with a present key.
+        """
+        q = _Query(**extras)
+        msm = int(msm)
+        if not should:
+            msm = 0
+        elif not must:
+            msm = max(msm, 1)
+        keys = sorted({t for c in (*must, *should, *must_not) for t in c})
+        dfs = self.term_dfs(keys) if keys and msm <= len(should) else {}
+        q.must = [[t for t in c if t in dfs] for c in must]
+        q.should = [p for p in ([t for t in c if t in dfs] for c in should) if p]
+        q.must_not = [p for p in ([t for t in c if t in dfs] for c in must_not) if p]
+        if not dfs or not all(q.must) or msm > len(q.should):
+            return q
+        if weight is None:
+            weight = dict.fromkeys((t for c in (*must, *should) for t in c), 1.0)
+        q.keys, q.dfs, q.msm = sorted(dfs), dfs, msm
+        if self.fields:
+            fs = {t: self.fields[t.split(self.field_sep, 1)[0]] for t in q.keys}
+            n_docs = {t: int(f["doc_count"]) for t, f in fs.items()}
+            q.avgdl = {t: float(f["avgdl"]) for t, f in fs.items()}
+        else:
+            n_docs = dict.fromkeys(q.keys, self.n_docs)
+        q.idf = {
+            t: weight.get(t, 0.0) * _math_idf(n_docs[t], dfs[t]) for t in q.keys
+        }
+        return q
+
+    def _run(self, q: _Query) -> SearchResult:
+        """The one planner: place a compiled query, then finish its page.
+
+        - an explicit ``mode="wand"`` on a WAND-shaped query runs WAND;
+        - ``mode="auto"`` runs the metadata-only cost model on WAND-shaped
+          queries the driver would not take, and records its decision in
+          ``last_dispatch`` on every call, driver-placed ones included;
+        - any other query that is not ``force_distributed`` and has Σdf <=
+          SMALL_QUERY_POSTINGS runs on the driver (such a query can never
+          clear the auto cost rule: total_dc <= Σdf <= MIN_SAVED);
+        - everything else runs the distributed kernel.
+        """
+        sigma = sum((q.dfs or {}).values())
+        small = not q.force_distributed and sigma <= self.SMALL_QUERY_POSTINGS
+        meta, wand = None, q.mode == "wand" and q.wand_shaped
+        if q.mode == "auto":
+            est = {"total_dc": int(sigma), "predicted_dc": 0, "theta_lb": 0.0,
+                   "n_ranges": 0}
+            if q.keys and q.wand_shaped and not small:
+                meta = self._wand_meta(q.keys)
+                est = predict_wand_decode(
+                    meta, q.idf, q.k, self.bound_scale, q.boost_ceiling,
+                    floor_scale=self.floor_scale,
+                )
+                wand = self._pick_wand(est)
+            self.last_dispatch = {"mode": "wand" if wand else "sort", **est}
+        if not q.keys:
+            return self._finish(q, pd.DataFrame())
+        if wand:
+            return self._finish(
+                q, self._wand_scored(q, meta), total=self._wand_total(q)
+            )
+        if small:
+            return self._finish(q, self._driver_kernel(q))
+        return self._finish(q, self._dist_kernel(q))
+
+    def _driver_kernel(self, q: _Query) -> pd.DataFrame:
+        """The driver placement: one collect of the candidate blocks, numpy
+        decode + BM25 folded in ascending key order (the distributed fold's
+        order, so scores agree bit-for-bit), the occur reduction, boosts,
+        one doc-values probe, the group rollup.  Returns every matched
+        candidate; the finisher ranks and pages."""
+        per_key: dict[str, list] = {}
+        for r in self._candidate_segments(q.keys).select("term", "postings").collect():
+            per_key.setdefault(r["term"], []).append(decode_postings(r["postings"]))
+        decoded = {
+            t: tuple(np.concatenate([p[j] for p in ps]) for j in range(3))
+            for t, ps in per_key.items()
+        }
+        uniq = (
+            np.unique(np.concatenate([d[0] for d in decoded.values()]))
+            if decoded else np.empty(0, dtype=np.int64)
         )
-        per_term: dict[str, list] = {}
-        for r in rows:
-            per_term.setdefault(r["term"], []).append(r["postings"])
-        # global doc table across matched terms
-        all_ids = []
-        decoded = {}
-        for t in sorted(per_term):
-            bufs = per_term[t]
-            parts = [decode_postings(b) for b in bufs]
-            ids = np.concatenate([p[0] for p in parts])
-            tf = np.concatenate([p[1] for p in parts]).astype(np.float64)
-            dl = np.concatenate([p[2] for p in parts]).astype(np.float64)
-            decoded[t] = (ids, tf, dl)
-            all_ids.append(ids)
-        if not all_ids:
-            return SearchResult(total=0, page=pd.DataFrame({"doc_id": [], "score": []}))
-        uniq = np.unique(np.concatenate(all_ids))
         acc = np.zeros(uniq.size, dtype=np.float64)
-        nt = np.zeros(uniq.size, dtype=np.int64)
         dls = np.zeros(uniq.size, dtype=np.int64)
-        # ascending term order — the same fold order as the distributed path
+        occ = q.occur()
+        n_keys = np.zeros(uniq.size, dtype=np.int64) if isinstance(occ, tuple) else None
+        where: dict[str, np.ndarray] = {}
         for t in sorted(decoded):
-            ids, tf, dl = decoded[t]
-            w = idf.get(t, 0.0)
-            s = w * tf / (tf + K1 * (1.0 - B + B * dl / self.avgdl))
+            ids, tfs, dl = decoded[t]
+            tf = tfs.astype(np.float64)
+            adl = q.avgdl[t] if q.avgdl else self.avgdl
+            s = q.idf[t] * tf / (tf + K1 * (1.0 - B + B * dl.astype(np.float64) / adl))
             pos = np.searchsorted(uniq, ids)
             acc[pos] = acc[pos] + s
-            nt[pos] += 1
-            np.maximum.at(dls, pos, dl.astype(np.int64))
-        if conjunctive:
-            keep = nt == len(decoded)
+            if n_keys is not None:
+                n_keys[pos] += 1
+            elif occ == "clauses":
+                where[t] = pos
+            if q.reads_dl:
+                np.maximum.at(dls, pos, dl.astype(np.int64))
+        keep = None
+        if n_keys is not None:
+            keep = n_keys == occ[1] if occ[0] == "==" else n_keys >= occ[1]
+        elif occ == "clauses":
+            def hit(c):  # one flag array per clause, never per key
+                flag = np.zeros(uniq.size, dtype=bool)
+                for t in c:
+                    if t in where:
+                        flag[where[t]] = True
+                return flag
+            keep = np.ones(uniq.size, dtype=bool)
+            for c in q.must:
+                keep &= hit(c)
+            if q.msm:
+                n_should = np.zeros(uniq.size, dtype=np.int64)
+                for c in q.should:
+                    n_should += hit(c)
+                keep &= n_should >= q.msm
+            for c in q.must_not:  # Lucene MUST_NOT: any hit excludes the doc
+                keep &= ~hit(c)
+        if keep is not None:
             uniq, acc, dls = uniq[keep], acc[keep], dls[keep]
-        elif min_should_match:
-            # Lucene minimumShouldMatch m-of-n: keep docs matching at least
-            # m of the query's terms (m=1 is the plain disjunction)
-            keep = nt >= min_should_match
-            uniq, acc, dls = uniq[keep], acc[keep], dls[keep]
-        if constant_boost:
+        if q.constant_boost:
             acc = acc + np.where(dls % 37 == 0, CONSTANT_BOOST, 0.0)
-        if avail_boost:
+        if q.avail_boost:
             acc = acc + np.where(dls % 7 > 0, AVAIL_BOOST, 0.0)
-        if group_by:
+        cands = pd.DataFrame({"doc_id": uniq, "score": acc})
+        if (q.dv_pred is not None or q.sort_path is not None) and uniq.size:
+            attrs = self._dv_rows(
+                uniq, q.dv_pred, [q.sort_path] if q.sort_path else []
+            )
+            cands = cands.merge(attrs, on="doc_id", how="inner")
+        if q.group_by:
             # group rollup (reference /v2/search, app.py:488-520): best hit
-            # per g_id, group count, groups ranked by their best hit.
-            # Winner selection and group ranking order on the ROUNDED score
-            # (6 decimals, doc_id tiebreak) — the same rule every oracle
+            # per g_id, group count.  Winner selection orders on the ROUNDED
+            # score (6 decimals, doc_id tiebreak) — the rule every oracle
             # uses — so a last-ulp float difference can't flip a winner
             # between implementations; reported scores stay raw.
-            gid = (dls % GROUP_MOD).astype(np.int64)
-            accr = round_half_away(acc, 6)
-            order = np.lexsort((uniq, -accr))
-            gs, us, sc = gid[order], uniq[order], acc[order]
-            uniq_g, first_pos, counts = np.unique(gs, return_index=True, return_counts=True)
-            top_doc, top_score = us[first_pos], sc[first_pos]
-            sel = np.lexsort((top_doc, -round_half_away(top_score, 6)))[skip : skip + k]
-            page = pd.DataFrame(
-                {
-                    "doc_id": top_doc[sel],
-                    "score": top_score[sel],
-                    "g_id": uniq_g[sel],
-                    "n_docs": counts[sel],
-                }
+            order = np.lexsort((uniq, -round_half_away(acc, 6)))
+            gid, first, counts = np.unique(
+                (dls % GROUP_MOD)[order], return_index=True, return_counts=True
             )
-            return SearchResult(total=int(uniq_g.size), page=page)
-        total = int(uniq.size)
-        order = np.lexsort((uniq, -acc))[skip : skip + k]
-        page = pd.DataFrame({"doc_id": uniq[order], "score": acc[order]})
-        return SearchResult(total=total, page=page)
+            cands = pd.DataFrame({
+                "doc_id": uniq[order][first], "score": acc[order][first],
+                "g_id": gid, "n_docs": counts,
+            })
+        return cands
+
+    def _dist_kernel(
+        self, q: _Query, ssegs: list[int] | None = None,
+        theta: float | None = None, rest_bounds: dict | None = None,
+    ) -> DataFrame:
+        """The distributed placement, and each WAND phase (``ssegs`` /
+        ``theta`` / ``rest_bounds`` restrict and prune the decode): per-block
+        decode+score, one groupBy fold per doc in ascending key order, the
+        occur reduction, boosts, the doc-values join and the group rollup.
+        Columns doc_id, score [, dl] [, sort attribute], or the rollup's."""
+        scored = self._scored_rows(
+            q.keys, q.idf, ssegs=ssegs, theta=theta,
+            boost_ceiling=q.boost_ceiling, rest_bounds=rest_bounds,
+            avgdl_map=q.avgdl,
+        )
+        # deterministic ascending-key-order float summation (JVM-side fold)
+        parts = F.sort_array(F.collect_list(F.struct("term", "score")))
+        dl = ["dl"] if q.reads_dl else []
+        docs = scored.groupBy("doc_id").agg(
+            parts.alias("parts"), *[F.max(c).alias(c) for c in dl]
+        )
+        docs = self._occur_filter(
+            q, docs, F.transform(F.col("parts"), lambda x: x["term"]), F.size("parts")
+        ).select(
+            "doc_id",
+            F.aggregate("parts", F.lit(0.0), lambda a, x: a + x["score"]).alias("score"),
+            *dl,
+        )
+        docs = self._apply_boosts(docs, q.constant_boost, q.avail_boost)
+        if q.dv_pred is not None or q.sort_path is not None:
+            docs = self._dv_join(docs, q.dv_pred, [q.sort_path] if q.sort_path else [])
+        return self._group_rollup(docs) if q.group_by else docs
+
+    @staticmethod
+    def _occur_filter(q: _Query, docs: DataFrame, ts, n) -> DataFrame:
+        """The occur reduction over per-doc rows, as JVM expressions: ``n``
+        is the matched-key count, ``ts`` the matched-key array — only the
+        general clause form reads it (a plain disjunction tests nothing,
+        one-key clauses count)."""
+        occ = q.occur()
+        if occ is None:
+            return docs
+        if occ != "clauses":
+            return docs.filter(n == occ[1] if occ[0] == "==" else n >= occ[1])
+
+        def hit(c):
+            return F.arrays_overlap(ts, F.array(*[F.lit(t) for t in c]))
+
+        cond = F.lit(True)
+        for c in q.must:
+            cond = cond & hit(c)
+        if q.msm:
+            cond = cond & (sum((hit(c).cast("int") for c in q.should), F.lit(0)) >= q.msm)
+        for c in q.must_not:  # Lucene MUST_NOT: any hit excludes the doc
+            cond = cond & ~hit(c)
+        return docs.filter(cond)
+
+    def _matched_docs(self, q: _Query) -> DataFrame:
+        """The matched-set plan: a docs-only decode (no float math) with
+        the kernels' occur reductions -> one doc_id column.  Serves the
+        exact WAND total and facet membership."""
+
+        def docs_only(it):
+            for pdf in it:
+                outs = [
+                    pd.DataFrame({"doc_id": decode_postings(buf)[0], "term": t})
+                    for t, buf in zip(pdf["term"], pdf["postings"])
+                ]
+                if outs:
+                    yield pd.concat(outs, ignore_index=True)
+
+        docs = (
+            self._candidate_segments(q.keys).select("term", "postings")
+            .mapInPandas(docs_only, schema="doc_id long, term string")
+        )
+        occ = q.occur()
+        if occ is None:
+            return docs.select("doc_id").distinct()
+        if occ == "clauses":
+            agg = docs.groupBy("doc_id").agg(F.collect_list("term").alias("ts"))
+        else:
+            agg = docs.groupBy("doc_id").agg(F.count("*").alias("n"))
+        return self._occur_filter(q, agg, F.col("ts"), F.col("n")).select("doc_id")
+
+    def _dv_probe(self, pred, cols) -> DataFrame:
+        """The one doc-values scan: doc_stats with ``pred`` pushed into the
+        parquet scan and only doc_id + ``cols`` read.  doc_id is unique on
+        doc_stats, so one join with it serves the dv filter (membership)
+        and the sort/facet attributes in a single pass."""
+        probe = self._doc_stats_df if pred is None else self._doc_stats_df.filter(pred)
+        return probe.select("doc_id", *cols)
+
+    def _dv_join(self, frame: DataFrame, pred, cols) -> DataFrame:
+        """Distributed placements: a left join without a predicate (null
+        attributes survive and sort last), else inner — semi when no
+        column is wanted."""
+        how = "left" if pred is None else ("inner" if cols else "semi")
+        return frame.join(self._dv_probe(pred, cols), "doc_id", how)
+
+    def _dv_rows(self, ids: np.ndarray, pred, cols) -> pd.DataFrame:
+        """Driver placements: the eligible rows (doc_id + ``cols``) among
+        the candidate ids, which broadcast into the probe — never a collect
+        of the eligible universe."""
+        cand = self.spark.createDataFrame(pd.DataFrame({"doc_id": ids.astype(np.int64)}))
+        return (
+            self._dv_probe(pred, cols)
+            .join(F.broadcast(cand), "doc_id", "inner").toPandas()
+        )
+
+    def _finish(self, q: _Query, cands, total: int | None = None) -> SearchResult:
+        """The one page finisher every placement returns through.
+
+        Ranks (score desc; the 6-decimal rounded score for groups — real
+        ties exist between group winners; or the sort attribute, nulls
+        last; doc_id asc breaks every tie), pages [skip, skip+k), gives
+        empty and populated pages one schema (doc_id int64, score float64,
+        [g_id, n_docs int64], [sort attribute], [first_pos | highlights],
+        [url]), then highlights and hydrates urls for the page docs only.
+        ``cands`` holds every matched candidate: a pandas frame (driver
+        placements) or a Spark frame (distributed and WAND), which pages by
+        TakeOrderedAndProject and counts over one cached plan — the Spark
+        equivalent of the reference's $facet {total, data}
+        (pipelines.py:27-42) — unless the caller knows ``total``.
+        """
+        cols = (
+            ["doc_id", "score"]
+            + (["g_id", "n_docs"] if q.group_by else [])
+            + ([q.sort_path] if q.sort_path else [])
+            + (["first_pos"] if q.first_pos else [])
+        )
+        if isinstance(cands, DataFrame):
+            if total is None:
+                cands = cands.persist()
+            if q.sort_path is not None:
+                key = (F.desc_nulls_last if q.sort_desc else F.asc_nulls_last)(q.sort_path)
+            else:
+                key = F.desc(F.round("score", 6) if q.group_by else F.col("score"))
+            ranked = cands.orderBy(key, F.asc("doc_id"))
+            page = (
+                (ranked.offset(q.skip) if q.skip else ranked).limit(q.k)
+                .select(*cols).toPandas()
+            )
+            for df_ in getattr(cands, "_ses_persisted", ()):
+                df_.unpersist()  # WAND's phase-1 cache; the page is materialized
+            if total is None:
+                total = cands.count()
+                cands.unpersist()
+            page = page.iloc[self._rank(q, page)] if len(page) else page
+        else:
+            total = len(cands)
+            window = self._rank(q, cands)[q.skip : q.skip + q.k] if total else []
+            page = cands.iloc[window]
+        page = page.reindex(columns=cols).reset_index(drop=True)
+        cast = {c: t for c, t in _PAGE_DTYPES.items() if c in page and page[c].dtype != t}
+        if cast:  # empty pages; astype is costly enough to skip when a no-op
+            page = page.astype(cast)
+        if q.highlight:
+            page = self._attach(page, "highlights",
+                                lambda ids: self._highlight_page(q.keys, ids))
+        if q.with_url:
+            page = self._attach(page, "url", lambda ids: (
+                self._doc_stats_df.filter(F.col("doc_id").isin(ids))
+                .select("doc_id", "url").toPandas()
+            ))
+        return SearchResult(total=int(total), page=page)
+
+    @staticmethod
+    def _rank(q: _Query, rows: pd.DataFrame) -> np.ndarray:
+        """Row positions of ``rows`` (a RangeIndex frame) in rank order."""
+        if q.sort_path is not None:
+            return rows.sort_values(
+                [q.sort_path, "doc_id"], ascending=[not q.sort_desc, True],
+                na_position="last",
+            ).index.to_numpy()
+        score = rows["score"].to_numpy(dtype=np.float64)
+        if q.group_by:
+            score = round_half_away(score, 6)
+        return np.lexsort((rows["doc_id"].to_numpy(), -score))
+
+    @staticmethod
+    def _attach(page: pd.DataFrame, col: str, fetch) -> pd.DataFrame:
+        """Left-merge ``fetch(page doc ids)``'s ``col`` onto the page; an
+        empty page gains the column without a fetch."""
+        if not len(page):
+            return page.assign(**{col: pd.Series(dtype=object)})
+        return page.merge(fetch([int(d) for d in page["doc_id"]]), on="doc_id", how="left")
 
     # ----------------------------------------------------- multi-field search
     def _clause_terms(self, clause, max_expansions: int | None = None) -> list[str]:
@@ -1106,50 +1420,6 @@ class SearchEngine:
             self._fuzzy_cache.clear()
         self._fuzzy_cache[key] = out
         return list(out)
-
-    def _dv_eligible_fraction(self, clauses) -> float | None:
-        """Estimated fraction of docs an equals/exists clause set keeps,
-        from the build-time value histograms — None when any clause is not
-        estimable (range clauses, unhistogrammed or non-string paths).
-        Multi-clause sets multiply per-clause fractions (independence
-        assumption — fine for the >0.5 plan heuristic this feeds)."""
-        frac = 1.0
-        n = max(1, self.n_docs)
-        for c in clauses:
-            if "equals" in c:
-                h = self.docvalues_stats.get(c["equals"].get("path"))
-                v = c["equals"].get("value")
-                if h is None or not isinstance(v, str):
-                    return None
-                frac *= h["values"].get(v, 0) / n
-            elif "exists" in c:
-                h = self.docvalues_stats.get(c["exists"].get("path"))
-                if h is None:
-                    return None
-                frac *= 1.0 - h["n_null"] / n
-            else:
-                return None
-        return frac
-
-    def _dv_plan(self, clauses):
-        """(pred, anti_pred_or_None): the filter predicate plus, when the
-        histograms say the predicate keeps MOST docs (> 0.5), the null-safe
-        complement ``~coalesce(pred, False)`` — membership sites then
-        anti-join against the small ineligible minority instead of
-        semi-joining against the corpus-sized eligible majority.  The
-        complement is mechanical and exact for ANY predicate: a doc has
-        exactly one doc_stats row, eligible == pred true, and coalesce
-        folds SQL null (attribute missing) into the ineligible side —
-        identical results, measured cheaper (BENCH §9b-2/-3)."""
-        pred = self._dv_predicate(clauses)
-        frac = self._dv_eligible_fraction(clauses)
-        anti = (
-            ~F.coalesce(pred, F.lit(False))
-            if frac is not None and frac > 0.5
-            else None
-        )
-        self.last_dv_plan = {"fraction": frac, "anti": anti is not None}
-        return pred, anti
 
     def _sort_spec(self, sort) -> tuple:
         """Validate an Atlas ``sort`` option against the baked doc-values
@@ -1283,10 +1553,10 @@ class SearchEngine:
         v}}``, ``{"equals": {"path": col, "value": v}}``) over doc-values
         columns baked by ``BuildConfig(docvalues_cols=...)`` — required,
         scoring nothing, evaluated as a predicate-pushed doc_stats scan
-        semi-joined with the term-driven candidates (see
-        :meth:`_dv_predicate`).  They require at least one term-bearing
-        clause: a match set defined by doc values alone is a relational
-        scan, which the relational operators already express.
+        joined with the term-driven candidates (see :meth:`_dv_predicate`).
+        They require at least one term-bearing clause: a match set defined
+        by doc values alone is a relational scan, which the relational
+        operators already express.
 
         ``sort`` (the Atlas ``$search.sort`` option / Lucene SortField)
         orders the matched docs by a doc-values column instead of score:
@@ -1296,6 +1566,15 @@ class SearchEngine:
         and the BM25 score is still computed and returned (Atlas does the
         same).  Score-bound pruning is meaningless under a field sort, so
         WAND mode rejects it like every non-pure-should shape.
+
+        The clauses compile to the same internal query as :meth:`search`
+        and share its placement rule: ``mode="wand"`` (pure-should,
+        minimum_should_match <= 1, skip 0 — anything else raises here)
+        runs WAND; ``mode="auto"`` runs the cost model when the driver
+        would not take the query and records ``last_dispatch`` either
+        way; otherwise a query that is not ``force_distributed`` with Σdf
+        <= SMALL_QUERY_POSTINGS runs on the driver (dv filters and sort
+        included), the rest on the distributed kernel.
         """
         if mode not in ("sort", "wand", "auto"):
             raise ValueError(f"mode must be 'sort', 'wand', or 'auto'; got {mode!r}")
@@ -1318,10 +1597,6 @@ class SearchEngine:
         sort_path, sort_desc = None, True
         if sort is not None:
             sort_path, sort_desc = self._sort_spec(sort)
-        empty_cols: dict = {"doc_id": [], "score": []}
-        if sort_path is not None:
-            empty_cols[sort_path] = []
-        empty = SearchResult(total=0, page=pd.DataFrame(empty_cols))
         if mode != "sort" and (must or must_not or filter or dv_clauses
                                or sort is not None
                                or int(minimum_should_match) > 1 or skip):
@@ -1334,104 +1609,12 @@ class SearchEngine:
                 "mode='wand'/'auto' on search_fields applies to pure-should "
                 "minimum_should_match<=1 queries with skip=0"
             )
-        prep = self._compound_prep(
-            must, should, must_not, filter, minimum_should_match, max_expansions
-        )
-        if prep is None:
-            return empty
-        must_terms, should_terms = prep["must_terms"], prep["should_terms"]
-        msm, dfs, present = prep["msm"], prep["dfs"], prep["present"]
-        avgdl_map = prep["avgdl_map"]
-        present_must = prep["present_must"]
-        present_should = prep["present_should"]
-        present_must_not = prep["present_must_not"]
-        # per-key boost = max over the positive clauses naming the key
-        weight: dict[str, float] = {}
-        for c, ts in zip(list(must) + list(should), must_terms + should_terms):
-            b = float(c.get("boost", 1.0)) if isinstance(c, dict) else 1.0
-            if b < 0.0:
-                raise ValueError(f"clause boost must be >= 0, got {b}")
-            for t in ts:
-                weight[t] = max(weight.get(t, 0.0), b)
-        sep = self.field_sep
-        idf: dict[str, float] = {}
-        for t in present:
-            fs = self.fields[t.split(sep, 1)[0]]
-            # must_not-only keys carry weight 0.0: decoded for membership,
-            # contributing exactly nothing to the fold (Lucene MUST_NOT)
-            idf[t] = weight.get(t, 0.0) * _math_idf(int(fs["doc_count"]), dfs[t])
-
-        wand_meta = None
-        if mode == "auto":
-            # mirror the single-field ordering: a driver-eligible query
-            # (Σdf <= SMALL_QUERY_POSTINGS) can never clear the cost rule —
-            # total_dc <= Σdf <= MIN_SAVED — so skip the distributed
-            # metadata job it would pay just to be told "sort"
-            if not force_distributed and sum(dfs.values()) <= min(
-                self.SMALL_QUERY_POSTINGS, self.WAND_AUTO_MIN_SAVED
-            ):
-                mode = "sort"
-                self.last_dispatch = {
-                    "mode": "sort", "total_dc": int(sum(dfs.values())),
-                    "predicted_dc": 0, "theta_lb": 0.0, "n_ranges": 0,
-                }
-            else:
-                # the same metadata-only cost model as the single-field
-                # dispatch (predict_wand_decode reads block bounds keyed by
-                # posting key — prefixed keys are just keys to it)
-                wand_meta = self._wand_meta(present)
-                est = predict_wand_decode(
-                    wand_meta, idf, k, self.bound_scale, 0.0,
-                    floor_scale=self.floor_scale,
-                )
-                mode = "wand" if self._pick_wand(est) else "sort"
-                self.last_dispatch = {"mode": mode, **est}
-        if mode == "wand":
-            # pure-should msm<=1 == a plain disjunction over the prefixed key
-            # set; _wand_scored prunes with per-field-sound baked bounds
-            # (θ floor active when the index baked per-field mtn — see
-            # _wand_scored / engine.per_field_mtn) and scores with each
-            # key's field avgdl, bit-identical to the sort kernel's fold
-            scored = self._wand_scored(
-                present, idf, conjunctive=False, constant_boost=False,
-                avail_boost=False, k=k, boost_ceiling=0.0,
-                min_should_match=0, avgdl_map=avgdl_map, meta=wand_meta,
-            )
-            ranked = scored.orderBy(F.desc("score"), F.asc("doc_id"))
-            page = (
-                ranked.limit(k).select("doc_id", "score").toPandas()
-                .sort_values(["score", "doc_id"], ascending=[False, True])
-                .reset_index(drop=True)
-            )
-            for df_ in getattr(scored, "_ses_persisted", ()):
-                df_.unpersist()
-            # exact unpruned total: doc-ids-only decode, same as single-field
-            total = self._match_count(present, conjunctive=False)
-            res = SearchResult(total=int(total), page=page)
-        elif not force_distributed and sum(dfs.values()) <= self.SMALL_QUERY_POSTINGS:
-            res = self._driver_search_fields(
-                present, idf, avgdl_map, present_must, present_should, msm, k, skip,
-                must_not_terms=present_must_not, dv_pred=dv_pred,
-                sort_path=sort_path, sort_desc=sort_desc,
-            )
-        else:
-            res = self._dist_search_fields(
-                present, idf, avgdl_map, present_must, present_should, msm, k, skip,
-                must_not_terms=present_must_not, dv_pred=dv_pred,
-                sort_path=sort_path, sort_desc=sort_desc,
-            )
-        if with_url and len(res.page):
-            ids = [int(d) for d in res.page["doc_id"]]
-            urls = (
-                self._doc_stats_df
-                .filter(F.col("doc_id").isin(ids))
-                .select("doc_id", "url")
-                .toPandas()
-            )
-            res = SearchResult(
-                total=res.total, page=res.page.merge(urls, on="doc_id", how="left")
-            )
-        return res
+        return self._run(self._compile_clauses(
+            must, should, must_not, filter, minimum_should_match,
+            max_expansions, k=k, skip=skip, mode=mode,
+            force_distributed=force_distributed, dv_pred=dv_pred,
+            sort_path=sort_path, sort_desc=sort_desc, with_url=with_url,
+        ))
 
     def facet_fields(
         self,
@@ -1449,8 +1632,11 @@ class SearchEngine:
         Evaluates the same compound clause set as :meth:`search_fields`
         (all four occur types, dv filter operators) but returns bucket
         counts over the MATCHED set instead of a ranked page — scoring
-        never happens, so there is no driver fast path to dispatch: facets
-        are an analytic aggregation, served distributed.
+        never happens: the clauses compile to the same internal query and
+        run the matched-set plan (a docs-only decode with the scoring
+        kernels' occur reductions), then ONE doc_stats join applies the dv
+        filter and attaches the faceted columns.  Facets are an analytic
+        aggregation, served distributed.
 
         ``facets`` maps facet names to Atlas facet specs over doc-values
         columns:
@@ -1538,45 +1724,16 @@ class SearchEngine:
             }
 
         if keyword is not None:
-            terms = sorted(set(preprocess_query(keyword)))
-            dfs = self.term_dfs(terms) if terms else {}
-            present = sorted(dfs)
-            if not present:
-                return _empty()
-            # membership only — unit idf, scores thrown away
-            kept = self._scored_docs(
-                present, {t: 1.0 for t in present}
-            ).select("doc_id")
+            q = self._query(should=[sorted(set(preprocess_query(keyword)))])
         else:
-            prep = self._compound_prep(
+            q = self._compile_clauses(
                 must, should, must_not, filter, minimum_should_match,
                 max_expansions,
             )
-            if prep is None:
-                return _empty()
-            present = prep["present"]
-            # membership only — decode with unit idf, throw the scores away
-            scored = self._scored_rows(
-                present, {t: 1.0 for t in present}, avgdl_map=prep["avgdl_map"]
-            )
-            agg = scored.groupBy("doc_id").agg(
-                F.sort_array(F.collect_set("term")).alias("ts")
-            )
-            kept = agg.filter(
-                self._occur_cond(
-                    prep["present_must"], prep["present_should"], prep["msm"],
-                    prep["present_must_not"],
-                )
-            ).select("doc_id")
+        if not q.keys:
+            return _empty()
         paths = sorted({p for _, p, _ in specs.values()})
-        stats_df = self._doc_stats_df
-        if dv_pred is not None:
-            kept = kept.join(
-                stats_df.filter(dv_pred).select("doc_id"), "doc_id", "semi"
-            )
-        joined = kept.join(
-            stats_df.select("doc_id", *paths), "doc_id", "left"
-        ).persist()
+        joined = self._dv_join(self._matched_docs(q), dv_pred, paths).persist()
         count = joined.count()
         out: dict = {"count": int(count), "facet": {}}
         for name, (kind, path, arg) in specs.items():
@@ -1626,259 +1783,31 @@ class SearchEngine:
         joined.unpersist()
         return out
 
-    def _driver_search_fields(
-        self, present, idf, avgdl_map, must_terms, should_terms, msm, k, skip,
-        must_not_terms=(), dv_pred=None, sort_path=None, sort_desc=True,
-    ) -> SearchResult:
-        """Driver-side compound evaluation (small candidate sets)."""
-        rows = self._candidate_segments(present).select("term", "postings").collect()
-        per_term: dict[str, list] = {}
-        for r in rows:
-            per_term.setdefault(r["term"], []).append(r["postings"])
-        decoded = {}
-        all_ids = []
-        for t in sorted(per_term):
-            parts = [decode_postings(b) for b in per_term[t]]
-            ids = np.concatenate([p[0] for p in parts])
-            tf = np.concatenate([p[1] for p in parts]).astype(np.float64)
-            dl = np.concatenate([p[2] for p in parts]).astype(np.float64)
-            decoded[t] = (ids, tf, dl)
-            all_ids.append(ids)
-        # the empty page keeps the documented shape: sorted results carry
-        # the sort attribute column even when nothing matched
-        empty_cols: dict = {"doc_id": [], "score": []}
-        if sort_path is not None:
-            empty_cols[sort_path] = []
-        empty = SearchResult(total=0, page=pd.DataFrame(empty_cols))
-        if not all_ids:
-            return empty
-        uniq = np.unique(np.concatenate(all_ids))
-        acc = np.zeros(uniq.size, dtype=np.float64)
-        has = {}
-        # ascending posting-key order — the same fold as the distributed path
-        for t in sorted(decoded):
-            ids, tf, dl = decoded[t]
-            s = idf[t] * tf / (tf + K1 * (1.0 - B + B * dl / avgdl_map[t]))
-            pos = np.searchsorted(uniq, ids)
-            acc[pos] = acc[pos] + s
-            flag = np.zeros(uniq.size, dtype=bool)
-            flag[pos] = True
-            has[t] = flag
-        def clause_ok(ts):
-            ok = np.zeros(uniq.size, dtype=bool)
-            for t in ts:
-                if t in has:
-                    ok |= has[t]
-            return ok
-        keep = np.ones(uniq.size, dtype=bool)
-        for ts in must_terms:
-            keep &= clause_ok(ts)
-        if msm:
-            n_should = np.zeros(uniq.size, dtype=np.int64)
-            for ts in should_terms:
-                n_should += clause_ok(ts).astype(np.int64)
-            keep &= n_should >= msm
-        for ts in must_not_terms:  # Lucene MUST_NOT: any hit excludes the doc
-            keep &= ~clause_ok(ts)
-        uniq, acc = uniq[keep], acc[keep]
-        attrs = None
-        if (dv_pred is not None or sort_path is not None) and uniq.size:
-            # ONE predicate-pushed doc_stats probe serves both the dv filter
-            # (membership) and the field sort (attribute values): the scan
-            # is filtered when a predicate exists, semi-join semantics come
-            # from the inner join against the (small, broadcast) candidate
-            # set — never a collect of the eligible universe
-            cand = self.spark.createDataFrame(
-                pd.DataFrame({"doc_id": uniq.astype("int64")})
-            )
-            probe = self._doc_stats_df
-            if dv_pred is not None:
-                probe = probe.filter(dv_pred)
-            cols = ["doc_id"] + ([sort_path] if sort_path is not None else [])
-            attrs = (
-                probe.join(F.broadcast(cand), "doc_id", "inner")
-                .select(*cols)
-                .toPandas()
-            )
-            if dv_pred is not None:
-                dv_keep = np.isin(uniq, attrs["doc_id"].to_numpy())
-                uniq, acc = uniq[dv_keep], acc[dv_keep]
-        if uniq.size == 0:
-            return empty
-        if sort_path is not None:
-            # order (attr, doc_id asc) with nulls last in pandas
-            page = (
-                pd.DataFrame({"doc_id": uniq, "score": acc})
-                .merge(attrs, on="doc_id", how="left")
-                .sort_values(
-                    [sort_path, "doc_id"], ascending=[not sort_desc, True],
-                    na_position="last",
-                )
-                .iloc[skip : skip + k]
-                .reset_index(drop=True)[["doc_id", "score", sort_path]]
-            )
-            return SearchResult(total=int(uniq.size), page=page)
-        order = np.lexsort((uniq, -acc))[skip : skip + k]
-        return SearchResult(
-            total=int(uniq.size),
-            page=pd.DataFrame({"doc_id": uniq[order], "score": acc[order]}),
-        )
-
-    def _compound_prep(
+    def _compile_clauses(
         self, must, should, must_not, filter, minimum_should_match,
-        max_expansions,
-    ) -> dict | None:
-        """Shared clause preparation for :meth:`search_fields` and
-        :meth:`facet_fields`: analyze every clause to its prefixed posting
-        keys, normalize Lucene's minimum_should_match rule (no shoulds →
-        msm 0; shoulds with no required clause → msm ≥ 1), drop absent
-        keys, and return None when no document can match (msm exceeds the
-        should count, every key absent, or a must/filter clause has no
-        present key — required clauses with nothing to match kill the
-        query).  Filter clauses merge into ``present_must``: they ARE must
-        clauses whose keys carry weight 0 (scoring is governed entirely by
-        the caller's weight fold)."""
+        max_expansions, **extras,
+    ) -> _Query:
+        """Clause lists of :meth:`search_fields` / :meth:`facet_fields` ->
+        the one query form: every clause analyzed to its prefixed posting
+        keys, filter clauses joining must with weight 0 (they ARE must
+        clauses that score nothing), and each positive key weighted by the
+        largest boost among the clauses naming it."""
         must_terms = [self._clause_terms(c, max_expansions) for c in must]
         should_terms = [self._clause_terms(c, max_expansions) for c in should]
         must_not_terms = [self._clause_terms(c, max_expansions) for c in must_not]
         filter_terms = [self._clause_terms(c, max_expansions) for c in filter]
-        msm = int(minimum_should_match)
-        if not should_terms:
-            msm = 0
-        elif not must_terms and not filter_terms:
-            # Lucene: with no required clause, at least one SHOULD must match
-            msm = max(msm, 1)
-        if msm > len(should_terms):
-            return None
-        all_terms = sorted({
-            t
-            for ts in must_terms + should_terms + must_not_terms + filter_terms
-            for t in ts
-        })
-        if not all_terms:
-            return None
-        dfs = self.term_dfs(all_terms)
-        # a must/filter clause with no present term can never match
-        for ts in must_terms + filter_terms:
-            if not any(t in dfs for t in ts):
-                return None
-        present = sorted(dfs)
-        if not present:
-            return None
-        sep = self.field_sep
-        return {
-            "must_terms": must_terms,
-            "should_terms": should_terms,
-            "must_not_terms": must_not_terms,
-            "filter_terms": filter_terms,
-            "msm": msm,
-            "dfs": dfs,
-            "present": present,
-            "avgdl_map": {
-                t: float(self.fields[t.split(sep, 1)[0]]["avgdl"])
-                for t in present
-            },
-            "present_must": [
-                [t for t in ts if t in dfs] for ts in must_terms + filter_terms
-            ],
-            "present_should": [[t for t in ts if t in dfs] for ts in should_terms],
-            "present_must_not": [
-                [t for t in ts if t in dfs] for ts in must_not_terms if any(
-                    t in dfs for t in ts
-                )
-            ],
-        }
-
-    @staticmethod
-    def _occur_cond(must_terms, should_terms, msm, must_not_terms):
-        """All four BooleanQuery occur types as ONE JVM array predicate over
-        a per-doc matched-key array column ``ts`` (must+filter required,
-        >= msm shoulds, no must_not)."""
-        def clause_ok(ts):
-            return F.arrays_overlap(F.col("ts"), F.array(*[F.lit(t) for t in ts]))
-        cond = F.lit(True)
-        for ts in must_terms:
-            cond = cond & clause_ok(ts)
-        if msm:
-            n_should = sum(
-                (clause_ok(ts).cast("int") for ts in should_terms), F.lit(0)
-            )
-            cond = cond & (n_should >= msm)
-        for ts in must_not_terms:  # Lucene MUST_NOT: any hit excludes the doc
-            cond = cond & ~clause_ok(ts)
-        return cond
-
-    def _dist_search_fields(
-        self, present, idf, avgdl_map, must_terms, should_terms, msm, k, skip,
-        must_not_terms=(), dv_pred=None, sort_path=None, sort_desc=True,
-    ) -> SearchResult:
-        """Distributed compound evaluation: one decode+score pass, clause
-        logic as JVM array expressions over the per-doc matched-key set."""
-        scored = self._scored_rows(present, idf, avgdl_map=avgdl_map)
-        parts = F.sort_array(F.collect_list(F.struct("term", "score")))
-        agg = scored.groupBy("doc_id").agg(parts.alias("parts"))
-        ts_col = F.transform(F.col("parts"), lambda x: x["term"])
-        agg = agg.select(
-            "doc_id",
-            F.aggregate("parts", F.lit(0.0), lambda a, x: a + x["score"]).alias("score"),
-            ts_col.alias("ts"),
+        weight: dict[str, float] = {}
+        for c, ts in zip([*must, *should], must_terms + should_terms):
+            b = float(c.get("boost", 1.0)) if isinstance(c, dict) else 1.0
+            if b < 0.0:
+                raise ValueError(f"clause boost must be >= 0, got {b}")
+            for t in ts:
+                weight[t] = max(weight.get(t, 0.0), b)
+        return self._query(
+            must=must_terms + filter_terms, should=should_terms,
+            must_not=must_not_terms, msm=minimum_should_match, weight=weight,
+            **extras,
         )
-        kept = agg.filter(
-            self._occur_cond(must_terms, should_terms, msm, must_not_terms)
-        ).select("doc_id", "score")
-        if dv_pred is not None and sort_path is not None:
-            # ONE predicate-pushed, column-pruned doc_stats scan serves both
-            # the dv filter and the field sort: the inner join IS the
-            # semi-join (doc_id is unique per side) and attaches the sort
-            # attribute in the same pass
-            kept = kept.join(
-                self._doc_stats_df
-                .filter(dv_pred).select("doc_id", sort_path),
-                "doc_id", "inner",
-            )
-        elif dv_pred is not None:
-            # doc-values filter: predicate pushes into the doc_stats parquet
-            # scan (only the filtered columns are read); the semi-join keys
-            # on doc_id and shrinks with the predicate's selectivity — AQE
-            # broadcasts the eligible side when it is small
-            kept = kept.join(
-                self._doc_stats_df
-                .filter(dv_pred).select("doc_id"),
-                "doc_id", "semi",
-            )
-        elif sort_path is not None:
-            # field sort alone: attach the attribute (column-pruned scan);
-            # left join keeps null-attribute docs, which sort last
-            kept = kept.join(
-                self._doc_stats_df
-                .select("doc_id", sort_path),
-                "doc_id", "left",
-            )
-        kept = kept.persist()
-        if sort_path is not None:
-            # field sort (Atlas $search.sort): order by the attribute, nulls
-            # last, doc_id tiebreak — score-bound pruning never applies here
-            ranked = kept.orderBy(
-                F.desc_nulls_last(sort_path) if sort_desc
-                else F.asc_nulls_last(sort_path),
-                F.asc("doc_id"),
-            )
-        else:
-            ranked = kept.orderBy(F.desc("score"), F.asc("doc_id"))
-        page_df = ranked.offset(skip).limit(k) if skip else ranked.limit(k)
-        page = page_df.toPandas()
-        if sort_path is not None:
-            page = page.sort_values(
-                [sort_path, "doc_id"], ascending=[not sort_desc, True],
-                na_position="last",
-            ).reset_index(drop=True)[["doc_id", "score", sort_path]]
-        else:
-            page = page.sort_values(
-                ["score", "doc_id"], ascending=[False, True]
-            ).reset_index(drop=True)
-        total = kept.count()
-        kept.unpersist()
-        return SearchResult(total=int(total), page=page)
 
     # ------------------------------------------------------------ highlight
     def _highlight_page(self, terms: list[str], doc_ids: list[int]) -> pd.DataFrame:
@@ -2113,12 +2042,10 @@ class SearchEngine:
         else:
             n_docs, avgdl = self.n_docs, self.avgdl
             terms_seq = tokenize(keyword)
-        empty = SearchResult(total=0, page=pd.DataFrame({"doc_id": [], "score": []}))
-        if not terms_seq:
-            return empty
-        dfs = self.term_dfs(sorted(set(terms_seq)))
-        if len(dfs) < len(set(terms_seq)):
-            return empty  # a phrase term absent from the corpus
+        q = _Query(k=k, skip=skip, with_url=with_url, first_pos=highlight)
+        dfs = self.term_dfs(sorted(set(terms_seq))) if terms_seq else {}
+        if not terms_seq or len(dfs) < len(set(terms_seq)):
+            return self._finish(q, pd.DataFrame())  # a phrase term is absent
         if not force_distributed and sum(dfs.values()) <= self.SMALL_QUERY_POSTINGS:
             rows = (
                 self._phrase_candidate_blocks(sorted(set(terms_seq)))
@@ -2128,27 +2055,13 @@ class SearchEngine:
             uniq, tfs, dls, firsts = _phrase_match_arrays(
                 terms_seq, self._phrase_decode_rows(rows), max_gap=max_gap
             )
-            if uniq.size == 0:
-                return empty
             # Lucene FILTER never changes scoring stats: the phrase idf uses
             # the UNfiltered phrase df; the dv mask then constrains matching
             w = _math_idf(n_docs, int(uniq.size))
-            if dv_pred is not None:
-                cand = self.spark.createDataFrame(
-                    pd.DataFrame({"doc_id": uniq.astype("int64")})
-                )
-                elig = (
-                    self._doc_stats_df
-                    .filter(dv_pred)
-                    .join(F.broadcast(cand), "doc_id", "semi")
-                    .select("doc_id")
-                    .toPandas()["doc_id"]
-                    .to_numpy()
-                )
+            if dv_pred is not None and uniq.size:
+                elig = self._dv_rows(uniq, dv_pred, [])["doc_id"].to_numpy()
                 keep = np.isin(uniq, elig)
                 uniq, tfs, dls, firsts = uniq[keep], tfs[keep], dls[keep], firsts[keep]
-                if uniq.size == 0:
-                    return empty
             tf = tfs.astype(np.float64)
             dl = dls.astype(np.float64)
             acc = w * tf / (tf + K1 * (1.0 - B + B * dl / avgdl))
@@ -2156,72 +2069,40 @@ class SearchEngine:
                 acc = acc + np.where(dls % 37 == 0, CONSTANT_BOOST, 0.0)
             if avail_boost:
                 acc = acc + np.where(dls % 7 > 0, AVAIL_BOOST, 0.0)
-            order = np.lexsort((uniq, -acc))[skip : skip + k]
-            page = pd.DataFrame({"doc_id": uniq[order], "score": acc[order]})
-            if highlight:
-                page["first_pos"] = firsts[order]
-            res = SearchResult(total=int(uniq.size), page=page)
-        else:
-            matched = self._phrase_matched_dist(terms_seq, max_gap=max_gap).persist()
-            df_phrase = matched.count()  # == phrase df: exact total for free
-            if df_phrase == 0:
-                matched.unpersist()
-                return empty
-            # idf from the UNfiltered phrase df (FILTER scores nothing);
-            # total = the filtered match count (FILTER constrains matching)
-            w = _math_idf(n_docs, int(df_phrase))
-            total = df_phrase
-            if dv_pred is not None:
-                matched = matched.join(
-                    self._doc_stats_df
-                    .filter(dv_pred).select("doc_id"),
-                    "doc_id", "semi",
-                ).persist()
-                total = matched.count()
-                if total == 0:
-                    matched.unpersist()
-                    return empty
-            tfd = F.col("tf").cast("double")
-            dld = F.col("dl").cast("double")
-            # operand-for-operand the driver path's numpy expression tree
-            score = F.lit(w) * tfd / (
-                tfd
-                + F.lit(K1) * (F.lit(1.0) - F.lit(B) + F.lit(B) * dld / F.lit(avgdl))
-            )
-            scored = self._apply_boosts(
-                matched.select(
-                    "doc_id", score.alias("score"),
-                    F.col("dl").cast("int").alias("dl"), "first_pos",
-                ),
-                constant_boost,
-                avail_boost,
-            )
-            hl_cols = ["first_pos"] if highlight else []
-            ranked = scored.orderBy(F.desc("score"), F.asc("doc_id"))
-            page_df = ranked.offset(skip).limit(k) if skip else ranked.limit(k)
-            page = (
-                page_df.select("doc_id", "score", *hl_cols)
-                .toPandas()
-                .sort_values(["score", "doc_id"], ascending=[False, True])
-                .reset_index(drop=True)
-            )
-            matched.unpersist()
-            res = SearchResult(total=int(total), page=page)
-        if with_url and len(res.page):
-            ids = [int(d) for d in res.page["doc_id"]]
-            urls = (
-                self._doc_stats_df
-                .filter(F.col("doc_id").isin(ids))
-                .select("doc_id", "url")
-                .toPandas()
-            )
-            res = SearchResult(
-                total=res.total, page=res.page.merge(urls, on="doc_id", how="left")
-            )
+            return self._finish(q, pd.DataFrame(
+                {"doc_id": uniq, "score": acc, "first_pos": firsts}
+            ))
+        matched = self._phrase_matched_dist(terms_seq, max_gap=max_gap).persist()
+        df_phrase = matched.count()  # == phrase df: exact total for free
+        # idf from the UNfiltered phrase df (FILTER scores nothing);
+        # total = the filtered match count (FILTER constrains matching)
+        w = _math_idf(n_docs, int(df_phrase))
+        kept, total = matched, df_phrase
+        if dv_pred is not None:
+            kept, total = self._dv_join(matched, dv_pred, []), None
+        tfd = F.col("tf").cast("double")
+        dld = F.col("dl").cast("double")
+        # operand-for-operand the driver path's numpy expression tree
+        score = F.lit(w) * tfd / (
+            tfd
+            + F.lit(K1) * (F.lit(1.0) - F.lit(B) + F.lit(B) * dld / F.lit(avgdl))
+        )
+        scored = self._apply_boosts(
+            kept.select(
+                "doc_id", score.alias("score"),
+                F.col("dl").cast("int").alias("dl"), "first_pos",
+            ),
+            constant_boost,
+            avail_boost,
+        )
+        res = self._finish(q, scored, total=total)
+        matched.unpersist()
         return res
 
     # ---------------------------------------------------------------- search
     def search(self, keyword: str, **kwargs) -> SearchResult:
+        """Single-field search (options and placement: :meth:`_search_impl`),
+        appending one query-log row per call when ``log_queries`` is on."""
         res = self._search_impl(keyword, **kwargs)
         if self.log_queries:
             self._qid += 1
@@ -2281,13 +2162,8 @@ class SearchEngine:
         for t in tokenize(text):
             tf[t] = tf.get(t, 0) + 1
         cand0 = sorted(t for t, c in tf.items() if c >= int(min_term_freq))
-        empty = SearchResult(total=0, page=pd.DataFrame({"doc_id": [], "score": []}))
-        if not cand0:
-            return empty
         dfs = self.term_dfs(cand0)
         cand = [t for t in cand0 if dfs.get(t, 0) >= max(int(min_doc_freq), 1)]
-        if not cand:
-            return empty
         sel = {
             t: float(round_half_away(tf[t] * _math_idf(self.n_docs, dfs[t]), 6))
             for t in cand
@@ -2325,19 +2201,23 @@ class SearchEngine:
         dv_filter: list = (),
         sort: dict | None = None,
     ) -> SearchResult:
-        """``total_mode`` governs the facet total under WAND pruning.
+        """Single-field search, compiled to the one clause form.
 
-        WAND prunes the scored set, so the exact disjunctive total needs a
-        doc-id-only decode of every matched term's postings
-        (``_match_count``) — for a head-term query over 10^13 postings that
-        decode dominates the query.  Shortcuts: a single matched term's
-        total IS its precomputed df (always exact, zero decode);
-        ``total_mode="approx"`` serves multi-term disjunctive queries the
-        Σdf upper bound capped at N, and conjunctive queries min(df) — the
-        tight upper bound for an intersection (Σdf can overstate it by
-        orders of magnitude) — with no decode either way.  Callers that
-        paginate far enough to care get ``"exact"`` (the default, and
-        always exact in sort mode).
+        The keyword becomes clauses over bare terms (``conjunctive``: every
+        term a must clause; ``min_should_match``: every term its own should
+        clause; otherwise one should clause over the — possibly expanded —
+        term set) and runs through the same planner, kernels and finisher as
+        :meth:`search_fields`; the validation ladder below is this
+        surface's own contract.  Placement: an explicit ``mode="wand"`` runs
+        WAND when the query is WAND-shaped (page 1, no group_by, dv_filter
+        or sort); ``mode="auto"`` runs the cost model on WAND-shaped queries
+        the driver would not take; any other query runs on the driver when
+        it is not ``force_distributed`` and Σdf <= SMALL_QUERY_POSTINGS
+        (dv_filter and sort included), else on the distributed kernel.
+
+        ``total_mode`` governs the total under WAND pruning (see
+        :meth:`_wand_total`): ``"exact"`` (the default, and always exact
+        off WAND) or ``"approx"`` (Σdf / min(df) upper bounds, no decode).
         """
         if self.fields:
             # posting keys on a multi-field index are "<field><sep><term>";
@@ -2390,12 +2270,10 @@ class SearchEngine:
         dv_pred = None
         if dv_filter:
             # doc-values filter on the single-field surface (the incremental
-            # crawl case: filter a plain keyword query by lang/warc_ts).  The
-            # filter is one predicate-pushed doc_stats scan semi-joined with
-            # the scored candidates, so it rides the distributed sort path:
-            # the driver shortcut has nothing to short-cut (the scan is a
-            # Spark job either way) and WAND's score bounds cannot see the
-            # filter.
+            # crawl case: filter a plain keyword query by lang/warc_ts): one
+            # predicate-pushed doc_stats probe joined with the scored
+            # candidates on whichever placement the planner picks; WAND's
+            # score bounds cannot see the filter.
             text_f, dv_clauses = self._split_dv_clauses(dv_filter)
             if text_f:
                 raise ValueError(
@@ -2449,20 +2327,19 @@ class SearchEngine:
         # (more_like_this) did their own analysis
         raw = wildcard or regex or exact_terms is not None
         terms = preprocess_query(keyword) if not raw else []
-        if not raw and not terms:
-            return SearchResult(total=0, page=pd.DataFrame({"doc_id": [], "score": []}))
         single = len(terms) == 1
-        if exact_terms is not None:
+        conj = False
+        if not raw and not terms:
+            match_terms = []
+        elif exact_terms is not None:
             # a plain disjunction (or conjunction) over a caller-analyzed
             # term list — no length dispatch, no prefix expansion
             match_terms = sorted(set(exact_terms))
             conj = conjunctive
         elif wildcard:
             match_terms = self.expand_wildcard(keyword, max_expansions)
-            conj = False
         elif regex:
             match_terms = self.expand_regex(keyword, max_expansions)
-            conj = False
         elif prefix_fuzzy:
             # Atlas autocomplete + fuzzy: a single-term surface (the
             # reference only ever autocompletes 1-term keywords,
@@ -2476,7 +2353,6 @@ class SearchEngine:
             match_terms = self.expand_prefix_fuzzy(
                 terms[0], prefix_fuzzy, max_expansions
             )
-            conj = False
         elif phonetic:
             # phonetic expansion (A11): every analyzed term expands to the
             # dictionary terms sharing its Soundex key; the union scores as
@@ -2485,7 +2361,6 @@ class SearchEngine:
             for qt in terms:
                 expanded_ph.update(self.expand_phonetic(qt))
             match_terms = sorted(expanded_ph)
-            conj = False
         elif fuzzy:
             # fuzzy expansion replaces the length dispatch: every analyzed
             # term expands to its edit-distance neighborhood and the union
@@ -2500,176 +2375,28 @@ class SearchEngine:
                     transpositions=fuzzy_transpositions,
                 ))
             match_terms = sorted(expanded)
-            conj = False
         elif single:
             match_terms = self.expand_prefix(terms[0], max_expansions)
-            conj = False
         else:
             match_terms = sorted(set(terms))
             conj = conjunctive
-        if not match_terms:
-            return SearchResult(total=0, page=pd.DataFrame({"doc_id": [], "score": []}))
-
-        dfs = self.term_dfs(match_terms)
-        if conj and len(dfs) < len(match_terms):
-            # a required term is absent from the corpus -> empty intersection
-            return SearchResult(total=0, page=pd.DataFrame({"doc_id": [], "score": []}))
-        present = sorted(dfs)
-        if not present:
-            return SearchResult(total=0, page=pd.DataFrame({"doc_id": [], "score": []}))
-        idf = {t: _math_idf(self.n_docs, d) for t, d in dfs.items()}
-
-        if (not force_distributed and dv_pred is None and sort_path is None
-                and sum(dfs.values()) <= self.SMALL_QUERY_POSTINGS):
-            res = self._driver_search(
-                present, idf, conj, constant_boost, avail_boost, k, skip,
-                group_by=group_by, min_should_match=msm,
-            )
-            if highlight and len(res.page):
-                hl = self._highlight_page(present, [int(d) for d in res.page["doc_id"]])
-                res = SearchResult(
-                    total=res.total, page=res.page.merge(hl, on="doc_id", how="left")
-                )
-            if with_url and len(res.page):
-                ids = [int(d) for d in res.page["doc_id"]]
-                urls = (
-                    self._doc_stats_df
-                    .filter(F.col("doc_id").isin(ids))
-                    .select("doc_id", "url")
-                    .toPandas()
-                )
-                res = SearchResult(
-                    total=res.total, page=res.page.merge(urls, on="doc_id", how="left")
-                )
-            return res
-
-        boost_ceiling = (CONSTANT_BOOST if constant_boost else 0.0) + (
-            AVAIL_BOOST if avail_boost else 0.0
-        )
-
-        # mode="auto": metadata-only cost model (predict_wand_decode) picks
-        # the physical strategy.  WAND pays an extra Spark job + a two-branch
-        # union AND a ~3x per-posting decode premium, so it must earn its
-        # keep by pruning hard; the measured crossover (BENCH §3c + the
-        # compound A/B) sits where total - 3*predicted clears the fixed cost.
-        wand_meta = None
-        if mode == "auto":
-            if skip != 0 or group_by or dv_pred is not None or sort_path is not None:
-                mode = "sort"  # WAND is unsound for these; no estimate needed
-            else:
-                wand_meta = self._wand_meta(present)
-                est = predict_wand_decode(
-                    wand_meta, idf, k, self.bound_scale, boost_ceiling,
-                    floor_scale=self.floor_scale,
-                )
-                mode = "wand" if self._pick_wand(est) else "sort"
-                self.last_dispatch = {"mode": mode, **est}
-
-        # grouped rollup needs every doc's exact score (a group's winner can
-        # sit below the doc-level top-k that WAND's θ prunes against), so it
-        # rides the full-scoring sort path
-        wand = mode == "wand" and skip == 0 and not group_by
-        if wand:
-            scored = self._wand_scored(
-                present, idf, conj, constant_boost, avail_boost, k,
-                boost_ceiling, min_should_match=msm, meta=wand_meta,
-            )
+        # the one clause form: conjunctive = every term a must clause;
+        # Lucene m-of-n = every term its own should clause; otherwise the
+        # (expanded) term set is ONE should clause — a plain disjunction
+        if conj:
+            clauses = {"must": [[t] for t in match_terms]}
+        elif msm:
+            clauses = {"should": [[t] for t in match_terms], "msm": msm}
         else:
-            scored = self._scored_docs(present, idf)
-            if conj:
-                scored = scored.filter(F.col("n_terms") == len(present))
-            elif msm:
-                scored = scored.filter(F.col("n_terms") >= msm)
-            scored = self._apply_boosts(scored, constant_boost, avail_boost)
-            if dv_pred is not None and sort_path is not None:
-                # ONE filtered, column-pruned doc_stats scan serves both:
-                # the inner join IS the semi-join with the attribute attached
-                scored = scored.join(
-                    self._doc_stats_df
-                    .filter(dv_pred).select("doc_id", sort_path),
-                    "doc_id", "inner",
-                )
-            elif dv_pred is not None:
-                scored = scored.join(
-                    self._doc_stats_df
-                    .filter(dv_pred).select("doc_id"),
-                    "doc_id", "semi",
-                )
-            elif sort_path is not None:
-                # left join keeps null-attribute docs; they sort last
-                scored = scored.join(
-                    self._doc_stats_df
-                    .select("doc_id", sort_path),
-                    "doc_id", "left",
-                )
-            if group_by:
-                scored = self._group_rollup(scored)
-            # one-pass count + page over a single cached plan — the Spark
-            # equivalent of the reference's $facet {total, data}
-            # (pipelines.py:27-42)
-            scored = scored.persist()
-
-        # grouped results rank on the rounded score (the shared oracle rule;
-        # real 6-decimal ties exist between group winners); doc-level pages
-        # keep the raw order that the rank-identity suite pins; field sorts
-        # rank on the attribute (nulls last, doc_id tiebreak)
-        if sort_path is not None:
-            ranked = scored.orderBy(
-                F.desc_nulls_last(sort_path) if sort_desc
-                else F.asc_nulls_last(sort_path),
-                F.asc("doc_id"),
-            )
-        else:
-            score_key = F.round("score", 6) if group_by else F.col("score")
-            ranked = scored.orderBy(F.desc(score_key), F.asc("doc_id"))
-        page_df = ranked.offset(skip).limit(k) if skip else ranked.limit(k)
-        if with_url:
-            urls = self._doc_stats_df.select("doc_id", "url")
-            page_df = page_df.join(urls, "doc_id", "left")
-        page_cols = (
-            (["g_id", "n_docs"] if group_by else [])
-            + (["url"] if with_url else [])
-            + ([sort_path] if sort_path is not None else [])
-        )
-        page = page_df.select("doc_id", "score", *page_cols).toPandas()
-        if sort_path is not None:
-            page = page.sort_values(
-                [sort_path, "doc_id"], ascending=[not sort_desc, True],
-                na_position="last",
-            ).reset_index(drop=True)
-        else:
-            sort_col = round_half_away(page["score"], 6) if group_by else page["score"]
-            page = (
-                page.assign(_sk=sort_col)
-                .sort_values(["_sk", "doc_id"], ascending=[False, True])
-                .drop(columns="_sk")
-                .reset_index(drop=True)
-            )
-        for df_ in getattr(scored, "_ses_persisted", ()):
-            df_.unpersist()  # WAND's phase-1 cache; page is materialized now
-        if highlight and len(page):
-            hl = self._highlight_page(present, [int(d) for d in page["doc_id"]])
-            page = page.merge(hl, on="doc_id", how="left")
-
-        if wand:
-            # WAND pruned the scored set; the exact total (the reference's
-            # $facet count) needs the unpruned match count — doc_ids only,
-            # no float math.  Single matched term: the count is its df,
-            # already in hand.  approx mode: Σdf upper bound, no decode.
-            if len(present) == 1 and not msm:
-                total = int(dfs[present[0]])
-            elif total_mode == "approx":
-                if conj:
-                    # intersection ≤ smallest term's df (tight upper bound)
-                    total = int(min(dfs.values()))
-                else:
-                    total = min(int(sum(dfs.values())), self.n_docs)
-            else:
-                total = self._match_count(present, conj, min_should_match=msm)
-        else:
-            total = scored.count()
-            scored.unpersist()
-        return SearchResult(total=total, page=page)
+            clauses = {"should": [match_terms]}
+        return self._run(self._query(
+            **clauses, k=k, skip=skip, mode=mode,
+            force_distributed=force_distributed, dv_pred=dv_pred,
+            sort_path=sort_path, sort_desc=sort_desc,
+            constant_boost=constant_boost, avail_boost=avail_boost,
+            group_by=group_by, highlight=highlight, with_url=with_url,
+            total_mode=total_mode,
+        ))
 
     def _group_rollup(self, scored: DataFrame) -> DataFrame:
         """Scored docs -> one row per group: the group's best hit + count.
@@ -2682,7 +2409,7 @@ class SearchEngine:
         """
         from pyspark.sql import Window
 
-        g = scored.withColumn("g_id", F.pmod(F.col("dl"), F.lit(GROUP_MOD)).cast("int"))
+        g = scored.withColumn("g_id", F.pmod(F.col("dl"), F.lit(GROUP_MOD)).cast("long"))
         w = Window.partitionBy("g_id").orderBy(
             F.desc(F.round("score", 6)), F.asc("doc_id")
         )
@@ -2694,36 +2421,25 @@ class SearchEngine:
             .join(counts, "g_id")
         )
 
-    def _match_count(
-        self, terms: list[str], conjunctive: bool, min_should_match: int = 0
-    ) -> int:
-        """Total match count without decoding scores.
+    def _wand_total(self, q: _Query) -> int:
+        """The total under WAND, which prunes the scored set.
 
-        Disjunctive counts need distinct doc_ids across terms, which requires
-        a decode of doc_ids only (cheap: no float math); conjunctive likewise.
-        Done as a distributed aggregate, not a collect.
+        The exact count (the reference's $facet count) is the matched-set
+        plan's docs-only decode — for a head-term query over 10^13 postings
+        that decode dominates the query.  Shortcuts: a single key's total
+        IS its precomputed df (always exact, zero decode);
+        ``total_mode="approx"`` serves conjunctive queries min(df) — the
+        tight upper bound for an intersection (Σdf can overstate it by
+        orders of magnitude) — and the rest the Σdf upper bound capped at
+        N, with no decode either way.
         """
-
-        def docs_only(it):
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                outs = []
-                for t, buf in zip(pdf["term"], pdf["postings"]):
-                    doc_ids, _, _ = decode_postings(buf)
-                    outs.append(pd.DataFrame({"doc_id": doc_ids, "term": t}))
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
-
-        segs = self._candidate_segments(terms).select("term", "postings")
-        docs = segs.mapInPandas(docs_only, schema="doc_id long, term string")
-        if conjunctive:
-            agg = docs.groupBy("doc_id").agg(F.count("*").alias("nt"))
-            return agg.filter(F.col("nt") == len(terms)).count()
-        if min_should_match:
-            agg = docs.groupBy("doc_id").agg(F.count("*").alias("nt"))
-            return agg.filter(F.col("nt") >= min_should_match).count()
-        return docs.select("doc_id").distinct().count()
+        if len(q.keys) == 1:
+            return int(q.dfs[q.keys[0]])
+        if q.total_mode == "approx":
+            if q.occur() is not None and q.occur()[0] == "==":
+                return int(min(q.dfs.values()))
+            return min(int(sum(q.dfs.values())), self.n_docs)
+        return self._matched_docs(q).count()
 
     # ------------------------------------------------------------------ WAND
     def _wand_meta(self, terms: list[str]) -> pd.DataFrame:
@@ -2740,19 +2456,7 @@ class SearchEngine:
             .toPandas()
         )
 
-    def _wand_scored(
-        self,
-        terms: list[str],
-        idf: dict[str, float],
-        conjunctive: bool,
-        constant_boost: bool,
-        avail_boost: bool,
-        k: int,
-        boost_ceiling: float,
-        min_should_match: int = 0,
-        meta: pd.DataFrame | None = None,
-        avgdl_map: dict[str, float] | None = None,
-    ) -> DataFrame:
+    def _wand_scored(self, q: _Query, meta: pd.DataFrame | None = None) -> DataFrame:
         """Distributed block-max WAND over the global doc-id grid.
 
         Block metadata (term, sseg, max_tf_norm, doc_count — NOT postings) is
@@ -2762,24 +2466,23 @@ class SearchEngine:
         ranges whose bound ≥ θ, with per-block pruning inside.
         """
         self.last_wand = None
+        terms, idf, boost_ceiling, k = q.keys, q.idf, q.boost_ceiling, q.k
         if meta is None:
             meta = self._wand_meta(terms)
         if meta.empty:
-            return self._scored_docs(terms, idf, avgdl_map=avgdl_map)
+            return self._dist_kernel(q)
         meta["ub"] = meta["term"].map(idf).fillna(0.0) * (meta["mtn"] * self.bound_scale)
         by_range = meta.groupby("sseg").agg(
             ub=("ub", "sum"), dc=("dc", "sum"), nterms=("term", "nunique")
         )
-        if conjunctive:
-            by_range = by_range[by_range["nterms"] == len(terms)]
-        elif min_should_match > 1:
-            # a doc matching >= m terms needs >= m terms present in its range
-            by_range = by_range[by_range["nterms"] >= min_should_match]
+        occ = q.occur()
+        if occ is not None:
+            # a doc matching >= m keys (every key when conjunctive) needs
+            # >= m keys present in its range
+            by_range = by_range[by_range["nterms"] >= occ[1]]
         if by_range.empty:
             # no range can satisfy the clause requirement -> empty result
-            return self.spark.createDataFrame(
-                [], "doc_id long, score double, n_terms int, dl int"
-            )
+            return self.spark.createDataFrame([], "doc_id long, score double")
         # per-range ACHIEVABLE floor: idf·mtn is attained by the doc
         # realizing the block max, and distinct ranges hold distinct docs, so
         # the k-th largest per-range achievable is a sound lower bound on the
@@ -2803,7 +2506,7 @@ class SearchEngine:
         ).groupby("sseg")["ach"].max()
         theta_floor = None
         if (
-            not conjunctive and min_should_match <= 1
+            occ is None
             # per-field norms: sound only when the index baked each
             # posting's mtn at its OWN field avgdl (per_field_mtn — idf·mtn
             # is then attained by the block-max doc).  A pre-r5 multi-field
@@ -2811,7 +2514,7 @@ class SearchEngine:
             # OVER-estimates what a smaller-avgdl field's doc can actually
             # score — still a sound UPPER bound (pruning stays exact) but
             # not an achievable FLOOR; those rely on phase-1's exact θ.
-            and (avgdl_map is None or self.per_field_mtn)
+            and (q.avgdl is None or self.per_field_mtn)
             and len(best_per_range) >= k
             and self.floor_scale > 0.0
         ):
@@ -2826,7 +2529,7 @@ class SearchEngine:
         by_range["ub_total"] = by_range["ub"] + boost_ceiling
 
         # per-(term, range) residual bound: what the OTHER terms could add in
-        # that range — needed for sound per-block pruning inside _scored_docs
+        # that range — needed for sound per-block pruning inside the kernel
         range_ub = by_range["ub"].to_dict()
         rest_bounds = {
             (r["term"], int(s)): float(range_ub.get(s, 0.0) - r["ub"])
@@ -2839,16 +2542,9 @@ class SearchEngine:
         phase1 = by_range.index[:n1].tolist()
 
         def exact(ssegs, theta=None):
-            s = self._scored_docs(
-                terms, idf, ssegs=ssegs, theta=theta,
-                boost_ceiling=boost_ceiling, rest_bounds=rest_bounds,
-                avgdl_map=avgdl_map,
+            return self._dist_kernel(
+                q, ssegs=ssegs, theta=theta, rest_bounds=rest_bounds
             )
-            if conjunctive:
-                s = s.filter(F.col("n_terms") == len(terms))
-            elif min_should_match:
-                s = s.filter(F.col("n_terms") >= min_should_match)
-            return self._apply_boosts(s, constant_boost, avail_boost)
 
         # phase 1 is both the θ probe AND one branch of the final union —
         # persist it so the final plan reuses the computed scores instead of

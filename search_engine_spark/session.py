@@ -8,8 +8,30 @@ code runs unchanged under ``spark-submit --py-files`` on a real cluster.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+# the master URL forms spark-submit accepts (local, local[N]/local[*]/
+# local[N,F], spark://, yarn, k8s://, mesos://)
+_MASTER_URL = re.compile(r"(local(\[[^\]]+\])?|yarn|(spark|k8s|mesos)://\S+)")
+
+
+def _external_master(env=None) -> bool:
+    """True when a master was supplied from outside this process.
+
+    spark-submit's PythonRunner exports ``PYSPARK_GATEWAY_PORT`` (the JVM
+    already holds the submit-time master) and ``bin/spark-submit`` exports
+    ``MASTER``.  Before the gateway attaches, ``SparkConf()`` is an empty
+    pure-Python conf and sees nothing of ``--master``, so these two are the
+    only signals.  ``MASTER`` counts only when it parses as a Spark master
+    URL: unrelated tooling also sets a ``MASTER`` variable, and skipping
+    ``.master()`` on its account leaves the session with no master at all.
+    """
+    env = os.environ if env is None else env
+    if env.get("PYSPARK_GATEWAY_PORT"):
+        return True
+    return bool(_MASTER_URL.fullmatch(env.get("MASTER", "").strip()))
 
 
 def get_spark(
@@ -49,16 +71,12 @@ def get_spark(
         shuffle_partitions = max(3 * cpus, 24)
 
     # Respect a master provided by spark-submit; fall back to local[N] only
-    # for plain `python x.py` runs.  Measured on this pyspark build: before
-    # the gateway attaches, SparkConf() is an empty pure-Python conf and sees
-    # nothing of --master, but spark-submit's PythonRunner exports
-    # PYSPARK_GATEWAY_PORT (the JVM already holds the submit-time master) and
-    # bin/spark-submit exports MASTER.  Either signal means the master is
-    # external and calling .master() here would override it (code-level conf
-    # outranks submit flags) — collapsing a cluster job onto the driver.
-    external_master = os.environ.get("PYSPARK_GATEWAY_PORT") or os.environ.get("MASTER")
+    # for plain `python x.py` runs.  Calling .master() under an external
+    # master would override it (code-level conf outranks submit flags) and
+    # collapse a cluster job onto the driver.
+    external = _external_master()
     builder = SparkSession.builder
-    if not external_master:
+    if not external:
         builder = builder.master(f"local[{cpus}]")
     builder = (
         builder.appName(app_name)

@@ -878,3 +878,51 @@ def test_number_facet_default_bucket(dv_engine, dv_oracle, dv_attrs, dv_term):
             facets={"x": {"type": "number", "path": "n_chars",
                           "boundaries": b, "default": str(b[0])}},
         )
+
+
+def test_page_schema_is_one_shape(spark, sf_dv_index, dv_engine, dv_term):
+    """Every page has one schema: the same columns in the same order
+    whether the page is empty or populated and on both placements, with
+    doc_id int64, score float64 and one g_id dtype — for a hit, an absent
+    term and an empty wildcard expansion alike."""
+    from search_engine_spark.query.engine import SearchEngine
+
+    eng = SearchEngine(spark, sf_dv_index)
+    sort = {"path": "warc_ts"}
+    single = [
+        {"with_url": True}, {"group_by": True}, {"sort": sort},
+        {"group_by": True, "with_url": True}, {"sort": sort, "with_url": True},
+    ]
+    queries = [("milk", {}), ("zzzzq", {}), ("zzq*", {"wildcard": True})]
+    g_ids = set()
+    for opts in single:
+        shapes = {}
+        for fd in (False, True):
+            for kw, extra in queries:
+                res = eng.search(kw, k=5, force_distributed=fd, **opts, **extra)
+                assert (res.total > 0) == (kw == "milk"), (kw, opts, fd)
+                page = res.page
+                shapes[(kw, fd)] = list(page.columns)
+                assert page["doc_id"].dtype == np.int64, (kw, opts, fd)
+                assert page["score"].dtype == np.float64, (kw, opts, fd)
+                if "g_id" in page:
+                    g_ids.add(page["g_id"].dtype)
+        assert len({tuple(c) for c in shapes.values()}) == 1, (opts, shapes)
+    assert len(g_ids) == 1, g_ids
+    clause_queries = [
+        [("title", dv_term)], [("title", "zzzzq")],
+        [{"field": "title", "query": "zzq*", "kind": "wildcard"}],
+    ]
+    for opts in ({"with_url": True}, {"sort": {"path": "n_chars"}},
+                 {"sort": {"path": "n_chars"}, "with_url": True}):
+        shapes = set()
+        for fd in (False, True):
+            for i, should in enumerate(clause_queries):
+                res = dv_engine.search_fields(
+                    should=should, k=5, force_distributed=fd, **opts
+                )
+                assert (res.total > 0) == (i == 0), (should, fd)
+                shapes.add(tuple(res.page.columns))
+                assert res.page["doc_id"].dtype == np.int64, (should, opts, fd)
+                assert res.page["score"].dtype == np.float64, (should, opts, fd)
+        assert len(shapes) == 1, (opts, shapes)

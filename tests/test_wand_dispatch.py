@@ -218,3 +218,22 @@ def test_theta_lb_scales_with_floor_scale():
     assert off["theta_lb"] == 0.0
     assert off["predicted_dc"] >= half["predicted_dc"] >= full["predicted_dc"]
     assert off["predicted_dc"] == off["total_dc"]  # nothing prunes
+
+
+def test_last_dispatch_describes_every_auto_call(spark, index_tiny):
+    """A driver-placed mode="auto" query records its own dispatch instead
+    of leaving the previous query's estimate in place."""
+    from search_engine_spark.analysis.text import preprocess_query
+    from search_engine_spark.query.engine import SearchEngine
+
+    eng = SearchEngine(spark, index_tiny)
+    eng.search("the oil", k=5, mode="auto", force_distributed=True)
+    forced = dict(eng.last_dispatch)
+    assert forced["n_ranges"] > 0  # the cost model ran on block metadata
+    kw = "cadbury dairy"
+    res = eng.search(kw, k=5, mode="auto")
+    assert res.total > 0
+    small = eng.last_dispatch
+    assert small["mode"] == "sort"
+    assert small["total_dc"] == sum(eng.term_dfs(sorted(set(preprocess_query(kw)))).values())
+    assert small["n_ranges"] == 0 and small["predicted_dc"] == 0
