@@ -13,33 +13,36 @@ the driver kernel (small candidate sets), the distributed kernel, or WAND,
 and one finisher ranks and pages every placement's candidates.  The
 distributed physical strategies:
 
-- ``mode="sort"`` (correctness baseline): decode candidate blocks -> vectorized
-  BM25 -> groupBy(doc_id) with ascending-term-order float summation ->
-  ``orderBy(score desc, doc_id asc).offset(skip).limit(k)``.  Catalyst executes
-  the limit as TakeOrderedAndProject — a per-partition bounded heap + driver
-  k-way merge, which is exactly the distributed top-k the north star asks for.
+- ``mode="sort"`` (correctness baseline): every term's postings are bucketed
+  on the SAME global doc-id grid (builder.py), so the candidate blocks
+  shuffle by doc range (``sseg``) while still compressed, with the
+  doc-values slice keyed by the same range beside them.  One ``mapInArrow``
+  task then runs the driver's own fold (:func:`_fold`) one range at a time,
+  applies the slice, and emits its top ``skip+k`` rows by the page's rank
+  key plus its match count (its group rollup under ``group_by``); the
+  driver merges these partials by the same rank rule.
 
-- ``mode="wand"`` (block-max pruned): because every term's postings are
-  bucketed on the SAME global doc-id grid (builder.py), per-range score upper
-  bounds can be summed across query terms.  Phase 1 scores the most promising
-  ranges exactly and takes a threshold θ from the running top-k heap; phase 2
+- ``mode="wand"`` (block-max pruned): per-range score upper bounds sum
+  across query terms on the shared grid.  Phase 1 scores the most promising
+  ranges exactly and takes a threshold θ from their merged top-k; phase 2
   skips every remaining range — and, inside surviving ranges, every block —
   whose upper bound is strictly below θ.  Pruning uses strict inequality so
   θ-ties (which doc_id tiebreaks could still admit) are never dropped:
   results stay bit-identical to the baseline.
 
-Float determinism: per-doc scores are summed in ascending term order via
-``sort_array(collect_list(struct(term, score)))`` + ``F.aggregate`` — a
-JVM-side deterministic fold, immune to shuffle/partition ordering.
+Float determinism: every placement sums a doc's scores in ascending key
+order in numpy, starting from 0.0 — a doc's postings all live in one range,
+so a per-range fold adds exactly what the whole-query fold adds.
 """
 
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -63,7 +66,6 @@ AVAIL_BOOST = 10.0  # reference search_utils.py:157
 # the engine and every oracle compute it identically from the corpus
 GROUP_MOD = 53
 
-_SCORED_SCHEMA = "doc_id long, term string, score double, dl int"
 # the engine-owned page columns: one dtype each, empty page or populated
 _PAGE_DTYPES = {"doc_id": "int64", "score": "float64", "g_id": "int64",
                 "n_docs": "int64", "first_pos": "int64"}
@@ -234,6 +236,111 @@ def _concat_decoded(parts: dict[str, list]) -> dict[str, tuple]:
         t: tuple(np.concatenate([p[j] for p in ps]) for j in range(4))
         for t, ps in parts.items()
     }
+
+
+def _fold(q: _Query, terms, bufs, avgdl: float) -> pd.DataFrame:
+    """The one scoring fold both placements run — the driver over every
+    candidate block, a distributed task once per doc range: decode the
+    blocks (``terms[i]``'s postings ``bufs[i]``), BM25 summed per doc in
+    ascending key order, the occur reduction, boosts, and max(dl) when
+    boosts or the group key read it.  Columns doc_id (ascending), score
+    [, g_id, n_docs = 1]."""
+    per_key: dict[str, list] = {}
+    for t, buf in zip(terms, bufs):
+        per_key.setdefault(t, []).append(decode_postings(buf))
+    decoded = {
+        t: tuple(np.concatenate([p[j] for p in ps]) for j in range(3))
+        for t, ps in per_key.items()
+    }
+    uniq = (
+        np.unique(np.concatenate([d[0] for d in decoded.values()]))
+        if decoded else np.empty(0, dtype=np.int64)
+    )
+    acc = np.zeros(uniq.size, dtype=np.float64)
+    dls = np.zeros(uniq.size, dtype=np.int64)
+    occ = q.occur()
+    n_keys = np.zeros(uniq.size, dtype=np.int64) if isinstance(occ, tuple) else None
+    where: dict[str, np.ndarray] = {}
+    for t in sorted(decoded):
+        ids, tfs, dl = decoded[t]
+        tf = tfs.astype(np.float64)
+        adl = q.avgdl[t] if q.avgdl else avgdl
+        s = q.idf[t] * tf / (tf + K1 * (1.0 - B + B * dl.astype(np.float64) / adl))
+        pos = np.searchsorted(uniq, ids)
+        acc[pos] = acc[pos] + s
+        if n_keys is not None:
+            n_keys[pos] += 1
+        elif occ == "clauses":
+            where[t] = pos
+        if q.reads_dl:
+            np.maximum.at(dls, pos, dl.astype(np.int64))
+    keep = None
+    if n_keys is not None:
+        keep = n_keys == occ[1] if occ[0] == "==" else n_keys >= occ[1]
+    elif occ == "clauses":
+        def hit(c):  # one flag array per clause, never per key
+            flag = np.zeros(uniq.size, dtype=bool)
+            for t in c:
+                if t in where:
+                    flag[where[t]] = True
+            return flag
+        keep = np.ones(uniq.size, dtype=bool)
+        for c in q.must:
+            keep &= hit(c)
+        if q.msm:
+            n_should = np.zeros(uniq.size, dtype=np.int64)
+            for c in q.should:
+                n_should += hit(c)
+            keep &= n_should >= q.msm
+        for c in q.must_not:  # Lucene MUST_NOT: any hit excludes the doc
+            keep &= ~hit(c)
+    if keep is not None:
+        uniq, acc, dls = uniq[keep], acc[keep], dls[keep]
+    if q.constant_boost:
+        acc = acc + np.where(dls % 37 == 0, CONSTANT_BOOST, 0.0)
+    if q.avail_boost:
+        acc = acc + np.where(dls % 7 > 0, AVAIL_BOOST, 0.0)
+    cands = pd.DataFrame({"doc_id": uniq, "score": acc})
+    if q.group_by:
+        cands = cands.assign(g_id=dls % GROUP_MOD, n_docs=np.ones(uniq.size, np.int64))
+    return cands
+
+
+def _rank(q: _Query, rows: pd.DataFrame) -> np.ndarray:
+    """Row positions of ``rows`` (a RangeIndex frame) in rank order: score
+    desc (the 6-decimal rounded score for groups), or the sort attribute
+    with nulls last; doc_id asc breaks every tie."""
+    if q.sort_path is not None:
+        return rows.sort_values(
+            [q.sort_path, "doc_id"], ascending=[not q.sort_desc, True],
+            na_position="last",
+        ).index.to_numpy()
+    score = rows["score"].to_numpy(dtype=np.float64)
+    if q.group_by:
+        score = round_half_away(score, 6)
+    return np.lexsort((rows["doc_id"].to_numpy(), -score))
+
+
+def _partial(q: _Query, rows: pd.DataFrame) -> pd.DataFrame:
+    """What a placement keeps of ``rows`` for the page, and the merge of
+    such partials: under ``group_by`` one row per g_id — the best hit on
+    the rounded score (the rule every oracle uses, so a last-ulp float
+    difference cannot flip a winner; reported scores stay raw) with the
+    member counts summed (reference /v2/search, app.py:488-520); else the
+    top ``skip+k`` rows by the page's rank key."""
+    if not q.group_by:
+        top = _rank(q, rows)[: max(q.skip + q.k, 1)]
+        return rows.iloc[top].reset_index(drop=True)
+    ids, n = rows["doc_id"].to_numpy(), rows["n_docs"].to_numpy()
+    score = rows["score"].to_numpy(dtype=np.float64)
+    order = np.lexsort((ids, -round_half_away(score, 6)))
+    gid, first, inv = np.unique(
+        rows["g_id"].to_numpy()[order], return_index=True, return_inverse=True
+    )
+    return pd.DataFrame({
+        "doc_id": ids[order][first], "score": score[order][first], "g_id": gid,
+        "n_docs": np.bincount(inv, weights=n[order], minlength=gid.size).astype(np.int64),
+    })
 
 
 def predict_wand_decode(
@@ -803,79 +910,6 @@ class SearchEngine:
         return seg.filter(cond)
 
     # --------------------------------------------------------------- scoring
-    def _scored_rows(
-        self,
-        terms: list[str],
-        idf: dict[str, float],
-        ssegs: list[int] | None = None,
-        theta: float | None = None,
-        boost_ceiling: float = 0.0,
-        rest_bounds: dict | None = None,
-        avgdl_map: dict[str, float] | None = None,
-    ) -> DataFrame:
-        """Decode candidate blocks -> per-(doc,term) BM25 partial scores.
-
-        ``rest_bounds[(term, sseg)]`` is the sum of the OTHER query terms'
-        score upper bounds in that doc range: a block of one term can only be
-        pruned against θ after adding what the other terms could still
-        contribute (pruning on the single-term bound alone would wrongly drop
-        docs whose score is split across terms).
-
-        ``avgdl_map`` overrides the corpus avgdl per term — the multi-field
-        path passes each posting key its FIELD's avgdl (Lucene per-field
-        norms); baked block bounds stay sound because the builder bakes with
-        the largest per-field avgdl (tf_norm is monotone in avgdl).
-        """
-        avgdl = self.avgdl
-        bscale = self.bound_scale
-        idf_b = self.spark.sparkContext.broadcast(dict(idf))
-        rb_b = self.spark.sparkContext.broadcast(rest_bounds or {})
-        adl_b = self.spark.sparkContext.broadcast(dict(avgdl_map or {}))
-        th = theta
-
-        def score_blocks(it):
-            idfs = idf_b.value
-            rbs = rb_b.value
-            adls = adl_b.value
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                outs = []
-                terms_col = pdf["term"].to_numpy(dtype=object)
-                sseg_col = pdf["sseg"].to_numpy(dtype=np.int64)
-                mtn = pdf["max_tf_norm"].to_numpy(dtype=np.float64)
-                for i, buf in enumerate(pdf["postings"]):
-                    t = terms_col[i]
-                    w = idfs.get(t, 0.0)
-                    # block-max pruning: skip blocks that cannot reach θ even
-                    # with the other terms' range bounds added
-                    if th is not None:
-                        rest = rbs.get((t, int(sseg_col[i])), 0.0)
-                        if w * (mtn[i] * bscale) + rest + boost_ceiling < th:
-                            continue
-                    doc_ids, tfs, dls = decode_postings(buf)
-                    tf = tfs.astype(np.float64)
-                    dl = dls.astype(np.float64)
-                    adl = adls.get(t, avgdl)
-                    score = w * tf / (tf + K1 * (1.0 - B + B * dl / adl))
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "doc_id": doc_ids,
-                                "term": t,
-                                "score": score,
-                                "dl": dls.astype(np.int32),
-                            }
-                        )
-                    )
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
-
-        segs = self._candidate_segments(terms, ssegs=ssegs)
-        return segs.select("term", "sseg", "max_tf_norm", "postings").mapInPandas(
-            score_blocks, schema=_SCORED_SCHEMA
-        )
-
     def _apply_boosts(
         self, scored: DataFrame, constant_boost: bool, avail_boost: bool
     ) -> DataFrame:
@@ -929,6 +963,10 @@ class SearchEngine:
     # fixed term stays ~seconds of job overhead while an unpruned head-term
     # decode at 10^12 docs is 10^10+ rows — hours of CPU — so any strongly
     # prunable query clears MIN_SAVED by orders of magnitude there.
+    # Both were fit against the earlier distributed kernel (per-block pandas
+    # decode, a JVM groupBy fold, a persisted phase-1 union); they are not
+    # refit for the doc-range kernel, since a refit needs the 8M/24M
+    # interleaved A/B re-run.
     WAND_DECODE_COST_RATIO = 3.0
     WAND_AUTO_MIN_SAVED = 21_000_000
     # set by every mode="auto" query: {"mode", "total_dc", "predicted_dc",
@@ -1028,122 +1066,106 @@ class SearchEngine:
             )
         if small:
             return self._finish(q, self._driver_kernel(q))
-        return self._finish(q, self._dist_kernel(q))
+        return self._finish(q, *self._dist_kernel(q))
 
     def _driver_kernel(self, q: _Query) -> pd.DataFrame:
-        """The driver placement: one collect of the candidate blocks, numpy
-        decode + BM25 folded in ascending key order (the distributed fold's
-        order, so scores agree bit-for-bit), the occur reduction, boosts,
-        one doc-values probe, the group rollup.  Returns every matched
-        candidate; the finisher ranks and pages."""
-        per_key: dict[str, list] = {}
-        for r in self._candidate_segments(q.keys).select("term", "postings").collect():
-            per_key.setdefault(r["term"], []).append(decode_postings(r["postings"]))
-        decoded = {
-            t: tuple(np.concatenate([p[j] for p in ps]) for j in range(3))
-            for t, ps in per_key.items()
-        }
-        uniq = (
-            np.unique(np.concatenate([d[0] for d in decoded.values()]))
-            if decoded else np.empty(0, dtype=np.int64)
-        )
-        acc = np.zeros(uniq.size, dtype=np.float64)
-        dls = np.zeros(uniq.size, dtype=np.int64)
-        occ = q.occur()
-        n_keys = np.zeros(uniq.size, dtype=np.int64) if isinstance(occ, tuple) else None
-        where: dict[str, np.ndarray] = {}
-        for t in sorted(decoded):
-            ids, tfs, dl = decoded[t]
-            tf = tfs.astype(np.float64)
-            adl = q.avgdl[t] if q.avgdl else self.avgdl
-            s = q.idf[t] * tf / (tf + K1 * (1.0 - B + B * dl.astype(np.float64) / adl))
-            pos = np.searchsorted(uniq, ids)
-            acc[pos] = acc[pos] + s
-            if n_keys is not None:
-                n_keys[pos] += 1
-            elif occ == "clauses":
-                where[t] = pos
-            if q.reads_dl:
-                np.maximum.at(dls, pos, dl.astype(np.int64))
-        keep = None
-        if n_keys is not None:
-            keep = n_keys == occ[1] if occ[0] == "==" else n_keys >= occ[1]
-        elif occ == "clauses":
-            def hit(c):  # one flag array per clause, never per key
-                flag = np.zeros(uniq.size, dtype=bool)
-                for t in c:
-                    if t in where:
-                        flag[where[t]] = True
-                return flag
-            keep = np.ones(uniq.size, dtype=bool)
-            for c in q.must:
-                keep &= hit(c)
-            if q.msm:
-                n_should = np.zeros(uniq.size, dtype=np.int64)
-                for c in q.should:
-                    n_should += hit(c)
-                keep &= n_should >= q.msm
-            for c in q.must_not:  # Lucene MUST_NOT: any hit excludes the doc
-                keep &= ~hit(c)
-        if keep is not None:
-            uniq, acc, dls = uniq[keep], acc[keep], dls[keep]
-        if q.constant_boost:
-            acc = acc + np.where(dls % 37 == 0, CONSTANT_BOOST, 0.0)
-        if q.avail_boost:
-            acc = acc + np.where(dls % 7 > 0, AVAIL_BOOST, 0.0)
-        cands = pd.DataFrame({"doc_id": uniq, "score": acc})
-        if (q.dv_pred is not None or q.sort_path is not None) and uniq.size:
+        """The driver placement: one collect of the candidate blocks, the
+        shared fold, one doc-values probe, the group rollup.  Returns every
+        matched candidate; the finisher ranks and pages."""
+        rows = self._candidate_segments(q.keys).select("term", "postings").collect()
+        cands = _fold(q, [r["term"] for r in rows], [r["postings"] for r in rows], self.avgdl)
+        if (q.dv_pred is not None or q.sort_path is not None) and len(cands):
             attrs = self._dv_rows(
-                uniq, q.dv_pred, [q.sort_path] if q.sort_path else []
+                cands["doc_id"].to_numpy(), q.dv_pred, [q.sort_path] if q.sort_path else []
             )
             cands = cands.merge(attrs, on="doc_id", how="inner")
-        if q.group_by:
-            # group rollup (reference /v2/search, app.py:488-520): best hit
-            # per g_id, group count.  Winner selection orders on the ROUNDED
-            # score (6 decimals, doc_id tiebreak) — the rule every oracle
-            # uses — so a last-ulp float difference can't flip a winner
-            # between implementations; reported scores stay raw.
-            order = np.lexsort((uniq, -round_half_away(acc, 6)))
-            gid, first, counts = np.unique(
-                (dls % GROUP_MOD)[order], return_index=True, return_counts=True
-            )
-            cands = pd.DataFrame({
-                "doc_id": uniq[order][first], "score": acc[order][first],
-                "g_id": gid, "n_docs": counts,
-            })
-        return cands
+        return _partial(q, cands) if q.group_by else cands
 
     def _dist_kernel(
         self, q: _Query, ssegs: list[int] | None = None,
         theta: float | None = None, rest_bounds: dict | None = None,
-    ) -> DataFrame:
+    ) -> tuple[pd.DataFrame, int | None]:
         """The distributed placement, and each WAND phase (``ssegs`` /
-        ``theta`` / ``rest_bounds`` restrict and prune the decode): per-block
-        decode+score, one groupBy fold per doc in ascending key order, the
-        occur reduction, boosts, the doc-values join and the group rollup.
-        Columns doc_id, score [, dl] [, sort attribute], or the rollup's."""
-        scored = self._scored_rows(
-            q.keys, q.idf, ssegs=ssegs, theta=theta,
-            boost_ceiling=q.boost_ceiling, rest_bounds=rest_bounds,
-            avgdl_map=q.avgdl,
+        ``theta`` / ``rest_bounds`` restrict and prune the decode).
+
+        Candidate block rows shuffle by doc range still compressed; the
+        doc-values slice (:meth:`_dv_probe`, keyed by the builder's
+        ``doc_id DIV range_docs``) rides the same shuffle, so each range's
+        attributes land beside its blocks.  Each task folds one range at a
+        time with :func:`_fold` (its memory is one range's decoded
+        postings), joins the slice (inner with a predicate; left without,
+        so null attributes sort last) and emits its :func:`_partial` plus
+        its match count.  Returns the merged partials and the total (None
+        under ``group_by``: the finisher counts the groups)."""
+        cols = [q.sort_path] if q.sort_path else []
+        frame = self._candidate_segments(q.keys, ssegs).select(
+            "term", "sseg", "max_tf_norm", "postings"
         )
-        # deterministic ascending-key-order float summation (JVM-side fold)
-        parts = F.sort_array(F.collect_list(F.struct("term", "score")))
-        dl = ["dl"] if q.reads_dl else []
-        docs = scored.groupBy("doc_id").agg(
-            parts.alias("parts"), *[F.max(c).alias(c) for c in dl]
-        )
-        docs = self._occur_filter(
-            q, docs, F.transform(F.col("parts"), lambda x: x["term"]), F.size("parts")
-        ).select(
-            "doc_id",
-            F.aggregate("parts", F.lit(0.0), lambda a, x: a + x["score"]).alias("score"),
-            *dl,
-        )
-        docs = self._apply_boosts(docs, q.constant_boost, q.avail_boost)
-        if q.dv_pred is not None or q.sort_path is not None:
-            docs = self._dv_join(docs, q.dv_pred, [q.sort_path] if q.sort_path else [])
-        return self._group_rollup(docs) if q.group_by else docs
+        ddl = "doc_id long, score double" + (", g_id long, n_docs long" if q.group_by else "")
+        dv = q.dv_pred is not None or bool(cols)
+        if dv:
+            rd = int(self.stats["range_docs"])
+            frame = frame.unionByName(
+                self._dv_probe(q.dv_pred, cols).withColumn(
+                    "sseg", F.expr(f"CAST(doc_id DIV {rd} AS INT)")
+                ),
+                allowMissingColumns=True,
+            )
+            ddl += "".join(
+                f", `{c}` {self._doc_stats_df.schema[c].dataType.simpleString()}" for c in cols
+            )
+        kq, how = replace(q, dv_pred=None), "left" if q.dv_pred is None else "inner"
+        avgdl, bscale, ceiling = self.avgdl, self.bound_scale, q.boost_ceiling
+
+        def kernel(batches):
+            batches = [b for b in batches if b.num_rows]
+            if not batches:
+                return
+            tbl = pa.Table.from_batches(batches)
+            terms, bufs = tbl["term"].to_pylist(), tbl["postings"].to_pylist()
+            sseg = tbl["sseg"].to_numpy()
+            is_blk = np.array([t is not None for t in terms])  # else a dv row
+            keep = is_blk
+            if theta is not None:
+                # block-max pruning: a block whose bound, plus what the other
+                # keys could still add in its range, cannot reach θ is skipped
+                w = np.array([kq.idf.get(t, 0.0) for t in terms])
+                rest = np.array([rest_bounds.get((t, int(s)), 0.0) for t, s in zip(terms, sseg)])
+                mtn = tbl["max_tf_norm"].to_numpy(zero_copy_only=False)
+                keep = keep & ~(w * (mtn * bscale) + rest + ceiling < theta)
+            order = np.argsort(sseg, kind="stable")
+            parts, n = [], 0
+            for rows in np.split(order, np.flatnonzero(np.diff(sseg[order])) + 1):
+                b = rows[keep[rows]]
+                if not b.size:
+                    continue
+                cands = _fold(kq, [terms[i] for i in b], [bufs[i] for i in b], avgdl)
+                if dv:
+                    attrs = tbl.take(rows[~is_blk[rows]]).select(["doc_id", *cols])
+                    cands = cands.merge(attrs.to_pandas(), on="doc_id", how=how)
+                n += len(cands)
+                parts.append(_partial(kq, cands))
+            if n:
+                top = _partial(kq, pd.concat(parts, ignore_index=True))
+                top = top.assign(n=[n] + [0] * (len(top) - 1))
+                yield pa.RecordBatch.from_pandas(top, preserve_index=False, schema=pa.schema([
+                    tbl.schema.field(c) if c in cols else
+                    (c, pa.from_numpy_dtype(np.dtype(_PAGE_DTYPES.get(c, "int64"))))
+                    for c in top.columns
+                ]))
+
+        out = self._by_range(frame).mapInArrow(kernel, ddl + ", n long").toPandas()
+        total = int(out.pop("n").sum())
+        if q.group_by:
+            return _partial(q, out), None
+        return out, total
+
+    @staticmethod
+    def _by_range(frame: DataFrame) -> DataFrame:
+        """Every row of one doc range (``sseg``) into one task: a hash
+        shuffle with no partition count, so AQE may coalesce small ranges
+        into one task (``rebalance`` could split a range across tasks)."""
+        return frame.repartition("sseg")
 
     @staticmethod
     def _occur_filter(q: _Query, docs: DataFrame, ts, n) -> DataFrame:
@@ -1205,9 +1227,9 @@ class SearchEngine:
         return probe.select("doc_id", *cols)
 
     def _dv_join(self, frame: DataFrame, pred, cols) -> DataFrame:
-        """Distributed placements: a left join without a predicate (null
-        attributes survive and sort last), else inner — semi when no
-        column is wanted."""
+        """The Spark plans (facets, phrase's distributed tail): a left join
+        without a predicate (null attributes survive), else inner — semi
+        when no column is wanted."""
         how = "left" if pred is None else ("inner" if cols else "semi")
         return frame.join(self._dv_probe(pred, cols), "doc_id", how)
 
@@ -1230,10 +1252,11 @@ class SearchEngine:
         empty and populated pages one schema (doc_id int64, score float64,
         [g_id, n_docs int64], [sort attribute], [first_pos | highlights],
         [url]), then highlights and hydrates urls for the page docs only.
-        ``cands`` holds every matched candidate: a pandas frame (driver
-        placements) or a Spark frame (distributed and WAND), which pages by
-        TakeOrderedAndProject and counts over one cached plan — the Spark
-        equivalent of the reference's $facet {total, data}
+        ``cands`` is a pandas frame holding every matched candidate, or
+        the merged partials of the distributed kernel with its ``total``;
+        phrase search's distributed tail passes a score-ranked Spark frame,
+        which pages by TakeOrderedAndProject and counts over one cached
+        plan — the Spark equivalent of the reference's $facet {total, data}
         (pipelines.py:27-42) — unless the caller knows ``total``.
         """
         cols = (
@@ -1245,24 +1268,18 @@ class SearchEngine:
         if isinstance(cands, DataFrame):
             if total is None:
                 cands = cands.persist()
-            if q.sort_path is not None:
-                key = (F.desc_nulls_last if q.sort_desc else F.asc_nulls_last)(q.sort_path)
-            else:
-                key = F.desc(F.round("score", 6) if q.group_by else F.col("score"))
-            ranked = cands.orderBy(key, F.asc("doc_id"))
+            ranked = cands.orderBy(F.desc("score"), F.asc("doc_id"))  # phrase: by score
             page = (
                 (ranked.offset(q.skip) if q.skip else ranked).limit(q.k)
                 .select(*cols).toPandas()
             )
-            for df_ in getattr(cands, "_ses_persisted", ()):
-                df_.unpersist()  # WAND's phase-1 cache; the page is materialized
             if total is None:
                 total = cands.count()
                 cands.unpersist()
-            page = page.iloc[self._rank(q, page)] if len(page) else page
+            page = page.iloc[_rank(q, page)] if len(page) else page
         else:
-            total = len(cands)
-            window = self._rank(q, cands)[q.skip : q.skip + q.k] if total else []
+            total = len(cands) if total is None else total
+            window = _rank(q, cands)[q.skip : q.skip + q.k] if len(cands) else []
             page = cands.iloc[window]
         page = page.reindex(columns=cols).reset_index(drop=True)
         cast = {c: t for c, t in _PAGE_DTYPES.items() if c in page and page[c].dtype != t}
@@ -1277,19 +1294,6 @@ class SearchEngine:
                 .select("doc_id", "url").toPandas()
             ))
         return SearchResult(total=int(total), page=page)
-
-    @staticmethod
-    def _rank(q: _Query, rows: pd.DataFrame) -> np.ndarray:
-        """Row positions of ``rows`` (a RangeIndex frame) in rank order."""
-        if q.sort_path is not None:
-            return rows.sort_values(
-                [q.sort_path, "doc_id"], ascending=[not q.sort_desc, True],
-                na_position="last",
-            ).index.to_numpy()
-        score = rows["score"].to_numpy(dtype=np.float64)
-        if q.group_by:
-            score = round_half_away(score, 6)
-        return np.lexsort((rows["doc_id"].to_numpy(), -score))
 
     @staticmethod
     def _attach(page: pd.DataFrame, col: str, fetch) -> pd.DataFrame:
@@ -1934,8 +1938,7 @@ class SearchEngine:
                     {"doc_id": uniq, "tf": tfs_, "dl": dls_, "first_pos": firsts_}
                 )
 
-        n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        return segs.repartition(n, "sseg").mapInPandas(
+        return self._by_range(segs).mapInPandas(
             match, schema="doc_id long, tf long, dl long, first_pos long"
         )
 
@@ -2398,29 +2401,6 @@ class SearchEngine:
             total_mode=total_mode,
         ))
 
-    def _group_rollup(self, scored: DataFrame) -> DataFrame:
-        """Scored docs -> one row per group: the group's best hit + count.
-
-        Reference /v2/search semantics (app.py:488-520): sort by score,
-        group by g_id, $first the winner, count members.  The window
-        partitions by g_id — a keyed shuffle, never a global sort.  The
-        winner is picked on the ROUNDED score with the doc_id tiebreak
-        (the shared oracle rule), so float noise can't flip it.
-        """
-        from pyspark.sql import Window
-
-        g = scored.withColumn("g_id", F.pmod(F.col("dl"), F.lit(GROUP_MOD)).cast("long"))
-        w = Window.partitionBy("g_id").orderBy(
-            F.desc(F.round("score", 6)), F.asc("doc_id")
-        )
-        best = g.withColumn("rn", F.row_number().over(w))
-        counts = g.groupBy("g_id").agg(F.count("*").alias("n_docs"))
-        return (
-            best.filter(F.col("rn") == 1)
-            .select("g_id", "doc_id", "score")
-            .join(counts, "g_id")
-        )
-
     def _wand_total(self, q: _Query) -> int:
         """The total under WAND, which prunes the scored set.
 
@@ -2456,21 +2436,22 @@ class SearchEngine:
             .toPandas()
         )
 
-    def _wand_scored(self, q: _Query, meta: pd.DataFrame | None = None) -> DataFrame:
+    def _wand_scored(self, q: _Query, meta: pd.DataFrame | None = None) -> pd.DataFrame:
         """Distributed block-max WAND over the global doc-id grid.
 
         Block metadata (term, sseg, max_tf_norm, doc_count — NOT postings) is
         a cheap columnar read.  Range upper bound = Σ_t idf_t · max block
         tf_norm in that range (+ boost ceiling).  Phase 1 scores the top
-        ranges exactly to establish θ = kth best score; phase 2 scores only
-        ranges whose bound ≥ θ, with per-block pruning inside.
+        ranges exactly to establish θ = kth best score of its merged
+        partials; phase 2 scores only ranges whose bound ≥ θ, with per-block
+        pruning inside.  Returns both phases' partials.
         """
         self.last_wand = None
         terms, idf, boost_ceiling, k = q.keys, q.idf, q.boost_ceiling, q.k
         if meta is None:
             meta = self._wand_meta(terms)
         if meta.empty:
-            return self._dist_kernel(q)
+            return self._dist_kernel(q)[0]
         meta["ub"] = meta["term"].map(idf).fillna(0.0) * (meta["mtn"] * self.bound_scale)
         by_range = meta.groupby("sseg").agg(
             ub=("ub", "sum"), dc=("dc", "sum"), nterms=("term", "nunique")
@@ -2482,7 +2463,7 @@ class SearchEngine:
             by_range = by_range[by_range["nterms"] >= occ[1]]
         if by_range.empty:
             # no range can satisfy the clause requirement -> empty result
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return pd.DataFrame()
         # per-range ACHIEVABLE floor: idf·mtn is attained by the doc
         # realizing the block max, and distinct ranges hold distinct docs, so
         # the k-th largest per-range achievable is a sound lower bound on the
@@ -2544,26 +2525,15 @@ class SearchEngine:
         def exact(ssegs, theta=None):
             return self._dist_kernel(
                 q, ssegs=ssegs, theta=theta, rest_bounds=rest_bounds
-            )
+            )[0]
 
-        # phase 1 is both the θ probe AND one branch of the final union —
-        # persist it so the final plan reuses the computed scores instead of
-        # re-decoding phase 1's blocks (measured: the re-execution was a
-        # whole extra Spark job, half of WAND's fixed overhead at 10^6 docs).
-        # The caller unpersists via the frame's _ses_persisted attribute
-        # after materializing the page.
-        p1 = exact(phase1).persist()
-        top1 = (
-            p1.orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-            .toPandas()
-        )
-        if len(top1) < k:
+        p1 = exact(phase1)
+        if len(p1) < k:
             # phase 1 alone can't establish θ; the achievable floor (when
             # sound — plain disjunctions only) still can
             theta = theta_floor
         else:
-            theta = float(top1["score"].iloc[-1])
+            theta = float(np.sort(p1["score"].to_numpy())[-k])
             if theta_floor is not None and theta_floor > theta:
                 theta = theta_floor
 
@@ -2580,9 +2550,6 @@ class SearchEngine:
             "n_rest_alive": int(len(rest)),
         }
         if len(rest) == 0:
-            out = p1
-        else:
-            # score surviving ranges with block-level pruning, union phase 1
-            out = p1.unionByName(exact(list(rest), theta=theta))
-        out._ses_persisted = [p1]  # noqa: SLF001 — local cleanup protocol
-        return out
+            return p1
+        # score surviving ranges with block-level pruning beside phase 1
+        return pd.concat([p1, exact(list(rest), theta=theta)], ignore_index=True)

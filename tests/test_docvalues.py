@@ -926,3 +926,92 @@ def test_page_schema_is_one_shape(spark, sf_dv_index, dv_engine, dv_term):
                 assert res.page["doc_id"].dtype == np.int64, (should, opts, fd)
                 assert res.page["score"].dtype == np.float64, (should, opts, fd)
         assert len(shapes) == 1, (opts, shapes)
+
+
+# ------------------------------- distributed partials merged across tasks
+COALESCE = "spark.sql.adaptive.coalescePartitions.enabled"
+# (index, keyword, options): "tiny" runs search() on index_tiny; "dv" runs
+# search_fields over dv_term on the doc-values fixture (same corpus and
+# 16-range grid, ~10% null lang), since index_tiny carries no doc values
+MERGE_CASES = [
+    ("tiny", "the oil", {}),
+    ("tiny", "milk", {}),
+    ("tiny", "the oil milk", {"conjunctive": True}),
+    ("tiny", "the oil milk rice", {"min_should_match": 2}),
+    ("tiny", "the oil", {"constant_boost": True, "avail_boost": True}),
+    ("tiny", "the oil", {"group_by": True}),
+    ("tiny", "the oil", {"skip": 600}),  # past any one task's matches
+    ("tiny", "milk", {"k": 10**4}),  # k larger than the total
+    ("tiny", "the oil", {"mode": "wand"}),
+    ("tiny", "milk rice", {"mode": "wand"}),
+    ("dv", None, {"filter": [{"equals": {"path": "lang", "value": "de"}}]}),
+    ("dv", None, {"sort": {"path": "lang", "order": "asc"}, "k": 10**4}),
+    ("dv", None, {"sort": {"path": "lang", "order": "desc"}, "k": 10**4}),
+]
+
+
+def _jobs(spark, group, fn):
+    """Run ``fn`` under its own job group -> (result, [SparkJobInfo])."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    tracker = sc.statusTracker()
+    return out, [tracker.getJobInfo(j) for j in sorted(tracker.getJobIdsForGroup(group))]
+
+
+def _page_key(res):
+    page = res.page
+    rest = [c for c in page.columns if c not in ("doc_id", "score")]
+    return (res.total, [int(d) for d in page["doc_id"]],
+            [float(s).hex() for s in page["score"]],
+            {c: [str(v) for v in page[c]] for c in rest})
+
+
+@pytest.mark.parametrize("case", MERGE_CASES, ids=lambda c: " ".join(map(str, c)))
+def test_distributed_partials_merge_across_tasks(spark, index_tiny, dv_engine, dv_term, case):
+    """With partition coalescing off, the 16 doc ranges spread over several
+    kernel tasks, so the driver merges real per-task partials (top skip+k
+    plus count, or group rollups): pages and totals must equal the driver
+    placement bit-for-bit.  WAND's pages must equal the driver's sort
+    page."""
+    from search_engine_spark.query.engine import SearchEngine
+
+    where, kw, opts = case
+    if where == "tiny":
+        eng = SearchEngine(spark, index_tiny)
+
+        def run(**kw_):
+            return eng.search(kw, **kw_)
+    else:
+        def run(**kw_):
+            return dv_engine.search_fields(
+                should=[("title", dv_term), ("body", dv_term)], **kw_
+            )
+    want = run(**{k: v for k, v in opts.items() if k != "mode"})
+    old = spark.conf.get(COALESCE)
+    spark.conf.set(COALESCE, "false")
+    try:
+        got, jobs = _jobs(spark, f"merge-{case}", lambda: run(force_distributed=True, **opts))
+    finally:
+        spark.conf.set(COALESCE, old)
+    assert want.total > 0
+    assert _page_key(got) == _page_key(want)
+    if "mode" not in opts:  # WAND's last job counts its exact total
+        kernel = spark.sparkContext.statusTracker().getStageInfo(max(jobs[-1].stageIds))
+        assert kernel.numTasks > 1
+
+
+def test_distributed_search_runs_two_jobs(spark, index_tiny):
+    """One forced-distributed plain search is two Spark jobs: the
+    compressed-block shuffle by doc range and the kernel tasks that return
+    their partials."""
+    from search_engine_spark.query.engine import SearchEngine
+
+    eng = SearchEngine(spark, index_tiny)
+    eng.search("the oil", force_distributed=True)
+    res, jobs = _jobs(spark, "two-jobs", lambda: eng.search("the oil", force_distributed=True))
+    assert res.total > 0
+    assert len(jobs) <= 2, [j.stageIds for j in jobs]
