@@ -6,21 +6,26 @@ search_utils.py:104-151 compound must/should, search_utils.py:157-171 boosts,
 pipelines.py:27-42 facet count + skip/limit pagination) — rank-identically to
 the pure-Python oracle.
 
-Every search surface (``search``, ``search_fields``, ``facet_fields``)
-compiles to one internal query (``_Query``: must/should/must_not clauses of
-posting keys, minimum_should_match, per-key idf).  One planner places it on
-the driver kernel (small candidate sets), the distributed kernel, or WAND,
-and one finisher ranks and pages every placement's candidates.  The
-distributed physical strategies:
+Every search surface (``search``, ``search_fields``, ``facet_fields``,
+phrase search) compiles to one internal query (``_Query``: must/should/
+must_not clauses of posting keys, minimum_should_match, per-key idf, and a
+phrase's token sequence).  One planner places it on the driver kernel
+(small candidate sets), the distributed kernel, or WAND, and one pandas
+finisher ranks and pages every placement's candidates.  The distributed
+kernel (:meth:`SearchEngine._dist_kernel`) is the only distributed query
+plan:
 
 - ``mode="sort"`` (correctness baseline): every term's postings are bucketed
   on the SAME global doc-id grid (builder.py), so the candidate blocks
   shuffle by doc range (``sseg``) while still compressed, with the
   doc-values slice keyed by the same range beside them.  One ``mapInArrow``
-  task then runs the driver's own fold (:func:`_fold`) one range at a time,
-  applies the slice, and emits its top ``skip+k`` rows by the page's rank
-  key plus its match count (its group rollup under ``group_by``); the
-  driver merges these partials by the same rank rule.
+  task then runs the driver's own matcher one range at a time — the fold
+  (:func:`_fold`), or the phrase matcher (:func:`_phrase_rows`) — applies
+  the slice, and emits its top ``skip+k`` rows by the page's rank key plus
+  its match count (its group rollup under ``group_by``; for a phrase, the
+  rows that can still reach the page once the phrase idf is known; for
+  facets, each label's count); the driver merges these partials by the
+  same rule.  The exact WAND total is this plan's match count.
 
 - ``mode="wand"`` (block-max pruned): per-range score upper bounds sum
   across query terms on the shared grid.  Phase 1 scores the most promising
@@ -85,15 +90,20 @@ class _Query:
     filter clauses (filter keys score with weight 0), at least ``msm``
     ``should`` clauses must match, and any ``must_not`` hit excludes the
     doc.  ``idf`` is per key with the clause boost folded in, ``avgdl`` the
-    per-key field avgdl (None: the corpus avgdl).  ``keys`` stays empty when
-    no document can match.  The rest is the page request plus the
-    single-field extras, carried through unchanged.
+    per-key field avgdl (None: the corpus avgdl), ``n_docs`` the per-key
+    scoring doc count.  ``keys`` stays empty when no document can match.
+    A phrase query carries its token sequence in ``phrase`` (its distinct
+    terms are must ``keys``) and its ``max_gap``.  The rest is the page
+    request plus the single-field extras, carried through unchanged.
     """
 
     keys: list = ()
     dfs: dict | None = None
     idf: dict | None = None
     avgdl: dict | None = None
+    n_docs: dict | None = None
+    phrase: tuple = ()
+    max_gap: int = 0
     must: list = ()
     should: list = ()
     must_not: list = ()
@@ -231,11 +241,89 @@ def _phrase_match_arrays(
     return uniq, counts.astype(np.int64), dl_out.astype(np.int64), firsts.astype(np.int64)
 
 
-def _concat_decoded(parts: dict[str, list]) -> dict[str, tuple]:
-    return {
-        t: tuple(np.concatenate([p[j] for p in ps]) for j in range(4))
-        for t, ps in parts.items()
-    }
+def _phrase_rows(q: _Query, terms, bufs, poss) -> pd.DataFrame:
+    """The one phrase matcher both placements run where term queries run
+    :func:`_fold` — the driver over every candidate block, a distributed
+    task once per doc range: decode the blocks (``terms[i]``'s postings
+    ``bufs[i]`` and positions ``poss[i]``), then
+    :func:`_phrase_match_arrays`.  Columns doc_id (ascending), tf, dl,
+    first_pos; unscored, since the phrase idf needs the global match
+    count."""
+    parts: dict[str, list] = {}
+    for t, buf, pbuf in zip(terms, bufs, poss):
+        ids, tfs, dls = decode_postings(buf)
+        parts.setdefault(t, []).append((ids, tfs, dls, decode_position_lists(pbuf, tfs)))
+    decoded = {t: tuple(map(np.concatenate, zip(*ps))) for t, ps in parts.items()}
+    return pd.DataFrame(dict(zip(
+        ("doc_id", "tf", "dl", "first_pos"),
+        _phrase_match_arrays(list(q.phrase), decoded, max_gap=q.max_gap),
+    )))
+
+
+def _add_boosts(q: _Query, acc: np.ndarray, dls: np.ndarray) -> np.ndarray:
+    """The dl-derived boosts, added one after the other: reference A6
+    (constant-score should clause, constants.py:16) and A8 (post-search
+    availability boost, search_utils.py:157-165)."""
+    if q.constant_boost:
+        acc = acc + np.where(dls % 37 == 0, CONSTANT_BOOST, 0.0)
+    if q.avail_boost:
+        acc = acc + np.where(dls % 7 > 0, AVAIL_BOOST, 0.0)
+    return acc
+
+
+def _phrase_tf(q: _Query, rows: pd.DataFrame, avgdl: float) -> tuple:
+    """(tf, dl, BM25 length-norm denominator) of phrase match rows, at the
+    phrase field's avgdl (``avgdl``: the corpus's)."""
+    tf = rows["tf"].to_numpy(dtype=np.float64)
+    dls = rows["dl"].to_numpy(dtype=np.int64)
+    adl = q.avgdl[q.keys[0]] if q.avgdl else avgdl
+    return tf, dls, tf + K1 * (1.0 - B + B * dls.astype(np.float64) / adl)
+
+
+def _phrase_scored(q: _Query, rows: pd.DataFrame, df: int, avgdl: float) -> pd.DataFrame:
+    """Phrase match rows -> (doc_id, score, first_pos), on both placements:
+    the phrase scores as ONE pseudo-term, ``idf(df) * tf_norm`` with the
+    field's docCount/avgdl, then the dl boosts.  ``df`` is the UNfiltered
+    phrase df: Lucene FILTER never changes scoring stats."""
+    tf, dls, den = _phrase_tf(q, rows, avgdl)
+    w = _math_idf(q.n_docs[q.keys[0]], df)
+    return pd.DataFrame({
+        "doc_id": rows["doc_id"].to_numpy(dtype=np.int64),
+        "score": _add_boosts(q, w * tf / den, dls),
+        "first_pos": rows["first_pos"].to_numpy(dtype=np.int64),
+    })
+
+
+def _phrase_keep(q: _Query, rows: pd.DataFrame, avgdl: float) -> pd.DataFrame:
+    """The phrase rows of one task (or range) that can still reach the
+    page, chosen before the phrase idf ``w`` is known — it needs every
+    task's match count.
+
+    Within a boost class (rows whose dl boosts are equal) the score
+    ``w * tf / den + boost`` orders rows by ``tf_norm = tf / den`` — up to
+    rounding: rows one ulp apart in tf_norm can tie on the score, and rows
+    tied on tf_norm can differ on it.  So each class keeps its top
+    ``skip+k`` by (tf_norm desc, doc_id asc) plus every row with tf_norm
+    >= cutoff - δ, cutoff being the (skip+k)-th tf_norm and δ = 2^-46 /
+    w_min + 2^-48.  w_min, the smallest term idf, bounds w from below (the
+    phrase df is at most every term's df); 2^-46 covers two ulps of a score
+    below 64 once the boost is added, 2^-48 the relative roundings of
+    w·tf/den.  A dropped row then scores strictly below ``skip+k`` rows of
+    its own class, so it can reach no page.
+    """
+    m = max(q.skip + q.k, 1)
+    tf, dls, den = _phrase_tf(q, rows, avgdl)
+    tfn, ids = tf / den, rows["doc_id"].to_numpy()
+    delta = 2.0**-46 / min(q.idf.values()) + 2.0**-48
+    cls = _add_boosts(q, np.zeros(tf.size), dls)
+    keep = []
+    for c in np.unique(cls):
+        ix = np.flatnonzero(cls == c)
+        ix = ix[np.lexsort((ids[ix], -tfn[ix]))]
+        if ix.size > m:
+            ix = ix[: max(m, np.count_nonzero(tfn[ix] >= tfn[ix[m - 1]] - delta))]
+        keep.append(ix)
+    return rows.iloc[np.sort(np.concatenate(keep))] if keep else rows
 
 
 def _fold(q: _Query, terms, bufs, avgdl: float) -> pd.DataFrame:
@@ -296,11 +384,7 @@ def _fold(q: _Query, terms, bufs, avgdl: float) -> pd.DataFrame:
             keep &= ~hit(c)
     if keep is not None:
         uniq, acc, dls = uniq[keep], acc[keep], dls[keep]
-    if q.constant_boost:
-        acc = acc + np.where(dls % 37 == 0, CONSTANT_BOOST, 0.0)
-    if q.avail_boost:
-        acc = acc + np.where(dls % 7 > 0, AVAIL_BOOST, 0.0)
-    cands = pd.DataFrame({"doc_id": uniq, "score": acc})
+    cands = pd.DataFrame({"doc_id": uniq, "score": _add_boosts(q, acc, dls)})
     if q.group_by:
         cands = cands.assign(g_id=dls % GROUP_MOD, n_docs=np.ones(uniq.size, np.int64))
     return cands
@@ -341,6 +425,15 @@ def _partial(q: _Query, rows: pd.DataFrame) -> pd.DataFrame:
         "doc_id": ids[order][first], "score": score[order][first], "g_id": gid,
         "n_docs": np.bincount(inv, weights=n[order], minlength=gid.size).astype(np.int64),
     })
+
+
+def _label_counts(labels: pd.DataFrame) -> pd.DataFrame:
+    """(facet, bucket, count) over matched rows' facet label columns, the
+    i-th column facet i; a null label counts in no bucket."""
+    return pd.concat([
+        labels[c].value_counts().rename_axis("bucket").reset_index().assign(facet=i)
+        for i, c in enumerate(labels.columns)
+    ], ignore_index=True)
 
 
 def predict_wand_decode(
@@ -909,24 +1002,6 @@ class SearchEngine:
             cond = cond & F.col("sseg").isin([int(s) for s in ssegs])
         return seg.filter(cond)
 
-    # --------------------------------------------------------------- scoring
-    def _apply_boosts(
-        self, scored: DataFrame, constant_boost: bool, avail_boost: bool
-    ) -> DataFrame:
-        """Boost metadata (boosted, avail) derives from dl — no join needed.
-
-        Mirrors reference A6 (constant-score should clause, constants.py:16)
-        and A8 (post-search availability boost, search_utils.py:157-165).
-        """
-        if not (constant_boost or avail_boost):
-            return scored
-        s = F.col("score")
-        if constant_boost:
-            s = s + F.when(F.col("dl") % 37 == 0, F.lit(CONSTANT_BOOST)).otherwise(F.lit(0.0))
-        if avail_boost:
-            s = s + F.when(F.col("dl") % 7 > 0, F.lit(AVAIL_BOOST)).otherwise(F.lit(0.0))
-        return scored.withColumn("score", s)
-
     # ------------------------------------------------- driver-side fast path
     # A query whose candidate posting count is tiny relative to the cluster
     # does not earn a shuffle: decode + score at the driver in one collect
@@ -1023,12 +1098,12 @@ class SearchEngine:
         q.keys, q.dfs, q.msm = sorted(dfs), dfs, msm
         if self.fields:
             fs = {t: self.fields[t.split(self.field_sep, 1)[0]] for t in q.keys}
-            n_docs = {t: int(f["doc_count"]) for t, f in fs.items()}
+            q.n_docs = {t: int(f["doc_count"]) for t, f in fs.items()}
             q.avgdl = {t: float(f["avgdl"]) for t, f in fs.items()}
         else:
-            n_docs = dict.fromkeys(q.keys, self.n_docs)
+            q.n_docs = dict.fromkeys(q.keys, self.n_docs)
         q.idf = {
-            t: weight.get(t, 0.0) * _math_idf(n_docs[t], dfs[t]) for t in q.keys
+            t: weight.get(t, 0.0) * _math_idf(q.n_docs[t], dfs[t]) for t in q.keys
         }
         return q
 
@@ -1068,54 +1143,89 @@ class SearchEngine:
             return self._finish(q, self._driver_kernel(q))
         return self._finish(q, *self._dist_kernel(q))
 
+    def _blocks(self, q: _Query, ssegs: list[int] | None = None) -> DataFrame:
+        """A query's candidate block rows: a phrase's eligibility-pruned
+        postings + positions, else the postings and block bounds."""
+        if q.phrase:
+            return self._phrase_candidate_blocks(q.keys)
+        return self._candidate_segments(q.keys, ssegs).select(
+            "term", "sseg", "max_tf_norm", "postings"
+        )
+
     def _driver_kernel(self, q: _Query) -> pd.DataFrame:
         """The driver placement: one collect of the candidate blocks, the
-        shared fold, one doc-values probe, the group rollup.  Returns every
+        shared matcher (:func:`_fold`, or :func:`_phrase_rows` for a phrase,
+        then scored), one doc-values probe, the group rollup.  Returns every
         matched candidate; the finisher ranks and pages."""
-        rows = self._candidate_segments(q.keys).select("term", "postings").collect()
-        cands = _fold(q, [r["term"] for r in rows], [r["postings"] for r in rows], self.avgdl)
+        cols = ["term", "postings"] + (["positions"] if q.phrase else [])
+        rows = self._blocks(q).select(*cols).collect()
+        blocks = [[r[c] for r in rows] for c in cols]
+        cands = _phrase_rows(q, *blocks) if q.phrase else _fold(q, *blocks, self.avgdl)
+        n_all = len(cands)
         if (q.dv_pred is not None or q.sort_path is not None) and len(cands):
             attrs = self._dv_rows(
                 cands["doc_id"].to_numpy(), q.dv_pred, [q.sort_path] if q.sort_path else []
             )
             cands = cands.merge(attrs, on="doc_id", how="inner")
+        if q.phrase:
+            return _phrase_scored(q, cands, n_all, self.avgdl)
         return _partial(q, cands) if q.group_by else cands
 
     def _dist_kernel(
         self, q: _Query, ssegs: list[int] | None = None,
         theta: float | None = None, rest_bounds: dict | None = None,
+        labels: list = (),
     ) -> tuple[pd.DataFrame, int | None]:
-        """The distributed placement, and each WAND phase (``ssegs`` /
-        ``theta`` / ``rest_bounds`` restrict and prune the decode).
+        """The one distributed plan: the distributed placement of term and
+        phrase queries, each WAND phase (``ssegs`` / ``theta`` /
+        ``rest_bounds`` restrict and prune the decode), the exact WAND
+        total, and facet counts (``labels``: one label column per facet).
 
         Candidate block rows shuffle by doc range still compressed; the
         doc-values slice (:meth:`_dv_probe`, keyed by the builder's
         ``doc_id DIV range_docs``) rides the same shuffle, so each range's
-        attributes land beside its blocks.  Each task folds one range at a
-        time with :func:`_fold` (its memory is one range's decoded
-        postings), joins the slice (inner with a predicate; left without,
-        so null attributes sort last) and emits its :func:`_partial` plus
-        its match count.  Returns the merged partials and the total (None
+        attributes land beside its blocks.  Each task matches one range at
+        a time with the driver's matcher (its memory is one range's decoded
+        blocks), joins the slice (inner with a predicate; left without, so
+        null attributes sort last) and emits:
+
+        - a term query: its :func:`_partial`;
+        - a phrase: its :func:`_phrase_keep` rows, unscored;
+        - facets: every label's count over its matched docs, nulls
+          excluded — the full map, since partial top-N lists do not merge
+          exactly;
+
+        and one count row (first column -1): its match count ``n`` and the
+        count before the dv join, ``n_all`` (a phrase's idf reads the
+        UNfiltered phrase df).  Returns the merged rows — a phrase's
+        scored, facets' summed per (facet, bucket) — and the total (None
         under ``group_by``: the finisher counts the groups)."""
         cols = [q.sort_path] if q.sort_path else []
-        frame = self._candidate_segments(q.keys, ssegs).select(
-            "term", "sseg", "max_tf_norm", "postings"
-        )
-        ddl = "doc_id long, score double" + (", g_id long, n_docs long" if q.group_by else "")
-        dv = q.dv_pred is not None or bool(cols)
+        lcols = [f"_facet{i}" for i in range(len(labels))]
+        frame = self._blocks(q, ssegs)
+        dv = q.dv_pred is not None or bool(cols) or bool(labels)
         if dv:
             rd = int(self.stats["range_docs"])
+            probe = self._dv_probe(q.dv_pred, cols + [c.alias(n) for c, n in zip(labels, lcols)])
             frame = frame.unionByName(
-                self._dv_probe(q.dv_pred, cols).withColumn(
-                    "sseg", F.expr(f"CAST(doc_id DIV {rd} AS INT)")
-                ),
+                probe.withColumn("sseg", F.expr(f"CAST(doc_id DIV {rd} AS INT)")),
                 allowMissingColumns=True,
-            )
-            ddl += "".join(
-                f", `{c}` {self._doc_stats_df.schema[c].dataType.simpleString()}" for c in cols
             )
         kq, how = replace(q, dv_pred=None), "left" if q.dv_pred is None else "inner"
         avgdl, bscale, ceiling = self.avgdl, self.bound_scale, q.boost_ceiling
+        if labels:
+            fields = [("facet", "long"), ("bucket", "string"), ("count", "long")]
+            per_range, per_task = (lambda c: c[lcols]), _label_counts
+        elif q.phrase:
+            fields = [(c, "long") for c in ("doc_id", "tf", "dl", "first_pos")]
+            per_range = per_task = lambda c: _phrase_keep(kq, c, avgdl)
+        else:
+            fields = [("doc_id", "long"), ("score", "double")] + (
+                [("g_id", "long"), ("n_docs", "long")] if q.group_by else []
+            ) + [(c, self._doc_stats_df.schema[c].dataType.simpleString()) for c in cols]
+            per_range = per_task = lambda c: _partial(kq, c)
+        fields += [("n", "long"), ("n_all", "long")]
+        arrow = {"long": pa.int64(), "double": pa.float64(), "string": pa.string()}
 
         def kernel(batches):
             batches = [b for b in batches if b.num_rows]
@@ -1123,6 +1233,7 @@ class SearchEngine:
                 return
             tbl = pa.Table.from_batches(batches)
             terms, bufs = tbl["term"].to_pylist(), tbl["postings"].to_pylist()
+            poss = tbl["positions"].to_pylist() if kq.phrase else None
             sseg = tbl["sseg"].to_numpy()
             is_blk = np.array([t is not None for t in terms])  # else a dv row
             keep = is_blk
@@ -1134,31 +1245,45 @@ class SearchEngine:
                 mtn = tbl["max_tf_norm"].to_numpy(zero_copy_only=False)
                 keep = keep & ~(w * (mtn * bscale) + rest + ceiling < theta)
             order = np.argsort(sseg, kind="stable")
-            parts, n = [], 0
+            parts, n, n_all = [], 0, 0
             for rows in np.split(order, np.flatnonzero(np.diff(sseg[order])) + 1):
                 b = rows[keep[rows]]
                 if not b.size:
                     continue
-                cands = _fold(kq, [terms[i] for i in b], [bufs[i] for i in b], avgdl)
+                blocks = [terms[i] for i in b], [bufs[i] for i in b]
+                if kq.phrase:
+                    cands = _phrase_rows(kq, *blocks, [poss[i] for i in b])
+                else:
+                    cands = _fold(kq, *blocks, avgdl)
+                n_all += len(cands)
                 if dv:
-                    attrs = tbl.take(rows[~is_blk[rows]]).select(["doc_id", *cols])
+                    attrs = tbl.take(rows[~is_blk[rows]]).select(["doc_id", *cols, *lcols])
                     cands = cands.merge(attrs.to_pandas(), on="doc_id", how=how)
                 n += len(cands)
-                parts.append(_partial(kq, cands))
-            if n:
-                top = _partial(kq, pd.concat(parts, ignore_index=True))
-                top = top.assign(n=[n] + [0] * (len(top) - 1))
-                yield pa.RecordBatch.from_pandas(top, preserve_index=False, schema=pa.schema([
-                    tbl.schema.field(c) if c in cols else
-                    (c, pa.from_numpy_dtype(np.dtype(_PAGE_DTYPES.get(c, "int64"))))
-                    for c in top.columns
-                ]))
+                parts.append(per_range(cands))
+            if not n_all:
+                return
+            schema = pa.schema([
+                tbl.schema.field(c) if c in cols else (c, arrow[t]) for c, t in fields
+            ])
+            out = per_task(pd.concat(parts, ignore_index=True))
+            yield pa.RecordBatch.from_pandas(
+                out.assign(n=0, n_all=0), schema=schema, preserve_index=False
+            )
+            counts = {f.name: [-1 if pa.types.is_integer(f.type) else None] for f in schema}
+            yield pa.RecordBatch.from_pydict({**counts, "n": [n], "n_all": [n_all]}, schema=schema)
 
-        out = self._by_range(frame).mapInArrow(kernel, ddl + ", n long").toPandas()
-        total = int(out.pop("n").sum())
+        ddl = ", ".join(f"`{c}` {t}" for c, t in fields)
+        out = self._by_range(frame).mapInArrow(kernel, ddl).toPandas()
+        n, n_all = int(out.pop("n").sum()), int(out.pop("n_all").sum())
+        out = out[out.iloc[:, 0] >= 0].reset_index(drop=True)
+        if labels:
+            return out.groupby(["facet", "bucket"], as_index=False)["count"].sum(), n
+        if q.phrase:
+            return _phrase_scored(q, out, n_all, avgdl), n
         if q.group_by:
             return _partial(q, out), None
-        return out, total
+        return out, n
 
     @staticmethod
     def _by_range(frame: DataFrame) -> DataFrame:
@@ -1167,71 +1292,14 @@ class SearchEngine:
         into one task (``rebalance`` could split a range across tasks)."""
         return frame.repartition("sseg")
 
-    @staticmethod
-    def _occur_filter(q: _Query, docs: DataFrame, ts, n) -> DataFrame:
-        """The occur reduction over per-doc rows, as JVM expressions: ``n``
-        is the matched-key count, ``ts`` the matched-key array — only the
-        general clause form reads it (a plain disjunction tests nothing,
-        one-key clauses count)."""
-        occ = q.occur()
-        if occ is None:
-            return docs
-        if occ != "clauses":
-            return docs.filter(n == occ[1] if occ[0] == "==" else n >= occ[1])
-
-        def hit(c):
-            return F.arrays_overlap(ts, F.array(*[F.lit(t) for t in c]))
-
-        cond = F.lit(True)
-        for c in q.must:
-            cond = cond & hit(c)
-        if q.msm:
-            cond = cond & (sum((hit(c).cast("int") for c in q.should), F.lit(0)) >= q.msm)
-        for c in q.must_not:  # Lucene MUST_NOT: any hit excludes the doc
-            cond = cond & ~hit(c)
-        return docs.filter(cond)
-
-    def _matched_docs(self, q: _Query) -> DataFrame:
-        """The matched-set plan: a docs-only decode (no float math) with
-        the kernels' occur reductions -> one doc_id column.  Serves the
-        exact WAND total and facet membership."""
-
-        def docs_only(it):
-            for pdf in it:
-                outs = [
-                    pd.DataFrame({"doc_id": decode_postings(buf)[0], "term": t})
-                    for t, buf in zip(pdf["term"], pdf["postings"])
-                ]
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
-
-        docs = (
-            self._candidate_segments(q.keys).select("term", "postings")
-            .mapInPandas(docs_only, schema="doc_id long, term string")
-        )
-        occ = q.occur()
-        if occ is None:
-            return docs.select("doc_id").distinct()
-        if occ == "clauses":
-            agg = docs.groupBy("doc_id").agg(F.collect_list("term").alias("ts"))
-        else:
-            agg = docs.groupBy("doc_id").agg(F.count("*").alias("n"))
-        return self._occur_filter(q, agg, F.col("ts"), F.col("n")).select("doc_id")
-
     def _dv_probe(self, pred, cols) -> DataFrame:
         """The one doc-values scan: doc_stats with ``pred`` pushed into the
-        parquet scan and only doc_id + ``cols`` read.  doc_id is unique on
+        parquet scan and only doc_id + ``cols`` (names, or label
+        expressions computed in the scan) read.  doc_id is unique on
         doc_stats, so one join with it serves the dv filter (membership)
         and the sort/facet attributes in a single pass."""
         probe = self._doc_stats_df if pred is None else self._doc_stats_df.filter(pred)
         return probe.select("doc_id", *cols)
-
-    def _dv_join(self, frame: DataFrame, pred, cols) -> DataFrame:
-        """The Spark plans (facets, phrase's distributed tail): a left join
-        without a predicate (null attributes survive), else inner — semi
-        when no column is wanted."""
-        how = "left" if pred is None else ("inner" if cols else "semi")
-        return frame.join(self._dv_probe(pred, cols), "doc_id", how)
 
     def _dv_rows(self, ids: np.ndarray, pred, cols) -> pd.DataFrame:
         """Driver placements: the eligible rows (doc_id + ``cols``) among
@@ -1243,7 +1311,7 @@ class SearchEngine:
             .join(F.broadcast(cand), "doc_id", "inner").toPandas()
         )
 
-    def _finish(self, q: _Query, cands, total: int | None = None) -> SearchResult:
+    def _finish(self, q: _Query, cands: pd.DataFrame, total: int | None = None) -> SearchResult:
         """The one page finisher every placement returns through.
 
         Ranks (score desc; the 6-decimal rounded score for groups — real
@@ -1252,12 +1320,10 @@ class SearchEngine:
         empty and populated pages one schema (doc_id int64, score float64,
         [g_id, n_docs int64], [sort attribute], [first_pos | highlights],
         [url]), then highlights and hydrates urls for the page docs only.
-        ``cands`` is a pandas frame holding every matched candidate, or
-        the merged partials of the distributed kernel with its ``total``;
-        phrase search's distributed tail passes a score-ranked Spark frame,
-        which pages by TakeOrderedAndProject and counts over one cached
-        plan — the Spark equivalent of the reference's $facet {total, data}
-        (pipelines.py:27-42) — unless the caller knows ``total``.
+        ``cands`` holds every matched candidate (``total`` defaults to its
+        length), or the distributed kernel's merged partials with its
+        ``total`` — the reference's $facet {total, data} (pipelines.py:
+        27-42) either way.
         """
         cols = (
             ["doc_id", "score"]
@@ -1265,23 +1331,9 @@ class SearchEngine:
             + ([q.sort_path] if q.sort_path else [])
             + (["first_pos"] if q.first_pos else [])
         )
-        if isinstance(cands, DataFrame):
-            if total is None:
-                cands = cands.persist()
-            ranked = cands.orderBy(F.desc("score"), F.asc("doc_id"))  # phrase: by score
-            page = (
-                (ranked.offset(q.skip) if q.skip else ranked).limit(q.k)
-                .select(*cols).toPandas()
-            )
-            if total is None:
-                total = cands.count()
-                cands.unpersist()
-            page = page.iloc[_rank(q, page)] if len(page) else page
-        else:
-            total = len(cands) if total is None else total
-            window = _rank(q, cands)[q.skip : q.skip + q.k] if len(cands) else []
-            page = cands.iloc[window]
-        page = page.reindex(columns=cols).reset_index(drop=True)
+        total = len(cands) if total is None else total
+        window = _rank(q, cands)[q.skip : q.skip + q.k] if len(cands) else []
+        page = cands.iloc[window].reindex(columns=cols).reset_index(drop=True)
         cast = {c: t for c, t in _PAGE_DTYPES.items() if c in page and page[c].dtype != t}
         if cast:  # empty pages; astype is costly enough to skip when a no-op
             page = page.astype(cast)
@@ -1635,12 +1687,13 @@ class SearchEngine:
 
         Evaluates the same compound clause set as :meth:`search_fields`
         (all four occur types, dv filter operators) but returns bucket
-        counts over the MATCHED set instead of a ranked page — scoring
-        never happens: the clauses compile to the same internal query and
-        run the matched-set plan (a docs-only decode with the scoring
-        kernels' occur reductions), then ONE doc_stats join applies the dv
-        filter and attaches the faceted columns.  Facets are an analytic
-        aggregation, served distributed.
+        counts over the MATCHED set instead of a ranked page: the clauses
+        compile to the same internal query and run on the distributed
+        kernel (facets are an analytic aggregation, served distributed).
+        Each facet's bucket label is computed in the doc-values scan — the
+        string cast of the value, or the boundary chain — and joins each
+        doc range's matched docs in the kernel task, which returns every
+        label's count; the driver sums them and orders the buckets.
 
         ``facets`` maps facet names to Atlas facet specs over doc-values
         columns:
@@ -1660,17 +1713,17 @@ class SearchEngine:
         order as above.
 
         ``keyword=`` serves the single-field surface (the incremental
-        crawl): the analyzed keyword's plain disjunction is the match set,
-        composing with dv filter operators on the filter list — clauses
-        and keyword are mutually exclusive.
+        crawl): the keyword compiles exactly as ``search(keyword,
+        max_expansions=...)`` does (a single term prefix-expands), and its
+        match set composes with dv filter operators on the filter list —
+        clauses and keyword are mutually exclusive.
         """
         if not facets:
             raise ValueError("facet_fields requires at least one facet spec")
         filter, dv_clauses = self._split_dv_clauses(filter)
         dv_pred = self._dv_predicate(dv_clauses) if dv_clauses else None
         if keyword is not None:
-            # single-field surface: the analyzed keyword IS the match set
-            # (plain disjunction), mirroring search()'s candidate generation
+            # single-field surface: search()'s own compile is the match set
             if self.fields:
                 raise ValueError(
                     "keyword= facets apply to single-field indexes; use "
@@ -1696,6 +1749,7 @@ class SearchEngine:
                     f"facet {name!r}: path {path!r} is not a doc-values column "
                     f"of this index (baked: {sorted(self.docvalues_cols)})"
                 )
+            col = F.col(path)
             if kind == "number":
                 bounds = list(spec.get("boundaries") or ())
                 if len(bounds) < 2 or sorted(bounds) != bounds:
@@ -1712,79 +1766,50 @@ class SearchEngine:
                         f"facet {name!r}: default {default!r} collides with a "
                         "boundary label"
                     )
-                specs[name] = ("number", path, (bounds, default))
+                # Atlas's optional default bucket collects out-of-range
+                # docs (null attributes still land in no bucket)
+                label = (
+                    F.when(col.isNotNull(), F.lit(default))
+                    if default is not None
+                    else F.lit(None).cast("string")
+                )
+                for lo, hi in zip(bounds, bounds[1:]):
+                    label = F.when(
+                        (col >= F.lit(lo)) & (col < F.lit(hi)), F.lit(str(lo))
+                    ).otherwise(label)
+                order = {str(b): i for i, b in enumerate(bounds)}
+                if default is not None:
+                    order[default] = len(bounds)
+                specs[name] = (label, order)
             else:
                 nb = int(spec.get("num_buckets", 10))
                 if nb < 1:
                     raise ValueError(f"facet {name!r}: num_buckets must be >= 1")
-                specs[name] = ("string", path, nb)
-
-        def _empty():
-            return {
-                "count": 0,
-                "facet": {
-                    n: pd.DataFrame({"bucket": [], "count": []}) for n in specs
-                },
-            }
+                specs[name] = (col.cast("string"), nb)
 
         if keyword is not None:
-            q = self._query(should=[sorted(set(preprocess_query(keyword)))])
+            q = self._search_query(keyword, max_expansions=max_expansions)
         else:
             q = self._compile_clauses(
                 must, should, must_not, filter, minimum_should_match,
                 max_expansions,
             )
         if not q.keys:
-            return _empty()
-        paths = sorted({p for _, p, _ in specs.values()})
-        joined = self._dv_join(self._matched_docs(q), dv_pred, paths).persist()
-        count = joined.count()
-        out: dict = {"count": int(count), "facet": {}}
-        for name, (kind, path, arg) in specs.items():
-            col = F.col(path)
-            if kind == "number":
-                bounds, default = arg
-                # Atlas's optional default bucket collects out-of-range
-                # docs (null attributes still land in no bucket)
-                lab = (
-                    F.when(col.isNotNull(), F.lit(default))
-                    if default is not None
-                    else F.lit(None).cast("string")
-                )
-                for lo, hi in zip(bounds, bounds[1:]):
-                    lab = F.when(
-                        (col >= F.lit(lo)) & (col < F.lit(hi)),
-                        F.lit(str(lo)),
-                    ).otherwise(lab)
-                buckets = (
-                    joined.select(lab.alias("bucket"))
-                    .filter(F.col("bucket").isNotNull())
-                    .groupBy("bucket").count()
-                    .orderBy(F.asc("bucket"))
-                    .toPandas()
-                )
-                # deterministic order: lower-bound labels ascending, the
-                # default bucket (if any) last
-                order = {str(b): i for i, b in enumerate(bounds)}
-                if default is not None:
-                    order[default] = len(bounds)
-                buckets = buckets.sort_values(
-                    "bucket", key=lambda s: s.map(order)
-                ).reset_index(drop=True)
-            else:
-                buckets = (
-                    joined.filter(col.isNotNull())
-                    .groupBy(col.cast("string").alias("bucket")).count()
-                    .orderBy(F.desc("count"), F.asc("bucket"))
-                    .limit(arg)
-                    .toPandas()
-                    .sort_values(
-                        ["count", "bucket"], ascending=[False, True]
-                    )
-                    .reset_index(drop=True)
-                )
-            out["facet"][name] = buckets
-        joined.unpersist()
+            return {
+                "count": 0,
+                "facet": {n: pd.DataFrame({"bucket": [], "count": []}) for n in specs},
+            }
+        q.dv_pred = dv_pred
+        counts, total = self._dist_kernel(q, labels=[lab for lab, _ in specs.values()])
+        out: dict = {"count": total, "facet": {}}
+        for i, (name, (_, arg)) in enumerate(specs.items()):
+            got = counts[counts["facet"] == i]
+            if isinstance(arg, dict):
+                # number: lower-bound labels ascending, the default bucket last
+                got = got.sort_values("bucket", key=lambda s: s.map(arg))
+            else:  # string: count desc, bucket asc, the top num_buckets
+                got = got.sort_values(["count", "bucket"], ascending=[False, True]).head(arg)
+            out["facet"][name] = got[["bucket", "count"]].reset_index(drop=True)
         return out
 
     def _compile_clauses(
@@ -1887,61 +1912,6 @@ class SearchEngine:
             "term", "sseg", "postings", "positions"
         )
 
-    def _phrase_decode_rows(self, rows) -> dict[str, tuple]:
-        parts: dict[str, list] = {}
-        for r in rows:
-            ids, tfs, dls = decode_postings(r["postings"])
-            pos = decode_position_lists(r["positions"], tfs)
-            parts.setdefault(r["term"], []).append((ids, tfs, dls, pos))
-        return _concat_decoded(parts)
-
-    def _phrase_matched_dist(self, terms_seq: list[str], max_gap: int = 0) -> DataFrame:
-        """Distributed phrase match -> (doc_id, tf, dl) of matching docs.
-
-        Candidate blocks (the phrase terms' postings + positions only)
-        shuffle ONCE keyed by ``sseg`` — the shared doc-id grid guarantees
-        every term's blocks for a doc range land in the same task, so the
-        kernel intersects complete per-doc evidence with no further
-        exchange.  Work and shuffle are O(candidate blocks of the m query
-        terms), never corpus-sized; composite keys stay kernel-local, so
-        per-partition strides may differ.
-
-        Eligibility pruning: a doc range (sseg) can only contain the phrase
-        if EVERY distinct term has a block there, so ssegs missing any term
-        are dropped by a self-semi-join on block METADATA before the
-        postings/positions bytes are ever read — for a head+rare phrase
-        ("the <rare>") this skips decoding almost all of the head term's
-        candidate blocks.  The metadata aggregation touches only (term,
-        sseg) columns; its result (≤ #ssegs rows) broadcasts.
-        """
-        segs = self._phrase_candidate_blocks(sorted(set(terms_seq)))
-        terms_b = self.spark.sparkContext.broadcast((list(terms_seq), int(max_gap)))
-
-        def match(it):
-            pdfs = [p for p in it if len(p)]
-            if not pdfs:
-                return
-            pdf = pd.concat(pdfs, ignore_index=True)
-            parts: dict[str, list] = {}
-            tcol = pdf["term"].to_numpy(dtype=object)
-            post, posc = pdf["postings"], pdf["positions"]
-            for i in range(len(pdf)):
-                ids, tfs, dls = decode_postings(post.iat[i])
-                pos = decode_position_lists(posc.iat[i], tfs)
-                parts.setdefault(tcol[i], []).append((ids, tfs, dls, pos))
-            tseq, g = terms_b.value
-            uniq, tfs_, dls_, firsts_ = _phrase_match_arrays(
-                tseq, _concat_decoded(parts), max_gap=g
-            )
-            if uniq.size:
-                yield pd.DataFrame(
-                    {"doc_id": uniq, "tf": tfs_, "dl": dls_, "first_pos": firsts_}
-                )
-
-        return self._by_range(segs).mapInPandas(
-            match, schema="doc_id long, tf long, dl long, first_pos long"
-        )
-
     def search_field_phrase(
         self,
         field: str,
@@ -1971,13 +1941,13 @@ class SearchEngine:
                     "(range/equals/exists dicts)"
                 )
             dv_pred = self._dv_predicate(dv_clauses)
-        return self._phrase_search(
+        return self._run(self._phrase_query(
             keyword, k, skip, False, False, with_url, force_distributed,
             highlight=highlight, max_gap=max_gap, field=field,
             dv_pred=dv_pred,
-        )
+        ))
 
-    def _phrase_search(
+    def _phrase_query(
         self,
         keyword: str,
         k: int,
@@ -1990,18 +1960,28 @@ class SearchEngine:
         max_gap: int = 0,
         field: str | None = None,
         dv_pred=None,
-    ) -> SearchResult:
+    ) -> _Query:
         """Exact-phrase BM25 top-k (Atlas ``$search.phrase``, the operator the
-        reference's platform exposes next to its text/autocomplete clauses).
+        reference's platform exposes next to its text/autocomplete clauses),
+        compiled to the one query form.
 
         The phrase is the INDEX analyzer's token sequence of ``keyword`` —
         order kept, stopwords kept — because positions refer to the analyzed
         stream and query-side stopword removal would silently change
         adjacency.  A doc matches when the terms appear consecutively in
-        order; the phrase then scores as ONE pseudo-term:
-        ``idf(df_phrase) * tf_norm(tf_phrase, dl)`` with the engine's BM25
-        constants.  ``total`` is the exact phrase df at zero extra cost (the
-        match IS the count).
+        order (within ``max_gap`` extra tokens per step); the phrase then
+        scores as ONE pseudo-term: ``idf(df_phrase) * tf_norm(tf_phrase,
+        dl)`` with the engine's BM25 constants (:func:`_phrase_scored`).
+        ``total`` is the exact phrase df at zero extra cost (the match IS
+        the count); a dv filter constrains the match and the total but
+        never the idf (Lucene FILTER).
+
+        The distinct phrase terms are the query's must keys, so the
+        planner places it by the small-query rule like any term query:
+        the driver kernel, or the distributed kernel, whose tasks match one
+        doc range each and return the rows that can still reach the page
+        (:func:`_phrase_keep`); the driver then scores them with the
+        global phrase df.  Its mode stays "sort": WAND never runs it.
 
         ``field`` (Atlas phrase clause's ``path``, multi-field indexes only):
         the phrase must appear within THAT field — terms become prefixed
@@ -2033,80 +2013,26 @@ class SearchEngine:
                 "highlight is not supported with max_gap > 0 (variable gaps "
                 "make the phrase start unrecoverable from the match key)"
             )
+        terms_seq = tokenize(keyword)
         if field is not None:
             if constant_boost or avail_boost:
                 raise ValueError(
                     "doc-level boosts are not supported with a field-scoped "
                     "phrase (the field dl is the wrong boost operand)"
                 )
-            fs = self.fields[field]
-            n_docs, avgdl = int(fs["doc_count"]), float(fs["avgdl"])
-            terms_seq = [f"{field}{self.field_sep}{t}" for t in tokenize(keyword)]
-        else:
-            n_docs, avgdl = self.n_docs, self.avgdl
-            terms_seq = tokenize(keyword)
-        q = _Query(k=k, skip=skip, with_url=with_url, first_pos=highlight)
-        dfs = self.term_dfs(sorted(set(terms_seq))) if terms_seq else {}
-        if not terms_seq or len(dfs) < len(set(terms_seq)):
-            return self._finish(q, pd.DataFrame())  # a phrase term is absent
-        if not force_distributed and sum(dfs.values()) <= self.SMALL_QUERY_POSTINGS:
-            rows = (
-                self._phrase_candidate_blocks(sorted(set(terms_seq)))
-                .select("term", "postings", "positions")
-                .collect()
-            )
-            uniq, tfs, dls, firsts = _phrase_match_arrays(
-                terms_seq, self._phrase_decode_rows(rows), max_gap=max_gap
-            )
-            # Lucene FILTER never changes scoring stats: the phrase idf uses
-            # the UNfiltered phrase df; the dv mask then constrains matching
-            w = _math_idf(n_docs, int(uniq.size))
-            if dv_pred is not None and uniq.size:
-                elig = self._dv_rows(uniq, dv_pred, [])["doc_id"].to_numpy()
-                keep = np.isin(uniq, elig)
-                uniq, tfs, dls, firsts = uniq[keep], tfs[keep], dls[keep], firsts[keep]
-            tf = tfs.astype(np.float64)
-            dl = dls.astype(np.float64)
-            acc = w * tf / (tf + K1 * (1.0 - B + B * dl / avgdl))
-            if constant_boost:
-                acc = acc + np.where(dls % 37 == 0, CONSTANT_BOOST, 0.0)
-            if avail_boost:
-                acc = acc + np.where(dls % 7 > 0, AVAIL_BOOST, 0.0)
-            return self._finish(q, pd.DataFrame(
-                {"doc_id": uniq, "score": acc, "first_pos": firsts}
-            ))
-        matched = self._phrase_matched_dist(terms_seq, max_gap=max_gap).persist()
-        df_phrase = matched.count()  # == phrase df: exact total for free
-        # idf from the UNfiltered phrase df (FILTER scores nothing);
-        # total = the filtered match count (FILTER constrains matching)
-        w = _math_idf(n_docs, int(df_phrase))
-        kept, total = matched, df_phrase
-        if dv_pred is not None:
-            kept, total = self._dv_join(matched, dv_pred, []), None
-        tfd = F.col("tf").cast("double")
-        dld = F.col("dl").cast("double")
-        # operand-for-operand the driver path's numpy expression tree
-        score = F.lit(w) * tfd / (
-            tfd
-            + F.lit(K1) * (F.lit(1.0) - F.lit(B) + F.lit(B) * dld / F.lit(avgdl))
+            terms_seq = [f"{field}{self.field_sep}{t}" for t in terms_seq]
+        return self._query(
+            must=[[t] for t in sorted(set(terms_seq))], phrase=tuple(terms_seq),
+            max_gap=int(max_gap), k=k, skip=skip, with_url=with_url,
+            first_pos=highlight, force_distributed=force_distributed,
+            constant_boost=constant_boost, avail_boost=avail_boost, dv_pred=dv_pred,
         )
-        scored = self._apply_boosts(
-            kept.select(
-                "doc_id", score.alias("score"),
-                F.col("dl").cast("int").alias("dl"), "first_pos",
-            ),
-            constant_boost,
-            avail_boost,
-        )
-        res = self._finish(q, scored, total=total)
-        matched.unpersist()
-        return res
 
     # ---------------------------------------------------------------- search
     def search(self, keyword: str, **kwargs) -> SearchResult:
-        """Single-field search (options and placement: :meth:`_search_impl`),
+        """Single-field search (options and placement: :meth:`_search_query`),
         appending one query-log row per call when ``log_queries`` is on."""
-        res = self._search_impl(keyword, **kwargs)
+        res = self._run(self._search_query(keyword, **kwargs))
         if self.log_queries:
             self._qid += 1
             top = None
@@ -2176,7 +2102,7 @@ class SearchEngine:
             " ".join(selected), k=k, skip=skip, exact_terms=selected, **kwargs
         )
 
-    def _search_impl(
+    def _search_query(
         self,
         keyword: str,
         k: int = 10,
@@ -2203,13 +2129,14 @@ class SearchEngine:
         exact_terms: list | None = None,
         dv_filter: list = (),
         sort: dict | None = None,
-    ) -> SearchResult:
+    ) -> _Query:
         """Single-field search, compiled to the one clause form.
 
         The keyword becomes clauses over bare terms (``conjunctive``: every
         term a must clause; ``min_should_match``: every term its own should
         clause; otherwise one should clause over the — possibly expanded —
-        term set) and runs through the same planner, kernels and finisher as
+        term set), or a phrase (:meth:`_phrase_query`), and :meth:`search`
+        runs it through the same planner, kernels and finisher as
         :meth:`search_fields`; the validation ladder below is this
         surface's own contract.  Placement: an explicit ``mode="wand"`` runs
         WAND when the query is WAND-shaped (page 1, no group_by, dv_filter
@@ -2312,7 +2239,7 @@ class SearchEngine:
                     "fuzzy is not supported with phrase search (expansion of a "
                     "positional phrase is not implemented; drop one of the two)"
                 )
-            return self._phrase_search(
+            return self._phrase_query(
                 keyword, k, skip, constant_boost, avail_boost, with_url,
                 force_distributed, highlight=highlight, max_gap=max_gap,
                 dv_pred=dv_pred,
@@ -2392,22 +2319,23 @@ class SearchEngine:
             clauses = {"should": [[t] for t in match_terms], "msm": msm}
         else:
             clauses = {"should": [match_terms]}
-        return self._run(self._query(
+        return self._query(
             **clauses, k=k, skip=skip, mode=mode,
             force_distributed=force_distributed, dv_pred=dv_pred,
             sort_path=sort_path, sort_desc=sort_desc,
             constant_boost=constant_boost, avail_boost=avail_boost,
             group_by=group_by, highlight=highlight, with_url=with_url,
             total_mode=total_mode,
-        ))
+        )
 
     def _wand_total(self, q: _Query) -> int:
         """The total under WAND, which prunes the scored set.
 
-        The exact count (the reference's $facet count) is the matched-set
-        plan's docs-only decode — for a head-term query over 10^13 postings
-        that decode dominates the query.  Shortcuts: a single key's total
-        IS its precomputed df (always exact, zero decode);
+        The exact count (the reference's $facet count) is the match count
+        of one distributed-kernel call over every candidate range with no
+        θ, its page rows discarded — for a head-term query over 10^13
+        postings that decode dominates the query.  Shortcuts: a single
+        key's total IS its precomputed df (always exact, zero decode);
         ``total_mode="approx"`` serves conjunctive queries min(df) — the
         tight upper bound for an intersection (Σdf can overstate it by
         orders of magnitude) — and the rest the Σdf upper bound capped at
@@ -2419,7 +2347,7 @@ class SearchEngine:
             if q.occur() is not None and q.occur()[0] == "==":
                 return int(min(q.dfs.values()))
             return min(int(sum(q.dfs.values())), self.n_docs)
-        return self._matched_docs(q).count()
+        return self._dist_kernel(q)[1]
 
     # ------------------------------------------------------------------ WAND
     def _wand_meta(self, terms: list[str]) -> pd.DataFrame:

@@ -839,6 +839,18 @@ def test_single_field_keyword_facets(spark, sf_dv_index):
     assert out["count"] == base.total
     got = dict(zip(out["facet"]["langs"]["bucket"], out["facet"]["langs"]["count"]))
     assert {b: int(c) for b, c in got.items()} == dict(exp)
+    # a single-term keyword prefix-expands exactly as search() does
+    # ("oil" also matches oiler/oily), max_expansions included
+    for opts in ({}, {"max_expansions": 1}):
+        one = eng.search("oil", k=10**6, **opts)
+        out = eng.facet_fields(
+            keyword="oil", facets={"langs": {"type": "string", "path": "lang"}}, **opts
+        )
+        assert out["count"] == one.total, opts
+        exp = Counter(attrs[int(d)]["lang"] for d in one.page["doc_id"])
+        got = dict(zip(out["facet"]["langs"]["bucket"], out["facet"]["langs"]["count"]))
+        assert {b: int(c) for b, c in got.items()} == {b: c for b, c in exp.items() if b}, opts
+    assert eng.search("oil").total > eng.search("oil", max_expansions=1).total
     with pytest.raises(ValueError, match="replaces the clause"):
         eng.facet_fields(
             keyword="the", must=[("title", "x")],
@@ -930,9 +942,18 @@ def test_page_schema_is_one_shape(spark, sf_dv_index, dv_engine, dv_term):
 
 # ------------------------------- distributed partials merged across tasks
 COALESCE = "spark.sql.adaptive.coalescePartitions.enabled"
-# (index, keyword, options): "tiny" runs search() on index_tiny; "dv" runs
+# (where, keyword, options): "tiny" runs search() on index_tiny; "dv" runs
 # search_fields over dv_term on the doc-values fixture (same corpus and
-# 16-range grid, ~10% null lang), since index_tiny carries no doc values
+# 16-range grid, ~10% null lang), since index_tiny carries no doc values;
+# "phrase" runs a phrase search() on the single-field positional dv index,
+# "field_phrase" a body-scoped phrase on the doc-values fixture; "facet"
+# runs facet_fields over dv_term's clauses, "facet_kw" a keyword facet on
+# the single-field dv index
+PHRASE = "of the"
+# a forced-distributed phrase: the range-eligibility broadcast's jobs, then
+# the block shuffle and the kernel tasks
+PHRASE_JOBS = 5
+LANG_FACET = {"langs": {"type": "string", "path": "lang", "num_buckets": 2}}
 MERGE_CASES = [
     ("tiny", "the oil", {}),
     ("tiny", "milk", {}),
@@ -947,6 +968,20 @@ MERGE_CASES = [
     ("dv", None, {"filter": [{"equals": {"path": "lang", "value": "de"}}]}),
     ("dv", None, {"sort": {"path": "lang", "order": "asc"}, "k": 10**4}),
     ("dv", None, {"sort": {"path": "lang", "order": "desc"}, "k": 10**4}),
+    ("phrase", PHRASE, {}),
+    ("phrase", PHRASE, {"constant_boost": True, "avail_boost": True, "skip": 60}),
+    ("phrase", PHRASE, {"max_gap": 1}),
+    ("phrase", PHRASE, {"highlight": True}),  # the page carries first_pos
+    ("phrase", PHRASE, {"dv_filter": [{"equals": {"path": "lang", "value": "en"}}]}),
+    ("field_phrase", PHRASE, {}),
+    # top-2 of 3 langs: a per-task top-2 would drop a runner-up's counts
+    ("facet", None, {"facets": LANG_FACET}),
+    ("facet", None, {"facets": {"sizes": {"type": "number", "path": "n_chars",
+                                          "boundaries": [394, 660, 923],
+                                          "default": "other"}}}),
+    ("facet", None, {"facets": LANG_FACET, "must_not": [("body", "to")],
+                     "filter": [{"exists": {"path": "lang"}}]}),
+    ("facet_kw", "oil", {"facets": LANG_FACET}),
 ]
 
 
@@ -970,48 +1005,108 @@ def _page_key(res):
             {c: [str(v) for v in page[c]] for c in rest})
 
 
+def _facet_key(out):
+    return (out["count"], {n: [(b, int(c)) for b, c in zip(f["bucket"], f["count"])]
+                           for n, f in out["facet"].items()})
+
+
+def _brute_buckets(spec, vals):
+    """A facet's buckets over the matched docs' attribute values, by the
+    Atlas rules facet_fields documents."""
+    from bisect import bisect_right
+    from collections import Counter
+
+    vals = [v for v in vals if v is not None]
+    if spec["type"] == "string":
+        got = Counter(str(v) for v in vals)
+        return sorted(got.items(), key=lambda kv: (-kv[1], kv[0]))[: spec["num_buckets"]]
+    b, default = spec["boundaries"], spec.get("default")
+    got = Counter()
+    for v in vals:
+        i = bisect_right(b, v) - 1
+        if 0 <= i < len(b) - 1:
+            got[str(b[i])] += 1
+        elif default is not None:
+            got[default] += 1
+    return [(k, got[k]) for k in [*map(str, b), default] if got[k]]
+
+
 @pytest.mark.parametrize("case", MERGE_CASES, ids=lambda c: " ".join(map(str, c)))
-def test_distributed_partials_merge_across_tasks(spark, index_tiny, dv_engine, dv_term, case):
+def test_distributed_partials_merge_across_tasks(spark, index_tiny, dv_engine, dv_term,
+                                                 dv_attrs, sf_dv_index, case):
     """With partition coalescing off, the 16 doc ranges spread over several
     kernel tasks, so the driver merges real per-task partials (top skip+k
-    plus count, or group rollups): pages and totals must equal the driver
-    placement bit-for-bit.  WAND's pages must equal the driver's sort
-    page."""
+    plus count, group rollups, phrase rows, facet label counts): pages and
+    totals must equal the driver placement bit-for-bit, and facets the
+    brute counts over the driver placement's matched set.  WAND's pages
+    must equal the driver's sort page."""
     from search_engine_spark.query.engine import SearchEngine
 
     where, kw, opts = case
-    if where == "tiny":
-        eng = SearchEngine(spark, index_tiny)
+    eng = SearchEngine(spark, index_tiny if where == "tiny" else sf_dv_index)
+    should = [("title", dv_term), ("body", dv_term)]
+    if where.startswith("facet"):
+        facets = opts["facets"]
+        clauses = {k: v for k, v in opts.items() if k != "facets"}
+        if where == "facet_kw":
+            attrs = _attrs_from_doc_stats(spark, eng)
+            matched = eng.search(kw, k=10**6)
 
-        def run(**kw_):
-            return eng.search(kw, **kw_)
+            def run():
+                return eng.facet_fields(keyword=kw, facets=facets)
+        else:
+            attrs = dv_attrs
+            matched = dv_engine.search_fields(should=should, k=10**6, **clauses)
+
+            def run():
+                return dv_engine.facet_fields(should=should, facets=facets, **clauses)
+        ids = [int(d) for d in matched.page["doc_id"]]
+        want = (matched.total, {n: _brute_buckets(s, [attrs[d][s["path"]] for d in ids])
+                                for n, s in facets.items()})
+        key = _facet_key
     else:
-        def run(**kw_):
-            return dv_engine.search_fields(
-                should=[("title", dv_term), ("body", dv_term)], **kw_
-            )
-    want = run(**{k: v for k, v in opts.items() if k != "mode"})
+        search = {
+            "tiny": lambda **o: eng.search(kw, **o),
+            "phrase": lambda **o: eng.search(kw, phrase=True, **o),
+            "field_phrase": lambda **o: dv_engine.search_field_phrase("body", kw, **o),
+            "dv": lambda **o: dv_engine.search_fields(should=should, **o),
+        }[where]
+        want = _page_key(search(**{k: v for k, v in opts.items() if k != "mode"}))
+
+        def run():
+            return search(force_distributed=True, **opts)
+        key = _page_key
     old = spark.conf.get(COALESCE)
     spark.conf.set(COALESCE, "false")
     try:
-        got, jobs = _jobs(spark, f"merge-{case}", lambda: run(force_distributed=True, **opts))
+        got, jobs = _jobs(spark, f"merge-{case}", run)
     finally:
         spark.conf.set(COALESCE, old)
-    assert want.total > 0
-    assert _page_key(got) == _page_key(want)
+    assert want[0] > 0
+    assert key(got) == want
     if "mode" not in opts:  # WAND's last job counts its exact total
         kernel = spark.sparkContext.statusTracker().getStageInfo(max(jobs[-1].stageIds))
         assert kernel.numTasks > 1
 
 
-def test_distributed_search_runs_two_jobs(spark, index_tiny):
+def test_distributed_search_runs_two_jobs(spark, index_tiny, sf_dv_index):
     """One forced-distributed plain search is two Spark jobs: the
     compressed-block shuffle by doc range and the kernel tasks that return
-    their partials."""
+    their partials.  A facet call is the same two jobs, with the doc-values
+    slice in the shuffle; a forced-distributed phrase adds the jobs of its
+    range-eligibility broadcast."""
     from search_engine_spark.query.engine import SearchEngine
 
     eng = SearchEngine(spark, index_tiny)
-    eng.search("the oil", force_distributed=True)
-    res, jobs = _jobs(spark, "two-jobs", lambda: eng.search("the oil", force_distributed=True))
-    assert res.total > 0
-    assert len(jobs) <= 2, [j.stageIds for j in jobs]
+    sf = SearchEngine(spark, sf_dv_index)
+    for name, fn, most in [
+        ("two-jobs", lambda: eng.search("the oil", force_distributed=True), 2),
+        ("facet-jobs", lambda: sf.facet_fields(
+            keyword="the oil", facets={"langs": {"type": "string", "path": "lang"}}), 2),
+        ("phrase-jobs", lambda: sf.search(PHRASE, phrase=True, force_distributed=True),
+         PHRASE_JOBS),
+    ]:
+        fn()
+        res, jobs = _jobs(spark, name, fn)
+        assert (res["count"] if isinstance(res, dict) else res.total) > 0
+        assert len(jobs) <= most, (name, [j.stageIds for j in jobs])

@@ -415,3 +415,57 @@ def test_phrase_matcher_property_vs_bruteforce():
                 assert f == min(starts)
 
     check()
+
+
+def test_phrase_keep_selection_is_exact():
+    """The distributed phrase plan keeps each task's rows before the phrase
+    idf is known (``_phrase_keep``).  Scoring and ranking only the kept
+    rows of 1-3 tasks must give the page that scoring and ranking every
+    row gives — ids and float-hex scores — for every boost class, skip and
+    k (skip+k from 1 to 14), on seeded random rows and on tie-dense rows:
+    at avgdl 300, (tf=2, dl=2d+100) and (tf=1, dl=d) have equal tf_norm in
+    exact arithmetic, so their float tf_norms and scores tie or differ by
+    an ulp, in either order."""
+    import numpy as np
+    import pandas as pd
+
+    from search_engine_spark.query.engine import (
+        _math_idf,
+        _phrase_keep,
+        _phrase_scored,
+        _Query,
+        _rank,
+    )
+
+    n_docs = 10_000
+
+    def page(q, rows, df, avgdl):
+        s = _phrase_scored(q, rows, df, avgdl)
+        top = _rank(q, s)[q.skip : q.skip + q.k]
+        return [(int(d), float(v).hex()) for d, v in zip(s["doc_id"].iloc[top],
+                                                       s["score"].iloc[top])]
+
+    rng = np.random.default_rng(20260)
+    for case in range(7_500):
+        if case % 5 < 4:  # 6,000 tie-dense cases
+            d = rng.integers(20, 400, int(rng.integers(1, 16)))
+            tf = np.concatenate([np.full(d.size, 2), np.ones(d.size, np.int64)])
+            dl = np.concatenate([2 * d + 100, d])
+            avgdl = 300.0
+        else:
+            tf = rng.integers(1, 5, int(rng.integers(1, 30)))
+            dl = tf + rng.integers(0, 600, tf.size)
+            avgdl = float(rng.uniform(50.0, 500.0))
+        rows = pd.DataFrame({"doc_id": rng.choice(100_000, tf.size, replace=False), "tf": tf,
+                             "dl": dl, "first_pos": np.zeros(tf.size, np.int64)})
+        df = tf.size + int(rng.integers(0, 50))  # a dv filter may drop rows
+        q = _Query(
+            keys=["t"], n_docs={"t": n_docs},
+            idf={"t": _math_idf(n_docs, df + int(rng.integers(0, 100)))},
+            k=int(rng.integers(1, 8)), skip=int(rng.integers(0, 8)),
+            constant_boost=bool(rng.integers(2)), avail_boost=bool(rng.integers(2)),
+        )
+        task = rng.integers(0, int(rng.integers(1, 4)), tf.size)
+        kept = pd.concat([_phrase_keep(q, rows[task == t], avgdl) for t in np.unique(task)],
+                         ignore_index=True)
+        assert page(q, kept, df, avgdl) == page(q, rows, df, avgdl), case
