@@ -1,9 +1,15 @@
-"""Interleaved sort/WAND A/B on an existing multi-field index.
+"""Interleaved unpruned/pruned A/B on an existing multi-field index.
 
 Host wall-clock here drifts up to 2x between runs (shared box), so single
 legs are not comparable — this interleaves the two modes rep-by-rep (the
-BENCH §7 throttle-immune protocol) and reports per-rep pairs plus medians,
-with the dispatch estimate recorded alongside.
+BENCH §7 throttle-immune protocol) and reports per-rep pairs plus medians.
+``mode="sort"`` (forced distributed) folds every block of the one
+doc-range kernel call; ``mode="wand"`` is the same call with blocks
+pruned inside each task against its running θ, whose θs and block
+counters ``last_wand`` records.  ``mode="auto"`` runs the pruned kernel
+when the driver would not take the query, and ``last_dispatch`` records
+that placement.  (The ``BENCH/mf_wand_ab_*.json`` artifacts were recorded
+by the earlier two-phase planner and its auto cost model.)
 
     python scripts/mf_wand_ab.py --index /tmp/mf_scale_idx_8000000 \
         --reps 5 --out BENCH/mf_wand_ab_8m.json

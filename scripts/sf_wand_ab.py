@@ -1,10 +1,20 @@
-"""Interleaved sort/WAND A/B on an existing SINGLE-FIELD index — the
-throttle-immune twin of scripts/mf_wand_ab.py for the §3c crossover
-queries, interleaving the two modes rep-by-rep so host drift cannot
-manufacture (or hide) a crossover.
+"""Interleaved unpruned/pruned A/B on an existing SINGLE-FIELD index — the
+throttle-immune twin of scripts/mf_wand_ab.py for the §3c queries,
+interleaving the two modes rep by rep so host drift cannot manufacture
+(or hide) a difference.
 
-    python scripts/sf_wand_ab.py --index /tmp/query_scale_idx_8000000 \
-        --reps 5 --out BENCH/sf_wand_ab_8m.json
+Both sides run the one doc-range kernel call, forced distributed:
+``mode="sort"`` folds every block, ``mode="wand"`` prunes blocks inside
+each kernel task against the task's running θ (decoding a pruned block's
+doc ids only, for the exact total).  ``mode="auto"`` runs the pruned
+kernel on these WAND-shaped queries.  Pages must be identical — doc ids
+and float-hex scores — on all three; ``last_wand`` records the θs and the
+blocks read and pruned.  (The ``BENCH/sf_wand_ab_*.json`` artifacts up to
+24M docs were recorded by the earlier two-phase planner and its auto cost
+model.)
+
+    python scripts/sf_wand_ab.py --index /tmp/query_scale_idx_1000000 \
+        --cpus 4 --reps 9 --out BENCH/sf_wand_ab_1m_r7.json
 """
 
 from __future__ import annotations
@@ -27,6 +37,10 @@ QUERIES = {
     "rare_dominated": "the cadbury",
     "multi_stop_rare": "the of in cadbury",
 }
+
+
+def _page(res):
+    return [(int(d), float(s).hex()) for d, s in zip(res.page["doc_id"], res.page["score"])]
 
 
 def main():
@@ -53,8 +67,7 @@ def main():
     for name, kw in QUERIES.items():
         eng.search(kw, k=10, mode="sort", force_distributed=True)  # warm
         eng.search(kw, k=10, mode="wand", force_distributed=True)
-        pairs = []
-        pages = {}
+        pairs, same = [], True
         for _ in range(args.reps):
             t0 = time.time()
             rs = eng.search(kw, k=10, mode="sort", force_distributed=True)
@@ -63,13 +76,10 @@ def main():
             rw = eng.search(kw, k=10, mode="wand", force_distributed=True)
             t_wand = time.time() - t0
             pairs.append((round(t_sort, 3), round(t_wand, 3)))
-            pages["sort"] = [(int(d), round(float(s), 9))
-                             for d, s in zip(rs.page["doc_id"], rs.page["score"])]
-            pages["wand"] = [(int(d), round(float(s), 9))
-                             for d, s in zip(rw.page["doc_id"], rw.page["score"])]
+            last_wand = dict(eng.last_wand)
+            same = same and _page(rs) == _page(rw) and rs.total == rw.total
         auto = eng.search(kw, k=10, mode="auto", force_distributed=True)
-        pages["auto"] = [(int(d), round(float(s), 9))
-                         for d, s in zip(auto.page["doc_id"], auto.page["score"])]
+        same = same and _page(auto) == _page(rs) and auto.total == rs.total
         med_sort = statistics.median(p[0] for p in pairs)
         med_wand = statistics.median(p[1] for p in pairs)
         ratio = med_wand / med_sort
@@ -81,11 +91,9 @@ def main():
             "wand_over_sort_ratio": round(ratio, 3),
             "per_rep_wand_wins": sum(1 for s, w in pairs if w < s),
             "auto_mode": eng.last_dispatch["mode"],
-            "auto_picked_winner": eng.last_dispatch["mode"]
-            == ("wand" if ratio < 1.0 else "sort"),
-            "dispatch": {k: (round(v, 4) if isinstance(v, float) else v)
-                         for k, v in eng.last_dispatch.items()},
-            "pages_identical": pages["sort"] == pages["wand"] == pages["auto"],
+            "dispatch": eng.last_dispatch,
+            "last_wand": last_wand,
+            "pages_identical": same,  # every rep and auto, totals included
         }
         print(f"{name} ({kw!r}): pairs={pairs} median sort={med_sort:.3f} "
               f"wand={med_wand:.3f} auto={eng.last_dispatch['mode']}", flush=True)

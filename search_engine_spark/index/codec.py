@@ -83,23 +83,36 @@ def encode_postings(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray) -> by
     return header + gap_bytes + tf_bytes + dl_bytes
 
 
+def _sections(b: memoryview) -> tuple[int, int, int]:
+    """(offset of the gap section, gap bytes, tf bytes) of a posting block:
+    its header is two varints."""
+    hb = np.frombuffer(b[:20], dtype=np.uint8)
+    p = int(np.flatnonzero((hb & _CONT) == 0)[1]) + 1
+    gap_len, tf_len = (int(v) for v in decode_varints(b[:p]))
+    return p, gap_len, tf_len
+
+
 def decode_postings(buf: bytes | memoryview) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Inverse of :func:`encode_postings` -> (doc_ids, tfs, dls), all int64."""
     b = memoryview(buf)
     if len(b) == 0:
         z = np.empty(0, dtype=np.int64)
         return z, z.copy(), z.copy()
-    # header is two varints; find their ends
-    hb = np.frombuffer(b[:20], dtype=np.uint8)
-    hends = np.flatnonzero((hb & _CONT) == 0)[:2]
-    hend = int(hends[1])
-    lens = decode_varints(b[: hend + 1])
-    gap_len, tf_len = int(lens[0]), int(lens[1])
-    p = hend + 1
+    p, gap_len, tf_len = _sections(b)
     gaps = decode_varints(b[p : p + gap_len]).astype(np.int64)
     tfs = decode_varints(b[p + gap_len : p + gap_len + tf_len]).astype(np.int64)
     dls = decode_varints(b[p + gap_len + tf_len :]).astype(np.int64)
     return np.cumsum(gaps), tfs, dls
+
+
+def decode_doc_ids(buf: bytes | memoryview) -> np.ndarray:
+    """The doc_ids of :func:`decode_postings` alone: the tf and dl sections
+    are never read (a block that only needs counting, not scoring)."""
+    b = memoryview(buf)
+    if len(b) == 0:
+        return np.empty(0, dtype=np.int64)
+    p, gap_len, _ = _sections(b)
+    return np.cumsum(decode_varints(b[p : p + gap_len]).astype(np.int64))
 
 
 # ---------------------------------------------------------------------------

@@ -25,15 +25,17 @@ plan:
   its match count (its group rollup under ``group_by``; for a phrase, the
   rows that can still reach the page once the phrase idf is known; for
   facets, each label's count); the driver merges these partials by the
-  same rule.  The exact WAND total is this plan's match count.
+  same rule.
 
-- ``mode="wand"`` (block-max pruned): per-range score upper bounds sum
-  across query terms on the shared grid.  Phase 1 scores the most promising
-  ranges exactly and takes a threshold θ from their merged top-k; phase 2
-  skips every remaining range — and, inside surviving ranges, every block —
-  whose upper bound is strictly below θ.  Pruning uses strict inequality so
-  θ-ties (which doc_id tiebreaks could still admit) are never dropped:
-  results stay bit-identical to the baseline.
+- ``mode="wand"`` (block-max pruned) is the same single kernel call.  Each
+  task already holds every block of its doc ranges with the blocks'
+  ``max_tf_norm``, so it bounds each block, seeds a local θ from its own
+  ranges' attained floor, visits its ranges best bound first and skips the
+  tf/dl decode and the scoring of every block whose bound is strictly below
+  its running θ (:func:`_wand_task`).  A pruned block's doc ids are still
+  decoded, so the call's match count is the exact total.  Strict inequality
+  never drops a θ-tie that doc_id could still admit: results stay
+  bit-identical to the baseline.
 
 Float determinism: every placement sums a doc's scores in ascending key
 order in numpy, starting from 0.0 — a doc's postings all live in one range,
@@ -59,7 +61,7 @@ from ..analysis.text import (
     wildcard_pattern_parts,
 )
 from ..catalog import IndexCatalog
-from ..index.codec import decode_position_lists, decode_postings
+from ..index.codec import decode_doc_ids, decode_position_lists, decode_postings
 from ..numerics import round_half_away
 
 K1 = 1.2
@@ -144,16 +146,11 @@ class _Query:
     @property
     def wand_shaped(self) -> bool:
         """WAND's θ-pruning scope: page 1 of a score-ranked, ungrouped,
-        unfiltered query whose membership is a count (or nothing)."""
+        unfiltered term query whose membership is a count (or nothing)."""
         return (
             not self.skip and not self.group_by and self.dv_pred is None
-            and self.sort_path is None and self.occur() != "clauses"
-        )
-
-    @property
-    def boost_ceiling(self) -> float:
-        return (CONSTANT_BOOST if self.constant_boost else 0.0) + (
-            AVAIL_BOOST if self.avail_boost else 0.0
+            and self.sort_path is None and not self.phrase
+            and self.occur() != "clauses"
         )
 
     @property
@@ -260,14 +257,15 @@ def _phrase_rows(q: _Query, terms, bufs, poss) -> pd.DataFrame:
     )))
 
 
-def _add_boosts(q: _Query, acc: np.ndarray, dls: np.ndarray) -> np.ndarray:
+def _add_boosts(q: _Query, acc: np.ndarray, dls: np.ndarray | None = None) -> np.ndarray:
     """The dl-derived boosts, added one after the other: reference A6
     (constant-score should clause, constants.py:16) and A8 (post-search
-    availability boost, search_utils.py:157-165)."""
+    availability boost, search_utils.py:157-165).  ``dls=None`` adds both
+    in the same order: WAND's boost ceiling."""
     if q.constant_boost:
-        acc = acc + np.where(dls % 37 == 0, CONSTANT_BOOST, 0.0)
+        acc = acc + (CONSTANT_BOOST if dls is None else np.where(dls % 37 == 0, CONSTANT_BOOST, 0.0))
     if q.avail_boost:
-        acc = acc + np.where(dls % 7 > 0, AVAIL_BOOST, 0.0)
+        acc = acc + (AVAIL_BOOST if dls is None else np.where(dls % 7 > 0, AVAIL_BOOST, 0.0))
     return acc
 
 
@@ -326,13 +324,15 @@ def _phrase_keep(q: _Query, rows: pd.DataFrame, avgdl: float) -> pd.DataFrame:
     return rows.iloc[np.sort(np.concatenate(keep))] if keep else rows
 
 
-def _fold(q: _Query, terms, bufs, avgdl: float) -> pd.DataFrame:
+def _fold(q: _Query, terms, bufs, avgdl: float, pruned=((), ())) -> pd.DataFrame:
     """The one scoring fold both placements run — the driver over every
     candidate block, a distributed task once per doc range: decode the
     blocks (``terms[i]``'s postings ``bufs[i]``), BM25 summed per doc in
     ascending key order, the occur reduction, boosts, and max(dl) when
-    boosts or the group key read it.  Columns doc_id (ascending), score
-    [, g_id, n_docs = 1]."""
+    boosts or the group key read it.  ``pruned`` holds WAND's pruned
+    blocks (terms, bufs): only their doc ids are decoded, for membership,
+    and a matched doc one of them holds scores NaN — counted, never
+    ranked.  Columns doc_id (ascending), score [, g_id, n_docs = 1]."""
     per_key: dict[str, list] = {}
     for t, buf in zip(terms, bufs):
         per_key.setdefault(t, []).append(decode_postings(buf))
@@ -340,28 +340,36 @@ def _fold(q: _Query, terms, bufs, avgdl: float) -> pd.DataFrame:
         t: tuple(np.concatenate([p[j] for p in ps]) for j in range(3))
         for t, ps in per_key.items()
     }
-    uniq = (
-        np.unique(np.concatenate([d[0] for d in decoded.values()]))
-        if decoded else np.empty(0, dtype=np.int64)
-    )
+    skipped: dict[str, list] = {}
+    for t, buf in zip(*pruned):
+        skipped.setdefault(t, []).append(decode_doc_ids(buf))
+    skipped = {t: np.concatenate(ids) for t, ids in skipped.items()}
+    all_ids = [d[0] for d in decoded.values()] + list(skipped.values())
+    uniq = np.unique(np.concatenate(all_ids)) if all_ids else np.empty(0, dtype=np.int64)
     acc = np.zeros(uniq.size, dtype=np.float64)
     dls = np.zeros(uniq.size, dtype=np.int64)
     occ = q.occur()
     n_keys = np.zeros(uniq.size, dtype=np.int64) if isinstance(occ, tuple) else None
     where: dict[str, np.ndarray] = {}
-    for t in sorted(decoded):
-        ids, tfs, dl = decoded[t]
-        tf = tfs.astype(np.float64)
-        adl = q.avgdl[t] if q.avgdl else avgdl
-        s = q.idf[t] * tf / (tf + K1 * (1.0 - B + B * dl.astype(np.float64) / adl))
-        pos = np.searchsorted(uniq, ids)
-        acc[pos] = acc[pos] + s
+    for t in sorted(decoded.keys() | skipped.keys()):
+        pos = np.empty(0, dtype=np.int64)
+        if t in decoded:
+            ids, tfs, dl = decoded[t]
+            tf = tfs.astype(np.float64)
+            adl = q.avgdl[t] if q.avgdl else avgdl
+            s = q.idf[t] * tf / (tf + K1 * (1.0 - B + B * dl.astype(np.float64) / adl))
+            pos = np.searchsorted(uniq, ids)
+            acc[pos] = acc[pos] + s
+            if q.reads_dl:
+                np.maximum.at(dls, pos, dl.astype(np.int64))
+        if t in skipped:
+            pos = np.concatenate([pos, np.searchsorted(uniq, skipped[t])])
         if n_keys is not None:
             n_keys[pos] += 1
         elif occ == "clauses":
             where[t] = pos
-        if q.reads_dl:
-            np.maximum.at(dls, pos, dl.astype(np.int64))
+    if skipped:
+        acc[np.searchsorted(uniq, np.concatenate(list(skipped.values())))] = np.nan
     keep = None
     if n_keys is not None:
         keep = n_keys == occ[1] if occ[0] == "==" else n_keys >= occ[1]
@@ -436,80 +444,94 @@ def _label_counts(labels: pd.DataFrame) -> pd.DataFrame:
     ], ignore_index=True)
 
 
-def predict_wand_decode(
-    meta: pd.DataFrame,
-    idf: dict[str, float],
-    k: int,
-    bound_scale: float = 1.0,
-    boost_ceiling: float = 0.0,
-    floor_scale: float = 1.0,
-) -> dict:
-    """Metadata-only estimate of the postings WAND will actually decode.
+def _wand_task(
+    q: _Query, terms, ssegs, mtns, bufs, avgdl: float, bound_scale: float,
+    floor_scale: float, count: bool = True,
+) -> tuple[pd.DataFrame, int, dict]:
+    """WAND inside one kernel task: :func:`_fold` over each doc range the
+    task holds, pruned block by block against the task's own running θ.
 
-    The dispatch cost model (mode="auto"): decides sort-vs-WAND from the
-    (term, sseg, max_tf_norm, doc_count) frame BEFORE touching any postings
-    bytes.  Measured motivation (BENCH §3c): at 10^6 docs WAND loses ~1.5×
-    on dense-dense disjunctions ("the oil" — every range holds both terms at
-    similar bounds, nothing prunes, and WAND pays an extra Spark job) and
-    wins multiples on rare-dominated ones ("the cadbury" — θ lands above
-    every stopword-only range bound and phase 2 skips almost everything).
+    Bounds come from the blocks (``terms[i]``, range ``ssegs[i]``, baked
+    ``mtns[i]``, postings ``bufs[i]``).  A (key, range) cell's bound is its
+    largest ``idf·max_tf_norm·bound_scale``.  A block's bound is its own
+    plus what the other keys could add in its range (their cells' bounds),
+    summed the way the fold sums a score — ascending key order from 0.0,
+    then each boost at its ceiling — so float rounding keeps it at or above
+    the score of every doc the block holds.  θ starts at the attained floor
+    where one is sound: the k-th largest per-range ``idf·max_tf_norm``,
+    times ``floor_scale``.  The doc realizing a block max scores at least
+    that, distinct ranges hold distinct docs, and under ``occur() is None``
+    every decoded doc matches; a count-based occur, or ``floor_scale == 0``
+    (bounds not attained, the caller's call), leaves θ unset.  Ranges are
+    visited best bound first, and after each one θ rises to the k-th best
+    score the task has folded so far.
 
-    Mechanics: θ_lb = k-th largest PER-RANGE single-term achievable score
-    (idf·mtn is attained by the doc realizing the block max, and distinct
-    ranges contain distinct docs, so θ_lb is a sound lower bound on the true
-    θ).  Predicted decode = phase-1 ranges (scored exactly, no θ yet) plus
-    every remaining (term, range) cell whose range bound + boost ceiling
-    reaches θ_lb.  θ_lb ≤ θ and the per-cell mtn aggregates over that
-    range's blocks, so the estimate only OVER-predicts decode — auto never
-    picks WAND on an optimistic guess.  ("Attained" assumes bounds baked at
-    the avgdl scoring uses: always true single-field batch, true multi-field
-    only under the per-field bake (stats per_field_mtn), and true on
-    incremental indexes after multiplying by ``floor_scale`` =
-    min_g(avgdl_now/avgdl_g, 1) — a pre-r5 multi-field index inflates θ_lb
-    here and the prediction can run optimistic, a dispatch-quality issue
-    only; result correctness never depends on it.)
+    A block whose bound is strictly below θ is pruned: its tf/dl are never
+    decoded nor scored.  With ``count`` its doc ids still are, so ``n`` is
+    the exact match count and the docs it holds are counted, never emitted
+    (:func:`_fold`'s NaN scores); without it the block is skipped outright
+    and a doc missing its share keeps a partial score.  A range holding
+    fewer keys than a count-based occur needs matches nothing.
 
-    Returns {total_dc, predicted_dc, theta_lb, n_ranges}.
+    Why pages stay bit-identical: each score that raises θ is a full or
+    partial score of a doc this task matched, and a partial score never
+    exceeds the full one, so θ never exceeds the task's true k-th score,
+    which never exceeds the global k-th.  A doc a pruned block holds
+    scores at most that block's bound, strictly below θ, so it cannot
+    reach the page, and neither can a partial row, which scores less than
+    its doc.  A doc scoring at least θ sits in no pruned block, so it is
+    scored in full, a θ-tie that doc_id could admit included.  Hence the
+    task's emitted top k equals the unpruned fold's.
+
+    Returns (the task's top k rows, ``n``, {"theta_floor", "theta",
+    "blocks_read", "blocks_pruned"}; θs None when unset).
     """
-    if meta.empty:
-        return {"total_dc": 0, "predicted_dc": 0, "theta_lb": 0.0, "n_ranges": 0}
-    m = meta.copy()
-    m["ub"] = m["term"].map(idf).fillna(0.0) * (m["mtn"] * bound_scale)
-    # θ_lb must be ATTAINED, so it uses the baked mtn times floor_scale —
-    # mirroring _wand_scored's floor.  floor_scale is 1.0 on batch indexes
-    # (mtn is exactly what the block-max doc scores); on generational
-    # indexes whose cumulative avgdl SHRANK below a generation's build-time
-    # avgdl, mtn·min_g(avgdl_now/avgdl_g) is the attained lower bound
-    # (tf_norm(a1) >= tf_norm(a0)·a1/a0 for a1 < a0).  Never bound_scale:
-    # that inflates bounds to stay a sound UPPER bound and no doc attains
-    # the inflated value.  ub keeps bound_scale: it is the sound upper
-    # bound the alive-set test prunes against.
-    m["ach"] = m["term"].map(idf).fillna(0.0) * (m["mtn"] * floor_scale)
-    rng = m.groupby("sseg").agg(
-        ub=("ub", "sum"), dc=("dc", "sum"), best=("ach", "max")
-    )
-    total_dc = int(rng["dc"].sum())
-    best_sorted = np.sort(rng["best"].to_numpy())
-    if best_sorted.size < k:
-        # fewer ranges than k: no sound θ floor; assume nothing prunes
-        return {
-            "total_dc": total_dc, "predicted_dc": total_dc,
-            "theta_lb": 0.0, "n_ranges": int(len(rng)),
-        }
-    theta_lb = float(best_sorted[-k])
-    # phase-1 selection mirrors _wand_scored: ranges by best achievable
-    rng_sorted = rng.sort_values("best", ascending=False)
-    cum = rng_sorted["dc"].cumsum().to_numpy()
-    n1 = int(np.searchsorted(cum, k) + 1)
-    phase1 = set(rng_sorted.index[:n1])
-    pred = int(rng_sorted["dc"].iloc[:n1].sum())
-    rest = m[~m["sseg"].isin(phase1)]
-    alive = (rest["sseg"].map(rng["ub"]) + boost_ceiling) >= theta_lb
-    pred += int(rest.loc[alive, "dc"].sum())
-    return {
-        "total_dc": total_dc, "predicted_dc": int(pred),
-        "theta_lb": theta_lb, "n_ranges": int(len(rng)),
-    }
+    k, occ, n_keys = max(q.k, 1), q.occur(), len(q.keys)
+    w = np.array([q.idf[t] for t in terms], dtype=np.float64)
+    mtn = np.asarray(mtns, dtype=np.float64)
+    ub = w * (mtn * bound_scale)
+    key = np.searchsorted(np.array(q.keys, dtype=object), np.array(terms, dtype=object))
+    ranges, blk_rng = np.unique(np.asarray(ssegs, np.int64), return_inverse=True)
+    cell = (blk_rng, key)
+    cell_ub, best = np.zeros((ranges.size, n_keys)), np.zeros(ranges.size)
+    np.maximum.at(cell_ub, cell, ub)
+    np.maximum.at(best, blk_rng, w * mtn)
+    has = np.zeros((ranges.size, n_keys), dtype=bool)
+    has[cell] = True
+    bound = np.zeros(len(terms))
+    for j in range(n_keys):
+        bound = bound + np.where(key == j, ub, cell_ub[blk_rng, j])
+    bound = _add_boosts(q, bound)
+    floor = None
+    if occ is None and floor_scale > 0.0 and ranges.size >= k:
+        floor = float(np.sort(best)[-k] * floor_scale)
+    theta, top = -np.inf if floor is None else floor, np.empty(0)
+    order = np.argsort(blk_rng, kind="stable")
+    blocks = np.split(order, np.flatnonzero(np.diff(blk_rng[order])) + 1)
+    rng_keys = has.sum(axis=1)
+    parts, n, read = [], 0, 0
+    for r in np.lexsort((ranges, -cell_ub.sum(axis=1))):
+        b = blocks[r]
+        if occ is not None and rng_keys[r] < occ[1]:
+            continue
+        cut = bound[b] < theta
+        live, dead = b[~cut], (b[cut] if count else b[:0])
+        read += live.size
+        if not live.size and not dead.size:
+            continue
+        cands = _fold(q, [terms[i] for i in live], [bufs[i] for i in live], avgdl,
+                      pruned=([terms[i] for i in dead], [bufs[i] for i in dead]))
+        n += len(cands)
+        cands = cands[cands["score"].notna()].reset_index(drop=True)
+        if len(cands):
+            top = np.sort(np.concatenate([top, cands["score"].to_numpy()]))[-k:]
+            if top.size == k:
+                theta = max(theta, float(top[0]))
+            parts.append(_partial(q, cands))
+    rows = _partial(q, pd.concat(parts, ignore_index=True)) if parts else None
+    stats = {"theta_floor": floor, "theta": None if theta == -np.inf else theta,
+             "blocks_read": read, "blocks_pruned": len(terms) - read}
+    return rows, n, stats
 
 
 def _fuzzy_term_cond(operand, term: str, fuzzy: int, transpositions: bool):
@@ -599,8 +621,8 @@ class SearchEngine:
         # range.  The attained correction is the linear shrink bound
         # tf_norm(a1) >= tf_norm(a0)·a1/a0 for a1 < a0.  An incremental
         # index whose stats predate the key gives no per-generation data to
-        # rule shrink out, so the floor is disabled outright (0.0 — every
-        # θ candidate then comes from phase-1's exact scores, always sound).
+        # rule shrink out, so the floor is disabled outright (0.0 — θ then
+        # comes from folded scores only, always sound).
         if "wand_floor_scale" in self.stats:
             self.floor_scale = float(self.stats["wand_floor_scale"])
         elif self.stats.get("corpus_path") == "incremental":
@@ -765,67 +787,10 @@ class SearchEngine:
     ) -> list[str]:
         """Dictionary terms matching a Lucene/Atlas ``wildcard`` pattern
         (``*`` = any run, ``?`` = one char); the expansion scores as a
-        disjunction like every other term-expansion surface.
-
-        Cached-dictionary path: the pattern's fixed prefix bounds a range
-        scan (the same bound Lucene's term enumeration seeks to) and the
-        shared anchored regex filters the slice; above the cache budget the
-        SAME regex runs JVM-side (``rlike``) over the distributed term
-        stats, prefix-pruned by ``startswith``.  ``max_expansions`` keeps
-        the first N ascending — the deterministic cap every oracle twin
-        reproduces.
-        """
+        disjunction like every other term-expansion surface
+        (:meth:`_expand_pattern`)."""
         self._require_single_field("expand_wildcard")
-        fixed, regex = wildcard_pattern_parts(pattern)
-        if self._terms_arr is not None:
-            lo = np.searchsorted(self._terms_arr, fixed)
-            hi = np.searchsorted(self._terms_arr, fixed + "\U0010ffff")
-            rx = re.compile(regex)
-            out = [str(t) for t in self._terms_arr[lo:hi] if rx.match(str(t))]
-        else:
-            q = (
-                self.spark.read.parquet(self.cat.term_stats)
-                .select("term").distinct()
-                .filter(
-                    F.col("term").startswith(fixed) & F.col("term").rlike(regex)
-                )
-                .orderBy("term")
-            )
-            if max_expansions:
-                q = q.limit(max_expansions)
-            out = [r["term"] for r in q.collect()]
-        return out[:max_expansions] if max_expansions else out
-
-    def _expand_wildcard_in_field(
-        self, field: str, pattern: str, max_expansions: int | None = None
-    ) -> list[str]:
-        """Wildcard expansion scoped to one field's vocabulary (the Atlas
-        ``wildcard`` operator's ``path``): the fixed prefix extends the
-        field's contiguous key range, the regex matches the key SUFFIX.
-        Returns prefixed keys, ascending."""
-        fixed, regex = wildcard_pattern_parts(pattern)
-        sep = self.field_sep
-        kpfx = f"{field}{sep}{fixed}"
-        if self._terms_arr is not None:
-            lo = np.searchsorted(self._terms_arr, kpfx)
-            hi = np.searchsorted(self._terms_arr, kpfx + "\U0010ffff")
-            rx = re.compile(regex)
-            plen = len(field) + len(sep)
-            out = [
-                str(t) for t in self._terms_arr[lo:hi] if rx.match(str(t)[plen:])
-            ]
-        else:
-            suffix = F.substring(F.col("term"), len(field) + len(sep) + 1, 1_000_000)
-            q = (
-                self.spark.read.parquet(self.cat.term_stats)
-                .select("term").distinct()
-                .filter(F.col("term").startswith(kpfx) & suffix.rlike(regex))
-                .orderBy("term")
-            )
-            if max_expansions:
-                q = q.limit(max_expansions)
-            return [r["term"] for r in q.collect()]
-        return out[:max_expansions] if max_expansions else out
+        return self._expand_pattern("", *wildcard_pattern_parts(pattern), max_expansions)
 
     def expand_regex(
         self, pattern: str, max_expansions: int | None = None
@@ -833,57 +798,37 @@ class SearchEngine:
         """Dictionary terms fully matching an Atlas/Lucene ``regex``-operator
         pattern (the dialect-safe subset ``regex_pattern_parts`` pins: the
         same pattern text means the same language to python ``re``, Java
-        ``rlike``, and DuckDB's RE2).  Same shape as ``expand_wildcard``:
-        fixed-prefix-bounded range scan + fullmatch on the cached
-        dictionary; ``startswith`` + anchored ``rlike`` JVM-side above the
-        cache budget; first-N-ascending cap."""
+        ``rlike``, and DuckDB's RE2), by :meth:`_expand_pattern`."""
         self._require_single_field("expand_regex")
-        fixed, rx_src = regex_pattern_parts(pattern)
-        if self._terms_arr is not None:
-            lo = np.searchsorted(self._terms_arr, fixed)
-            hi = np.searchsorted(self._terms_arr, fixed + "\U0010ffff")
-            rx = re.compile(rx_src)
-            out = [str(t) for t in self._terms_arr[lo:hi] if rx.fullmatch(str(t))]
-        else:
-            q = (
-                self.spark.read.parquet(self.cat.term_stats)
-                .select("term").distinct()
-                .filter(
-                    F.col("term").startswith(fixed)
-                    & F.col("term").rlike(f"^(?:{rx_src})$")
-                )
-                .orderBy("term")
-            )
-            if max_expansions:
-                q = q.limit(max_expansions)
-            out = [r["term"] for r in q.collect()]
-        return out[:max_expansions] if max_expansions else out
+        return self._expand_pattern("", *regex_pattern_parts(pattern), max_expansions)
 
-    def _expand_regex_in_field(
-        self, field: str, pattern: str, max_expansions: int | None = None
+    def _expand_pattern(
+        self, field: str, fixed: str, rx_src: str, max_expansions: int | None
     ) -> list[str]:
-        """Regex expansion scoped to one field's vocabulary (the Atlas
-        ``regex`` operator's ``path``), mirroring the wildcard form."""
-        fixed, rx_src = regex_pattern_parts(pattern)
-        sep = self.field_sep
-        kpfx = f"{field}{sep}{fixed}"
+        """Dictionary keys whose term — the key suffix after ``field``'s
+        prefix on a multi-field index (the Atlas wildcard/regex operator's
+        ``path``), the whole key with ``field=""`` — fully matches
+        ``rx_src``, ascending, the first ``max_expansions`` kept (the
+        deterministic cap every oracle twin reproduces).
+
+        The pattern's fixed prefix bounds a range scan (the same bound
+        Lucene's term enumeration seeks to); the cached dictionary then
+        filters the slice with python ``re``, and above the cache budget
+        the SAME pattern runs JVM-side (anchored ``rlike``) over the
+        distributed term stats, prefix-pruned by ``startswith``."""
+        plen = len(field) + len(self.field_sep) if field else 0
+        kpfx = (f"{field}{self.field_sep}" if field else "") + fixed
         if self._terms_arr is not None:
             lo = np.searchsorted(self._terms_arr, kpfx)
             hi = np.searchsorted(self._terms_arr, kpfx + "\U0010ffff")
             rx = re.compile(rx_src)
-            plen = len(field) + len(sep)
-            return [
-                str(t) for t in self._terms_arr[lo:hi]
-                if rx.fullmatch(str(t)[plen:])
-            ][: max_expansions or None]
-        suffix = F.substring(F.col("term"), len(field) + len(sep) + 1, 1_000_000)
+            out = [str(t) for t in self._terms_arr[lo:hi] if rx.fullmatch(str(t)[plen:])]
+            return out[: max_expansions or None]
+        suffix = F.substring(F.col("term"), plen + 1, 1_000_000)
         q = (
             self.spark.read.parquet(self.cat.term_stats)
             .select("term").distinct()
-            .filter(
-                F.col("term").startswith(kpfx)
-                & suffix.rlike(f"^(?:{rx_src})$")
-            )
+            .filter(F.col("term").startswith(kpfx) & suffix.rlike(f"^(?:{rx_src})$"))
             .orderBy("term")
         )
         if max_expansions:
@@ -1009,59 +954,13 @@ class SearchEngine:
     # distributed kernel takes over when Σ df of the matched terms exceeds
     # this; at web scale every head-term query does.
     SMALL_QUERY_POSTINGS = 2_000_000
-    # mode="auto" picks WAND iff total_dc - RATIO*predicted_dc >= MIN_SAVED.
-    # Both constants are FIT TO INTERLEAVED A/B MEASUREMENT (BENCH §3c:
-    # sf_wand_ab/mf_wand_ab — 16 (query, scale, layout) rows at 1M/8M/24M
-    # docs, single- and multi-field.  The 24M rows are the first measured
-    # WAND WINS, so the rule now brackets the crossover instead of only
-    # extrapolating it):
-    # - RATIO: a WAND-decoded posting costs ~3 sort-pipeline postings
-    #   (marginal slope from the A/B: sort 0.077-0.154 s/M rows, WAND
-    #   0.18-0.20 s/M — per-range python-kernel dispatch, ub bookkeeping,
-    #   two-phase union vs the sort path's straight-line
-    #   decode+TakeOrdered).
-    # - MIN_SAVED: the interpolated break-even between the two measured
-    #   brackets at ~976 ranges (sf_wand_ab_8m/24m.json, interleaved):
-    #   at saved=8.1M rows sort wins by 1.0 s ("the oil", 8M docs); at
-    #   saved=24.4M WAND wins by 0.27 s, 5/5 reps ("the oil", 24M docs,
-    #   range_docs grown 4x so the range COUNT — WAND's fixed term — holds
-    #   at ~1000, the shape a cluster operator scales).  Linear in saved,
-    #   the margin crosses zero at ~21M.  The 24M rows also show the
-    #   ±5% INDIFFERENCE ZONE around the threshold: "the dairy"
-    #   (saved=23.4M) won 5/5 for WAND while "the cadbury" (saved=23.2M)
-    #   lost 4/5 by 9% — structurally identical plans (1 probe + ~10 alive
-    #   ranges of 976) whose outcomes at the break-even are noise-level,
-    #   so a near-threshold mis-pick costs <10% either way; the expensive
-    #   mistake (a wrong WAND pick far below threshold measured up to
-    #   2.1x) stays excluded.
-    # At cluster scale the structure, not the constants, is the claim: the
-    # fixed term stays ~seconds of job overhead while an unpruned head-term
-    # decode at 10^12 docs is 10^10+ rows — hours of CPU — so any strongly
-    # prunable query clears MIN_SAVED by orders of magnitude there.
-    # Both were fit against the earlier distributed kernel (per-block pandas
-    # decode, a JVM groupBy fold, a persisted phase-1 union); they are not
-    # refit for the doc-range kernel, since a refit needs the 8M/24M
-    # interleaved A/B re-run.
-    WAND_DECODE_COST_RATIO = 3.0
-    WAND_AUTO_MIN_SAVED = 21_000_000
-    # set by every mode="auto" query: {"mode", "total_dc", "predicted_dc",
-    # "theta_lb", "n_ranges"} — bench/test introspection; queries the cost
-    # model never ran on record mode "sort" with total_dc = Σdf
+    # set by every mode="auto" query: {"mode", "total_dc" = Σdf} — the
+    # placement it took; bench/test introspection
     last_dispatch: dict | None = None
-    # populated by the last _wand_scored call that built a full plan:
-    # {"theta_floor", "theta", "n_ranges", "n_phase1", "n_rest_alive"};
-    # reset to None on entry so early-exit WAND paths (empty metadata,
-    # clause-filtered range set) never leave a previous query's numbers
+    # set by every WAND kernel call, over its tasks' count rows: the largest
+    # "theta_floor" and "theta" (None when no task set one) and the summed
+    # "blocks_read" / "blocks_pruned"
     last_wand: dict | None = None
-
-    def _pick_wand(self, est: dict) -> bool:
-        """The auto-dispatch decision: cost-ratio rule over the metadata-only
-        estimate (see WAND_DECODE_COST_RATIO), applied by the planner."""
-        return (
-            est["total_dc"] > 0
-            and est["total_dc"] - self.WAND_DECODE_COST_RATIO * est["predicted_dc"]
-            >= self.WAND_AUTO_MIN_SAVED
-        )
 
     # --------------------------------------------------- planner and kernels
     def _query(
@@ -1078,9 +977,14 @@ class SearchEngine:
         weighs 0: decoded for membership, contributing exactly nothing to
         the fold.  ``keys`` stays empty when no document can match: every
         key absent, a must clause with no present key, or more required
-        shoulds than should clauses with a present key.
+        shoulds than should clauses with a present key.  Every surface's
+        ``mode`` and ``total_mode`` are checked here.
         """
         q = _Query(**extras)
+        if q.mode not in ("sort", "wand", "auto"):
+            raise ValueError(f"mode must be 'sort', 'wand', or 'auto'; got {q.mode!r}")
+        if q.total_mode not in ("exact", "approx"):
+            raise ValueError(f"total_mode must be 'exact' or 'approx'; got {q.total_mode!r}")
         msm = int(msm)
         if not should:
             msm = 0
@@ -1110,45 +1014,37 @@ class SearchEngine:
     def _run(self, q: _Query) -> SearchResult:
         """The one planner: place a compiled query, then finish its page.
 
-        - an explicit ``mode="wand"`` on a WAND-shaped query runs WAND;
-        - ``mode="auto"`` runs the metadata-only cost model on WAND-shaped
-          queries the driver would not take, and records its decision in
-          ``last_dispatch`` on every call, driver-placed ones included;
+        - a WAND-shaped query runs the pruned distributed kernel under an
+          explicit ``mode="wand"``, and under ``mode="auto"`` whenever the
+          driver would not take it; ``mode="auto"`` records its placement
+          in ``last_dispatch`` on every call, driver-placed ones included;
         - any other query that is not ``force_distributed`` and has Σdf <=
-          SMALL_QUERY_POSTINGS runs on the driver (such a query can never
-          clear the auto cost rule: total_dc <= Σdf <= MIN_SAVED);
+          SMALL_QUERY_POSTINGS runs on the driver;
         - everything else runs the distributed kernel.
         """
         sigma = sum((q.dfs or {}).values())
         small = not q.force_distributed and sigma <= self.SMALL_QUERY_POSTINGS
-        meta, wand = None, q.mode == "wand" and q.wand_shaped
+        wand = bool(q.keys) and q.wand_shaped and (
+            q.mode == "wand" or (q.mode == "auto" and not small)
+        )
         if q.mode == "auto":
-            est = {"total_dc": int(sigma), "predicted_dc": 0, "theta_lb": 0.0,
-                   "n_ranges": 0}
-            if q.keys and q.wand_shaped and not small:
-                meta = self._wand_meta(q.keys)
-                est = predict_wand_decode(
-                    meta, q.idf, q.k, self.bound_scale, q.boost_ceiling,
-                    floor_scale=self.floor_scale,
-                )
-                wand = self._pick_wand(est)
-            self.last_dispatch = {"mode": "wand" if wand else "sort", **est}
+            self.last_dispatch = {"mode": "wand" if wand else "sort", "total_dc": int(sigma)}
         if not q.keys:
             return self._finish(q, pd.DataFrame())
         if wand:
-            return self._finish(
-                q, self._wand_scored(q, meta), total=self._wand_total(q)
-            )
+            total = self._wand_total(q)
+            rows, n = self._dist_kernel(q, wand=True, count=total is None)
+            return self._finish(q, rows, total=n if total is None else total)
         if small:
             return self._finish(q, self._driver_kernel(q))
         return self._finish(q, *self._dist_kernel(q))
 
-    def _blocks(self, q: _Query, ssegs: list[int] | None = None) -> DataFrame:
+    def _blocks(self, q: _Query) -> DataFrame:
         """A query's candidate block rows: a phrase's eligibility-pruned
         postings + positions, else the postings and block bounds."""
         if q.phrase:
             return self._phrase_candidate_blocks(q.keys)
-        return self._candidate_segments(q.keys, ssegs).select(
+        return self._candidate_segments(q.keys).select(
             "term", "sseg", "max_tf_norm", "postings"
         )
 
@@ -1172,14 +1068,13 @@ class SearchEngine:
         return _partial(q, cands) if q.group_by else cands
 
     def _dist_kernel(
-        self, q: _Query, ssegs: list[int] | None = None,
-        theta: float | None = None, rest_bounds: dict | None = None,
-        labels: list = (),
+        self, q: _Query, labels: list = (), wand: bool = False, count: bool = True,
     ) -> tuple[pd.DataFrame, int | None]:
         """The one distributed plan: the distributed placement of term and
-        phrase queries, each WAND phase (``ssegs`` / ``theta`` /
-        ``rest_bounds`` restrict and prune the decode), the exact WAND
-        total, and facet counts (``labels``: one label column per facet).
+        phrase queries, WAND (``wand``: each task runs :func:`_wand_task`,
+        whose pruned blocks are decoded docs-only when ``count`` asks for
+        the exact total, else skipped), and facet counts (``labels``: one
+        label column per facet).
 
         Candidate block rows shuffle by doc range still compressed; the
         doc-values slice (:meth:`_dv_probe`, keyed by the builder's
@@ -1195,14 +1090,15 @@ class SearchEngine:
           excluded — the full map, since partial top-N lists do not merge
           exactly;
 
-        and one count row (first column -1): its match count ``n`` and the
+        and one count row (first column -1): its match count ``n``, the
         count before the dv join, ``n_all`` (a phrase's idf reads the
-        UNfiltered phrase df).  Returns the merged rows — a phrase's
+        UNfiltered phrase df), and under WAND its θs and block counters,
+        which become ``last_wand``.  Returns the merged rows — a phrase's
         scored, facets' summed per (facet, bucket) — and the total (None
         under ``group_by``: the finisher counts the groups)."""
         cols = [q.sort_path] if q.sort_path else []
         lcols = [f"_facet{i}" for i in range(len(labels))]
-        frame = self._blocks(q, ssegs)
+        frame = self._blocks(q)
         dv = q.dv_pred is not None or bool(cols) or bool(labels)
         if dv:
             rd = int(self.stats["range_docs"])
@@ -1212,7 +1108,10 @@ class SearchEngine:
                 allowMissingColumns=True,
             )
         kq, how = replace(q, dv_pred=None), "left" if q.dv_pred is None else "inner"
-        avgdl, bscale, ceiling = self.avgdl, self.bound_scale, q.boost_ceiling
+        avgdl, bscale = self.avgdl, self.bound_scale
+        # the floor is attained only where bounds were baked at the avgdl
+        # scoring uses: single-field, or a per-field bake
+        fscale = self.floor_scale if q.avgdl is None or self.per_field_mtn else 0.0
         if labels:
             fields = [("facet", "long"), ("bucket", "string"), ("count", "long")]
             per_range, per_task = (lambda c: c[lcols]), _label_counts
@@ -1224,7 +1123,11 @@ class SearchEngine:
                 [("g_id", "long"), ("n_docs", "long")] if q.group_by else []
             ) + [(c, self._doc_stats_df.schema[c].dataType.simpleString()) for c in cols]
             per_range = per_task = lambda c: _partial(kq, c)
-        fields += [("n", "long"), ("n_all", "long")]
+        tail = [("n", "long"), ("n_all", "long")] + ([
+            ("theta_floor", "double"), ("theta", "double"),
+            ("blocks_read", "long"), ("blocks_pruned", "long"),
+        ] if wand else [])
+        fields += tail
         arrow = {"long": pa.int64(), "double": pa.float64(), "string": pa.string()}
 
         def kernel(batches):
@@ -1233,50 +1136,58 @@ class SearchEngine:
                 return
             tbl = pa.Table.from_batches(batches)
             terms, bufs = tbl["term"].to_pylist(), tbl["postings"].to_pylist()
-            poss = tbl["positions"].to_pylist() if kq.phrase else None
             sseg = tbl["sseg"].to_numpy()
-            is_blk = np.array([t is not None for t in terms])  # else a dv row
-            keep = is_blk
-            if theta is not None:
-                # block-max pruning: a block whose bound, plus what the other
-                # keys could still add in its range, cannot reach θ is skipped
-                w = np.array([kq.idf.get(t, 0.0) for t in terms])
-                rest = np.array([rest_bounds.get((t, int(s)), 0.0) for t, s in zip(terms, sseg)])
-                mtn = tbl["max_tf_norm"].to_numpy(zero_copy_only=False)
-                keep = keep & ~(w * (mtn * bscale) + rest + ceiling < theta)
-            order = np.argsort(sseg, kind="stable")
-            parts, n, n_all = [], 0, 0
-            for rows in np.split(order, np.flatnonzero(np.diff(sseg[order])) + 1):
-                b = rows[keep[rows]]
-                if not b.size:
-                    continue
-                blocks = [terms[i] for i in b], [bufs[i] for i in b]
-                if kq.phrase:
-                    cands = _phrase_rows(kq, *blocks, [poss[i] for i in b])
-                else:
-                    cands = _fold(kq, *blocks, avgdl)
-                n_all += len(cands)
-                if dv:
-                    attrs = tbl.take(rows[~is_blk[rows]]).select(["doc_id", *cols, *lcols])
-                    cands = cands.merge(attrs.to_pandas(), on="doc_id", how=how)
-                n += len(cands)
-                parts.append(per_range(cands))
-            if not n_all:
-                return
             schema = pa.schema([
                 tbl.schema.field(c) if c in cols else (c, arrow[t]) for c, t in fields
             ])
-            out = per_task(pd.concat(parts, ignore_index=True))
-            yield pa.RecordBatch.from_pandas(
-                out.assign(n=0, n_all=0), schema=schema, preserve_index=False
-            )
             counts = {f.name: [-1 if pa.types.is_integer(f.type) else None] for f in schema}
-            yield pa.RecordBatch.from_pydict({**counts, "n": [n], "n_all": [n_all]}, schema=schema)
+            if wand:
+                mtn = tbl["max_tf_norm"].to_numpy(zero_copy_only=False)
+                out, n, stats = _wand_task(kq, terms, sseg, mtn, bufs, avgdl, bscale,
+                                           fscale, count)
+                n_all = n
+                counts.update({c: [v] for c, v in stats.items()})
+            else:
+                poss = tbl["positions"].to_pylist() if kq.phrase else None
+                is_blk = np.array([t is not None for t in terms])  # else a dv row
+                order = np.argsort(sseg, kind="stable")
+                parts, n, n_all = [], 0, 0
+                for rows in np.split(order, np.flatnonzero(np.diff(sseg[order])) + 1):
+                    b = rows[is_blk[rows]]
+                    if not b.size:
+                        continue
+                    blocks = [terms[i] for i in b], [bufs[i] for i in b]
+                    if kq.phrase:
+                        cands = _phrase_rows(kq, *blocks, [poss[i] for i in b])
+                    else:
+                        cands = _fold(kq, *blocks, avgdl)
+                    n_all += len(cands)
+                    if dv:
+                        attrs = tbl.take(rows[~is_blk[rows]]).select(["doc_id", *cols, *lcols])
+                        cands = cands.merge(attrs.to_pandas(), on="doc_id", how=how)
+                    n += len(cands)
+                    parts.append(per_range(cands))
+                out = per_task(pd.concat(parts, ignore_index=True)) if n_all else None
+            if out is not None:
+                yield pa.RecordBatch.from_pandas(
+                    out.assign(**{c: 0 for c, _ in tail}),
+                    schema=schema, preserve_index=False,
+                )
+            yield pa.RecordBatch.from_pydict({**counts, "n": [n], "n_all": [n_all]},
+                                             schema=schema)
 
         ddl = ", ".join(f"`{c}` {t}" for c, t in fields)
         out = self._by_range(frame).mapInArrow(kernel, ddl).toPandas()
-        n, n_all = int(out.pop("n").sum()), int(out.pop("n_all").sum())
-        out = out[out.iloc[:, 0] >= 0].reset_index(drop=True)
+        is_cnt = out.iloc[:, 0] < 0
+        cnt = out[is_cnt]
+        out = out[~is_cnt].drop(columns=[c for c, _ in tail]).reset_index(drop=True)
+        n, n_all = int(cnt["n"].sum()), int(cnt["n_all"].sum())
+        if wand:
+            self.last_wand = {
+                **{c: (None if cnt[c].isna().all() else float(cnt[c].max()))
+                   for c in ("theta_floor", "theta")},
+                **{c: int(cnt[c].sum()) for c in ("blocks_read", "blocks_pruned")},
+            }
         if labels:
             return out.groupby(["facet", "bucket"], as_index=False)["count"].sum(), n
         if q.phrase:
@@ -1378,7 +1289,7 @@ class SearchEngine:
           like a plain text clause over the expanded term set;
         - ``wildcard``: the Atlas ``wildcard`` operator over a named path —
           the raw query is a ``*``/``?`` pattern expanded against the
-          field's vocabulary (``_expand_wildcard_in_field``), then scored
+          field's vocabulary (``_expand_pattern``), then scored
           as the usual disjunction.
         """
         if isinstance(clause, (tuple, list)):
@@ -1418,13 +1329,13 @@ class SearchEngine:
             # the raw query IS the pattern (never analyzed — metacharacters
             # would be stripped); expansion is field-scoped like every
             # other clause kind
-            return self._expand_wildcard_in_field(
-                field, clause["query"], max_expansions
+            return self._expand_pattern(
+                field, *wildcard_pattern_parts(clause["query"]), max_expansions
             )
         if kind == "regex":
             # same contract as wildcard: raw pattern, field-scoped expansion
-            return self._expand_regex_in_field(
-                field, clause["query"], max_expansions
+            return self._expand_pattern(
+                field, *regex_pattern_parts(clause["query"]), max_expansions
             )
         raise ValueError(f"unknown clause kind {kind!r}")
 
@@ -1626,14 +1537,12 @@ class SearchEngine:
         The clauses compile to the same internal query as :meth:`search`
         and share its placement rule: ``mode="wand"`` (pure-should,
         minimum_should_match <= 1, skip 0 — anything else raises here)
-        runs WAND; ``mode="auto"`` runs the cost model when the driver
-        would not take the query and records ``last_dispatch`` either
-        way; otherwise a query that is not ``force_distributed`` with Σdf
-        <= SMALL_QUERY_POSTINGS runs on the driver (dv filters and sort
-        included), the rest on the distributed kernel.
+        runs the pruned distributed kernel; ``mode="auto"`` runs it when
+        the driver would not take the query and records ``last_dispatch``
+        either way; otherwise a query that is not ``force_distributed``
+        with Σdf <= SMALL_QUERY_POSTINGS runs on the driver (dv filters
+        and sort included), the rest on the distributed kernel.
         """
-        if mode not in ("sort", "wand", "auto"):
-            raise ValueError(f"mode must be 'sort', 'wand', or 'auto'; got {mode!r}")
         # doc-values operators (range/equals/exists) ride the filter list as
         # Atlas operator objects; term clauses (tuples / kind-dicts) stay text
         filter, dv_clauses = self._split_dv_clauses(filter)
@@ -1797,7 +1706,9 @@ class SearchEngine:
         if not q.keys:
             return {
                 "count": 0,
-                "facet": {n: pd.DataFrame({"bucket": [], "count": []}) for n in specs},
+                "facet": {n: pd.DataFrame({"bucket": pd.Series(dtype=object),
+                                           "count": pd.Series(dtype=np.int64)})
+                          for n in specs},
             }
         q.dv_pred = dv_pred
         counts, total = self._dist_kernel(q, labels=[lab for lab, _ in specs.values()])
@@ -1960,6 +1871,7 @@ class SearchEngine:
         max_gap: int = 0,
         field: str | None = None,
         dv_pred=None,
+        **modes,
     ) -> _Query:
         """Exact-phrase BM25 top-k (Atlas ``$search.phrase``, the operator the
         reference's platform exposes next to its text/autocomplete clauses),
@@ -1981,7 +1893,7 @@ class SearchEngine:
         the driver kernel, or the distributed kernel, whose tasks match one
         doc range each and return the rows that can still reach the page
         (:func:`_phrase_keep`); the driver then scores them with the
-        global phrase df.  Its mode stays "sort": WAND never runs it.
+        global phrase df.  WAND never runs it (a phrase is not WAND-shaped).
 
         ``field`` (Atlas phrase clause's ``path``, multi-field indexes only):
         the phrase must appear within THAT field — terms become prefixed
@@ -2026,6 +1938,7 @@ class SearchEngine:
             max_gap=int(max_gap), k=k, skip=skip, with_url=with_url,
             first_pos=highlight, force_distributed=force_distributed,
             constant_boost=constant_boost, avail_boost=avail_boost, dv_pred=dv_pred,
+            **modes,
         )
 
     # ---------------------------------------------------------------- search
@@ -2138,12 +2051,13 @@ class SearchEngine:
         term set), or a phrase (:meth:`_phrase_query`), and :meth:`search`
         runs it through the same planner, kernels and finisher as
         :meth:`search_fields`; the validation ladder below is this
-        surface's own contract.  Placement: an explicit ``mode="wand"`` runs
-        WAND when the query is WAND-shaped (page 1, no group_by, dv_filter
-        or sort); ``mode="auto"`` runs the cost model on WAND-shaped queries
-        the driver would not take; any other query runs on the driver when
-        it is not ``force_distributed`` and Σdf <= SMALL_QUERY_POSTINGS
-        (dv_filter and sort included), else on the distributed kernel.
+        surface's own contract.  Placement: a WAND-shaped query (page 1,
+        no group_by, dv_filter, sort or phrase) runs the pruned distributed
+        kernel under an explicit ``mode="wand"``, and under ``mode="auto"``
+        when the driver would not take it; any other query runs on the
+        driver when it is not ``force_distributed`` and Σdf <=
+        SMALL_QUERY_POSTINGS (dv_filter and sort included), else on the
+        distributed kernel.
 
         ``total_mode`` governs the total under WAND pruning (see
         :meth:`_wand_total`): ``"exact"`` (the default, and always exact
@@ -2242,7 +2156,7 @@ class SearchEngine:
             return self._phrase_query(
                 keyword, k, skip, constant_boost, avail_boost, with_url,
                 force_distributed, highlight=highlight, max_gap=max_gap,
-                dv_pred=dv_pred,
+                dv_pred=dv_pred, mode=mode, total_mode=total_mode,
             )
         if exact_terms is not None and (
             wildcard or regex or fuzzy or prefix_fuzzy or phonetic or phrase
@@ -2328,18 +2242,17 @@ class SearchEngine:
             total_mode=total_mode,
         )
 
-    def _wand_total(self, q: _Query) -> int:
-        """The total under WAND, which prunes the scored set.
+    def _wand_total(self, q: _Query) -> int | None:
+        """The total under WAND when it needs no count — None when it does.
 
         The exact count (the reference's $facet count) is the match count
-        of one distributed-kernel call over every candidate range with no
-        θ, its page rows discarded — for a head-term query over 10^13
-        postings that decode dominates the query.  Shortcuts: a single
-        key's total IS its precomputed df (always exact, zero decode);
-        ``total_mode="approx"`` serves conjunctive queries min(df) — the
-        tight upper bound for an intersection (Σdf can overstate it by
-        orders of magnitude) — and the rest the Σdf upper bound capped at
-        N, with no decode either way.
+        ``n`` of the pruned kernel call itself, whose tasks decode a pruned
+        block's doc ids only.  Shortcuts, under which pruned blocks are
+        skipped outright: a single key's total IS its precomputed df
+        (always exact, zero decode); ``total_mode="approx"`` serves
+        conjunctive queries min(df) — the tight upper bound for an
+        intersection (Σdf can overstate it by orders of magnitude) — and
+        the rest the Σdf upper bound capped at N.
         """
         if len(q.keys) == 1:
             return int(q.dfs[q.keys[0]])
@@ -2347,137 +2260,4 @@ class SearchEngine:
             if q.occur() is not None and q.occur()[0] == "==":
                 return int(min(q.dfs.values()))
             return min(int(sum(q.dfs.values())), self.n_docs)
-        return self._dist_kernel(q)[1]
-
-    # ------------------------------------------------------------------ WAND
-    def _wand_meta(self, terms: list[str]) -> pd.DataFrame:
-        """Per-(term, doc-range) block metadata: max tf_norm + posting count.
-
-        A cheap columnar read (term, sseg, max_tf_norm, doc_count — never the
-        postings bytes); both the WAND plan and the auto-dispatch cost model
-        run off this one frame."""
-        return (
-            self._candidate_segments(terms)
-            .select("term", "sseg", "max_tf_norm", "doc_count")
-            .groupBy("term", "sseg")
-            .agg(F.max("max_tf_norm").alias("mtn"), F.sum("doc_count").alias("dc"))
-            .toPandas()
-        )
-
-    def _wand_scored(self, q: _Query, meta: pd.DataFrame | None = None) -> pd.DataFrame:
-        """Distributed block-max WAND over the global doc-id grid.
-
-        Block metadata (term, sseg, max_tf_norm, doc_count — NOT postings) is
-        a cheap columnar read.  Range upper bound = Σ_t idf_t · max block
-        tf_norm in that range (+ boost ceiling).  Phase 1 scores the top
-        ranges exactly to establish θ = kth best score of its merged
-        partials; phase 2 scores only ranges whose bound ≥ θ, with per-block
-        pruning inside.  Returns both phases' partials.
-        """
-        self.last_wand = None
-        terms, idf, boost_ceiling, k = q.keys, q.idf, q.boost_ceiling, q.k
-        if meta is None:
-            meta = self._wand_meta(terms)
-        if meta.empty:
-            return self._dist_kernel(q)[0]
-        meta["ub"] = meta["term"].map(idf).fillna(0.0) * (meta["mtn"] * self.bound_scale)
-        by_range = meta.groupby("sseg").agg(
-            ub=("ub", "sum"), dc=("dc", "sum"), nterms=("term", "nunique")
-        )
-        occ = q.occur()
-        if occ is not None:
-            # a doc matching >= m keys (every key when conjunctive) needs
-            # >= m keys present in its range
-            by_range = by_range[by_range["nterms"] >= occ[1]]
-        if by_range.empty:
-            # no range can satisfy the clause requirement -> empty result
-            return pd.DataFrame()
-        # per-range ACHIEVABLE floor: idf·mtn is attained by the doc
-        # realizing the block max, and distinct ranges hold distinct docs, so
-        # the k-th largest per-range achievable is a sound lower bound on the
-        # true θ — usable for pruning BEFORE any scoring.  (Measured at 8M
-        # docs: phase-1's own θ over the 2 top-ub ranges was 2.89 while the
-        # floor was 3.44 — without the floor, 942/976 ranges survived and
-        # phase 2 decoded 7.7M rows for nothing.)
-        # NOTE the floor uses the baked mtn times floor_scale, NEVER
-        # bound_scale: bound_scale inflates bounds to stay a sound UPPER
-        # bound on generational indexes whose avgdl grew after baking, but
-        # an inflated value is not attained by any doc — a floor built on
-        # it could exceed the true θ and prune a top-k range.  floor_scale
-        # is 1.0 on batch indexes (mtn is exactly today's block-max score)
-        # and min_g(avgdl_now/avgdl_g, 1) on incremental ones: when the
-        # cumulative avgdl SHRANK below a generation's build-time avgdl the
-        # baked mtn itself is unattained, and mtn·(avgdl_now/avgdl_g) is
-        # the attained correction (tf_norm(a1) >= tf_norm(a0)·a1/a0 for
-        # a1 < a0); 0.0 (stats predating the key) disables the floor.
-        best_per_range = meta.assign(
-            ach=meta["term"].map(idf).fillna(0.0) * meta["mtn"]
-        ).groupby("sseg")["ach"].max()
-        theta_floor = None
-        if (
-            occ is None
-            # per-field norms: sound only when the index baked each
-            # posting's mtn at its OWN field avgdl (per_field_mtn — idf·mtn
-            # is then attained by the block-max doc).  A pre-r5 multi-field
-            # index baked at the LARGEST field avgdl, so idf·mtn
-            # OVER-estimates what a smaller-avgdl field's doc can actually
-            # score — still a sound UPPER bound (pruning stays exact) but
-            # not an achievable FLOOR; those rely on phase-1's exact θ.
-            and (q.avgdl is None or self.per_field_mtn)
-            and len(best_per_range) >= k
-            and self.floor_scale > 0.0
-        ):
-            theta_floor = float(
-                np.sort(best_per_range.to_numpy())[-k] * self.floor_scale
-            )
-        by_range = by_range.join(best_per_range.rename("best"))
-        # phase 1 targets the ranges CONTAINING the globally best docs (top
-        # achievable), not the fattest total bounds — its θ then approaches
-        # the true top-k threshold instead of the best dense range's
-        by_range = by_range.sort_values("best", ascending=False)
-        by_range["ub_total"] = by_range["ub"] + boost_ceiling
-
-        # per-(term, range) residual bound: what the OTHER terms could add in
-        # that range — needed for sound per-block pruning inside the kernel
-        range_ub = by_range["ub"].to_dict()
-        rest_bounds = {
-            (r["term"], int(s)): float(range_ub.get(s, 0.0) - r["ub"])
-            for s, r in zip(meta["sseg"], meta.to_dict("records"))
-        }
-
-        # phase 1: enough ranges to (likely) fill k
-        cum = by_range["dc"].cumsum()
-        n1 = int(np.searchsorted(cum.to_numpy(), k) + 1)
-        phase1 = by_range.index[:n1].tolist()
-
-        def exact(ssegs, theta=None):
-            return self._dist_kernel(
-                q, ssegs=ssegs, theta=theta, rest_bounds=rest_bounds
-            )[0]
-
-        p1 = exact(phase1)
-        if len(p1) < k:
-            # phase 1 alone can't establish θ; the achievable floor (when
-            # sound — plain disjunctions only) still can
-            theta = theta_floor
-        else:
-            theta = float(np.sort(p1["score"].to_numpy())[-k])
-            if theta_floor is not None and theta_floor > theta:
-                theta = theta_floor
-
-        rest = by_range.index[n1:]
-        if theta is not None:
-            rest = [s for s in rest if by_range.loc[s, "ub_total"] >= theta]
-        # bench/test introspection (mirrors last_dispatch): which θ pruned
-        # and how much of the range set survived it
-        self.last_wand = {
-            "theta_floor": theta_floor,
-            "theta": theta,
-            "n_ranges": int(len(by_range)),
-            "n_phase1": int(n1),
-            "n_rest_alive": int(len(rest)),
-        }
-        if len(rest) == 0:
-            return p1
-        # score surviving ranges with block-level pruning beside phase 1
-        return pd.concat([p1, exact(list(rest), theta=theta)], ignore_index=True)
+        return None

@@ -858,6 +858,21 @@ def test_single_field_keyword_facets(spark, sf_dv_index):
         )
 
 
+def test_zero_match_facets_keep_the_schema(spark, sf_dv_index):
+    """A facet over no matched doc has the columns and dtypes of a
+    populated one: bucket object, count int64."""
+    from search_engine_spark.query.engine import SearchEngine
+
+    eng = SearchEngine(spark, sf_dv_index)
+    facets = {"langs": {"type": "string", "path": "lang"}}
+    full = eng.facet_fields(keyword="the oil", facets=facets)["facet"]["langs"]
+    out = eng.facet_fields(keyword="zzzzq", facets=facets)
+    assert out["count"] == 0 and len(full) > 0
+    empty = out["facet"]["langs"]
+    assert len(empty) == 0
+    assert empty.dtypes.to_dict() == full.dtypes.to_dict()
+
+
 def test_keyword_facets_rejected_on_multifield(dv_engine):
     with pytest.raises(ValueError, match="single-field"):
         dv_engine.facet_fields(
@@ -1084,23 +1099,26 @@ def test_distributed_partials_merge_across_tasks(spark, index_tiny, dv_engine, d
         spark.conf.set(COALESCE, old)
     assert want[0] > 0
     assert key(got) == want
-    if "mode" not in opts:  # WAND's last job counts its exact total
-        kernel = spark.sparkContext.statusTracker().getStageInfo(max(jobs[-1].stageIds))
-        assert kernel.numTasks > 1
+    kernel = spark.sparkContext.statusTracker().getStageInfo(max(jobs[-1].stageIds))
+    assert kernel.numTasks > 1
 
 
 def test_distributed_search_runs_two_jobs(spark, index_tiny, sf_dv_index):
     """One forced-distributed plain search is two Spark jobs: the
     compressed-block shuffle by doc range and the kernel tasks that return
     their partials.  A facet call is the same two jobs, with the doc-values
-    slice in the shuffle; a forced-distributed phrase adds the jobs of its
-    range-eligibility broadcast."""
+    slice in the shuffle, and so is WAND (explicit, or ``mode="auto"`` on a
+    query the driver does not take): its tasks prune in place; a
+    forced-distributed phrase adds the jobs of its range-eligibility
+    broadcast."""
     from search_engine_spark.query.engine import SearchEngine
 
     eng = SearchEngine(spark, index_tiny)
     sf = SearchEngine(spark, sf_dv_index)
     for name, fn, most in [
         ("two-jobs", lambda: eng.search("the oil", force_distributed=True), 2),
+        ("wand-jobs", lambda: eng.search("the oil", mode="wand"), 2),
+        ("auto-jobs", lambda: eng.search("the oil", mode="auto", force_distributed=True), 2),
         ("facet-jobs", lambda: sf.facet_fields(
             keyword="the oil", facets={"langs": {"type": "string", "path": "lang"}}), 2),
         ("phrase-jobs", lambda: sf.search(PHRASE, phrase=True, force_distributed=True),

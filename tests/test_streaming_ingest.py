@@ -107,6 +107,78 @@ def test_wand_equals_sort_on_incremental_index(inc_engine):
         assert list(s.page["score"]) == list(w.page["score"]), kw
 
 
+def _wand_queries(rng, eng, n):
+    """``n`` seeded WAND-shaped queries over ``eng``'s dictionary: 1-4
+    terms drawn across df strata (rare, mid, head), as a disjunction, a
+    conjunction or m-of-n, with dl boosts, k in {1, 2, 10} and either
+    total mode.  One-term keywords prefix-expand; longer ones are exact
+    term lists, so stopwords stay in."""
+    terms = [str(t) for t in eng._terms_arr]
+    dfs = eng._dfs_arr
+    strata = [[t for t, d in zip(terms, dfs) if lo <= d < hi and t.isalpha()]
+              for lo, hi in ((2, 20), (20, 150), (150, 10**9))]
+    out = []
+    for _ in range(n):
+        m = int(rng.integers(1, 5))
+        pick = sorted({str(rng.choice(strata[int(rng.integers(3))])) for _ in range(m)})
+        opts = {"k": int(rng.choice([1, 2, 10])),
+                "total_mode": str(rng.choice(["exact", "approx"])),
+                "constant_boost": bool(rng.random() < 0.3),
+                "avail_boost": bool(rng.random() < 0.3)}
+        if len(pick) > 1:
+            opts["exact_terms"] = pick
+            shape = rng.choice(["or", "and", "msm"])
+            if shape == "and":
+                opts["conjunctive"] = True
+            elif shape == "msm":
+                opts["min_should_match"] = int(rng.integers(2, len(pick) + 1))
+        out.append((" ".join(pick), opts))
+    return out
+
+
+def test_wand_differential_seeded(spark, index_tiny, inc_engine):
+    """Seeded WAND-shaped queries on the tiny batch index and on the
+    3-generation incremental index (bound_scale > 1), each run on the
+    driver, forced-distributed sort, ``mode="wand"`` and forced
+    ``mode="auto"`` with partition coalescing off, so several tasks prune
+    against their own θ: equal pages (ids and float-hex scores) on all
+    four, equal exact totals, and approx totals that bound the exact one
+    and agree between WAND and auto."""
+    import numpy as np
+
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    rng = np.random.default_rng(7)
+    tiny = SearchEngine(spark, index_tiny)
+    assert inc_engine.bound_scale > 1.0
+    cases = [(tiny, q) for q in _wand_queries(rng, tiny, 26)]
+    cases += [(inc_engine, q) for q in _wand_queries(rng, inc_engine, 14)]
+    pruned = 0
+    old = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try:
+        for eng, (kw, opts) in cases:
+            runs = {
+                "driver": eng.search(kw, **opts),
+                "sort": eng.search(kw, force_distributed=True, **opts),
+                "wand": eng.search(kw, mode="wand", **opts),
+            }
+            pruned += eng.last_wand["blocks_pruned"]
+            runs["auto"] = eng.search(kw, mode="auto", force_distributed=True, **opts)
+            assert eng.last_dispatch["mode"] == "wand", (kw, opts)
+            pages = {m: ([int(d) for d in r.page["doc_id"]],
+                         [float(s).hex() for s in r.page["score"]]) for m, r in runs.items()}
+            assert pages["driver"] == pages["sort"] == pages["wand"] == pages["auto"], (kw, opts)
+            exact = runs["driver"].total
+            assert runs["sort"].total == exact, (kw, opts)
+            if opts["total_mode"] == "exact":
+                assert runs["wand"].total == runs["auto"].total == exact, (kw, opts)
+            else:
+                assert runs["wand"].total == runs["auto"].total >= exact, (kw, opts)
+    finally:
+        spark.conf.set(coalesce, old)
+    assert pruned > 0
+
+
 def test_replay_skips_and_partial_crash_rewrites(spark, corpora, rebuild_engine):
     tbl, base = corpora
     idx = os.path.join(base, "replay_idx")

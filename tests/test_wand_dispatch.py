@@ -1,91 +1,13 @@
-"""The mode="auto" dispatch cost model (predict_wand_decode) + plumbing.
+"""WAND placement (``mode="wand"`` / ``mode="auto"``) and the in-task
+pruning rule (``_wand_task``).
 
-The predictor runs on block metadata alone; these tests pin its two regimes
-on synthetic metadata (deterministic, no index build) and the end-to-end
-auto path's rank identity on the tiny index.
+The pruning rule is pinned in pure numpy on seeded random blocks; the
+end-to-end placement's rank identity on the tiny index.
 """
 
 import numpy as np
 import pandas as pd
 import pytest
-
-from search_engine_spark.query.engine import predict_wand_decode
-
-
-def _meta(rows):
-    return pd.DataFrame(rows, columns=["term", "sseg", "mtn", "dc"])
-
-
-def test_rare_dominated_predicts_pruning():
-    # stopword 'the' (idf ~0) in every range; rare term in every range but
-    # with high bounds in only a few -> theta_lb from the rare term prunes
-    # the stopword-only mass of almost every range
-    rows = []
-    for s in range(100):
-        rows.append(("the", s, 0.9, 10_000))
-        # rare term: strong best-doc bound in 5 ranges, weak elsewhere
-        rows.append(("cadbury", s, 0.8 if s < 5 else 0.3, 50))
-    idf = {"the": 0.01, "cadbury": 5.0}
-    est = predict_wand_decode(_meta(rows), idf, k=5)
-    assert est["total_dc"] == 100 * 10_050
-    # theta_lb = 5th best per-range achievable = idf_cad * 0.8 = 4.0;
-    # ranges with weak cadbury bound (0.3*5 + 0.009 < 4.0) all prune
-    assert est["theta_lb"] == pytest.approx(4.0)
-    assert est["predicted_dc"] < 0.2 * est["total_dc"]
-
-
-def test_dense_dense_predicts_no_pruning():
-    # two mid-idf terms with near-identical bounds in every range: theta_lb
-    # ~= every range bound, nothing can prune
-    rows = []
-    for s in range(100):
-        rows.append(("oil", s, 0.8, 1_000))
-        rows.append(("the", s, 0.9, 10_000))
-    idf = {"oil": 2.0, "the": 0.01}
-    est = predict_wand_decode(_meta(rows), idf, k=10)
-    assert est["predicted_dc"] == est["total_dc"]
-
-
-def test_fewer_ranges_than_k_assumes_full_decode():
-    rows = [("a", s, 0.5, 100) for s in range(3)]
-    est = predict_wand_decode(_meta(rows), {"a": 1.0}, k=10)
-    assert est["predicted_dc"] == est["total_dc"]
-    assert est["theta_lb"] == 0.0
-
-
-def test_empty_meta():
-    est = predict_wand_decode(_meta([]), {}, k=10)
-    assert est == {"total_dc": 0, "predicted_dc": 0, "theta_lb": 0.0, "n_ranges": 0}
-
-
-def test_conservative_vs_true_theta():
-    # theta_lb never exceeds the best single-range achievable score, so the
-    # predictor can only OVER-estimate decode (never under): raising k must
-    # not increase theta_lb
-    rows = [("x", s, 0.1 + 0.01 * s, 100) for s in range(50)]
-    idf = {"x": 3.0}
-    prev = np.inf
-    for k in (1, 5, 20):
-        est = predict_wand_decode(_meta(rows), idf, k=k)
-        assert est["theta_lb"] <= prev
-        prev = est["theta_lb"]
-
-
-def test_theta_lb_unscaled_under_bound_scale():
-    # bound_scale inflates the sound UPPER bounds (generational indexes whose
-    # avgdl grew after baking) but an inflated value is attained by no doc —
-    # theta_lb must come from the UNSCALED baked mtn, or the predictor turns
-    # optimistic exactly when the engine's own floor would over-prune
-    rows = []
-    for s in range(20):
-        rows.append(("a", s, 0.5 + 0.01 * s, 100))
-    idf = {"a": 2.0}
-    base = predict_wand_decode(_meta(rows), idf, k=5, bound_scale=1.0)
-    scaled = predict_wand_decode(_meta(rows), idf, k=5, bound_scale=1.5)
-    assert scaled["theta_lb"] == pytest.approx(base["theta_lb"])
-    # scaled bounds only keep MORE ranges alive against the same theta_lb
-    assert scaled["predicted_dc"] >= base["predicted_dc"]
-
 
 def test_auto_mode_rank_identity(spark, index_tiny, oracle_tiny):
     from search_engine_spark.query.engine import SearchEngine
@@ -102,7 +24,6 @@ def test_auto_mode_rank_identity(spark, index_tiny, oracle_tiny):
         assert pages["sort"] == pages["wand"] == pages["auto"], kw
         assert eng.last_dispatch is not None
         assert eng.last_dispatch["mode"] in ("sort", "wand")
-        assert 0 <= eng.last_dispatch["predicted_dc"] <= eng.last_dispatch["total_dc"]
 
 
 def test_auto_mode_skip_routes_to_sort(spark, index_tiny):
@@ -114,112 +35,6 @@ def test_auto_mode_skip_routes_to_sort(spark, index_tiny):
     assert list(a.page["doc_id"]) == list(b.page["doc_id"])
 
 
-def test_cost_ratio_rule_matches_measured_winners():
-    """The dispatch rule (total - RATIO*predicted >= MIN_SAVED) must pick
-    the interleaved-A/B-measured winner on BOTH sides of the crossover:
-    sort on all 12 rows up to 21.5M candidate postings at 1M/8M docs
-    (BENCH/sf_wand_ab_8m.json, mf_wand_ab_{1m,8m}.json; the sequential
-    wand_crossover_r5 artifacts that showed 8M single-field WAND wins were
-    host-drift artifacts, refuted by re-running BOTH that era's code and
-    HEAD interleaved on the same index), and WAND on the 24M-doc rows
-    where it first measurably won — range_docs grown 4x so the range
-    count (WAND's fixed term) held at ~976 while per-query candidate
-    postings tripled (two interleaved runs, BENCH/sf_wand_ab_24m.json +
-    _run1.json: "the oil" 9/10 reps across runs, 0.945-0.953x;
-    "the dairy" 9/10, 0.967-0.996x).  "the cadbury" at saved=23.2M is
-    the documented indifference zone made visible: sort won it 4/5 in
-    run 1 and WAND won it 3/5 (0.931x) in the final run, with a plan
-    structurally identical to "the dairy"'s at saved=23.4M — the rule
-    picks WAND there and the test pins that a near-threshold pick costs
-    <10% either way, unlike a wrong WAND pick far below threshold
-    (measured up to 2.1x)."""
-    from search_engine_spark.query.engine import SearchEngine
-
-    # (total_dc, predicted_dc) — measured winner was sort on every row
-    measured = [
-        (1_057_241, 86_571),       # 1M the+oil
-        (1_007_360, 75_887),       # 1M the+dairy
-        (1_003_059, 160_676),      # 1M the+cadbury
-        (2_692_399, 2_274_964),    # 1M the+of+in+cadbury
-        (8_456_919, 112_715),      # 8M the+oil (interleaved: wand 1.37x)
-        (8_047_099, 82_479),       # 8M the+dairy (1.24x)
-        (8_027_877, 82_263),       # 8M the+cadbury (1.24x)
-        (21_483_711, 15_782_553),  # 8M the+of+in+cadbury (1.85x)
-        (13_109_638, 5_668_355),   # 8M compound title:the+body:the (1.57x)
-        (7_928_136, 7_790_116),    # 8M compound title:cadbury+body:the (1.87x)
-        (1_639_139, 671_659),      # 1M compound title:the+body:the (1.90x)
-        (990_942, 990_942),        # 1M compound title:cadbury+body:the (2.19x)
-    ]
-    for total, pred in measured:
-        est = {"total_dc": total, "predicted_dc": pred}
-        assert not SearchEngine._pick_wand(SearchEngine, est), (total, pred)
-    # measured WAND wins at 24M docs / 976 ranges (sf_wand_ab_24m.json) —
-    # the rule must pick WAND on the winning side of the crossover
-    measured_wand = [
-        (25_371_638, 312_238),     # 24M the+oil (0.945-0.953x, 9/10 reps)
-        (24_142_188, 247_480),     # 24M the+dairy (0.967-0.996x, 9/10)
-    ]
-    for total, pred in measured_wand:
-        est = {"total_dc": total, "predicted_dc": pred}
-        assert SearchEngine._pick_wand(SearchEngine, est), (total, pred)
-    # 24M the+of+in+cadbury (1.28-1.36x, sort won 10/10): pruning too
-    # weak — saved is NEGATIVE at the 3x decode premium, so scale alone
-    # never flips it
-    assert not SearchEngine._pick_wand(
-        SearchEngine, {"total_dc": 64_451_634, "predicted_dc": 28_198_265}
-    )
-    # 16M midpoint (sf_wand_ab_16m.json, range_docs grown to 16384 so
-    # n_ranges held at 976): saved = 15.6-16.1M sits just BELOW the 21M
-    # break-even and the measured outcome is parity — ratios 0.962/1.032/
-    # 0.996 on the three pair queries, rep wins split 2/5-1/5-2/5.  The
-    # rule picks sort on all four rows; on the two rows where WAND's
-    # median was nominally faster (≤3.8%) that is the indifference zone,
-    # not a wrong pick.  The midpoint validates the interpolated
-    # break-even with a measurement BETWEEN the brackets, not just at
-    # the endpoints.
-    measured_16m = [
-        (16_914_742, 277_528),     # 16M the+oil (0.962x, parity)
-        (16_094_517, 164_877),     # 16M the+dairy (1.032x)
-        (16_056_104, 164_484),     # 16M the+cadbury (0.996x, parity)
-        (42_966_984, 21_042_157),  # 16M the+of+in+cadbury (1.594x)
-    ]
-    for total, pred in measured_16m:
-        est = {"total_dc": total, "predicted_dc": pred}
-        assert not SearchEngine._pick_wand(SearchEngine, est), (total, pred)
-    # 24M the+cadbury: the indifference zone (saved=23.2M vs the
-    # threshold's 21M; sort won run 1 4/5, WAND won the final run 3/5 at
-    # 0.931x with a structurally identical plan) — the rule picks WAND
-    # and a pick either way costs <10% here, unlike a wrong WAND pick
-    # far below threshold (measured up to 2.1x)
-    assert SearchEngine._pick_wand(
-        SearchEngine, {"total_dc": 24_084_045, "predicted_dc": 296_106}
-    )
-    # extrapolation shape (unmeasured regime, structural claim only): a
-    # strongly-prunable query far above the fixed-cost gap picks WAND, and
-    # poor pruning keeps sort no matter the scale
-    assert SearchEngine._pick_wand(
-        SearchEngine, {"total_dc": 100_000_000, "predicted_dc": 5_000_000}
-    )
-    assert not SearchEngine._pick_wand(
-        SearchEngine, {"total_dc": 100_000_000, "predicted_dc": 40_000_000}
-    )
-
-
-def test_theta_lb_scales_with_floor_scale():
-    # shrunk-avgdl generational index: the attained floor (and hence the
-    # predictor's theta_lb) shrinks linearly with wand_floor_scale, and
-    # floor_scale=0 (legacy incremental stats) predicts no pruning at all
-    rows = [("a", s, 0.5 + 0.01 * s, 100) for s in range(20)]
-    idf = {"a": 2.0}
-    full = predict_wand_decode(_meta(rows), idf, k=5, floor_scale=1.0)
-    half = predict_wand_decode(_meta(rows), idf, k=5, floor_scale=0.5)
-    off = predict_wand_decode(_meta(rows), idf, k=5, floor_scale=0.0)
-    assert half["theta_lb"] == pytest.approx(0.5 * full["theta_lb"])
-    assert off["theta_lb"] == 0.0
-    assert off["predicted_dc"] >= half["predicted_dc"] >= full["predicted_dc"]
-    assert off["predicted_dc"] == off["total_dc"]  # nothing prunes
-
-
 def test_last_dispatch_describes_every_auto_call(spark, index_tiny):
     """A driver-placed mode="auto" query records its own dispatch instead
     of leaving the previous query's estimate in place."""
@@ -229,11 +44,140 @@ def test_last_dispatch_describes_every_auto_call(spark, index_tiny):
     eng = SearchEngine(spark, index_tiny)
     eng.search("the oil", k=5, mode="auto", force_distributed=True)
     forced = dict(eng.last_dispatch)
-    assert forced["n_ranges"] > 0  # the cost model ran on block metadata
+    assert forced["mode"] == "wand"  # WAND-shaped, and the driver did not take it
     kw = "cadbury dairy"
     res = eng.search(kw, k=5, mode="auto")
     assert res.total > 0
     small = eng.last_dispatch
     assert small["mode"] == "sort"
     assert small["total_dc"] == sum(eng.term_dfs(sorted(set(preprocess_query(kw)))).values())
-    assert small["n_ranges"] == 0 and small["predicted_dc"] == 0
+    assert set(small) == {"mode", "total_dc"}
+
+
+def test_unknown_mode_and_total_mode_raise(spark, index_tiny):
+    """One check in the compile step serves every surface: an unknown
+    ``mode`` or ``total_mode`` raises instead of running sort / counting
+    exactly, on every placement and on a query with no match."""
+    from search_engine_spark.query.engine import SearchEngine
+
+    eng = SearchEngine(spark, index_tiny)
+    for kw in ("the oil", "zzzzq"):
+        for fd in (False, True):
+            with pytest.raises(ValueError, match="mode must be"):
+                eng.search(kw, mode="bogus", force_distributed=fd)
+            with pytest.raises(ValueError, match="total_mode must be"):
+                eng.search(kw, mode="wand", total_mode="bogus", force_distributed=fd)
+    with pytest.raises(ValueError, match="total_mode must be"):
+        eng.search("the oil", total_mode="exactly")
+
+
+def _task_blocks(rng, q, ranges, avgdl, bound_scale, floor_scale, tie_dense, shares):
+    """Seeded posting blocks of ``q.keys`` over doc ranges of 64 docs: key
+    ``t`` is absent from a range or holds fewer than ``shares[t]`` of its
+    docs, drawn Zipf-wise so keys co-occur, cut into blocks of 1-16
+    postings.  Each block's ``max_tf_norm`` is sound for both corrections:
+    ``mtn·bound_scale >=`` and ``mtn·floor_scale <=`` the block's true max
+    tf_norm (exact on the power-of-two scales)."""
+    from search_engine_spark.index.codec import encode_postings
+    from search_engine_spark.query.engine import B, K1
+
+    terms, ssegs, mtns, bufs = [], [], [], []
+    zipf = 1.0 / np.arange(1, 65)
+    zipf /= zipf.sum()
+    for r in ranges:
+        docs = np.arange(64 * r, 64 * r + 64)
+        if tie_dense:  # few (tf, dl) profiles, so scores tie across ranges
+            dl = rng.choice([37, 74, 111, 120, 150], docs.size)
+        else:
+            dl = rng.integers(1, 400, docs.size)
+        for t in q.keys:
+            ids = np.sort(rng.choice(docs, int(rng.integers(1, shares[t])), replace=False,
+                                     p=zipf))  # keys share popular docs
+            if rng.random() < 0.4:
+                continue  # the key is absent from this range
+            tf = rng.integers(1, 3 if tie_dense else 9, ids.size)
+            dls = dl[ids - 64 * r]
+            cuts = np.cumsum(rng.integers(1, 17, ids.size))
+            for blk in np.split(np.arange(ids.size), cuts[cuts < ids.size]):
+                t_max = float(np.max(tf[blk] / (tf[blk] + K1 * (1.0 - B + B * dls[blk] / avgdl))))
+                u = rng.choice([1.0 / bound_scale, 1.0, 1.0 / floor_scale,
+                                rng.uniform(1.0 / bound_scale, 1.0 / floor_scale)])
+                terms.append(t)
+                ssegs.append(r)
+                mtns.append(t_max * u)
+                bufs.append(encode_postings(ids[blk], tf[blk], dls[blk]))
+    perm = rng.permutation(len(terms))  # blocks reach a task in any order
+    return [[x[i] for i in perm] for x in (terms, ssegs, mtns, bufs)]
+
+
+def test_wand_task_pruning_is_exact():
+    """``_wand_task`` against the unpruned fold on seeded random blocks:
+    over several doc ranges and tasks, with tie-dense scores, dl boosts,
+    conjunctive and m-of-n occur, and bound_scale / floor_scale != 1, each
+    task's emitted top k (ids and float-hex scores) and its match count
+    ``n`` equal those of ``_fold`` run over every block of each range.
+    Tie-dense cases weigh keys by powers of two, so the block bounds and
+    the attained floor equal real scores exactly and a θ-tie is pruned
+    only if the rule is not strict; a third of the cases are head + rare
+    conjunctions, where a floor taken under a count-based occur overshoots
+    the matched docs' scores."""
+    from search_engine_spark.query.engine import _fold, _partial, _Query, _wand_task
+
+    def page(rows):
+        if rows is None or not len(rows):
+            return []
+        return [(int(d), float(s).hex()) for d, s in zip(rows["doc_id"], rows["score"])]
+
+    rng = np.random.default_rng(20261)
+    avgdl = 100.0
+    pruned = floors = 0
+    for case in range(600):
+        tie_dense = case % 2 == 0
+        if case % 3 == 1:  # "the cadbury": a dense light key AND a rare heavy one
+            keys, shares = ["t0", "t1"], {"t0": 64, "t1": 4}
+            clauses = {"must": [["t0"], ["t1"]]}
+        else:
+            keys = [f"t{i}" for i in range(int(rng.integers(1, 5)))]
+            shares = {t: int(rng.choice([4, 16, 64])) for t in keys}
+            occur = rng.choice(["should", "must", "msm"]) if len(keys) > 1 else "should"
+            if occur == "should":
+                clauses = {"should": [keys], "msm": 1}
+            elif occur == "must":
+                clauses = {"must": [[t] for t in keys]}
+            else:
+                clauses = {"should": [[t] for t in keys],
+                           "msm": int(rng.integers(2, len(keys) + 1))}
+        # rare keys weigh more, as idf does
+        idf = {t: float(2.0 ** (rng.integers(0, 2) + {4: 2, 16: 0, 64: -2}[shares[t]])
+                        if tie_dense else rng.uniform(*{4: (3, 8), 16: (1, 4),
+                                                         64: (0.05, 1)}[shares[t]]))
+               for t in keys}
+        q = _Query(keys=keys, idf=idf, k=int(rng.choice([1, 1, 2, 3, 10])),
+                   constant_boost=bool(rng.integers(2)), avail_boost=bool(rng.integers(2)),
+                   **clauses)
+        bound_scale, floor_scale = rng.choice([1.0, 2.0]), rng.choice([1.0, 0.5])
+        n_ranges = int(rng.integers(1, 13))
+        task = rng.integers(0, int(rng.integers(1, 3)), n_ranges)
+        for t in np.unique(task):
+            ranges = np.flatnonzero(task == t)
+            terms, ssegs, mtns, bufs = _task_blocks(
+                rng, q, ranges, avgdl, bound_scale, floor_scale, tie_dense, shares)
+            if not terms:
+                continue
+            parts, n_ref = [], 0
+            for r in ranges:
+                ix = [i for i, s in enumerate(ssegs) if s == r]
+                cands = _fold(q, [terms[i] for i in ix], [bufs[i] for i in ix], avgdl)
+                n_ref += len(cands)
+                parts.append(_partial(q, cands))
+            want = page(_partial(q, pd.concat(parts, ignore_index=True)))
+            for count in (True, False) if case % 4 == 0 else (True,):
+                rows, n, stats = _wand_task(q, terms, ssegs, mtns, bufs, avgdl,
+                                            bound_scale, floor_scale, count)
+                assert page(rows) == want, (case, count)
+                assert stats["blocks_read"] + stats["blocks_pruned"] == len(terms)
+                if count:
+                    assert n == n_ref, case
+                    pruned += stats["blocks_pruned"]
+                    floors += stats["theta_floor"] is not None
+    assert pruned > 1_000 and floors > 100, (pruned, floors)
