@@ -37,6 +37,14 @@ plan:
   never drops a θ-tie that doc_id could still admit: results stay
   bit-identical to the baseline.
 
+The driver kernel (:meth:`SearchEngine._driver_kernel`) serves a small
+index from driver memory: when the dictionary is cached and the index's
+total postings fit ``SMALL_QUERY_POSTINGS``, the engine loads its segment
+table and doc_stats' urls once at open, so a driver-placed query (its
+blocks, phrase positions, highlights and urls) runs no Spark job; above
+that, each driver-side read is one collect.  Doc-values filters and sorts
+on the driver still probe doc_stats through Spark.
+
 Float determinism: every placement sums a doc's scores in ascending key
 order in numpy, starting from 0.0 — a doc's postings all live in one range,
 so a per-range fold adds exactly what the whole-query fold adds.
@@ -45,11 +53,13 @@ so a per-range fold adds exactly what the whole-query fold adds.
 from __future__ import annotations
 
 import re
+from collections import Counter
 from dataclasses import dataclass, replace
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -473,6 +483,18 @@ def _wand_task(
     and a doc missing its share keeps a partial score.  A range holding
     fewer keys than a count-based occur needs matches nothing.
 
+    Rounding: the builder bakes ``max_tf_norm = fl(tf/den)`` while
+    :func:`_fold` scores ``fl(fl(idf·tf)/den)``, so the doc attaining a
+    block max can score a few ulps above ``fl(idf·fl(max_tf_norm·
+    bound_scale))`` and below ``fl(idf·max_tf_norm)``.  Each rounding moves
+    a value by a relative u = 2^-53 at most: the score lies within
+    (1 ± u)^2 of its exact value, the bound and the floor (one more
+    rounding for the margin below) within (1 ± u)^4 of theirs, so they
+    part by a relative 6u + O(u²) at most.  Each per-key bound is therefore
+    widened up by the relative margin 2^-48 = 32u and the floor down by it,
+    and the rounded sums above, monotone in every operand, stay at or
+    above every score they cover.
+
     Why pages stay bit-identical: each score that raises θ is a full or
     partial score of a doc this task matched, and a partial score never
     exceeds the full one, so θ never exceeds the task's true k-th score,
@@ -489,7 +511,7 @@ def _wand_task(
     k, occ, n_keys = max(q.k, 1), q.occur(), len(q.keys)
     w = np.array([q.idf[t] for t in terms], dtype=np.float64)
     mtn = np.asarray(mtns, dtype=np.float64)
-    ub = w * (mtn * bound_scale)
+    ub = w * (mtn * bound_scale) * (1.0 + 2.0**-48)
     key = np.searchsorted(np.array(q.keys, dtype=object), np.array(terms, dtype=object))
     ranges, blk_rng = np.unique(np.asarray(ssegs, np.int64), return_inverse=True)
     cell = (blk_rng, key)
@@ -504,7 +526,7 @@ def _wand_task(
     bound = _add_boosts(q, bound)
     floor = None
     if occ is None and floor_scale > 0.0 and ranges.size >= k:
-        floor = float(np.sort(best)[-k] * floor_scale)
+        floor = float(np.sort(best)[-k] * floor_scale * (1.0 - 2.0**-48))
     theta, top = -np.inf if floor is None else floor, np.empty(0)
     order = np.argsort(blk_rng, kind="stable")
     blocks = np.split(order, np.flatnonzero(np.diff(blk_rng[order])) + 1)
@@ -577,6 +599,54 @@ def soundex_key_col(c):
         F.substring(F.rpad(rest, 3, "0"), 1, 3),
     )
     return F.when(c.rlike("^[a-z]+$"), key).otherwise(c)
+
+
+class _Resident:
+    """A small index held in driver memory: the segment table sorted by
+    (term, sseg) and doc_stats' (doc_id, url) sorted by doc_id, each read
+    with one ``toArrow()`` at open, sorted in the scan so the driver holds
+    one copy.  Every driver-side block read is then a ``searchsorted``
+    slice and url hydration a ``searchsorted`` lookup — the same bytes a
+    collect returns, with no Spark job."""
+
+    def __init__(self, seg: DataFrame, docs: DataFrame):
+        def load(frame, *keys):
+            return frame.coalesce(1).sortWithinPartitions(*keys).toArrow()
+
+        self.seg = load(seg, "term", "sseg")
+        terms = self.seg["term"]
+        runs = pc.not_equal(terms[1:], terms[:-1]).to_numpy(zero_copy_only=False)
+        heads = np.flatnonzero(np.r_[True, runs])[: len(terms)]
+        # the distinct terms, each one's first row, and the row count last
+        self.terms = terms.take(heads).to_numpy(zero_copy_only=False)
+        self.starts = np.r_[heads, len(terms)].astype(np.int64)
+        self.sseg = self.seg["sseg"].to_numpy()
+        docs = load(docs, "doc_id")
+        self.doc_ids, self.urls = docs["doc_id"].to_numpy(), docs["url"]
+
+    def blocks(self, terms, cols, ssegs=None, span=None) -> dict:
+        """The block rows of ``terms`` (only doc ranges ``ssegs`` and blocks
+        overlapping the doc ids ``span`` = (lo, hi) when given): column ->
+        list of values, as a collect returns them."""
+        at = np.searchsorted(self.terms, np.array(terms, dtype=object))
+        at = [int(i) for i, t in zip(at, terms) if i < self.terms.size and self.terms[i] == t]
+        rows = np.concatenate([np.arange(self.starts[i], self.starts[i + 1]) for i in at]
+                              + [np.empty(0, np.int64)])
+        if ssegs is not None:
+            rows = rows[np.isin(self.sseg[rows], ssegs)]
+        if span is not None:
+            lo, hi = (self.seg[c].take(rows).to_numpy() for c in ("first_doc", "last_doc"))
+            rows = rows[(lo <= span[1]) & (hi >= span[0])]
+        tbl = self.seg.select(cols).take(rows)
+        return {c: tbl[c].to_pylist() for c in cols}
+
+    def urls_of(self, ids) -> pd.DataFrame:
+        """(doc_id, url) of the ``ids`` doc_stats holds."""
+        ids = np.asarray(ids, dtype=np.int64)
+        at = np.searchsorted(self.doc_ids, ids)
+        hit = at < self.doc_ids.size
+        hit[hit] = self.doc_ids[at[hit]] == ids[hit]
+        return pd.DataFrame({"doc_id": ids[hit], "url": self.urls.take(at[hit]).to_pylist()})
 
 
 class SearchEngine:
@@ -676,6 +746,14 @@ class SearchEngine:
             )
             self._terms_arr = pdf["term"].to_numpy(dtype=object)
             self._dfs_arr = pdf["df"].to_numpy(dtype=np.int64)
+        # resident iff the dictionary is cached and the index's total
+        # postings (its Σ df) fit the driver placement's own bound
+        self._resident: _Resident | None = None
+        if self._dfs_arr is not None and int(self._dfs_arr.sum()) <= self.SMALL_QUERY_POSTINGS:
+            cols = ["term", "sseg", "first_doc", "last_doc", "postings"] + (
+                ["positions"] if "positions" in self._segments_df.columns else [])
+            self._resident = _Resident(self._segments_df.select(*cols),
+                                       self._doc_stats_df.select("doc_id", "url"))
 
     # ------------------------------------------------------------------ dims
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
@@ -1040,22 +1118,46 @@ class SearchEngine:
         return self._finish(q, *self._dist_kernel(q))
 
     def _blocks(self, q: _Query) -> DataFrame:
-        """A query's candidate block rows: a phrase's eligibility-pruned
-        postings + positions, else the postings and block bounds."""
+        """The distributed kernel's candidate block rows: a phrase's
+        postings + positions in its eligible ranges, else the postings and
+        block bounds."""
         if q.phrase:
-            return self._phrase_candidate_blocks(q.keys)
-        return self._candidate_segments(q.keys).select(
-            "term", "sseg", "max_tf_norm", "postings"
-        )
+            return self._candidate_segments(q.keys, self._phrase_segs(q.keys)).select(
+                "term", "sseg", "postings", "positions")
+        return self._candidate_segments(q.keys).select("term", "sseg", "postings", "max_tf_norm")
+
+    def _block_rows(self, terms: list[str], cols: list[str], ssegs=None, span=None) -> dict:
+        """Driver-side block reads: ``terms``' block rows (only doc ranges
+        ``ssegs`` and blocks overlapping the doc ids ``span`` = (lo, hi)
+        when given), column -> list — a slice of the resident segment
+        table, else one collect."""
+        if self._resident is not None:
+            return self._resident.blocks(terms, cols, ssegs, span)
+        frame = self._candidate_segments(terms, ssegs)
+        if span is not None:
+            frame = frame.filter((F.col("first_doc") <= span[1]) & (F.col("last_doc") >= span[0]))
+        rows = frame.select(*cols).collect()
+        return {c: [r[c] for r in rows] for c in cols}
+
+    def _phrase_segs(self, keys: list[str]) -> list[int]:
+        """The doc ranges holding a block of every distinct phrase term
+        ``keys``: a phrase can match only there, so no other range's
+        postings or positions are read, shuffled or decoded.  Read from the
+        terms' (term, sseg) block metadata — resident: no Spark job; else
+        one column-pruned collect."""
+        b = self._block_rows(keys, ["term", "sseg"])
+        n = Counter(s for _, s in set(zip(b["term"], b["sseg"])))
+        return sorted(s for s, c in n.items() if c == len(keys))
 
     def _driver_kernel(self, q: _Query) -> pd.DataFrame:
-        """The driver placement: one collect of the candidate blocks, the
-        shared matcher (:func:`_fold`, or :func:`_phrase_rows` for a phrase,
-        then scored), one doc-values probe, the group rollup.  Returns every
-        matched candidate; the finisher ranks and pages."""
+        """The driver placement: the candidate blocks (resident: no Spark
+        job; else one collect, after a phrase's :meth:`_phrase_segs`), the
+        shared matcher (:func:`_fold`, or :func:`_phrase_rows` then scored),
+        one doc-values probe, the group rollup.  Returns every matched
+        candidate; the finisher ranks and pages."""
         cols = ["term", "postings"] + (["positions"] if q.phrase else [])
-        rows = self._blocks(q).select(*cols).collect()
-        blocks = [[r[c] for r in rows] for c in cols]
+        ssegs = self._phrase_segs(q.keys) if q.phrase else None
+        blocks = self._block_rows(q.keys, cols, ssegs).values()
         cands = _phrase_rows(q, *blocks) if q.phrase else _fold(q, *blocks, self.avgdl)
         n_all = len(cands)
         if (q.dv_pred is not None or q.sort_path is not None) and len(cands):
@@ -1230,7 +1332,9 @@ class SearchEngine:
         last; doc_id asc breaks every tie), pages [skip, skip+k), gives
         empty and populated pages one schema (doc_id int64, score float64,
         [g_id, n_docs int64], [sort attribute], [first_pos | highlights],
-        [url]), then highlights and hydrates urls for the page docs only.
+        [url]), then highlights and hydrates urls for the page docs only —
+        a ``searchsorted`` lookup in the resident url table when the index
+        is resident, else one Spark job.
         ``cands`` holds every matched candidate (``total`` defaults to its
         length), or the distributed kernel's merged partials with its
         ``total`` — the reference's $facet {total, data} (pipelines.py:
@@ -1252,11 +1356,15 @@ class SearchEngine:
             page = self._attach(page, "highlights",
                                 lambda ids: self._highlight_page(q.keys, ids))
         if q.with_url:
-            page = self._attach(page, "url", lambda ids: (
-                self._doc_stats_df.filter(F.col("doc_id").isin(ids))
-                .select("doc_id", "url").toPandas()
-            ))
+            page = self._attach(page, "url", self._urls)
         return SearchResult(total=int(total), page=page)
+
+    def _urls(self, ids: list[int]) -> pd.DataFrame:
+        """(doc_id, url) of page docs: a resident lookup, else one job."""
+        if self._resident is not None:
+            return self._resident.urls_of(ids)
+        return (self._doc_stats_df.filter(F.col("doc_id").isin(ids))
+                .select("doc_id", "url").toPandas())
 
     @staticmethod
     def _attach(page: pd.DataFrame, col: str, fetch) -> pd.DataFrame:
@@ -1772,27 +1880,20 @@ class SearchEngine:
         ids = np.array(sorted(set(int(d) for d in doc_ids)), dtype=np.int64)
         range_docs = int(self.stats["range_docs"])
         ssegs = sorted({int(d) // range_docs for d in ids})
-        rows = (
-            self._candidate_segments(sorted(terms), ssegs=ssegs)
-            .filter(
-                (F.col("first_doc") <= int(ids.max()))
-                & (F.col("last_doc") >= int(ids.min()))
-            )
-            .select("term", "postings", "positions")
-            .collect()
-        )
+        b = self._block_rows(sorted(terms), ["term", "postings", "positions"], ssegs=ssegs,
+                             span=(int(ids[0]), int(ids[-1])))
         firsts: dict[int, list[str]] = {int(d): [] for d in ids}
-        for r in rows:  # ≤ m terms × page ssegs blocks
-            d_arr, tfs, _ = decode_postings(r["postings"])
+        for term, buf, pbuf in zip(*b.values()):  # ≤ m terms × page ssegs blocks
+            d_arr, tfs, _ = decode_postings(buf)
             hit_ix = np.flatnonzero(np.isin(d_arr, ids))
             if hit_ix.size == 0:
                 continue
-            pos = decode_position_lists(r["positions"], tfs)
+            pos = decode_position_lists(pbuf, tfs)
             off = np.zeros(len(d_arr) + 1, dtype=np.int64)
             np.cumsum(tfs, out=off[1:])
             for i in hit_ix:
                 # positions are sorted per doc -> first occurrence = run head
-                firsts[int(d_arr[i])].append(f"{r['term']}@{int(pos[off[i]])}")
+                firsts[int(d_arr[i])].append(f"{term}@{int(pos[off[i]])}")
         return pd.DataFrame(
             {
                 "doc_id": ids,
@@ -1801,28 +1902,6 @@ class SearchEngine:
         )
 
     # --------------------------------------------------------- phrase search
-    def _phrase_candidate_blocks(self, uniq_terms: list[str]) -> DataFrame:
-        """Candidate blocks for a phrase, sseg-eligibility-pruned.
-
-        A doc range (sseg) can only contain the phrase if EVERY distinct
-        term has a block there; ssegs missing any term are dropped by a
-        semi-join on block METADATA before the postings/positions bytes are
-        read — for a head+rare phrase ("the <rare>") this skips decoding
-        almost all of the head term's candidate blocks.  The metadata
-        aggregation touches only the (term, sseg) columns (column-pruned
-        scan); its result (≤ #ssegs rows) broadcasts.
-        """
-        meta = self._candidate_segments(uniq_terms)
-        eligible = (
-            meta.groupBy("sseg")
-            .agg(F.count_distinct("term").alias("nt"))
-            .filter(F.col("nt") == len(uniq_terms))
-            .select("sseg")
-        )
-        return meta.join(F.broadcast(eligible), "sseg").select(
-            "term", "sseg", "postings", "positions"
-        )
-
     def search_field_phrase(
         self,
         field: str,
@@ -2146,6 +2225,11 @@ class SearchEngine:
             if group_by or phrase:
                 raise ValueError("sort is not supported with group_by or phrase")
         if phrase:
+            if mode == "wand":
+                raise ValueError(
+                    "phrase is not supported with mode='wand' (block score "
+                    "bounds do not bound a phrase's score); use sort or auto"
+                )
             if group_by:
                 raise ValueError("group_by is not supported with phrase search")
             if fuzzy:

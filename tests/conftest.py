@@ -59,6 +59,59 @@ def index_tiny(spark, webtext_tiny, tmp_path_factory):
     return index_dir
 
 
+@pytest.fixture(scope="session")
+def sf_dv_index(spark, webtext_tiny, tmp_path_factory):
+    """Single-field build over the RAW fixture corpus (url, warc_ts, html,
+    text, lang), baking (lang, warc_ts) — the incremental-crawl shape."""
+    from search_engine_spark.index.builder import BuildConfig, build_index
+
+    idx = str(tmp_path_factory.mktemp("sfdv") / "index")
+    cfg = BuildConfig(
+        block_docs=64, target_ranges=16, min_range_docs=64, n_partitions=8,
+        waves=2, positions=True, docvalues_cols=("lang", "warc_ts"),
+    )
+    build_index(spark, webtext_tiny, idx, cfg=cfg)
+    return idx
+
+
+# the incremental-ingest layout: small blocks and ranges, 8 partitions
+INGEST_CFG = dict(
+    block_docs=64, target_ranges=16, min_range_docs=64, n_partitions=8,
+    shuffle_partitions=8,
+)
+
+
+def write_waves(tbl, base, slices):
+    """Write each (offset, n) slice of ``tbl`` as one parquet wave dir."""
+    import pyarrow.parquet as pq
+
+    paths = []
+    for i, (off, n) in enumerate(slices):
+        d = os.path.join(base, f"wave{i}")
+        os.makedirs(d, exist_ok=True)
+        pq.write_table(tbl.slice(off, n), os.path.join(d, "part-0.parquet"))
+        paths.append(d)
+    return paths
+
+
+@pytest.fixture(scope="session")
+def inc_index(spark, webtext_tiny, tmp_path_factory):
+    """The tiny corpus ingested as 3 url-lex-ordered generations."""
+    import pyarrow.parquet as pq
+
+    from search_engine_spark.index.builder import BuildConfig
+    from search_engine_spark.streaming.ingest import ingest_batch
+
+    base = str(tmp_path_factory.mktemp("inc3"))
+    idx = os.path.join(base, "inc_idx")
+    tbl = pq.read_table(webtext_tiny).sort_by("url")
+    waves = write_waves(tbl, base, [(0, 400), (400, 350), (750, 250)])
+    for e, w in enumerate(waves):
+        r = ingest_batch(spark, spark.read.parquet(w), idx, e, cfg=BuildConfig(**INGEST_CFG))
+        assert not r.skipped and r.n_docs > 0
+    return idx
+
+
 @pytest.fixture()
 def clean_dir(tmp_path):
     d = tmp_path / "work"

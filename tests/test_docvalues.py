@@ -519,21 +519,6 @@ def test_facet_validation(dv_engine, dv_term):
 
 
 # --------------------------------- single-field surface + incremental ingest
-@pytest.fixture(scope="module")
-def sf_dv_index(spark, webtext_tiny, tmp_path_factory):
-    """Single-field build over the RAW fixture corpus (url, warc_ts, html,
-    text, lang), baking (lang, warc_ts) — the incremental-crawl shape."""
-    from search_engine_spark.index.builder import BuildConfig, build_index
-
-    idx = str(tmp_path_factory.mktemp("sfdv") / "index")
-    cfg = BuildConfig(
-        block_docs=64, target_ranges=16, min_range_docs=64, n_partitions=8,
-        waves=2, positions=True, docvalues_cols=("lang", "warc_ts"),
-    )
-    build_index(spark, webtext_tiny, idx, cfg=cfg)
-    return idx
-
-
 def _attrs_from_doc_stats(spark, eng):
     pdf = (
         spark.read.parquet(eng.cat.doc_stats)
@@ -965,9 +950,6 @@ COALESCE = "spark.sql.adaptive.coalescePartitions.enabled"
 # runs facet_fields over dv_term's clauses, "facet_kw" a keyword facet on
 # the single-field dv index
 PHRASE = "of the"
-# a forced-distributed phrase: the range-eligibility broadcast's jobs, then
-# the block shuffle and the kernel tasks
-PHRASE_JOBS = 5
 LANG_FACET = {"langs": {"type": "string", "path": "lang", "num_buckets": 2}}
 MERGE_CASES = [
     ("tiny", "the oil", {}),
@@ -1108,9 +1090,9 @@ def test_distributed_search_runs_two_jobs(spark, index_tiny, sf_dv_index):
     compressed-block shuffle by doc range and the kernel tasks that return
     their partials.  A facet call is the same two jobs, with the doc-values
     slice in the shuffle, and so is WAND (explicit, or ``mode="auto"`` on a
-    query the driver does not take): its tasks prune in place; a
-    forced-distributed phrase adds the jobs of its range-eligibility
-    broadcast."""
+    query the driver does not take): its tasks prune in place; and so is a
+    forced-distributed phrase on a resident index, whose ranges holding
+    every phrase term come from the resident block metadata."""
     from search_engine_spark.query.engine import SearchEngine
 
     eng = SearchEngine(spark, index_tiny)
@@ -1121,10 +1103,35 @@ def test_distributed_search_runs_two_jobs(spark, index_tiny, sf_dv_index):
         ("auto-jobs", lambda: eng.search("the oil", mode="auto", force_distributed=True), 2),
         ("facet-jobs", lambda: sf.facet_fields(
             keyword="the oil", facets={"langs": {"type": "string", "path": "lang"}}), 2),
-        ("phrase-jobs", lambda: sf.search(PHRASE, phrase=True, force_distributed=True),
-         PHRASE_JOBS),
+        ("phrase-jobs", lambda: sf.search(PHRASE, phrase=True, force_distributed=True), 2),
     ]:
         fn()
         res, jobs = _jobs(spark, name, fn)
         assert (res["count"] if isinstance(res, dict) else res.total) > 0
         assert len(jobs) <= most, (name, [j.stageIds for j in jobs])
+
+
+def test_resident_driver_queries_run_no_jobs(spark, sf_dv_index):
+    """On a resident index a driver-placed search, a ``with_url`` search
+    and a phrase run no Spark job; on the collect path (``_resident =
+    None``) the same search runs one, a phrase two (its eligible ranges'
+    block metadata, then their blocks) and a forced-distributed phrase
+    three (the metadata, then the shuffle and the kernel)."""
+    from search_engine_spark.query.engine import SearchEngine
+
+    eng = SearchEngine(spark, sf_dv_index)
+    cases = [
+        ("resident-search", lambda: eng.search("the oil"), 0),
+        ("resident-url", lambda: eng.search("the oil", with_url=True), 0),
+        ("resident-phrase", lambda: eng.search(PHRASE, phrase=True, highlight=True), 0),
+        ("collect-search", lambda: eng.search("the oil"), 1),
+        ("collect-phrase", lambda: eng.search(PHRASE, phrase=True), 2),
+        ("collect-dist-phrase", lambda: eng.search(PHRASE, phrase=True,
+                                                   force_distributed=True), 3),
+    ]
+    for name, fn, want in cases:
+        if name.startswith("collect"):
+            eng._resident = None
+        res, jobs = _jobs(spark, name, fn)
+        assert res.total > 0
+        assert len(jobs) == want, (name, [j.stageIds for j in jobs])

@@ -339,18 +339,29 @@ def test_positions_column_pruned_from_scoring_plans(phrase_engine):
     """The .doc/.pos split must be real in the PHYSICAL plan: a non-phrase
     scoring scan never reads the positions column; the phrase candidate
     scan does; and the term filter is pushed to the parquet scan."""
-    score_plan = _formatted_plan(
-        phrase_engine._candidate_segments(["scan"]).select(
-            "term", "sseg", "max_tf_norm", "postings"
+    def plan(**opts):
+        return _formatted_plan(
+            phrase_engine._blocks(phrase_engine._search_query("scan window", **opts))
         )
-    )
+
+    score_plan = plan()
     assert "positions" not in score_plan
     assert "PushedFilters" in score_plan and "term" in score_plan
+    assert "positions" in plan(phrase=True)
 
-    phrase_plan = _formatted_plan(
-        phrase_engine._phrase_candidate_blocks(["scan", "window"])
-    )
-    assert "positions" in phrase_plan
+
+def test_phrase_rejects_explicit_wand(phrase_engine):
+    """Block score bounds do not bound a phrase's score: an explicit
+    ``mode="wand"`` raises like dv_filter/sort do, while ``mode="auto"``
+    runs the phrase unpruned on both placements."""
+    for fd in (False, True):
+        with pytest.raises(ValueError, match="mode='wand'"):
+            phrase_engine.search("scan window", phrase=True, mode="wand",
+                                 force_distributed=fd)
+        auto = phrase_engine.search("scan window", phrase=True, mode="auto",
+                                    force_distributed=fd)
+        plain = phrase_engine.search("scan window", phrase=True)
+        assert _hits(auto) == _hits(plain) and auto.total == plain.total > 0
 
 
 def test_phrase_rejects_fuzzy(phrase_engine):

@@ -21,22 +21,10 @@ from search_engine_spark.streaming.ingest import (
     stream_documents,
 )
 
-_CFG = dict(
-    block_docs=64, target_ranges=16, min_range_docs=64, n_partitions=8,
-    shuffle_partitions=8,
-)
+from conftest import INGEST_CFG, write_waves
+
 _KWS = ["rice", "cadbury dairy milk", "belt", "oil", "milk", "the", "zzzzqqqq"]
 _SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
-
-
-def _write_waves(tbl, base, slices):
-    paths = []
-    for i, (off, n) in enumerate(slices):
-        d = os.path.join(base, f"wave{i}")
-        os.makedirs(d, exist_ok=True)
-        pq.write_table(tbl.slice(off, n), os.path.join(d, "part-0.parquet"))
-        paths.append(d)
-    return paths
 
 
 @pytest.fixture(scope="module")
@@ -50,20 +38,14 @@ def corpora(webtext_tiny, tmp_path_factory):
 @pytest.fixture(scope="module")
 def rebuild_engine(spark, webtext_tiny, tmp_path_factory):
     idx = str(tmp_path_factory.mktemp("idx") / "full")
-    build_index(spark, webtext_tiny, idx, BuildConfig(**_CFG, waves=1))
+    build_index(spark, webtext_tiny, idx, BuildConfig(**INGEST_CFG, waves=1))
     return SearchEngine(spark, idx)
 
 
 @pytest.fixture(scope="module")
-def inc_engine(spark, corpora):
+def inc_engine(spark, inc_index):
     """Index ingested as 3 url-lex-ordered generations of the same corpus."""
-    tbl, base = corpora
-    idx = os.path.join(base, "inc_idx")
-    waves = _write_waves(tbl, base, [(0, 400), (400, 350), (750, 250)])
-    for e, w in enumerate(waves):
-        r = ingest_batch(spark, spark.read.parquet(w), idx, e, cfg=BuildConfig(**_CFG))
-        assert not r.skipped and r.n_docs > 0
-    return SearchEngine(spark, idx)
+    return SearchEngine(spark, inc_index)
 
 
 def test_cumulative_stats_match_rebuild(rebuild_engine, inc_engine):
@@ -182,8 +164,8 @@ def test_wand_differential_seeded(spark, index_tiny, inc_engine):
 def test_replay_skips_and_partial_crash_rewrites(spark, corpora, rebuild_engine):
     tbl, base = corpora
     idx = os.path.join(base, "replay_idx")
-    waves = _write_waves(tbl, os.path.join(base, "replay"), [(0, 600), (600, 400)])
-    cfg = BuildConfig(**_CFG)
+    waves = write_waves(tbl, os.path.join(base, "replay"), [(0, 600), (600, 400)])
+    cfg = BuildConfig(**INGEST_CFG)
     for e, w in enumerate(waves):
         ingest_batch(spark, spark.read.parquet(w), idx, e, cfg=cfg)
     # full replay of a committed epoch: skipped, nothing changes
@@ -211,8 +193,8 @@ def test_crash_between_marker_and_stats_refresh_heals_on_replay(spark, corpora):
 
     tbl, base = corpora
     idx = os.path.join(base, "heal_idx")
-    waves = _write_waves(tbl, os.path.join(base, "heal"), [(0, 600), (600, 400)])
-    cfg = BuildConfig(**_CFG)
+    waves = write_waves(tbl, os.path.join(base, "heal"), [(0, 600), (600, 400)])
+    cfg = BuildConfig(**INGEST_CFG)
     for e, w in enumerate(waves):
         ingest_batch(spark, spark.read.parquet(w), idx, e, cfg=cfg)
     good = json.load(open(os.path.join(idx, "corpus_stats.json")))
@@ -234,7 +216,7 @@ def test_fresh_checkpoint_against_existing_index_raises(spark, corpora, tmp_path
     os.makedirs(src)
     pq.write_table(tbl.slice(0, 100), os.path.join(src, "w.parquet"))
     idx = str(tmp_path / "idx")
-    cfg = BuildConfig(**_CFG)
+    cfg = BuildConfig(**INGEST_CFG)
     q = incremental_index_stream(
         stream_documents(spark, src, _SCHEMA), idx, str(tmp_path / "ckpt1"), cfg=cfg
     )
@@ -246,14 +228,13 @@ def test_fresh_checkpoint_against_existing_index_raises(spark, corpora, tmp_path
         )
 
 
-def test_compaction_id_mode_above_dict_budget(spark, corpora, inc_engine, tmp_path):
+def test_compaction_id_mode_above_dict_budget(spark, inc_index, inc_engine, tmp_path):
     """Vocabularies above dict_budget must compact through the distributed
     dictionary path (no driver vocab materialization) with identical output."""
     from search_engine_spark.index.compact import compact_index
 
-    _, base = corpora
     out = str(tmp_path / "cmp_idmode")
-    compact_index(spark, os.path.join(base, "inc_idx"), out, dict_budget=10)
+    compact_index(spark, inc_index, out, dict_budget=10)
     eng = SearchEngine(spark, out)
     assert eng.bound_scale == 1.0
     for kw in ["milk", "the"]:
@@ -268,9 +249,9 @@ def test_out_of_lex_order_arrival_matches_rebuild_by_url(spark, corpora, rebuild
     contract) but the (url, score) result sets are identical."""
     tbl, base = corpora
     idx = os.path.join(base, "ooo_idx")
-    waves = _write_waves(tbl, os.path.join(base, "ooo"), [(500, 500), (0, 500)])
+    waves = write_waves(tbl, os.path.join(base, "ooo"), [(500, 500), (0, 500)])
     for e, w in enumerate(waves):
-        ingest_batch(spark, spark.read.parquet(w), idx, e, cfg=BuildConfig(**_CFG))
+        ingest_batch(spark, spark.read.parquet(w), idx, e, cfg=BuildConfig(**INGEST_CFG))
     eng = SearchEngine(spark, idx)
     assert eng.n_docs == 1000 and eng.avgdl == rebuild_engine.avgdl
     for kw in ["milk", "rice", "the"]:
@@ -282,15 +263,14 @@ def test_out_of_lex_order_arrival_matches_rebuild_by_url(spark, corpora, rebuild
         assert sa == sb, kw
 
 
-def test_compaction_merges_generations_exactly(spark, corpora, inc_engine, tmp_path):
+def test_compaction_merges_generations_exactly(spark, inc_index, inc_engine, tmp_path):
     """index/compact.py: decode->re-encode with current avgdl collapses the
     generations into one batch-layout index with identical query results,
     bound scale exactly 1, and fewer segment files."""
     from search_engine_spark.index.compact import compact_index
 
-    _, base = corpora
     out = str(tmp_path / "compacted")
-    m = compact_index(spark, os.path.join(base, "inc_idx"), out)
+    m = compact_index(spark, inc_index, out)
     assert m["generations_in"] == 3 and m["n_docs"] == 1000
     eng = SearchEngine(spark, out)
     assert eng.bound_scale == 1.0
@@ -306,9 +286,7 @@ def test_compaction_merges_generations_exactly(spark, corpora, inc_engine, tmp_p
     def nfiles(d):
         return sum(len(fs) for _, _, fs in os.walk(d))
 
-    assert nfiles(os.path.join(out, "segments")) < nfiles(
-        os.path.join(base, "inc_idx", "segments")
-    )
+    assert nfiles(os.path.join(out, "segments")) < nfiles(os.path.join(inc_index, "segments"))
 
 
 def test_compaction_is_identity_on_batch_index(spark, webtext_tiny, rebuild_engine, tmp_path):
@@ -333,7 +311,7 @@ def test_streaming_surface_end_to_end(spark, corpora, rebuild_engine, tmp_path):
     src = str(tmp_path / "arrivals")
     os.makedirs(src)
     idx, ckpt = str(tmp_path / "idx"), str(tmp_path / "ckpt")
-    cfg = BuildConfig(**_CFG)
+    cfg = BuildConfig(**INGEST_CFG)
 
     pq.write_table(tbl.slice(0, 700), os.path.join(src, "w0.parquet"))
     q = incremental_index_stream(
@@ -370,12 +348,12 @@ def test_gen0_crash_window_does_not_brick_replay(spark, corpora, rebuild_engine)
     parquet schema inference (the exactly-once contract)."""
     tbl, base = corpora
     idx = os.path.join(base, "crash0_idx")
-    wave = _write_waves(tbl, os.path.join(base, "crash0"), [(0, 300)])[0]
+    wave = write_waves(tbl, os.path.join(base, "crash0"), [(0, 300)])[0]
     # simulate the window: gen dir exists, no visible files, no _SUCCESS
     half = os.path.join(idx, "gen_stats", "gen=0", "_temporary")
     os.makedirs(half, exist_ok=True)
     r = ingest_batch(spark, spark.read.parquet(wave), idx, 0,
-                     cfg=BuildConfig(**_CFG))
+                     cfg=BuildConfig(**INGEST_CFG))
     assert not r.skipped and r.n_docs == 300
     eng = SearchEngine(spark, idx)
     assert eng.n_docs == 300
@@ -391,10 +369,10 @@ def test_ingest_id_mode_identical_to_broadcast_vocab(spark, corpora):
     outs = {}
     for name, budget in (("bcast", 2_000_000), ("idmode", 1)):
         idx = os.path.join(base, f"vocab_{name}_idx")
-        waves = _write_waves(tbl, os.path.join(base, f"vocab_{name}"), slices)
+        waves = write_waves(tbl, os.path.join(base, f"vocab_{name}"), slices)
         for e, w in enumerate(waves):
             ingest_batch(spark, spark.read.parquet(w), idx, e,
-                         cfg=BuildConfig(**_CFG, dict_budget=budget))
+                         cfg=BuildConfig(**INGEST_CFG, dict_budget=budget))
         outs[name] = (
             spark.read.parquet(os.path.join(idx, "segments"))
             .select("gen", "term", "sseg", "block_id", "first_doc",
@@ -415,17 +393,17 @@ def test_tokenizer_frozen_at_gen0(spark, corpora):
 
     tbl, base = corpora
     idx = os.path.join(base, "tok_frozen_idx")
-    waves = _write_waves(tbl, os.path.join(base, "tok_frozen"), [(0, 200), (200, 200)])
+    waves = write_waves(tbl, os.path.join(base, "tok_frozen"), [(0, 200), (200, 200)])
     ingest_batch(spark, spark.read.parquet(waves[0]), idx, 0,
-                 cfg=BuildConfig(**_CFG, tokenizer="pandas"))
+                 cfg=BuildConfig(**INGEST_CFG, tokenizer="pandas"))
     with open(os.path.join(idx, "frozen.json")) as f:
         assert json.load(f)["tokenizer"] == "pandas"
     with pytest.raises(ValueError, match="tokenizer"):
         ingest_batch(spark, spark.read.parquet(waves[1]), idx, 1,
-                     cfg=BuildConfig(**_CFG, tokenizer="jvm"))
+                     cfg=BuildConfig(**INGEST_CFG, tokenizer="jvm"))
     # "auto" defers to the frozen choice
     r = ingest_batch(spark, spark.read.parquet(waves[1]), idx, 1,
-                     cfg=BuildConfig(**_CFG))
+                     cfg=BuildConfig(**INGEST_CFG))
     assert not r.skipped and r.n_docs == 200
 
 
@@ -457,7 +435,7 @@ def test_shrunk_avgdl_floor_scale_sound(spark, corpora, tmp_path_factory):
 
     idx = os.path.join(base, "idx")
     for e, w in enumerate((long_dir, short_dir)):
-        r = ingest_batch(spark, spark.read.parquet(w), idx, e, cfg=BuildConfig(**_CFG))
+        r = ingest_batch(spark, spark.read.parquet(w), idx, e, cfg=BuildConfig(**INGEST_CFG))
         assert not r.skipped and r.n_docs > 0
     eng = SearchEngine(spark, idx)
 
@@ -470,7 +448,7 @@ def test_shrunk_avgdl_floor_scale_sound(spark, corpora, tmp_path_factory):
         spark.read.parquet(short_dir)
     ).write.mode("overwrite").parquet(union_dir)
     full_idx = os.path.join(base, "full")
-    build_index(spark, union_dir, full_idx, BuildConfig(**_CFG, waves=1))
+    build_index(spark, union_dir, full_idx, BuildConfig(**INGEST_CFG, waves=1))
     full = SearchEngine(spark, full_idx)
     assert eng.avgdl == full.avgdl
 

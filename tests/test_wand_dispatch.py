@@ -181,3 +181,33 @@ def test_wand_task_pruning_is_exact():
                     pruned += stats["blocks_pruned"]
                     floors += stats["theta_floor"] is not None
     assert pruned > 1_000 and floors > 100, (pruned, floors)
+
+
+def test_wand_bound_covers_fold_rounding():
+    """The builder bakes ``max_tf_norm = fl(tf/den)`` and the fold scores
+    ``fl(fl(idf·tf)/den)``; at idf = idf(N=1000, df=3), tf = 1, dl = 23
+    the fold's score is one ulp above ``fl(idf·max_tf_norm)``.  Two docs
+    with that (tf, dl) sit in two ranges, k = 1: the range holding the
+    larger doc id is visited first (a second key raises its bound), its
+    doc raises θ to the shared score, and the other doc, the page's by the
+    doc_id tiebreak, must not be pruned by a bound one ulp below θ."""
+    from search_engine_spark.index.codec import encode_postings
+    from search_engine_spark.query.engine import B, K1, _fold, _math_idf, _partial, _Query, _wand_task
+
+    avgdl, tf, dl = 100.0, 1, 23
+    w = _math_idf(1000, 3)
+    mtn = tf / (tf + K1 * (1.0 - B + B * dl / avgdl))
+    assert w * tf / (tf + K1 * (1.0 - B + B * dl / avgdl)) > w * mtn  # the ulp
+    q = _Query(keys=["t0", "t1"], idf={"t0": w, "t1": 0.5}, k=1, should=[["t0", "t1"]], msm=1)
+    blocks = [("t0", 0, 5), ("t0", 1, 70), ("t1", 1, 80)]  # (key, range, doc)
+    terms, ssegs = [b[0] for b in blocks], [b[1] for b in blocks]
+    bufs = [encode_postings(np.array([d]), np.array([tf]), np.array([dl])) for *_, d in blocks]
+    mtns = [mtn] * len(blocks)
+    want = _partial(q, pd.concat([_fold(q, terms[:1], bufs[:1], avgdl),
+                                  _fold(q, terms[1:], bufs[1:], avgdl)], ignore_index=True))
+    assert list(want["doc_id"]) == [5]
+    for floor_scale in (1.0, 0.0):
+        rows, n, _ = _wand_task(q, terms, ssegs, mtns, bufs, avgdl, 1.0, floor_scale)
+        assert n == 3
+        assert [(int(d), float(s).hex()) for d, s in zip(rows["doc_id"], rows["score"])] == [
+            (5, float(want["score"][0]).hex())]
