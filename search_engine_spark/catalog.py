@@ -128,6 +128,18 @@ class IndexCatalog:
     def has_corpus_stats(self) -> bool:
         return os.path.exists(self.stats_file)
 
+    def read_committed(self, spark, path: str, stats: dict):
+        """``path`` (segments, doc_stats or term_stats) as a DataFrame: on a
+        generational index only the generations ``stats["generations"]``
+        commits, so one encoded but never committed (a crash before its
+        gen_stats marker) stays invisible to every reader; a batch index
+        reads whole."""
+        from pyspark.sql import functions as F
+
+        df = spark.read.parquet(path)
+        gens = stats.get("generations")
+        return df if gens is None else df.filter(F.col("gen").isin(gens))
+
     # -- manifest: atomic append of lineage rows -----------------------------
     def append_manifest(self, rows: list[dict]) -> None:
         """Atomically commit a batch of lineage rows (write temp + rename)."""

@@ -30,12 +30,16 @@ kernel; no RDDs, no per-row Python):
    don't melt one reducer.  The vocabulary is never collected or broadcast
    above ``BuildConfig.dict_budget``: web-scale vocabularies shuffle-join
    ids onto tokens and join strings back onto encoded blocks.
-4. **segment build** — ONE shuffle: tokens gain ``pid`` via a broadcast
-   term->pid dimension join (JVM) and are bucketed on a *global doc-id grid*
+4. **segment build** — ONE shuffle, written by the one segment writer
+   (``_SegmentWriter``) that ``build_index``'s waves, ``ingest_batch``'s
+   generations and ``compact_index``'s merges share: posting rows gain a
+   dense integer ``term_id`` (broadcast dictionary within
+   ``BuildConfig.dict_budget``, a shuffle-joined distributed dimension
+   above it) and are bucketed on a *global doc-id grid*
    (``sseg = doc_id // range_docs``).  The grid is shared by all terms, so at
    query time per-range score upper bounds can be summed across query terms —
    that is what makes distributed block-max WAND pruning possible.  Within a
-   partition the rows are sorted by (term, sseg, doc_id) and encoded by a
+   partition the rows are sorted by (term_id, doc_id) and encoded by a
    ``mapInArrow`` kernel into 1024-posting blocks with delta+varint
    compression and per-block max-score metadata — dictionary-encoded terms,
    zero-copy ints, no per-group Python loop, no python string objects.
@@ -49,6 +53,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -70,24 +75,18 @@ B = 0.75
 # terms contiguously (field-scoped prefix scans come free).
 FIELD_SEP = "\x1f"
 
+# Broadcasting the (url -> doc_id) map keeps the TEXT payload out of any
+# shuffle: the corpus streams map-side through the id join straight into
+# tokenize, whose explode+agg shuffles only compact token rows.  Above this
+# many docs (cluster scale) build and ingest fall back to a shuffled join —
+# there the text crosses the wire once, unavoidably.
+_BCAST_DOCS_MAX = 20_000_000
+
 TOKENS_SCHEMA = "term string, doc_id long, tf int, dl int"
 # positional builds carry each (doc, term)'s sorted occurrence offsets
 # through the token stream; the encoder folds them into a per-block varint
 # blob (codec.encode_position_lists) stored as a SEPARATE segment column
 TOKENS_SCHEMA_POS = TOKENS_SCHEMA + ", positions array<int>"
-SEGMENT_SCHEMA = (
-    "pid int, term string, sseg int, block_id int, first_doc long, last_doc long, "
-    "doc_count int, max_tf_norm double, nbytes long, postings binary"
-)
-# distributed-dictionary mode: blocks carry the integer term_id through the
-# encoder; a post-encode join on the term dimension restores the string AND
-# the pid (neither ships through the token shuffle)
-SEGMENT_SCHEMA_IDS = (
-    "term_id long, sseg int, block_id int, first_doc long, last_doc long, "
-    "doc_count int, max_tf_norm double, nbytes long, postings binary"
-)
-SEGMENT_SCHEMA_POS = SEGMENT_SCHEMA + ", positions binary"
-SEGMENT_SCHEMA_IDS_POS = SEGMENT_SCHEMA_IDS + ", positions binary"
 
 
 @dataclass
@@ -328,7 +327,9 @@ def build_vocab(
 _TOKEN_SPLIT_RE = "[^0-9A-Za-zÀ-￿]+"
 
 
-def tokens_from_docs(docs_with_ids: DataFrame, positions: bool = False) -> DataFrame:
+def tokens_from_docs(
+    docs_with_ids: DataFrame, positions: bool = False, fields: tuple | None = None
+) -> DataFrame:
     """(doc_id, text) -> (term, doc_id, tf, dl) — pure JVM, whole-stage codegen.
 
     explode + hash-aggregate: every operator codegens (higher-order-function
@@ -342,87 +343,33 @@ def tokens_from_docs(docs_with_ids: DataFrame, positions: bool = False) -> DataF
     (0-based index in the token sequence, == what ``posexplode`` yields over
     the filtered array) as an ``array<int>`` column — still JVM-side
     (``collect_list`` object-hash aggregate).
-    """
-    arr = F.array_remove(F.split(F.lower(F.col("text")), _TOKEN_SPLIT_RE), "")
-    d1 = docs_with_ids.select("doc_id", arr.alias("arr")).filter(F.size("arr") > 0)
-    if positions:
-        d2 = d1.select(
-            "doc_id",
-            F.size("arr").cast("int").alias("dl"),
-            F.posexplode("arr").alias("pos", "term"),
-        )
-        return (
-            d2.groupBy("doc_id", "term")
-            .agg(
-                F.count("*").cast("int").alias("tf"),
-                F.max("dl").alias("dl"),
-                F.sort_array(F.collect_list(F.col("pos").cast("int"))).alias("positions"),
-            )
-            .select("term", "doc_id", "tf", "dl", "positions")
-        )
-    d2 = d1.select(
-        "doc_id",
-        F.size("arr").cast("int").alias("dl"),
-        F.explode("arr").alias("term"),
-    )
-    return (
-        d2.groupBy("doc_id", "term")
-        .agg(F.count("*").cast("int").alias("tf"), F.max("dl").alias("dl"))
-        .select("term", "doc_id", "tf", "dl")
-    )
 
-
-def tokens_from_docs_fields(
-    docs_with_ids: DataFrame, fields: tuple, positions: bool = False
-) -> DataFrame:
-    """Multi-field token stream: one single-field pass per field, unioned.
-
-    Each field tokenizes independently (pure JVM, same explode+hash-aggregate
-    plan as :func:`tokens_from_docs`); its rows carry the posting key
+    ``fields`` (a multi-field index) tokenizes each named column the same
+    way instead of ``text``: its rows carry the posting key
     ``"<field>\\x1f<term>"`` and ``dl`` = THAT field's token count — exactly
-    what per-field BM25 needs at query time (Lucene norms are per field).
-    ``positions`` are offsets within the field's own token sequence.
-
-    The union is a no-shuffle concatenation: each branch aggregates
-    map-side like the single-field plan, and the branches' outputs flow
-    straight into the caller's stats/encode shuffles.
+    what per-field BM25 needs at query time (Lucene norms are per field) —
+    and ``positions`` are offsets within the field's own token sequence.
+    The per-field streams union without a shuffle.
     """
     parts = []
-    for f_name in fields:
-        arr = F.array_remove(F.split(F.lower(F.col(f_name)), _TOKEN_SPLIT_RE), "")
+    for col in fields or ("text",):
+        arr = F.array_remove(F.split(F.lower(F.col(col)), _TOKEN_SPLIT_RE), "")
         d1 = docs_with_ids.select("doc_id", arr.alias("arr")).filter(F.size("arr") > 0)
-        key = F.concat(F.lit(f_name + FIELD_SEP), F.col("term")).alias("term")
+        key = (F.concat(F.lit(col + FIELD_SEP), F.col("term")).alias("term")
+               if fields else F.col("term"))
+        aggs = [F.count("*").cast("int").alias("tf"), F.max("dl").alias("dl")]
         if positions:
-            d2 = d1.select(
-                "doc_id",
-                F.size("arr").cast("int").alias("dl"),
-                F.posexplode("arr").alias("pos", "term"),
-            )
-            grouped = (
-                d2.groupBy("doc_id", "term")
-                .agg(
-                    F.count("*").cast("int").alias("tf"),
-                    F.max("dl").alias("dl"),
-                    F.sort_array(F.collect_list(F.col("pos").cast("int"))).alias("positions"),
-                )
-                .select(key, "doc_id", "tf", "dl", "positions")
-            )
+            exploded = F.posexplode("arr").alias("pos", "term")
+            aggs.append(F.sort_array(F.collect_list(F.col("pos").cast("int"))).alias("positions"))
         else:
-            d2 = d1.select(
-                "doc_id",
-                F.size("arr").cast("int").alias("dl"),
-                F.explode("arr").alias("term"),
-            )
-            grouped = (
-                d2.groupBy("doc_id", "term")
-                .agg(F.count("*").cast("int").alias("tf"), F.max("dl").alias("dl"))
-                .select(key, "doc_id", "tf", "dl")
-            )
-        parts.append(grouped)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+            exploded = F.explode("arr").alias("term")
+        parts.append(
+            d1.select("doc_id", F.size("arr").cast("int").alias("dl"), exploded)
+            .groupBy("doc_id", "term")
+            .agg(*aggs)
+            .select(key, "doc_id", "tf", "dl", *(["positions"] if positions else []))
+        )
+    return reduce(DataFrame.unionByName, parts)
 
 
 def sampled_nfc_ok(docs: DataFrame, rows_per_split: int = 4) -> bool:
@@ -454,6 +401,27 @@ def sampled_nfc_ok(docs: DataFrame, rows_per_split: int = 4) -> bool:
     if not heads:
         return True
     return all(unicodedata.is_normalized("NFC", r["text"]) for r in heads)
+
+
+def _resolve_tokenizer(docs: DataFrame, tokenizer: str, fields: tuple | None = None) -> str:
+    """The analyzer a build or ingest runs: ``"jvm"`` or ``"pandas"``.
+
+    An explicit pin is honored.  ``"auto"`` runs the sampled NFC contract
+    check (on every content column) and picks the JVM tokenizer unless it
+    fails, then the spec-exact pandas one.  A multi-field build has no
+    pandas form, so there a failed check raises rather than silently
+    mis-tokenizing a non-NFC corpus.
+    """
+    if tokenizer != "auto":
+        return tokenizer
+    if not fields:
+        return "jvm" if sampled_nfc_ok(docs) else "pandas"
+    if all(sampled_nfc_ok(docs.select(F.col(f).alias("text"))) for f in fields):
+        return "jvm"
+    raise ValueError(
+        "field_cols build sampled non-NFC text; NFC-normalize the corpus at "
+        "ingest (the pandas fallback tokenizer has no multi-field form)"
+    )
 
 
 def tokens_from_docs_pandas(docs_with_ids: DataFrame, positions: bool = False) -> DataFrame:
@@ -671,6 +639,22 @@ def encode_sorted_arrays(
     }
 
 
+def _segment_schema(id_mode: bool, positions: bool):
+    """Arrow schema of the encoder's block rows.  In id mode (vocabulary
+    above the broadcast budget) blocks carry the integer ``term_id`` in
+    place of ``pid`` and ``term``; a post-encode join on the term dimension
+    restores both (neither ships through the token shuffle).  Positional
+    indexes add the per-block position blob as a SEPARATE column."""
+    import pyarrow as pa
+
+    key = [("term_id", pa.int64())] if id_mode else [("pid", pa.int32()), ("term", pa.string())]
+    return pa.schema(key + [
+        ("sseg", pa.int32()), ("block_id", pa.int32()), ("first_doc", pa.int64()),
+        ("last_doc", pa.int64()), ("doc_count", pa.int32()), ("max_tf_norm", pa.float64()),
+        ("nbytes", pa.int64()), ("postings", pa.binary()),
+    ] + ([("positions", pa.binary())] if positions else []))
+
+
 def make_arrow_encoder(
     avgdl: float, block_docs: int, range_docs: int, term_dict=None, packed=False,
     with_positions: bool = False,
@@ -712,25 +696,7 @@ def make_arrow_encoder(
     import pyarrow as pa
 
     id_mode = term_dict is None
-    term_field = (
-        pa.field("term_id", pa.int64()) if id_mode else pa.field("term", pa.string())
-    )
-    fields = [] if id_mode else [pa.field("pid", pa.int32())]
-    fields += [
-        term_field,
-        pa.field("sseg", pa.int32()),
-        pa.field("block_id", pa.int32()),
-        pa.field("first_doc", pa.int64()),
-        pa.field("last_doc", pa.int64()),
-        pa.field("doc_count", pa.int32()),
-        pa.field("max_tf_norm", pa.float64()),
-        pa.field("nbytes", pa.int64()),
-        pa.field("postings", pa.binary()),
-    ]
-    if with_positions:
-        fields.append(pa.field("positions", pa.binary()))
-    out_schema = pa.schema(fields)
-    term_key = "term_id" if id_mode else "term"
+    out_schema = _segment_schema(id_mode, with_positions)
 
     def encode_part(batches):
         blist = [b for b in batches if b.num_rows]
@@ -793,23 +759,151 @@ def make_arrow_encoder(
             pos_flat=pos_flat,
             pos_offsets=pos_offsets,
         )
-        arrs = [] if id_mode else [pa.array(cols["pid"], pa.int32())]
-        arrs += [
-            pa.array(cols[term_key], term_field.type),
-            pa.array(cols["sseg"], pa.int32()),
-            pa.array(cols["block_id"], pa.int32()),
-            pa.array(cols["first_doc"], pa.int64()),
-            pa.array(cols["last_doc"], pa.int64()),
-            pa.array(cols["doc_count"], pa.int32()),
-            pa.array(cols["max_tf_norm"], pa.float64()),
-            pa.array(cols["nbytes"], pa.int64()),
-            pa.array(cols["postings"], pa.binary()),
-        ]
-        if with_positions:
-            arrs.append(pa.array(cols["positions"], pa.binary()))
-        yield pa.record_batch(arrs, schema=out_schema)
+        yield pa.record_batch(
+            [pa.array(cols[f.name], f.type) for f in out_schema], schema=out_schema
+        )
 
     return encode_part
+
+
+# ---------------------------------------------------------------------------
+# Phase 4b: the one segment writer (build waves, ingest generations, merges)
+# ---------------------------------------------------------------------------
+
+class _SegmentWriter:
+    """Posting rows under a fixed geometry -> pid-partitioned segment blocks
+    on disk, plus their manifest rows.
+
+    ``build_index`` (once per call, then per wave), ``ingest_batch`` (per
+    generation) and ``compact_index`` (per merge) all write through this
+    one class; they differ only in where their posting rows come from
+    (tokens or decoded blocks) and where the blocks land.  The geometry is
+    the index's frozen layout: the term ``cuts`` (pid = count of cuts <
+    term, the engine's ``searchsorted(cuts, term, "left")`` pruning rule),
+    the doc grid ``range_docs``, ``block_docs``, and the ``avgdl`` (or
+    per-field ``field_avgdl``) the block bounds bake at.
+
+    Construction resolves the vocabulary once, from ``term_stats`` (a
+    parquet table with one row per term).  Vocabularies within
+    ``dict_budget`` (the same in-process-dimension pattern as the
+    reference's STORE_WH_MAP dict, reference constants.py:17) ride a
+    broadcast dictionary with dense lexicographic ids; above it NOTHING
+    materializes the vocabulary in one place — a distributed
+    (term, term_id, pid) dimension (``dim``, or one :func:`build_vocab`
+    pass over ``term_stats`` with the frozen cuts) shuffle-joins ids onto
+    the postings and a post-encode join of BLOCK rows (≈ postings /
+    block_docs) restores term + pid.  Either way every column that shuffles
+    is fixed-width (see :func:`make_arrow_encoder` for the row diet).
+    """
+
+    def __init__(
+        self, spark: SparkSession, term_stats: str, n_terms: int, cuts: list[str], *,
+        n_partitions: int, range_docs: int, block_docs: int, avgdl: float,
+        max_dl: int, max_doc_id: int, positions: bool, dict_budget: int,
+        shuffle_n: int | None = None, field_avgdl=None, dim: DataFrame | None = None,
+    ):
+        self.spark, self.range_docs, self.positions = spark, int(range_docs), positions
+        self.shuffle_n = shuffle_n or int(spark.conf.get("spark.sql.shuffle.partitions"))
+        self.id_mode = n_terms > dict_budget
+        self._owned = None
+        if self.id_mode:
+            dict_b = None
+            if dim is None:
+                _, _, dim, ranked_t, _ = build_vocab(spark, term_stats, n_partitions, cuts=cuts)
+                dim = self._owned = dim.persist()
+                dim.count()
+                ranked_t.unpersist()
+            self._term_ids = dim
+        else:
+            # the schema is given, so the read plans without a footer job
+            vocab = (
+                spark.read.schema("term string").parquet(term_stats).toPandas()
+                .sort_values("term").reset_index(drop=True)
+            )
+            terms_arr = vocab["term"].to_numpy(dtype=object)
+            pids_arr = np.searchsorted(np.array(cuts, dtype=object), terms_arr,
+                                       side="left").astype(np.int32)
+            # int32 ids: tighter shuffle rows
+            vocab["term_id"] = np.arange(len(vocab), dtype=np.int32)
+            vocab["pid"] = pids_arr
+            self._term_ids = F.broadcast(spark.createDataFrame(vocab))
+            dict_b = spark.sparkContext.broadcast((terms_arr, pids_arr))
+        # tf/dl pack into one int32 when the max doc length allows exact
+        # unpacking; doc_id narrows to int32 below 2^31
+        self.packed = 0 < max_dl < 4096
+        self.doc32 = max_doc_id < (1 << 31)
+        self.encoder = make_arrow_encoder(
+            avgdl=avgdl, block_docs=block_docs, range_docs=self.range_docs,
+            term_dict=dict_b, packed=self.packed, with_positions=positions,
+            field_avgdl=field_avgdl,
+        )
+
+    def write(self, postings: DataFrame, seg_dir: str, pids: list[int] | None = None) -> None:
+        """Encode ``postings`` (term, doc_id, tf, dl[, positions]) into
+        ``seg_dir``/pid=P — only the build partitions ``pids`` when given
+        (one build wave; other partitions already on disk stay)."""
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        keyed = postings.join(self._term_ids, "term")
+        if pids is not None:
+            keyed = keyed.filter(F.col("pid").isin(pids))
+        doc_col = F.col("doc_id").cast("int").alias("doc_id") if self.doc32 else F.col("doc_id")
+        vals = ([(F.col("tf") * 4096 + F.col("dl")).cast("int").alias("tfdl")]
+                if self.packed else [F.col("tf"), F.col("dl")])
+        if self.positions:
+            vals.append(F.col("positions"))
+        schema = _segment_schema(self.id_mode, self.positions)
+        blocks = (
+            keyed.select(F.col("term_id"), doc_col, *vals)
+            .repartition(self.shuffle_n, F.col("term_id"),
+                         F.expr(f"CAST(doc_id DIV {self.range_docs} AS INT)"))
+            .sortWithinPartitions("term_id", "doc_id")  # sseg monotone in doc_id
+            .mapInArrow(self.encoder, schema=from_arrow_schema(schema))
+        )
+        if self.id_mode:
+            blocks = blocks.join(self._term_ids, "term_id").select(
+                *_segment_schema(False, self.positions).names
+            )
+        w = blocks.write.mode("overwrite")
+        if pids is not None:
+            w = w.option("partitionOverwriteMode", "dynamic")
+        w.partitionBy("pid").parquet(seg_dir)
+
+    def lineage(
+        self, seg_dir: str, run_id: str, segment: str, input_split: str,
+        pids: list[int] | None = None,
+    ) -> list[dict]:
+        """Manifest rows from what actually landed in ``seg_dir``: one per
+        pid (``segment``-p<pid>), and with ``pids`` an empty row for each
+        of them that produced no blocks (it still counts as done)."""
+        seg = self.spark.read.parquet(seg_dir)
+        if pids is not None:
+            seg = seg.filter(F.col("pid").isin(pids))
+        landed = {
+            int(r["pid"]): r
+            for r in seg.groupBy("pid").agg(
+                F.min("term").alias("term_lo"),
+                F.max("term").alias("term_hi"),
+                F.sum("doc_count").alias("postings_count"),
+                F.sum("nbytes").alias("bytes"),
+            ).collect()
+        }
+        empty = {"term_lo": "", "term_hi": "", "postings_count": 0, "bytes": 0}
+        return [
+            {
+                "run_id": run_id,
+                "partition_id": p,
+                "segment_id": f"{segment}-p{p}",
+                "input_split": input_split,
+                **{k: (landed[p][k] if p in landed else v) for k, v in empty.items()},
+                "status": "done",
+            }
+            for p in list(landed) + [p for p in pids or () if p not in landed]
+        ]
+
+    def close(self) -> None:
+        if self._owned is not None:
+            self._owned.unpersist()
 
 
 # ---------------------------------------------------------------------------
@@ -866,49 +960,17 @@ def build_index(
         if "url" not in docs.columns:
             docs = docs.withColumn("url", F.col("doc_id_pre").cast("string"))
 
-    shuffle_n = cfg.shuffle_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # Broadcasting the (url -> doc_id) map keeps the TEXT payload out of any
-    # shuffle: the corpus streams map-side through the id join straight into
-    # tokenize, whose explode+agg shuffles only compact token rows.  Above
-    # the broadcast budget (cluster scale) fall back to a shuffled join —
-    # there the text crosses the wire once, unavoidably.
-    _BCAST_DOCS_MAX = 20_000_000
-
-    # JVM tokenize assumes NFC input; auto-route to the spec-exact pandas
-    # tokenizer (which applies NFC) when a sampled check fails the contract,
-    # or honor an explicit cfg.tokenizer pin.  Checked once per build
-    # (memoized), not per _tokenize call; resume paths that never
-    # re-tokenize never pay the sample collect.
-    _nfc_memo: list[bool] = []
+    # JVM tokenize assumes NFC input; the analyzer is resolved once per
+    # build (on first use: resume paths that never re-tokenize never pay
+    # the sample collect)
+    tokenizer: list[str] = []
 
     def _tokenize(df):
-        if field_cols:
-            # JVM-only (validated in BuildConfig): auto mode still runs the
-            # sampled NFC contract check on every field column and fails loud
-            # rather than silently mis-tokenizing a non-NFC corpus
-            if cfg.tokenizer == "auto":
-                if not _nfc_memo:
-                    _nfc_memo.append(
-                        all(
-                            sampled_nfc_ok(docs.select(F.col(f).alias("text")))
-                            for f in field_cols
-                        )
-                    )
-                if not _nfc_memo[0]:
-                    raise ValueError(
-                        "field_cols build sampled non-NFC text; NFC-normalize "
-                        "the corpus at ingest (the pandas fallback tokenizer "
-                        "has no multi-field form)"
-                    )
-            return tokens_from_docs_fields(df, field_cols, positions=use_pos)
-        if cfg.tokenizer == "jvm":
-            return tokens_from_docs(df, positions=use_pos)
-        if cfg.tokenizer == "pandas":
+        if not tokenizer:
+            tokenizer.append(_resolve_tokenizer(docs, cfg.tokenizer, field_cols))
+        if tokenizer[0] == "pandas":
             return tokens_from_docs_pandas(df, positions=use_pos)
-        if not _nfc_memo:
-            _nfc_memo.append(sampled_nfc_ok(docs))
-        fn = tokens_from_docs if _nfc_memo[0] else tokens_from_docs_pandas
-        return fn(df, positions=use_pos)
+        return tokens_from_docs(df, positions=use_pos, fields=field_cols)
 
     if not phase1_done:
         if id_col is not None:
@@ -1101,18 +1163,14 @@ def build_index(
     cuts = stats["term_cuts"]
     n_partitions = stats["n_partitions"]
 
-    # wave plan first: a fully-built index (no pending partitions) must not
-    # pay a token-stream reconstruction just to discover there is no work
-    all_pids = [p for p in range(n_partitions)]
-    pending = [p for p in all_pids if p not in done]
-    if not pending:
+    def _result(built: int) -> dict:
         m = cat.read_manifest()
         _mark("manifest")
         return {
             "phase_sec": phase_t,
             "n_docs": stats["n_docs"],
             "avgdl": avgdl,
-            "partitions_built": 0,
+            "partitions_built": built,
             "partitions_skipped": len(done - {-1}),
             "manifest_rows": m.num_rows,
             "total_bytes": sum(
@@ -1122,12 +1180,17 @@ def build_index(
             ),
         }
 
+    # wave plan first: a fully-built index (no pending partitions) must not
+    # pay a token-stream reconstruction just to discover there is no work
+    pending = [p for p in range(n_partitions) if p not in done]
+    if not pending:
+        return _result(0)
+
     if tokens is None:
         # resume path: reuse the materialized token stream if it survived;
         # else rebuild it deterministically, joining the COMMITTED doc_id
         # assignment from doc_stats so segment contents are bit-identical to
         # the interrupted run.
-        tokens = None
         if os.path.exists(os.path.join(cat.tokens_tmp, "_SUCCESS")):
             cand = spark.read.parquet(cat.tokens_tmp)
             # a surviving stream from before the positional layout cannot
@@ -1143,36 +1206,9 @@ def build_index(
             _tokenize(docs_with_ids).write.mode("overwrite").parquet(cat.tokens_tmp)
             tokens = spark.read.parquet(cat.tokens_tmp)
 
-    # assign build partition + a dense integer term_id from the term
-    # dimension, so everything downstream shuffles and sorts on fixed-width
-    # ints: radix-friendly sort keys and a ~30% smaller shuffle than
-    # shipping term strings.  Vocabularies within the dict budget ride a
-    # broadcast dictionary (the same in-process-dimension pattern as the
-    # reference's STORE_WH_MAP dict, reference constants.py:17); above it
-    # NOTHING materializes the vocabulary in one place — tokens gain ids via
-    # a shuffle join and the encoder emits ids that a post-encode join maps
-    # back to strings.
-    if not os.path.exists(os.path.join(cat.term_dim, "_SUCCESS")):
-        # resume rebuild: reuse the COMMITTED cuts so pids match the
-        # already-written segments
-        _, _, dim, ranked_t, _ = build_vocab(
-            spark, cat.term_stats, n_partitions, cuts=cuts
-        )
-        dim.write.mode("overwrite").parquet(cat.term_dim)
-        ranked_t.unpersist()
-    term_dim_df = spark.read.parquet(cat.term_dim)
     n_terms = int(stats.get("n_terms", -1))
     if n_terms < 0:
-        n_terms = term_dim_df.count()
-
-    id_mode = n_terms > cfg.dict_budget
-    # shuffle-row diet (see make_arrow_encoder): pid rides only to the wave
-    # filter; sseg never ships (derived from doc_id in the kernel; sorting
-    # by doc_id subsumes it); tf/dl pack into one int32 when the corpus max
-    # doc length allows exact unpacking; doc_id narrows to int32 below 2^31
-    # docs.  12 fixed bytes/row here instead of 28.
-    max_dl = int(stats.get("max_dl", 1 << 30))
-    packed = 0 < max_dl < 4096
+        n_terms = spark.read.parquet(cat.term_stats).count()
     # multi-field per-field bound bake: (sorted field tid starts, avgdls)
     # for the encoder's term_id -> field-avgdl searchsorted.  Requires the
     # tid_lo ranges written by THIS builder version; a resume of an older
@@ -1194,131 +1230,35 @@ def build_index(
             np.array([p[0] for p in pairs], dtype=np.int64),
             np.array([p[1] for p in pairs], dtype=np.float64),
         )
-    doc32 = int(stats["n_docs"]) < (1 << 31)
-    doc_col = F.col("doc_id").cast("int").alias("doc_id") if doc32 else F.col("doc_id")
-    val_cols = (
-        [(F.col("tf") * 4096 + F.col("dl")).cast("int").alias("tfdl")]
-        if packed
-        else [F.col("tf"), F.col("dl")]
+    # the committed term dimension serves the id-mode joins; a resume that
+    # lost it rebuilds it from the COMMITTED cuts, so pids match the
+    # already-written segments
+    has_dim = os.path.exists(os.path.join(cat.term_dim, "_SUCCESS"))
+    writer = _SegmentWriter(
+        spark, cat.term_stats, n_terms, cuts, n_partitions=n_partitions,
+        range_docs=range_docs, block_docs=block_docs, avgdl=avgdl,
+        max_dl=int(stats.get("max_dl", 1 << 30)), max_doc_id=int(stats["n_docs"]) - 1,
+        positions=use_pos, dict_budget=cfg.dict_budget,
+        shuffle_n=cfg.shuffle_partitions, field_avgdl=field_avgdl,
+        dim=spark.read.parquet(cat.term_dim) if has_dim else None,
     )
-    if use_pos:
-        val_cols = val_cols + [F.col("positions")]
-    base_cols = [F.col("term_id"), F.col("pid"), doc_col]
-    if not id_mode:
-        pdf = term_dim_df.toPandas().sort_values("term_id").reset_index(drop=True)
-        terms_arr = pdf["term"].to_numpy(dtype=object)
-        pids_arr = pdf["pid"].to_numpy(dtype=np.int32)
-        pdf["term_id"] = pdf["term_id"].astype(np.int32)  # tighter shuffle rows
-        pid_map = spark.createDataFrame(pdf)
-        keyed = tokens.join(F.broadcast(pid_map), "term").select(*base_cols, *val_cols)
-        dict_b = spark.sparkContext.broadcast((terms_arr, pids_arr))
-        encoder = make_arrow_encoder(
-            avgdl=avgdl, block_docs=block_docs, range_docs=int(range_docs),
-            term_dict=dict_b, packed=packed, with_positions=use_pos,
-            field_avgdl=field_avgdl,
-        )
-    else:
-        keyed = tokens.join(term_dim_df, "term").select(*base_cols, *val_cols)
-        encoder = make_arrow_encoder(
-            avgdl=avgdl, block_docs=block_docs, range_docs=int(range_docs),
-            term_dict=None, packed=packed, with_positions=use_pos,
-            field_avgdl=field_avgdl,
-        )
-    sseg_key = F.expr(f"CAST(doc_id DIV {int(range_docs)} AS INT)")
-
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     # wave loop: commit manifest rows per wave; resume skips done partitions
     wave_size = max(1, -(-n_partitions // cfg.waves))
     waves = [pending[i : i + wave_size] for i in range(0, len(pending), wave_size)]
-
-    for w, wave_pids in enumerate(waves):
-        wave = (
-            keyed.filter(F.col("pid").isin(wave_pids))
-            .drop("pid")  # derivable at/after encode; keep the shuffle lean
-            .repartition(shuffle_n, F.col("term_id"), sseg_key)
-            .sortWithinPartitions("term_id", "doc_id")  # sseg monotone in doc_id
-            .mapInArrow(
-                encoder,
-                schema=(
-                    (SEGMENT_SCHEMA_IDS_POS if id_mode else SEGMENT_SCHEMA_POS)
-                    if use_pos
-                    else (SEGMENT_SCHEMA_IDS if id_mode else SEGMENT_SCHEMA)
-                ),
-            )
-        )
-        if id_mode:
-            # restore term string + pid: one join of BLOCK rows (≈ postings
-            # / block_docs) against the term dimension — linear, never a
-            # driver materialization
-            wave = wave.join(term_dim_df, "term_id").select(
-                "pid", "term", "sseg", "block_id", "first_doc", "last_doc",
-                "doc_count", "max_tf_norm", "nbytes", "postings",
-                *(["positions"] if use_pos else []),
-            )
-        wave.write.mode("overwrite").partitionBy("pid").parquet(cat.segments)
-        _mark(f"wave{w}_segments")
-        # lineage from what actually landed on disk
-        landed = (
-            spark.read.parquet(cat.segments)
-            .filter(F.col("pid").isin(wave_pids))
-            .groupBy("pid")
-            .agg(
-                F.min("term").alias("term_lo"),
-                F.max("term").alias("term_hi"),
-                F.sum("doc_count").alias("postings_count"),
-                F.sum("nbytes").alias("bytes"),
-            )
-            .collect()
-        )
-        rows = [
-            {
-                "run_id": run_id,
-                "partition_id": int(r["pid"]),
-                "segment_id": f"{run_id}-p{int(r['pid'])}",
-                "input_split": f"{corpus_path}#wave{w}",
-                "term_lo": r["term_lo"],
-                "term_hi": r["term_hi"],
-                "postings_count": int(r["postings_count"]),
-                "bytes": int(r["bytes"]),
-                "status": "done",
-            }
-            for r in landed
-        ]
-        # partitions that produced no segments still count as done
-        landed_pids = {int(r["pid"]) for r in landed}
-        for p in wave_pids:
-            if p not in landed_pids:
-                rows.append(
-                    {
-                        "run_id": run_id,
-                        "partition_id": p,
-                        "segment_id": f"{run_id}-p{p}",
-                        "input_split": f"{corpus_path}#wave{w}",
-                        "term_lo": "",
-                        "term_hi": "",
-                        "postings_count": 0,
-                        "bytes": 0,
-                        "status": "done",
-                    }
-                )
-        cat.append_manifest(rows)
-        if fail_after_wave is not None and w + 1 >= fail_after_wave:
-            raise RuntimeError(f"injected failure after wave {w}")
+    try:
+        for w, wave_pids in enumerate(waves):
+            writer.write(tokens, cat.segments, pids=wave_pids)
+            _mark(f"wave{w}_segments")
+            cat.append_manifest(writer.lineage(
+                cat.segments, run_id, run_id, f"{corpus_path}#wave{w}", pids=wave_pids
+            ))
+            if fail_after_wave is not None and w + 1 >= fail_after_wave:
+                raise RuntimeError(f"injected failure after wave {w}")
+    finally:
+        writer.close()
 
     import shutil
 
     shutil.rmtree(cat.tokens_tmp, ignore_errors=True)
-    m = cat.read_manifest()
-    _mark("manifest")
-    return {
-        "phase_sec": phase_t,
-        "n_docs": stats["n_docs"],
-        "avgdl": avgdl,
-        "partitions_built": len(pending),
-        "partitions_skipped": len(done - {-1}),
-        "manifest_rows": m.num_rows,
-        "total_bytes": sum(
-            b for b, s in zip(m.column("bytes").to_pylist(), m.column("status").to_pylist()) if s == "done"
-        ),
-    }
+    return _result(len(pending))

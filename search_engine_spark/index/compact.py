@@ -5,9 +5,11 @@ Lucene's background merge, as one Spark job: an index grown by
 ``avgdl``-drift correction (``wand_bound_scale``) that progressively loosens
 block-max pruning.  Compaction rewrites the index WITHOUT the corpus text —
 decode every generation's posting blocks back to (term, doc_id, tf, dl)
-rows, re-encode them on the same frozen doc-id grid with the CURRENT
+rows, re-encode them through the builder's one segment writer
+(``builder._SegmentWriter``) on the same frozen doc-id grid with the CURRENT
 cumulative avgdl, and emit a single-generation batch-layout index whose
-bound scale is exactly 1 again.
+bound scale is exactly 1 again.  Only the generations corpus_stats.json
+commits are read (``IndexCatalog.read_committed``).
 
 Cost shape at scale: one pass over segment bytes (decode, distributed) +
 the standard (term, sseg) shuffle of fixed-width posting rows + one encode
@@ -24,77 +26,45 @@ the same batch BM25 SQL oracle.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import IndexCatalog
-from .builder import (
-    SEGMENT_SCHEMA,
-    SEGMENT_SCHEMA_IDS,
-    SEGMENT_SCHEMA_IDS_POS,
-    SEGMENT_SCHEMA_POS,
-    build_vocab,
-    make_arrow_encoder,
-)
+from .builder import TOKENS_SCHEMA, TOKENS_SCHEMA_POS, _SegmentWriter
 
 
 def _decode_blocks(it):
-    from .codec import decode_postings
-
-    for pdf in it:
-        if len(pdf) == 0:
-            continue
-        terms, ids, tfs, dls = [], [], [], []
-        tcol = pdf["term"].to_numpy(dtype=object)
-        for i, buf in enumerate(pdf["postings"]):
-            d, tf, dl = decode_postings(buf)
-            terms.append(np.full(len(d), tcol[i], dtype=object))
-            ids.append(d)
-            tfs.append(tf)
-            dls.append(dl)
-        yield pd.DataFrame(
-            {
-                "term": np.concatenate(terms),
-                "doc_id": np.concatenate(ids),
-                "tf": np.concatenate(tfs).astype(np.int32),
-                "dl": np.concatenate(dls).astype(np.int32),
-            }
-        )
-
-
-def _decode_blocks_pos(it):
-    """Positional twin of :func:`_decode_blocks`: also splits each block's
-    position blob back into per-(term, doc) ``array<int>`` lists so the
-    encoder can re-slice them for the merged blocks."""
+    """Segment blocks (term, postings[, positions]) back to posting rows
+    (term, doc_id, tf, dl[, positions]); a block's position blob splits
+    into per-(term, doc) ``array<int>`` lists so the encoder can re-slice
+    them for the merged blocks."""
     from .codec import decode_position_lists, decode_postings
 
     for pdf in it:
         if len(pdf) == 0:
             continue
+        pcol = pdf["positions"] if "positions" in pdf.columns else None
         terms, ids, tfs, dls, poss = [], [], [], [], []
-        tcol = pdf["term"].to_numpy(dtype=object)
-        pcol = pdf["positions"]
-        for i, buf in enumerate(pdf["postings"]):
+        for i, (term, buf) in enumerate(zip(pdf["term"], pdf["postings"])):
             d, tf, dl = decode_postings(buf)
-            flat = decode_position_lists(pcol.iat[i], tf)
-            terms.append(np.full(len(d), tcol[i], dtype=object))
+            terms.append(np.full(len(d), term, dtype=object))
             ids.append(d)
             tfs.append(tf)
             dls.append(dl)
-            poss.extend(np.split(flat.astype(np.int32), np.cumsum(tf)[:-1]))
-        yield pd.DataFrame(
-            {
-                "term": np.concatenate(terms),
-                "doc_id": np.concatenate(ids),
-                "tf": np.concatenate(tfs).astype(np.int32),
-                "dl": np.concatenate(dls).astype(np.int32),
-                "positions": poss,
-            }
-        )
+            if pcol is not None:
+                flat = decode_position_lists(pcol.iat[i], tf)
+                poss.extend(np.split(flat.astype(np.int32), np.cumsum(tf)[:-1]))
+        out = pd.DataFrame({
+            "term": np.concatenate(terms),
+            "doc_id": np.concatenate(ids),
+            "tf": np.concatenate(tfs).astype(np.int32),
+            "dl": np.concatenate(dls).astype(np.int32),
+        })
+        if pcol is not None:
+            out["positions"] = poss
+        yield out
 
 
 def compact_index(
@@ -128,7 +98,7 @@ def compact_index(
     # doc stats: the union of generations IS the batch table; the doc-values
     # sidecar columns ride along unchanged
     dv_cols = tuple(stats.get("docvalues_cols") or ())
-    doc_stats = spark.read.parquet(cat.doc_stats).select(
+    doc_stats = cat.read_committed(spark, cat.doc_stats, stats).select(
         "doc_id", "url", "dl", *dv_cols
     )
     doc_stats.write.mode("overwrite").parquet(out.doc_stats)
@@ -142,7 +112,7 @@ def compact_index(
 
     # term stats: per-generation df/cf deltas collapse to the batch form
     ts = (
-        spark.read.parquet(cat.term_stats)
+        cat.read_committed(spark, cat.term_stats, stats)
         .groupBy("term")
         .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
     )
@@ -151,90 +121,22 @@ def compact_index(
     ).write.mode("overwrite").parquet(out.term_stats)
     n_terms = spark.read.parquet(out.term_stats).count()
 
-    # postings: decode every generation's blocks, re-key on the SAME frozen
-    # cuts, re-encode with the CURRENT avgdl (scale returns to exactly 1).
-    # Vocabularies within dict_budget ride a broadcast dictionary; above it
-    # NOTHING materializes the vocabulary in one place — the same two-path
-    # policy as build_index (builder.py id_mode).
-    id_mode = n_terms > dict_budget
-    if id_mode:
-        _, _, dim, ranked_t, _ = build_vocab(
-            spark, out.term_stats, n_partitions, cuts=cuts
-        )
-        term_dim_df = dim.persist()
-        term_dim_df.count()
-        ranked_t.unpersist()
-        pid_map = term_dim_df.select("term", "term_id")
-        dict_b = None
-    else:
-        vocab = (
-            spark.read.parquet(out.term_stats).select("term").toPandas()
-            .sort_values("term").reset_index(drop=True)
-        )
-        terms_arr = vocab["term"].to_numpy(dtype=object)
-        cuts_arr = np.array(cuts, dtype=object)
-        pids_arr = np.searchsorted(cuts_arr, terms_arr, side="left").astype(np.int32)
-        vocab["term_id"] = np.arange(len(vocab), dtype=np.int32)
-        pid_map = F.broadcast(spark.createDataFrame(vocab[["term", "term_id"]]))
-        dict_b = spark.sparkContext.broadcast((terms_arr, pids_arr))
-
-    seg_in = spark.read.parquet(cat.segments)
+    # postings: decode every generation's blocks, re-encode them through
+    # the one segment writer on the SAME frozen cuts and grid with the
+    # CURRENT avgdl (scale returns to exactly 1)
+    seg_in = cat.read_committed(spark, cat.segments, stats)
     use_pos = "positions" in seg_in.columns
-    if use_pos:
-        rows = seg_in.select("term", "postings", "positions").mapInPandas(
-            _decode_blocks_pos,
-            schema="term string, doc_id long, tf int, dl int, positions array<int>",
-        )
-    else:
-        rows = seg_in.select("term", "postings").mapInPandas(
-            _decode_blocks, schema="term string, doc_id long, tf int, dl int"
-        )
-    packed = 0 < max_dl < 4096
-    doc32 = max_doc_id < (1 << 31)
-    doc_col = F.col("doc_id").cast("int").alias("doc_id") if doc32 else F.col("doc_id")
-    val_cols = (
-        [(F.col("tf") * 4096 + F.col("dl")).cast("int").alias("tfdl")]
-        if packed
-        else [F.col("tf"), F.col("dl")]
+    rows = seg_in.select("term", "postings", *(["positions"] if use_pos else [])).mapInPandas(
+        _decode_blocks, schema=TOKENS_SCHEMA_POS if use_pos else TOKENS_SCHEMA
     )
-    if use_pos:
-        val_cols = val_cols + [F.col("positions")]
-    keyed = rows.join(pid_map, "term").select(F.col("term_id"), doc_col, *val_cols)
-    encoder = make_arrow_encoder(
-        avgdl=avgdl, block_docs=block_docs, range_docs=range_docs,
-        term_dict=dict_b, packed=packed, with_positions=use_pos,
+    writer = _SegmentWriter(
+        spark, out.term_stats, n_terms, cuts, n_partitions=n_partitions,
+        range_docs=range_docs, block_docs=block_docs, avgdl=avgdl, max_dl=max_dl,
+        max_doc_id=max_doc_id, positions=use_pos, dict_budget=dict_budget,
     )
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sseg_key = F.expr(f"CAST(doc_id DIV {int(range_docs)} AS INT)")
-    encoded = (
-        keyed.repartition(shuffle_n, F.col("term_id"), sseg_key)
-        .sortWithinPartitions("term_id", "doc_id")
-        .mapInArrow(
-            encoder,
-            schema=(
-                (SEGMENT_SCHEMA_IDS_POS if id_mode else SEGMENT_SCHEMA_POS)
-                if use_pos
-                else (SEGMENT_SCHEMA_IDS if id_mode else SEGMENT_SCHEMA)
-            ),
-        )
-    )
-    if id_mode:
-        encoded = encoded.join(term_dim_df, "term_id").select(
-            "pid", "term", "sseg", "block_id", "first_doc", "last_doc",
-            "doc_count", "max_tf_norm", "nbytes", "postings",
-            *(["positions"] if use_pos else []),
-        )
-    encoded.write.mode("overwrite").partitionBy("pid").parquet(out.segments)
-    if id_mode:
-        term_dim_df.unpersist()
-
-    landed = (
-        spark.read.parquet(out.segments)
-        .groupBy("pid")
-        .agg(F.sum("doc_count").alias("pc"), F.sum("nbytes").alias("b"),
-             F.min("term").alias("lo"), F.max("term").alias("hi"))
-        .collect()
-    )
+    writer.write(rows, out.segments)
+    writer.close()
+    landed = writer.lineage(out.segments, "compact-0", "compact", f"compacted:{index_dir}")
     out.write_corpus_stats(
         {
             "n_docs": n_docs,
@@ -242,7 +144,7 @@ def compact_index(
             "range_docs": range_docs,
             "block_docs": block_docs,
             "term_cuts": cuts,
-            "n_partitions": int(stats["n_partitions"]),
+            "n_partitions": n_partitions,
             "n_terms": int(n_terms),
             "max_dl": max_dl,
             "corpus_path": f"compacted:{index_dir}",
@@ -251,28 +153,10 @@ def compact_index(
             **({"docvalues_cols": list(dv_cols)} if dv_cols else {}),
         }
     )
-    out.append_manifest(
-        [
-            {
-                "run_id": "compact-0",
-                "partition_id": int(r["pid"]),
-                "segment_id": f"compact-p{int(r['pid'])}",
-                "input_split": f"compacted:{index_dir}",
-                "term_lo": r["lo"],
-                "term_hi": r["hi"],
-                "postings_count": int(r["pc"]),
-                "bytes": int(r["b"]),
-                "status": "done",
-            }
-            for r in landed
-        ]
-    )
+    out.append_manifest(landed)
     return {
         "n_docs": n_docs,
-        "postings": int(sum(int(r["pc"]) for r in landed)),
-        "bytes": int(sum(int(r["b"]) for r in landed)),
-        "generations_in": len(
-            [d for d in os.listdir(os.path.join(index_dir, "gen_stats"))
-             if d.startswith("gen=")]
-        ) if os.path.isdir(os.path.join(index_dir, "gen_stats")) else 1,
+        "postings": sum(r["postings_count"] for r in landed),
+        "bytes": sum(r["bytes"] for r in landed),
+        "generations_in": len(stats.get("generations", [0])),
     }

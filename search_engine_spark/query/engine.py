@@ -716,14 +716,20 @@ class SearchEngine:
         # per-doc attributes stored on doc_stats for Atlas range/equals
         # filter clauses.  Empty = no doc values baked.
         self.docvalues_cols: tuple = tuple(self.stats.get("docvalues_cols") or ())
-        self._segments_df = spark.read.parquet(self.cat.segments)
+        # every table read is pinned here, restricted to the generations
+        # corpus_stats.json commits (IndexCatalog.read_committed), so the
+        # engine serves exactly the snapshot its stats describe
+        self._segments_df = self.cat.read_committed(spark, self.cat.segments, self.stats)
         # doc_stats pinned at construction like the segments frame: dv
         # filters / field sorts / facets / url hydration all read it, and
         # re-planning spark.read.parquet per query pays a footer/file-listing
         # round trip that a serving tier multiplexing queries cannot afford.
         # (An index grown by ingest is served by a NEW engine instance —
         # the existing contract for every cached structure here.)
-        self._doc_stats_df = spark.read.parquet(self.cat.doc_stats)
+        self._doc_stats_df = self.cat.read_committed(spark, self.cat.doc_stats, self.stats)
+        # term stats likewise: the df lookups and term expansions above the
+        # dictionary cache all read it
+        self._term_stats_df = self.cat.read_committed(spark, self.cat.term_stats, self.stats)
         # small term dicts: one-time sorted load, then O(log V) lookups with
         # zero Spark jobs per query (the reference's Atlas term dictionary is
         # equally memory-resident inside Lucene).  Incremental indexes store
@@ -737,11 +743,10 @@ class SearchEngine:
         self._fuzzy_cache: dict[tuple, list[str]] = {}
         # lazy per-dictionary-term Soundex keys (expand_phonetic)
         self._phonetic_keys: np.ndarray | None = None
-        tdf = spark.read.parquet(self.cat.term_stats)
-        n_terms = tdf.count()
+        n_terms = self._term_stats_df.count()
         if n_terms <= _TERM_DICT_CACHE_MAX:
             pdf = (
-                tdf.groupBy("term").agg(F.sum("df").alias("df"))
+                self._term_stats_df.groupBy("term").agg(F.sum("df").alias("df"))
                 .toPandas().sort_values("term")
             )
             self._terms_arr = pdf["term"].to_numpy(dtype=object)
@@ -767,7 +772,7 @@ class SearchEngine:
                     out[t] = int(self._dfs_arr[i])
             return out
         rows = (
-            self.spark.read.parquet(self.cat.term_stats)
+            self._term_stats_df
             .filter(F.col("term").isin(list(terms)))
             .groupBy("term").agg(F.sum("df").alias("df"))
             .collect()
@@ -783,7 +788,7 @@ class SearchEngine:
             out = [str(t) for t in self._terms_arr[lo:hi] if str(t).startswith(prefix)]
             return out[:max_expansions] if max_expansions else out
         q = (
-            self.spark.read.parquet(self.cat.term_stats)
+            self._term_stats_df
             .filter(F.col("term").startswith(prefix))
             .select("term")
             .distinct()
@@ -848,7 +853,7 @@ class SearchEngine:
             ]
         else:
             rows = (
-                self.spark.read.parquet(self.cat.term_stats)
+                self._term_stats_df
                 .select("term").distinct()
                 .filter(_fuzzy_term_cond(F.col("term"), term, fuzzy, transpositions))
                 .collect()
@@ -904,7 +909,7 @@ class SearchEngine:
             return out[: max_expansions or None]
         suffix = F.substring(F.col("term"), plen + 1, 1_000_000)
         q = (
-            self.spark.read.parquet(self.cat.term_stats)
+            self._term_stats_df
             .select("term").distinct()
             .filter(F.col("term").startswith(kpfx) & suffix.rlike(f"^(?:{rx_src})$"))
             .orderBy("term")
@@ -951,7 +956,7 @@ class SearchEngine:
             ]
             cond = (F.least(*exprs) if len(exprs) > 1 else exprs[0]) <= fuzzy
             rows = (
-                self.spark.read.parquet(self.cat.term_stats)
+                self._term_stats_df
                 .select("term").distinct().filter(cond).collect()
             )
             out = sorted(r["term"] for r in rows)
@@ -989,7 +994,7 @@ class SearchEngine:
             out = [str(t) for t in self._terms_arr[self._phonetic_keys == want]]
         else:
             rows = (
-                self.spark.read.parquet(self.cat.term_stats)
+                self._term_stats_df
                 .select("term").distinct()
                 .filter(soundex_key_col(F.col("term")) == F.lit(want))
                 .collect()
@@ -1481,7 +1486,7 @@ class SearchEngine:
         else:
             suffix = F.substring(F.col("term"), len(prefix) + 1, 1_000_000)
             rows = (
-                self.spark.read.parquet(self.cat.term_stats)
+                self._term_stats_df
                 .select("term").distinct()
                 .filter(
                     F.col("term").startswith(prefix)

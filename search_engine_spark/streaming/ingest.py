@@ -25,7 +25,11 @@ generations merged at read time.  This module is that design on Spark:
   (count of cuts < term == the engine's ``searchsorted(cuts, t, "left")``),
   so cross-generation WAND range bounds stay summable and term->pid pruning
   stays exact.  At cluster scale set ``expected_docs`` so the grid is sized
-  for the corpus the stream will become, not the first batch.
+  for the corpus the stream will become, not the first batch.  Blocks are
+  encoded by the batch builder's own segment writer
+  (``builder._SegmentWriter``: vocabulary policy, shuffle, encode, lineage),
+  so a single-generation ingest writes the segment table a build of the
+  same batch writes, byte for byte.
 - **BM25 exactness under growth**: scores decode tf+dl from postings and
   apply the CURRENT cumulative avgdl/N/df at query time, so every exact
   path (driver, sort, grouped) returns precisely what a full rebuild over
@@ -51,27 +55,24 @@ order can differ (both pinned by tests).
 from __future__ import annotations
 
 import os
+import shutil
 import time
 from dataclasses import dataclass
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import IndexCatalog
 from ..index.builder import (
+    _BCAST_DOCS_MAX,
     BuildConfig,
+    _resolve_tokenizer,
+    _SegmentWriter,
     assign_doc_ids,
     build_vocab,
-    make_arrow_encoder,
-    sampled_nfc_ok,
     tokens_from_docs,
     tokens_from_docs_pandas,
     with_extracted_text,
-    SEGMENT_SCHEMA,
-    SEGMENT_SCHEMA_IDS,
-    SEGMENT_SCHEMA_IDS_POS,
-    SEGMENT_SCHEMA_POS,
 )
 
 
@@ -113,11 +114,6 @@ def _read_frozen(index_dir: str) -> dict | None:
         return json.load(f)
 
 
-# same broadcast budget as build_index's url->doc_id join: above it the map
-# itself is too big to ship to every executor and the join must shuffle
-_BCAST_DOCS_MAX = 20_000_000
-
-
 def _committed_gens(spark: SparkSession, index_dir: str, before: int | None = None):
     """Rows of gen_stats for committed generations (optionally gen < before).
 
@@ -142,20 +138,6 @@ def _committed_gens(spark: SparkSession, index_dir: str, before: int | None = No
     if before is not None:
         df = df.filter(F.col("gen") < int(before))
     return sorted(df.collect(), key=lambda r: int(r["gen"]))
-
-
-def _resolve_tokenizer(docs: DataFrame, cfg: BuildConfig) -> str:
-    """Resolve "auto" to a concrete analyzer choice via the NFC sample."""
-    if cfg.tokenizer != "auto":
-        return cfg.tokenizer
-    return "jvm" if sampled_nfc_ok(docs) else "pandas"
-
-
-def _tokenize_like_builder(
-    docs: DataFrame, tokenizer: str, positions: bool = False
-) -> DataFrame:
-    fn = tokens_from_docs if tokenizer == "jvm" else tokens_from_docs_pandas
-    return fn(docs, positions=positions)
 
 
 @dataclass
@@ -246,17 +228,14 @@ def ingest_batch(
     # resolves it once and records it; later generations honor the record
     # (an explicit pin that disagrees raises; indexes frozen before this
     # field existed fall back to the old per-batch sampling).
-    if frozen_pre is None:
-        tokenizer = _resolve_tokenizer(docs, cfg)
-    else:
-        tokenizer = frozen_pre.get("tokenizer")
-        if tokenizer is None:
-            tokenizer = _resolve_tokenizer(docs, cfg)
-        elif cfg.tokenizer not in ("auto", tokenizer):
-            raise ValueError(
-                f"index at {index_dir} was frozen with tokenizer={tokenizer!r}; "
-                f"ingest cfg.tokenizer={cfg.tokenizer!r} does not match"
-            )
+    tokenizer = (frozen_pre or {}).get("tokenizer")
+    if tokenizer is None:
+        tokenizer = _resolve_tokenizer(docs, cfg.tokenizer)
+    elif cfg.tokenizer not in ("auto", tokenizer):
+        raise ValueError(
+            f"index at {index_dir} was frozen with tokenizer={tokenizer!r}; "
+            f"ingest cfg.tokenizer={cfg.tokenizer!r} does not match"
+        )
     # doc-values sidecar columns are frozen index geometry like the
     # tokenizer: generation 0's cfg decides them; later generations honor
     # the record (an explicit disagreeing pin raises), and every batch must
@@ -300,8 +279,9 @@ def ingest_batch(
     # Every downstream consumer (doc stats, term stats, encode) re-reads
     # column-pruned.
     tokens_tmp = _gen_dir(os.path.join(index_dir, "tokens_tmp"), epoch)
-    _tokenize_like_builder(
-        with_ids.select("doc_id", "url", "text"), tokenizer, positions=use_pos
+    tokenize = tokens_from_docs if tokenizer == "jvm" else tokens_from_docs_pandas
+    tokenize(
+        with_ids.select("doc_id", "url", "text"), positions=use_pos
     ).write.mode("overwrite").parquet(tokens_tmp)
     tokens = spark.read.parquet(tokens_tmp)
     _mark("tokenize")
@@ -337,8 +317,6 @@ def ingest_batch(
     # size is a parquet row-count — no re-shuffle of the token table
     _mark("term_stats")
     n_batch_terms = spark.read.parquet(gen_ts_path).count()
-    id_mode = n_batch_terms > cfg.dict_budget
-    gen0_dim = None
 
     # frozen corpus geometry: generation 0 computes it and commits it to
     # frozen.json BEFORE encoding anything (atomic rename), every later
@@ -348,18 +326,15 @@ def ingest_batch(
     # geometry (replays recompute identical values from this gen's term
     # stats, but only ever run if the marker is absent).
     frozen = _read_frozen(index_dir)
+    gen0_dim = gen0_ranked = None
     if frozen is None:
         n_partitions = cfg.n_partitions
-        cuts, _, dim0, ranked_t, _ = build_vocab(
+        # the (term, term_id, pid) dim this pass computes alongside the cuts
+        # is exactly what an id-mode encode needs: hand it to the writer
+        # instead of paying the distributed vocabulary pass a second time
+        cuts, _, gen0_dim, gen0_ranked, _ = build_vocab(
             spark, gen_ts_path, n_partitions
         )
-        if id_mode:
-            # the dim this call already computed (keyed by THESE cuts) is
-            # exactly what the id_mode encode needs — keep it instead of
-            # paying the distributed vocabulary pass a second time
-            gen0_dim = dim0.persist()
-            gen0_dim.count()
-        ranked_t.unpersist()
         size_basis = expected_docs or batch_n
         frozen = {
             "term_cuts": cuts,
@@ -373,130 +348,35 @@ def ingest_batch(
             "docvalues_cols": list(dv_cols),
         }
         _write_frozen(index_dir, frozen)
-    cuts = list(frozen["term_cuts"])
-    range_docs = int(frozen["range_docs"])
-    block_docs = int(frozen["block_docs"])
-    n_partitions = int(frozen["n_partitions"])
 
     # cumulative avgdl at encode time — recorded so the engine can rescale
     # this generation's max_tf_norm bounds if avgdl later drifts
     avgdl_build = (prior_dl + batch_dl) / max(1, prior_n + batch_n)
 
-    # batch vocabulary -> (term, term_id, pid) with the FROZEN cuts; the
-    # term->pid rule is count(cuts < term), identical to the engine's
-    # searchsorted(cuts, term, side="left") pruning rule.  The same two-path
-    # policy as build_index/compact_index: vocabularies within dict_budget
-    # broadcast; above it NOTHING materializes the batch vocabulary in one
-    # place (a catch-up batch draining a web-scale backlog brings a
-    # web-scale vocabulary with it) — ids ride a shuffle join and a
-    # post-encode join on the distributed dim restores term + pid.
-    if id_mode:
-        if gen0_dim is not None:
-            term_dim_df = gen0_dim
-        else:
-            _, _, dim, ranked_t, _ = build_vocab(
-                spark, gen_ts_path, n_partitions, cuts=cuts
-            )
-            term_dim_df = dim.persist()
-            term_dim_df.count()
-            ranked_t.unpersist()
-        pid_map = term_dim_df.select("term", "term_id")
-        dict_b = None
-    else:
-        cuts_arr = np.array(cuts, dtype=object)
-        # the landed per-gen term stats are the batch vocabulary (one row
-        # per term) — a column-pruned parquet read, not a token re-shuffle
-        vocab = (
-            spark.read.parquet(gen_ts_path).select("term")
-            .toPandas().sort_values("term")
-        )
-        terms_arr = vocab["term"].to_numpy(dtype=object)
-        pids_arr = np.searchsorted(cuts_arr, terms_arr, side="left").astype(np.int32)
-        vocab = vocab.reset_index(drop=True)
-        vocab["term_id"] = np.arange(len(vocab), dtype=np.int32)
-        pid_map = F.broadcast(spark.createDataFrame(vocab[["term", "term_id"]]))
-        dict_b = spark.sparkContext.broadcast((terms_arr, pids_arr))
-
+    # the batch vocabulary keyed with the FROZEN cuts, encoded on the frozen
+    # grid by the one segment writer (builder._SegmentWriter)
+    writer = _SegmentWriter(
+        spark, gen_ts_path, n_batch_terms, list(frozen["term_cuts"]),
+        n_partitions=int(frozen["n_partitions"]), range_docs=int(frozen["range_docs"]),
+        block_docs=int(frozen["block_docs"]), avgdl=avgdl_build, max_dl=batch_max_dl,
+        max_doc_id=batch_max_id, positions=use_pos, dict_budget=cfg.dict_budget,
+        shuffle_n=cfg.shuffle_partitions, dim=gen0_dim,
+    )
     _mark("vocab")
-    packed = 0 < batch_max_dl < 4096
-    doc32 = batch_max_id < (1 << 31)
-    doc_col = F.col("doc_id").cast("int").alias("doc_id") if doc32 else F.col("doc_id")
-    val_cols = (
-        [(F.col("tf") * 4096 + F.col("dl")).cast("int").alias("tfdl")]
-        if packed
-        else [F.col("tf"), F.col("dl")]
-    )
-    if use_pos:
-        val_cols = val_cols + [F.col("positions")]
-    keyed = tokens.join(pid_map, "term").select(
-        F.col("term_id"), doc_col, *val_cols
-    )
-    encoder = make_arrow_encoder(
-        avgdl=avgdl_build, block_docs=block_docs, range_docs=range_docs,
-        term_dict=dict_b, packed=packed, with_positions=use_pos,
-    )
-    shuffle_n = cfg.shuffle_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
-    sseg_key = F.expr(f"CAST(doc_id DIV {int(range_docs)} AS INT)")
-    if id_mode:
-        enc_schema = SEGMENT_SCHEMA_IDS_POS if use_pos else SEGMENT_SCHEMA_IDS
-    else:
-        enc_schema = SEGMENT_SCHEMA_POS if use_pos else SEGMENT_SCHEMA
-    encoded = (
-        keyed.repartition(shuffle_n, F.col("term_id"), sseg_key)
-        .sortWithinPartitions("term_id", "doc_id")
-        .mapInArrow(encoder, schema=enc_schema)
-    )
-    if id_mode:
-        encoded = encoded.join(term_dim_df, "term_id").select(
-            "pid", "term", "sseg", "block_id", "first_doc", "last_doc",
-            "doc_count", "max_tf_norm", "nbytes", "postings",
-            *(["positions"] if use_pos else []),
-        )
-    (
-        encoded.write.mode("overwrite")
-        .partitionBy("pid")
-        .parquet(_gen_dir(cat.segments, epoch))
-    )
+    seg_dir = _gen_dir(cat.segments, epoch)
+    writer.write(tokens, seg_dir)
     _mark("encode")
-    if id_mode:
-        term_dim_df.unpersist()
-    import shutil
-
+    writer.close()
+    if gen0_ranked is not None:
+        gen0_ranked.unpersist()
     shutil.rmtree(tokens_tmp, ignore_errors=True)
 
     # lineage (observability; a replay after this append but before the
     # gen_stats commit can duplicate rows — harmless, documented)
-    landed = (
-        spark.read.parquet(_gen_dir(cat.segments, epoch))
-        .groupBy("pid")
-        .agg(
-            F.min("term").alias("term_lo"),
-            F.max("term").alias("term_hi"),
-            F.sum("doc_count").alias("postings_count"),
-            F.sum("nbytes").alias("bytes"),
-        )
-        .collect()
-    )
+    rows = writer.lineage(seg_dir, f"stream-epoch{epoch}", f"gen{epoch}", f"stream-epoch{epoch}")
     _mark("lineage")
-    postings = sum(int(r["postings_count"]) for r in landed)
-    cat.append_manifest(
-        [
-            {
-                "run_id": f"stream-epoch{epoch}",
-                "partition_id": int(r["pid"]),
-                "segment_id": f"gen{epoch}-p{int(r['pid'])}",
-                "input_split": f"stream-epoch{epoch}",
-                "term_lo": r["term_lo"],
-                "term_hi": r["term_hi"],
-                "postings_count": int(r["postings_count"]),
-                "bytes": int(r["bytes"]),
-                "status": "done",
-            }
-            for r in landed
-        ]
-    )
+    postings = sum(r["postings_count"] for r in rows)
+    cat.append_manifest(rows)
 
     # THE commit point: gen_stats lands last, so its presence implies every
     # other artifact of this generation is complete

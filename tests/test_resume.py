@@ -11,26 +11,31 @@ import pytest
 
 
 def _segment_fingerprint(spark, index_dir):
-    """Deterministic digest of the whole segment table."""
+    """Deterministic digest of the whole segment table: every column but
+    the ``gen`` partition key, ``max_tf_norm`` by its exact bits (``%a``)
+    and the blobs by their sha2."""
     from pyspark.sql import functions as F
 
     from search_engine_spark.catalog import IndexCatalog
 
     cat = IndexCatalog(index_dir)
     df = spark.read.parquet(cat.segments)
+    blobs = ["postings"] + (["positions"] if "positions" in df.columns else [])
     return (
         df.select(
             F.sha2(
                 F.concat_ws(
                     "|",
+                    "pid",
                     "term",
                     "sseg",
                     "block_id",
                     "first_doc",
                     "last_doc",
                     "doc_count",
-                    F.format_number("max_tf_norm", 12),
-                    F.sha2(F.col("postings"), 256),
+                    F.format_string("%a", "max_tf_norm"),
+                    "nbytes",
+                    *[F.sha2(F.col(c), 256) for c in blobs],
                 ),
                 256,
             ).alias("h")
@@ -115,24 +120,41 @@ def test_manifest_append_is_atomic(tmp_path):
     assert cat.completed_partitions() == {1}
 
 
-def test_distributed_vocab_build_identical_to_broadcast(spark, webtext_tiny, tmp_path):
-    """dict_budget=0 forces the distributed vocabulary path (shuffle-join
-    term ids, id-emitting encoder, post-encode string join); the resulting
-    segment table must be byte-identical to the broadcast-dictionary build.
+def test_distributed_vocab_build_identical_to_broadcast(
+    spark, webtext_tiny, index_tiny, sf_dv_index, tmp_path
+):
+    """The three segment writers agree byte for byte, without and with
+    positions.  dict_budget=0 forces the distributed vocabulary path
+    (shuffle-join term ids, id-emitting encoder, post-encode string join);
+    a single-generation ``ingest_batch`` of the same corpus and
+    ``compact_index`` of the build write through the same encoder.  All
+    four segment tables must equal the broadcast-dictionary build's
+    (``index_tiny``, or ``sf_dv_index`` with positions: the same layout;
+    doc values never reach the segments).
     """
     from search_engine_spark.index.builder import BuildConfig, build_index
-
-    kw = dict(block_docs=64, target_ranges=16, min_range_docs=64, n_partitions=8, waves=2)
-    d_bcast = str(tmp_path / "idx_bcast")
-    d_dist = str(tmp_path / "idx_dist")
-    build_index(spark, webtext_tiny, d_bcast, cfg=BuildConfig(**kw))
-    build_index(spark, webtext_tiny, d_dist, cfg=BuildConfig(**kw, dict_budget=0))
-    assert _segment_fingerprint(spark, d_bcast) == _segment_fingerprint(spark, d_dist)
-
-    # the distributed index serves queries identically
+    from search_engine_spark.index.compact import compact_index
     from search_engine_spark.query.engine import SearchEngine
+    from search_engine_spark.streaming.ingest import ingest_batch
 
-    a = SearchEngine(spark, d_bcast).search("oil", k=10, mode="wand")
-    b = SearchEngine(spark, d_dist).search("oil", k=10, mode="wand")
-    assert list(a.page["doc_id"]) == list(b.page["doc_id"])
-    assert a.total == b.total
+    for positions, d_bcast in ((False, index_tiny), (True, sf_dv_index)):
+        kw = dict(block_docs=64, target_ranges=16, min_range_docs=64, n_partitions=8,
+                  positions=positions)
+        d_dist = str(tmp_path / f"idx_dist_{positions}")
+        d_ingest = str(tmp_path / f"idx_ingest_{positions}")
+        d_compact = str(tmp_path / f"idx_compact_{positions}")
+        build_index(spark, webtext_tiny, d_dist, cfg=BuildConfig(**kw, waves=2, dict_budget=0))
+        r = ingest_batch(spark, spark.read.parquet(webtext_tiny), d_ingest, 0,
+                         cfg=BuildConfig(**kw))
+        assert not r.skipped and r.n_docs == 1000
+        compact_index(spark, d_bcast, d_compact)
+        want = _segment_fingerprint(spark, d_bcast)
+        assert want["n"] > 0
+        for d in (d_dist, d_ingest, d_compact):
+            assert _segment_fingerprint(spark, d) == want, d
+
+        # the distributed index serves queries identically
+        a = SearchEngine(spark, d_bcast).search("oil", k=10, mode="wand")
+        b = SearchEngine(spark, d_dist).search("oil", k=10, mode="wand")
+        assert list(a.page["doc_id"]) == list(b.page["doc_id"])
+        assert a.total == b.total

@@ -207,6 +207,38 @@ def test_crash_between_marker_and_stats_refresh_heals_on_replay(spark, corpora):
     assert SearchEngine(spark, idx).n_docs == 1000
 
 
+def test_uncommitted_generation_is_invisible(spark, corpora, tmp_path):
+    """The crash state between a generation's encode and its commit: gen 1's
+    segments, doc_stats and term-stat deltas are on disk, but its gen_stats
+    marker is absent and corpus_stats.json is still generation 0's.  No
+    reader may see gen 1: on both placements every page equals an engine
+    over generation 0 alone (total, ids, float-hex scores), and compaction
+    merges generation 0 only."""
+    from search_engine_spark.index.compact import compact_index
+
+    tbl, _ = corpora
+    waves = write_waves(tbl, str(tmp_path / "waves"), [(0, 500), (500, 500)])
+    cfg = BuildConfig(**INGEST_CFG)
+    gen0, crashed = str(tmp_path / "gen0"), str(tmp_path / "crashed")
+    ingest_batch(spark, spark.read.parquet(waves[0]), gen0, 0, cfg=cfg)
+    shutil.copytree(gen0, crashed)
+    ingest_batch(spark, spark.read.parquet(waves[1]), crashed, 1, cfg=cfg)
+    shutil.rmtree(os.path.join(crashed, "gen_stats", "gen=1"))
+    shutil.copy(os.path.join(gen0, "corpus_stats.json"), os.path.join(crashed, "corpus_stats.json"))
+
+    want, got = SearchEngine(spark, gen0), SearchEngine(spark, crashed)
+    assert got.n_docs == want.n_docs == 500
+    for kw in ["the", "milk", "cadbury dairy milk"]:
+        for placed in ({}, {"force_distributed": True}):
+            a, b = want.search(kw, k=10, **placed), got.search(kw, k=10, **placed)
+            assert a.total == b.total, (kw, placed)
+            assert list(a.page["doc_id"]) == list(b.page["doc_id"]), (kw, placed)
+            assert ([float(x).hex() for x in a.page["score"]]
+                    == [float(x).hex() for x in b.page["score"]]), (kw, placed)
+    m = compact_index(spark, crashed, str(tmp_path / "compacted"))
+    assert m["generations_in"] == 1 and m["n_docs"] == 500
+
+
 def test_fresh_checkpoint_against_existing_index_raises(spark, corpora, tmp_path):
     """Epoch numbers are the idempotence key; a NEW checkpoint renumbers
     from 0, so pairing it with an already-ingested index must fail loudly
