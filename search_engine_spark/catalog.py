@@ -128,16 +128,24 @@ class IndexCatalog:
     def has_corpus_stats(self) -> bool:
         return os.path.exists(self.stats_file)
 
-    def read_committed(self, spark, path: str, stats: dict):
+    def read_committed(self, spark, path: str, stats: dict, schema=None):
         """``path`` (segments, doc_stats or term_stats) as a DataFrame: on a
         generational index only the generations ``stats["generations"]``
         commits, so one encoded but never committed (a crash before its
         gen_stats marker) stays invisible to every reader; a batch index
-        reads whole."""
+        reads whole.  ``schema`` (a ``StructType``: the table's known
+        columns, partition keys but ``gen`` included) replaces the
+        schema-inference job a multi-file read costs."""
         from pyspark.sql import functions as F
+        from pyspark.sql import types as T
 
-        df = spark.read.parquet(path)
         gens = stats.get("generations")
+        reader = spark.read
+        if schema is not None:
+            if gens is not None:
+                schema = T.StructType(schema.fields + [T.StructField("gen", T.IntegerType())])
+            reader = reader.schema(schema)
+        df = reader.parquet(path)
         return df if gens is None else df.filter(F.col("gen").isin(gens))
 
     # -- manifest: atomic append of lineage rows -----------------------------

@@ -54,6 +54,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 from functools import reduce
+from types import SimpleNamespace
 
 import numpy as np
 import pandas as pd
@@ -578,26 +579,23 @@ def encode_sorted_arrays(
     g_lo, g_hi = section_spans(gaps)
     t_lo, t_hi = section_spans(tf)
     d_lo, d_hi = section_spans(dl)
-    gap_bytes = np.frombuffer(encode_varints(gaps), dtype=np.uint8)
-    tf_bytes = np.frombuffer(encode_varints(tf), dtype=np.uint8)
-    dl_bytes = np.frombuffer(encode_varints(dl), dtype=np.uint8)
+    gap_bytes, tf_bytes, dl_bytes = encode_varints(gaps), encode_varints(tf), encode_varints(dl)
 
     # per-block BM25 tf-norm upper bound (idf applied at query time)
     tf_norm = tf / (tf + K1 * (1.0 - B + B * dl / avgdl))
     max_tf_norm = np.maximum.reduceat(tf_norm, blk_starts)
 
-    header_arrs = [
-        np.frombuffer(
-            encode_varints(np.array([ghi - glo, thi - tlo], dtype=np.uint64)), dtype=np.uint8
-        )
-        for glo, ghi, tlo, thi in zip(g_lo, g_hi, t_lo, t_hi)
-    ]
+    # every block's header (gap-section length, tf-section length) in one
+    # encode; then each block is four python-bytes slices, no numpy call
+    # per block (blocks can be as many as a tenth of the postings)
+    h_len = np.stack([g_hi - g_lo, t_hi - t_lo], axis=1).ravel()
+    h_cum = np.concatenate(([0], np.cumsum(_varint_nbytes(h_len))))
+    h_bytes = encode_varints(h_len)
     postings = [
-        np.concatenate(
-            (h, gap_bytes[gl:gh], tf_bytes[tl:th], dl_bytes[dlo:dhi])
-        ).tobytes()
-        for h, gl, gh, tl, th, dlo, dhi in zip(
-            header_arrs, g_lo, g_hi, t_lo, t_hi, d_lo, d_hi
+        h_bytes[hl:hh] + gap_bytes[gl:gh] + tf_bytes[tl:th] + dl_bytes[dlo:dhi]
+        for hl, hh, gl, gh, tl, th, dlo, dhi in zip(
+            *(a.tolist() for a in (h_cum[:-1:2], h_cum[2::2], g_lo, g_hi, t_lo, t_hi,
+                                   d_lo, d_hi))
         )
     ]
 
@@ -614,9 +612,9 @@ def encode_sorted_arrays(
         pcum = np.concatenate(([0], np.cumsum(pnb)))
         p_lo = pcum[pos_offsets[blk_starts]]
         p_hi = pcum[pos_offsets[blk_ends]]
-        pos_bytes = np.frombuffer(encode_varints(pdeltas), dtype=np.uint8)
+        pos_bytes = encode_varints(pdeltas)
         pos_out = {
-            "positions": [pos_bytes[lo:hi].tobytes() for lo, hi in zip(p_lo, p_hi)]
+            "positions": [pos_bytes[lo:hi] for lo, hi in zip(p_lo.tolist(), p_hi.tolist())]
         }
     term_out = (
         {"term": term_uniques.take(term_codes[blk_starts])}
@@ -662,8 +660,9 @@ def make_arrow_encoder(
 ):
     """mapInArrow kernel: Arrow batches in, encoded block batches out.
 
-    ``term_dict`` (broadcast of ``(terms_arr, pids_arr)`` indexed by the
-    dense ``term_id``) maps ids back to strings and pids inside the kernel —
+    ``term_dict`` (a broadcast, or on the driver any holder, whose ``.value``
+    is ``(terms_arr, pids_arr)`` indexed by the dense ``term_id``) maps ids
+    back to strings and pids inside the kernel —
     every input column is fixed-width (zero-copy out of Arrow) and only the
     dictionary's uniques ever materialize python strings.  With
     ``term_dict=None`` (vocabulary above the broadcast budget) the kernel
@@ -794,6 +793,10 @@ class _SegmentWriter:
     the postings and a post-encode join of BLOCK rows (≈ postings /
     block_docs) restores term + pid.  Either way every column that shuffles
     is fixed-width (see :func:`make_arrow_encoder` for the row diet).
+
+    A caller whose postings are already on the driver passes the sorted
+    batch vocabulary as ``vocab`` and encodes with :meth:`write_local`
+    instead: no vocabulary read, no broadcast, no shuffle.
     """
 
     def __init__(
@@ -801,11 +804,15 @@ class _SegmentWriter:
         n_partitions: int, range_docs: int, block_docs: int, avgdl: float,
         max_dl: int, max_doc_id: int, positions: bool, dict_budget: int,
         shuffle_n: int | None = None, field_avgdl=None, dim: DataFrame | None = None,
+        vocab: np.ndarray | None = None,
     ):
         self.spark, self.range_docs, self.positions = spark, int(range_docs), positions
         self.shuffle_n = shuffle_n or int(spark.conf.get("spark.sql.shuffle.partitions"))
-        self.id_mode = n_terms > dict_budget
-        self._owned = None
+        local = vocab is not None
+        self.id_mode = not local and n_terms > dict_budget
+        self._owned = self._dict = None
+        kernel = dict(avgdl=avgdl, block_docs=block_docs, range_docs=self.range_docs,
+                      with_positions=positions, field_avgdl=field_avgdl)
         if self.id_mode:
             dict_b = None
             if dim is None:
@@ -815,28 +822,28 @@ class _SegmentWriter:
                 ranked_t.unpersist()
             self._term_ids = dim
         else:
-            # the schema is given, so the read plans without a footer job
-            vocab = (
-                spark.read.schema("term string").parquet(term_stats).toPandas()
-                .sort_values("term").reset_index(drop=True)
-            )
-            terms_arr = vocab["term"].to_numpy(dtype=object)
-            pids_arr = np.searchsorted(np.array(cuts, dtype=object), terms_arr,
+            if not local:
+                # the schema is given, so the read plans without a footer job
+                vocab = (spark.read.schema("term string").parquet(term_stats).toPandas()
+                         ["term"].sort_values().to_numpy(dtype=object))
+            pids_arr = np.searchsorted(np.array(cuts, dtype=object), vocab,
                                        side="left").astype(np.int32)
-            # int32 ids: tighter shuffle rows
-            vocab["term_id"] = np.arange(len(vocab), dtype=np.int32)
-            vocab["pid"] = pids_arr
-            self._term_ids = F.broadcast(spark.createDataFrame(vocab))
-            dict_b = spark.sparkContext.broadcast((terms_arr, pids_arr))
+            self._dict = (vocab, pids_arr)
+            if not local:
+                # int32 ids: tighter shuffle rows
+                self._term_ids = F.broadcast(spark.createDataFrame(pd.DataFrame({
+                    "term": vocab, "term_id": np.arange(len(vocab), dtype=np.int32),
+                    "pid": pids_arr})))
+            dict_b = None if local else spark.sparkContext.broadcast(self._dict)
         # tf/dl pack into one int32 when the max doc length allows exact
-        # unpacking; doc_id narrows to int32 below 2^31
+        # unpacking; doc_id narrows to int32 below 2^31 (both shuffle-row
+        # diets only; the driver encode reads its columns as they are)
         self.packed = 0 < max_dl < 4096
         self.doc32 = max_doc_id < (1 << 31)
-        self.encoder = make_arrow_encoder(
-            avgdl=avgdl, block_docs=block_docs, range_docs=self.range_docs,
-            term_dict=dict_b, packed=self.packed, with_positions=positions,
-            field_avgdl=field_avgdl,
-        )
+        self._local_encoder = make_arrow_encoder(
+            term_dict=SimpleNamespace(value=self._dict), **kernel) if local else None
+        self.encoder = None if local else make_arrow_encoder(
+            term_dict=dict_b, packed=self.packed, **kernel)
 
     def write(self, postings: DataFrame, seg_dir: str, pids: list[int] | None = None) -> None:
         """Encode ``postings`` (term, doc_id, tf, dl[, positions]) into
@@ -869,25 +876,76 @@ class _SegmentWriter:
             w = w.option("partitionOverwriteMode", "dynamic")
         w.partitionBy("pid").parquet(seg_dir)
 
+    def write_local(self, postings, seg_dir: str) -> dict[int, dict]:
+        """Driver form of :meth:`write` for postings already on the driver
+        (an Arrow table of term, doc_id, tf, dl[, positions]; ``term`` may
+        be dictionary-encoded).  Rows sort by (term_id, doc_id) once; every
+        pid's slab is then a contiguous run, sorted as a shuffle partition
+        is, and goes through the same encoder kernel one slab at a time (a
+        slab's temporaries, not the whole batch's, bound the driver's peak).
+        The blocks land with one Spark write, partitioned by pid as
+        :meth:`write` lands them.  Returns the per-pid aggregates
+        :meth:`lineage` would otherwise re-read from ``seg_dir``."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        terms, pids = self._dict
+        term = postings.column("term").combine_chunks()
+        if not pa.types.is_dictionary(term.type):
+            term = term.dictionary_encode()
+        # dense term ids by an Arrow hash lookup: no string becomes a
+        # python object here
+        tid = pc.index_in(term.dictionary, value_set=pa.array(terms, pa.string())).to_numpy()[
+            term.indices.to_numpy()]
+        doc = postings.column("doc_id").to_numpy()
+        order = np.lexsort((doc, tid))
+        tid, doc = tid[order], doc[order]
+        row_pid = pids[tid]  # non-decreasing: pids rise with term_id
+        cols = ["tf", "dl"] + (["positions"] if self.positions else [])
+        rest = postings.select(cols).combine_chunks()
+        schema = _segment_schema(False, self.positions)
+        starts = np.flatnonzero(np.diff(row_pid, prepend=-1))
+        blocks, landed = [], {}
+        for lo, hi in zip(starts, np.append(starts[1:], tid.size)):
+            slab = rest.take(order[lo:hi])
+            batch = pa.RecordBatch.from_arrays(
+                [pa.array(tid[lo:hi]), pa.array(doc[lo:hi])]
+                + [slab.column(c).combine_chunks() for c in cols],
+                names=["term_id", "doc_id"] + cols,
+            )
+            out = next(self._local_encoder(iter([batch])))
+            blocks.append(out)
+            landed[int(row_pid[lo])] = {
+                "term_lo": out.column("term")[0].as_py(),
+                "term_hi": out.column("term")[-1].as_py(),
+                "postings_count": pc.sum(out.column("doc_count")).as_py(),
+                "bytes": pc.sum(out.column("nbytes")).as_py(),
+            }
+        (self.spark.createDataFrame(pa.Table.from_batches(blocks, schema))
+         .write.mode("overwrite").partitionBy("pid").parquet(seg_dir))
+        return landed
+
     def lineage(
         self, seg_dir: str, run_id: str, segment: str, input_split: str,
-        pids: list[int] | None = None,
+        pids: list[int] | None = None, landed: dict[int, dict] | None = None,
     ) -> list[dict]:
         """Manifest rows from what actually landed in ``seg_dir``: one per
         pid (``segment``-p<pid>), and with ``pids`` an empty row for each
-        of them that produced no blocks (it still counts as done)."""
-        seg = self.spark.read.parquet(seg_dir)
-        if pids is not None:
-            seg = seg.filter(F.col("pid").isin(pids))
-        landed = {
-            int(r["pid"]): r
-            for r in seg.groupBy("pid").agg(
-                F.min("term").alias("term_lo"),
-                F.max("term").alias("term_hi"),
-                F.sum("doc_count").alias("postings_count"),
-                F.sum("nbytes").alias("bytes"),
-            ).collect()
-        }
+        of them that produced no blocks (it still counts as done).
+        ``landed`` (from :meth:`write_local`) replaces the re-read."""
+        if landed is None:
+            seg = self.spark.read.parquet(seg_dir)
+            if pids is not None:
+                seg = seg.filter(F.col("pid").isin(pids))
+            landed = {
+                int(r["pid"]): r
+                for r in seg.groupBy("pid").agg(
+                    F.min("term").alias("term_lo"),
+                    F.max("term").alias("term_hi"),
+                    F.sum("doc_count").alias("postings_count"),
+                    F.sum("nbytes").alias("bytes"),
+                ).collect()
+            }
         empty = {"term_lo": "", "term_hi": "", "postings_count": 0, "bytes": 0}
         return [
             {
@@ -1036,9 +1094,12 @@ def build_index(
             F.count("*").alias("n_docs"),
             F.sum("dl").alias("total_dl"),
             F.max("dl").alias("max_dl"),
+            F.max("doc_id").alias("max_doc_id"),
         ).collect()[0]
         n_docs, total_dl = agg["n_docs"], agg["total_dl"]
         max_dl = int(agg["max_dl"] or 0)
+        # ranked ids are dense (n_docs - 1), but id_col ids can be anything
+        max_doc_id = int(agg["max_doc_id"] or 0)
         avgdl = total_dl / n_docs
         field_stats: dict[str, dict] = {}
         if field_cols:
@@ -1119,6 +1180,7 @@ def build_index(
                 "n_partitions": cfg.n_partitions,
                 "n_terms": int(n_terms),
                 "max_dl": max_dl,
+                "max_doc_id": max_doc_id,
                 "corpus_path": corpus_path,
                 "with_positions": bool(use_pos),
                 **({"docvalues_cols": list(dv_cols)} if dv_cols else {}),
@@ -1237,7 +1299,8 @@ def build_index(
     writer = _SegmentWriter(
         spark, cat.term_stats, n_terms, cuts, n_partitions=n_partitions,
         range_docs=range_docs, block_docs=block_docs, avgdl=avgdl,
-        max_dl=int(stats.get("max_dl", 1 << 30)), max_doc_id=int(stats["n_docs"]) - 1,
+        # an index whose stats predate max_doc_id resumes with int64 ids
+        max_dl=int(stats.get("max_dl", 1 << 30)), max_doc_id=int(stats.get("max_doc_id", 1 << 31)),
         positions=use_pos, dict_budget=cfg.dict_budget,
         shuffle_n=cfg.shuffle_partitions, field_avgdl=field_avgdl,
         dim=spark.read.parquet(cat.term_dim) if has_dim else None,

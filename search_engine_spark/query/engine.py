@@ -62,6 +62,8 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..analysis.text import (
     edit_distance_leq,
@@ -71,6 +73,7 @@ from ..analysis.text import (
     wildcard_pattern_parts,
 )
 from ..catalog import IndexCatalog
+from ..index.builder import _segment_schema
 from ..index.codec import decode_doc_ids, decode_position_lists, decode_postings
 from ..numerics import round_half_away
 
@@ -719,7 +722,12 @@ class SearchEngine:
         # every table read is pinned here, restricted to the generations
         # corpus_stats.json commits (IndexCatalog.read_committed), so the
         # engine serves exactly the snapshot its stats describe
-        self._segments_df = self.cat.read_committed(spark, self.cat.segments, self.stats)
+        # with their known schemas: segments and term_stats open without a
+        # schema-inference job (doc_stats infers: dv column types are not
+        # recorded)
+        self._segments_df = self.cat.read_committed(
+            spark, self.cat.segments, self.stats, from_arrow_schema(
+                _segment_schema(False, bool(self.stats.get("with_positions")))))
         # doc_stats pinned at construction like the segments frame: dv
         # filters / field sorts / facets / url hydration all read it, and
         # re-planning spark.read.parquet per query pays a footer/file-listing
@@ -729,7 +737,10 @@ class SearchEngine:
         self._doc_stats_df = self.cat.read_committed(spark, self.cat.doc_stats, self.stats)
         # term stats likewise: the df lookups and term expansions above the
         # dictionary cache all read it
-        self._term_stats_df = self.cat.read_committed(spark, self.cat.term_stats, self.stats)
+        self._term_stats_df = self.cat.read_committed(
+            spark, self.cat.term_stats, self.stats, T.StructType([
+                T.StructField("term", T.StringType()), T.StructField("df", T.LongType()),
+                T.StructField("cf", T.LongType())]))
         # small term dicts: one-time sorted load, then O(log V) lookups with
         # zero Spark jobs per query (the reference's Atlas term dictionary is
         # equally memory-resident inside Lucene).  Incremental indexes store

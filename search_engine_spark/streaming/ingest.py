@@ -42,6 +42,41 @@ generations merged at read time.  This module is that design on Spark:
   by test).  The scale only loosens pruning as avgdl drifts; a periodic
   re-encode (Lucene's merge) resets it.
 
+Placement: a small generation is staged on the driver, the way Lucene
+flushes a small in-memory segment without a distributed plan.  The rule is
+the batch's own size: a batch of at most ``SMALL_BATCH_DOCS`` documents
+takes the driver placement, a larger one the distributed plan.  Choosing
+costs no extra job: the one job that collects the keys (url or ``id_col``,
+plus the doc values) of up to ``SMALL_BATCH_DOCS + 1`` documents is also
+the emptiness check, and on the driver placement the keys are the doc-id
+input.
+
+- **Driver** (8 Spark jobs for a generation after the first, 300 pages on
+  4 cores): urls are ranked on the driver (Arrow sorts strings by UTF-8
+  bytes, Spark's string order, so the ids are ``assign_doc_ids``'s); the
+  same analyzer tokenizes ``docs ⋈ broadcast(ids)`` on the executors and
+  one ``toArrow`` brings the token rows (never the text) to the driver;
+  doc_stats, term df/cf, the batch aggregates and the vocabulary come from
+  numpy/pyarrow; the segment writer encodes one pid slab at a time on the
+  driver (``_SegmentWriter.write_local``, the same kernel) and every table
+  lands with one Spark write.
+- **Distributed** (33 jobs for the same generation): distributed url rank,
+  token stream staged as parquet, Spark aggregates, the writer's shuffle
+  and ``mapInArrow`` encode, lineage re-read.
+
+Both placements write the same rows with the same column types (pinned by
+tests; only the file count differs: the driver placement writes one file
+per table, and per pid for the segments); generation 0 takes its term cuts
+from ``build_vocab`` over the landed term stats on both.  The bound is
+driver memory, which grows with the batch's (doc, term) rows: the
+collected token rows take ~26 B each as Arrow (term bytes and offset,
+doc_id, tf, dl; ~35 B with positions), and encoding adds a transient
+~140 B per row (sort keys, then one pid slab's kernel temporaries).  On
+the fixture's pages (77 distinct terms in 112 tokens) that is ~13 KB per
+document, so a batch at the bound of 4,096 peaks near 55 MB; web pages
+with ~300 distinct terms would reach ~200 MB.  The 300-page
+``ingest-fresh`` generation raises the driver's peak RSS by ~2 MB.
+
 Doc-id contract: with ``id_col`` the corpus brings its own unique long ids
 (rebuild-identical by construction).  Without it, ids are
 ``(docs ingested so far) + lexicographic url rank within the batch`` —
@@ -59,8 +94,13 @@ import shutil
 import time
 from dataclasses import dataclass
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..catalog import IndexCatalog
 from ..index.builder import (
@@ -74,6 +114,10 @@ from ..index.builder import (
     tokens_from_docs_pandas,
     with_extracted_text,
 )
+
+
+# The driver placement's size bound, in documents (module docstring).
+SMALL_BATCH_DOCS = 4096
 
 
 def _gen_dir(root: str, epoch: int) -> str:
@@ -114,30 +158,29 @@ def _read_frozen(index_dir: str) -> dict | None:
         return json.load(f)
 
 
-def _committed_gens(spark: SparkSession, index_dir: str, before: int | None = None):
+def _committed_gens(index_dir: str, before: int | None = None) -> list[dict]:
     """Rows of gen_stats for committed generations (optionally gen < before).
 
     Committed = the generation dir carries ``_SUCCESS``.  A crash during
     the very first gen_stats write can leave ``gen=E/`` containing only
-    Spark's hidden ``_temporary`` staging — reading the root then fails
-    schema inference and would brick every replay, so dirs without the
-    marker are excluded BEFORE the read (and filtered from the rows as
-    defense against committers that expose task files early)."""
+    Spark's hidden ``_temporary`` staging, so only the visible parquet
+    files of marked dirs are read — with pyarrow: one row per generation
+    needs no Spark job."""
     root = _gen_stats_root(index_dir)
     if not os.path.isdir(root):
         return []
-    committed = [
-        int(e.split("=", 1)[1])
-        for e in os.listdir(root)
-        if e.startswith("gen=")
-        and os.path.exists(os.path.join(root, e, "_SUCCESS"))
-    ]
-    if not committed:
-        return []
-    df = spark.read.parquet(root).filter(F.col("gen").isin(committed))
-    if before is not None:
-        df = df.filter(F.col("gen") < int(before))
-    return sorted(df.collect(), key=lambda r: int(r["gen"]))
+    rows = []
+    for e in os.listdir(root):
+        d = os.path.join(root, e)
+        if not e.startswith("gen=") or not os.path.exists(os.path.join(d, "_SUCCESS")):
+            continue
+        gen = int(e.split("=", 1)[1])
+        if before is not None and gen >= int(before):
+            continue
+        files = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
+        tbl = pa.concat_tables([pq.read_table(os.path.join(d, f)) for f in files])
+        rows += [{**r, "gen": gen} for r in tbl.to_pylist()]
+    return sorted(rows, key=lambda r: r["gen"])
 
 
 @dataclass
@@ -149,6 +192,7 @@ class IngestResult:
     avgdl_build: float = 0.0
     wall_sec: float = 0.0
     phase_sec: dict | None = None  # per-phase walls (observability)
+    placement: str | None = None  # "driver" or "distributed"
 
 
 def ingest_batch(
@@ -165,7 +209,9 @@ def ingest_batch(
     Idempotent: an epoch whose ``gen_stats`` marker exists is skipped, and a
     partially-crashed epoch rewrites every artifact deterministically —
     together the exactly-once contract ``foreachBatch`` needs on top of its
-    at-least-once replay semantics.
+    at-least-once replay semantics.  A batch of at most
+    ``SMALL_BATCH_DOCS`` documents is staged on the driver, a larger one
+    by the distributed plan (module docstring); both write the same rows.
     """
     t0 = time.time()
     phase_t: dict[str, float] = {}
@@ -183,23 +229,34 @@ def ingest_batch(
         # replayed epoch: nothing to ingest, but a crash may have landed
         # between the commit marker and the stats refresh — heal it here so
         # corpus_stats.json always reflects every committed generation
-        _ensure_stats_fresh(spark, cat)
-        return IngestResult(epoch=epoch, skipped=True)
-    if batch_df.isEmpty():
-        # an empty trigger must not become a generation — at gen 0 it would
-        # freeze empty term cuts for the index's whole life
-        _ensure_stats_fresh(spark, cat)
+        _ensure_stats_fresh(cat)
         return IngestResult(epoch=epoch, skipped=True)
 
+    # positional layout, analyzer and doc-values columns are frozen index
+    # geometry: generation 0's cfg decides them; later generations must
+    # agree (checked below, once the batch is known to be non-empty)
+    frozen_pre = _read_frozen(index_dir)
+    dv_cols = tuple(cfg.docvalues_cols or ()) if frozen_pre is None else tuple(
+        frozen_pre.get("docvalues_cols") or ())
+    docs = with_extracted_text(batch_df)
+    # the placement choice doubles as the emptiness check: one job collects
+    # the keys (and doc values) of up to SMALL_BATCH_DOCS + 1 documents
+    keys = ([F.col(id_col).cast("long").alias("doc_id")]
+            + (["url"] if "url" in docs.columns else [])) if id_col else ["url"]
+    head = docs.select(*keys, *[c for c in dv_cols if c in docs.columns]).limit(
+        SMALL_BATCH_DOCS + 1).toArrow()
+    if head.num_rows == 0:
+        # an empty trigger must not become a generation — at gen 0 it would
+        # freeze empty term cuts for the index's whole life
+        _ensure_stats_fresh(cat)
+        return IngestResult(epoch=epoch, skipped=True)
+    on_driver = head.num_rows <= SMALL_BATCH_DOCS
+
     _mark("preamble")
-    prior = _committed_gens(spark, index_dir, before=epoch)
+    prior = _committed_gens(index_dir, before=epoch)
     prior_n = sum(int(r["n_docs"]) for r in prior)
     prior_dl = sum(int(r["sum_dl"]) for r in prior)
 
-    # positional layout is frozen index geometry: generation 0's cfg decides
-    # it; later generations must agree or the merged segment schema would
-    # mix positional and non-positional generations
-    frozen_pre = _read_frozen(index_dir)
     use_pos = (
         bool(cfg.positions) if frozen_pre is None
         else bool(frozen_pre.get("with_positions", False))
@@ -220,8 +277,6 @@ def ingest_batch(
             "single-field indexes only — rebuild with build_index"
         )
 
-    docs = with_extracted_text(batch_df)
-
     # the ANALYZER is frozen geometry too: "auto" re-sampled per batch could
     # tokenize generations of one index with different normalization (JVM
     # no-NFC vs pandas NFC), silently diverging from a full rebuild.  Gen 0
@@ -236,87 +291,38 @@ def ingest_batch(
             f"index at {index_dir} was frozen with tokenizer={tokenizer!r}; "
             f"ingest cfg.tokenizer={cfg.tokenizer!r} does not match"
         )
-    # doc-values sidecar columns are frozen index geometry like the
-    # tokenizer: generation 0's cfg decides them; later generations honor
-    # the record (an explicit disagreeing pin raises), and every batch must
-    # carry the columns
-    if frozen_pre is None:
-        dv_cols = tuple(cfg.docvalues_cols or ())
-    else:
-        dv_cols = tuple(frozen_pre.get("docvalues_cols") or ())
-        if cfg.docvalues_cols and tuple(cfg.docvalues_cols) != dv_cols:
-            raise ValueError(
-                f"index at {index_dir} was frozen with docvalues_cols="
-                f"{dv_cols}; ingest cfg.docvalues_cols="
-                f"{tuple(cfg.docvalues_cols)} does not match"
-            )
+    # every batch must carry the frozen doc-values sidecar columns
+    if frozen_pre is not None and cfg.docvalues_cols and tuple(cfg.docvalues_cols) != dv_cols:
+        raise ValueError(
+            f"index at {index_dir} was frozen with docvalues_cols="
+            f"{dv_cols}; ingest cfg.docvalues_cols="
+            f"{tuple(cfg.docvalues_cols)} does not match"
+        )
     missing_dv = [c for c in dv_cols if c not in docs.columns]
     if missing_dv:
         raise ValueError(
             f"batch is missing docvalues columns {missing_dv}; "
             f"batch columns: {sorted(docs.columns)}"
         )
-    if id_col is not None:
-        ranked = None
-        with_ids = docs.withColumn("doc_id", F.col(id_col).cast("long"))
-        if "url" not in with_ids.columns:
-            with_ids = with_ids.withColumn("url", F.col("doc_id").cast("string"))
-        with_ids = with_ids.select("doc_id", "url", "text", *dv_cols)
-    else:
-        ids, ranked, n_pre = assign_doc_ids(docs, n_parts=cfg.n_partitions)
-        ids = ids.select("url", (F.col("doc_id") + F.lit(prior_n)).alias("doc_id"))
-        # broadcast budget mirrors build_index: a catch-up batch draining a
-        # huge backlog must fall back to the shuffled join
-        ids = F.broadcast(ids) if n_pre <= _BCAST_DOCS_MAX else ids
-        with_ids = docs.join(ids, "url").select("doc_id", "url", "text", *dv_cols)
-
-    _mark("ids_plan")
-    # Materialize the generation's token stream as compressed columnar
-    # parquet, NOT .persist(): a deserialized JVM cache of ~10^7 token rows
-    # is GC-bound (measured: the doc_stats pass took 38 s of a 68 s
-    # generation under .persist(); the batch builder hit the same wall and
-    # stages tokens_tmp for the same reason — builder.py phase 2 notes).
-    # Every downstream consumer (doc stats, term stats, encode) re-reads
-    # column-pruned.
-    tokens_tmp = _gen_dir(os.path.join(index_dir, "tokens_tmp"), epoch)
     tokenize = tokens_from_docs if tokenizer == "jvm" else tokens_from_docs_pandas
-    tokenize(
-        with_ids.select("doc_id", "url", "text"), positions=use_pos
-    ).write.mode("overwrite").parquet(tokens_tmp)
-    tokens = spark.read.parquet(tokens_tmp)
-    _mark("tokenize")
 
-    # per-generation doc stats (hydration + dl); docs with zero tokens keep dl=0
-    dl_df = tokens.groupBy("doc_id").agg(F.max("dl").alias("dl"))
-    doc_stats = (
-        with_ids.select("doc_id", "url", *dv_cols)
-        .join(dl_df, "doc_id", "left")
-        .select("doc_id", "url", F.coalesce("dl", F.lit(0)).alias("dl"), *dv_cols)
-    )
-    doc_stats.write.mode("overwrite").parquet(_gen_dir(cat.doc_stats, epoch))
-    _mark("doc_stats")
-    agg = spark.read.parquet(_gen_dir(cat.doc_stats, epoch)).agg(
-        F.count("*").alias("n"),
-        F.sum("dl").alias("s"),
-        F.max("dl").alias("m"),
-        F.max("doc_id").alias("mx"),
-    ).collect()[0]
-    batch_n, batch_dl = int(agg["n"]), int(agg["s"] or 0)
-    batch_max_dl, batch_max_id = int(agg["m"] or 0), int(agg["mx"] or 0)
-    if ranked is not None:
-        ranked.unpersist()
+    def tokens_of(with_ids: DataFrame) -> DataFrame:
+        return tokenize(with_ids.select("doc_id", "url", "text"), positions=use_pos)
 
-    _mark("doc_agg")
-    # per-generation term-df deltas; the engine and later stats reads
-    # aggregate SUM(df) by term across generations
-    gen_ts_path = _gen_dir(cat.term_stats, epoch)
-    tokens.groupBy("term").agg(
-        F.count("*").alias("df"), F.sum("tf").alias("cf")
-    ).write.mode("overwrite").parquet(gen_ts_path)
-    # the landed stats have exactly one row per term, so the vocabulary
-    # size is a parquet row-count — no re-shuffle of the token table
-    _mark("term_stats")
-    n_batch_terms = spark.read.parquet(gen_ts_path).count()
+    # per-generation doc stats (hydration + dl; docs with zero tokens keep
+    # dl=0) and term-df deltas (the engine and later stats reads aggregate
+    # SUM(df) by term across generations) land first; ``batch`` is the
+    # generation's gen_stats row, less avgdl_build
+    gen_ds_path, gen_ts_path = _gen_dir(cat.doc_stats, epoch), _gen_dir(cat.term_stats, epoch)
+    tokens_tmp = _gen_dir(os.path.join(index_dir, "tokens_tmp"), epoch)
+    if on_driver:
+        tokens, vocab, batch = _stage_on_driver(
+            spark, docs, head, id_col, prior_n, dv_cols, tokens_of,
+            gen_ds_path, gen_ts_path, _mark)
+    else:
+        tokens, vocab, batch = _stage_distributed(
+            spark, docs, id_col, prior_n, dv_cols, tokens_of, cfg.n_partitions,
+            gen_ds_path, gen_ts_path, tokens_tmp, _mark)
 
     # frozen corpus geometry: generation 0 computes it and commits it to
     # frozen.json BEFORE encoding anything (atomic rename), every later
@@ -325,7 +331,7 @@ def ingest_batch(
     # generation's commit marker and the stats refresh can never lose the
     # geometry (replays recompute identical values from this gen's term
     # stats, but only ever run if the marker is absent).
-    frozen = _read_frozen(index_dir)
+    frozen = frozen_pre
     gen0_dim = gen0_ranked = None
     if frozen is None:
         n_partitions = cfg.n_partitions
@@ -335,7 +341,7 @@ def ingest_batch(
         cuts, _, gen0_dim, gen0_ranked, _ = build_vocab(
             spark, gen_ts_path, n_partitions
         )
-        size_basis = expected_docs or batch_n
+        size_basis = expected_docs or batch["n_docs"]
         frozen = {
             "term_cuts": cuts,
             "range_docs": max(
@@ -351,20 +357,20 @@ def ingest_batch(
 
     # cumulative avgdl at encode time — recorded so the engine can rescale
     # this generation's max_tf_norm bounds if avgdl later drifts
-    avgdl_build = (prior_dl + batch_dl) / max(1, prior_n + batch_n)
+    avgdl_build = (prior_dl + batch["sum_dl"]) / max(1, prior_n + batch["n_docs"])
 
     # the batch vocabulary keyed with the FROZEN cuts, encoded on the frozen
     # grid by the one segment writer (builder._SegmentWriter)
     writer = _SegmentWriter(
-        spark, gen_ts_path, n_batch_terms, list(frozen["term_cuts"]),
+        spark, gen_ts_path, batch["n_terms"], list(frozen["term_cuts"]),
         n_partitions=int(frozen["n_partitions"]), range_docs=int(frozen["range_docs"]),
-        block_docs=int(frozen["block_docs"]), avgdl=avgdl_build, max_dl=batch_max_dl,
-        max_doc_id=batch_max_id, positions=use_pos, dict_budget=cfg.dict_budget,
-        shuffle_n=cfg.shuffle_partitions, dim=gen0_dim,
+        block_docs=int(frozen["block_docs"]), avgdl=avgdl_build, max_dl=batch["max_dl"],
+        max_doc_id=batch["max_doc_id"], positions=use_pos, dict_budget=cfg.dict_budget,
+        shuffle_n=cfg.shuffle_partitions, dim=gen0_dim, vocab=vocab,
     )
     _mark("vocab")
     seg_dir = _gen_dir(cat.segments, epoch)
-    writer.write(tokens, seg_dir)
+    landed = writer.write_local(tokens, seg_dir) if on_driver else writer.write(tokens, seg_dir)
     _mark("encode")
     writer.close()
     if gen0_ranked is not None:
@@ -373,55 +379,174 @@ def ingest_batch(
 
     # lineage (observability; a replay after this append but before the
     # gen_stats commit can duplicate rows — harmless, documented)
-    rows = writer.lineage(seg_dir, f"stream-epoch{epoch}", f"gen{epoch}", f"stream-epoch{epoch}")
+    rows = writer.lineage(seg_dir, f"stream-epoch{epoch}", f"gen{epoch}",
+                          f"stream-epoch{epoch}", landed=landed)
     _mark("lineage")
     postings = sum(r["postings_count"] for r in rows)
     cat.append_manifest(rows)
 
     # THE commit point: gen_stats lands last, so its presence implies every
-    # other artifact of this generation is complete
-    # the gen value rides the partition directory name (gen=E), not a data
-    # column — partition discovery on the root supplies it at read time
-    spark.createDataFrame(
-        [
-            (
-                batch_n,
-                batch_dl,
-                batch_max_dl,
-                batch_max_id,
-                float(avgdl_build),
-                n_batch_terms,
-            )
-        ],
-        "n_docs long, sum_dl long, max_dl int, max_doc_id long, "
-        "avgdl_build double, n_terms long",
-    ).coalesce(1).write.mode("overwrite").parquet(gstats_dir)
+    # other artifact of this generation is complete.  The gen value rides
+    # the partition directory name (gen=E), not a data column — partition
+    # discovery on the root supplies it at read time.  One Arrow row, so
+    # the write needs no Python worker.
+    _write_arrow(spark, {
+        "n_docs": pa.array([batch["n_docs"]], pa.int64()),
+        "sum_dl": pa.array([batch["sum_dl"]], pa.int64()),
+        "max_dl": pa.array([batch["max_dl"]], pa.int32()),
+        "max_doc_id": pa.array([batch["max_doc_id"]], pa.int64()),
+        "avgdl_build": pa.array([float(avgdl_build)], pa.float64()),
+        "n_terms": pa.array([batch["n_terms"]], pa.int64()),
+    }, gstats_dir)
 
     _mark("commit")
-    _refresh_corpus_stats(spark, cat)
+    _refresh_corpus_stats(cat)
     _mark("stats_refresh")
     return IngestResult(
-        epoch=epoch, skipped=False, n_docs=batch_n, postings=postings,
+        epoch=epoch, skipped=False, n_docs=batch["n_docs"], postings=postings,
         avgdl_build=avgdl_build, wall_sec=round(time.time() - t0, 2),
-        phase_sec=phase_t,
+        phase_sec=phase_t, placement="driver" if on_driver else "distributed",
     )
 
 
-def _ensure_stats_fresh(spark: SparkSession, cat: IndexCatalog) -> None:
+def _write_arrow(spark: SparkSession, columns: dict, path: str, schema=None) -> None:
+    """One Spark write of driver-side Arrow columns to ``path``, through
+    Spark's committer (``_SUCCESS`` marker included).  ``schema`` pins Spark
+    types that Arrow cannot tell apart (a naive Arrow timestamp is either
+    TIMESTAMP or TIMESTAMP_NTZ)."""
+    spark.createDataFrame(pa.table(columns), schema=schema).write.mode(
+        "overwrite").parquet(path)
+
+
+def _stage_on_driver(spark, docs, head, id_col, prior_n, dv_cols, tokens_of,
+                     doc_stats_path, term_stats_path, mark):
+    """The driver placement's staging: ids from the collected keys, one
+    collect of the token rows, numpy stats, one Arrow write per table.
+    Returns (token table with a dictionary-encoded ``term``, the sorted
+    vocabulary, the batch row)."""
+    if id_col is None:
+        # the dense lexicographic url rank assign_doc_ids computes: Arrow
+        # sorts strings by their UTF-8 bytes, which is Spark's string order
+        head = head.sort_by("url")
+        head = head.append_column(
+            "doc_id", pa.array(prior_n + np.arange(head.num_rows), pa.int64()))
+        ids = spark.createDataFrame(head.select(["url", "doc_id"]))
+        with_ids = docs.join(F.broadcast(ids), "url")
+    else:
+        with_ids = docs.withColumn("doc_id", F.col(id_col).cast("long"))
+        if "url" not in with_ids.columns:
+            with_ids = with_ids.withColumn("url", F.col("doc_id").cast("string"))
+            head = head.append_column("url", pc.cast(head.column("doc_id"), pa.string()))
+    mark("ids")
+    # the text stays in the executors: only token rows reach the driver
+    tokens = tokens_of(with_ids).toArrow()
+    mark("tokenize")
+
+    ids = head.column("doc_id").to_numpy()
+    by_id = np.argsort(ids, kind="stable")
+    dl = np.zeros(head.num_rows, dtype=np.int32)
+    # every token row of a doc carries that doc's length
+    dl[by_id[np.searchsorted(ids[by_id], tokens.column("doc_id").to_numpy())]] = (
+        tokens.column("dl").to_numpy())
+    _write_arrow(spark, {"doc_id": head.column("doc_id"), "url": head.column("url"),
+                         "dl": pa.array(dl), **{c: head.column(c) for c in dv_cols}},
+                 doc_stats_path, schema=T.StructType(
+                     [T.StructField("doc_id", T.LongType()), T.StructField("url", T.StringType()),
+                      T.StructField("dl", T.IntegerType())] + [docs.schema[c] for c in dv_cols]))
+    mark("doc_stats")
+
+    term = tokens.column("term").combine_chunks().dictionary_encode()
+    tokens = tokens.set_column(tokens.schema.get_field_index("term"), "term", term)
+    codes = term.indices.to_numpy()
+    by_term = pc.array_sort_indices(term.dictionary).to_numpy()
+    vocab = term.dictionary.take(by_term)
+    n_terms = len(vocab)
+    df = np.bincount(codes, minlength=n_terms)[by_term]
+    cf = np.bincount(codes, weights=tokens.column("tf").to_numpy(), minlength=n_terms)
+    _write_arrow(spark, {"term": vocab, "df": pa.array(df, pa.int64()),
+                         "cf": pa.array(cf[by_term].astype(np.int64))}, term_stats_path)
+    mark("term_stats")
+    batch = {"n_docs": head.num_rows, "sum_dl": int(dl.sum()), "max_dl": int(dl.max()),
+             "max_doc_id": int(ids.max()), "n_terms": n_terms}
+    return tokens, vocab.to_numpy(zero_copy_only=False), batch
+
+
+def _stage_distributed(spark, docs, id_col, prior_n, dv_cols, tokens_of, n_parts,
+                       doc_stats_path, term_stats_path, tokens_tmp, mark):
+    """The distributed placement's staging: the token stream staged as
+    parquet, stats by Spark aggregates.  Returns (token DataFrame, None,
+    the batch row)."""
+    if id_col is not None:
+        ranked = None
+        with_ids = docs.withColumn("doc_id", F.col(id_col).cast("long"))
+        if "url" not in with_ids.columns:
+            with_ids = with_ids.withColumn("url", F.col("doc_id").cast("string"))
+        with_ids = with_ids.select("doc_id", "url", "text", *dv_cols)
+    else:
+        ids, ranked, n_pre = assign_doc_ids(docs, n_parts=n_parts)
+        ids = ids.select("url", (F.col("doc_id") + F.lit(prior_n)).alias("doc_id"))
+        # broadcast budget mirrors build_index: a catch-up batch draining a
+        # huge backlog must fall back to the shuffled join
+        ids = F.broadcast(ids) if n_pre <= _BCAST_DOCS_MAX else ids
+        with_ids = docs.join(ids, "url").select("doc_id", "url", "text", *dv_cols)
+
+    mark("ids_plan")
+    # Materialize the generation's token stream as compressed columnar
+    # parquet, NOT .persist(): a deserialized JVM cache of ~10^7 token rows
+    # is GC-bound (measured: the doc_stats pass took 38 s of a 68 s
+    # generation under .persist(); the batch builder hit the same wall and
+    # stages tokens_tmp for the same reason — builder.py phase 2 notes).
+    # Every downstream consumer (doc stats, term stats, encode) re-reads
+    # column-pruned.
+    tokens_of(with_ids).write.mode("overwrite").parquet(tokens_tmp)
+    tokens = spark.read.parquet(tokens_tmp)
+    mark("tokenize")
+
+    dl_df = tokens.groupBy("doc_id").agg(F.max("dl").alias("dl"))
+    doc_stats = (
+        with_ids.select("doc_id", "url", *dv_cols)
+        .join(dl_df, "doc_id", "left")
+        .select("doc_id", "url", F.coalesce("dl", F.lit(0)).alias("dl"), *dv_cols)
+    )
+    doc_stats.write.mode("overwrite").parquet(doc_stats_path)
+    mark("doc_stats")
+    agg = spark.read.parquet(doc_stats_path).agg(
+        F.count("*").alias("n"),
+        F.sum("dl").alias("s"),
+        F.max("dl").alias("m"),
+        F.max("doc_id").alias("mx"),
+    ).collect()[0]
+    if ranked is not None:
+        ranked.unpersist()
+    mark("doc_agg")
+
+    tokens.groupBy("term").agg(
+        F.count("*").alias("df"), F.sum("tf").alias("cf")
+    ).write.mode("overwrite").parquet(term_stats_path)
+    mark("term_stats")
+    # the landed stats have exactly one row per term, so the vocabulary
+    # size is a parquet row-count — no re-shuffle of the token table
+    batch = {"n_docs": int(agg["n"]), "sum_dl": int(agg["s"] or 0),
+             "max_dl": int(agg["m"] or 0), "max_doc_id": int(agg["mx"] or 0),
+             "n_terms": spark.read.parquet(term_stats_path).count()}
+    return tokens, None, batch
+
+
+def _ensure_stats_fresh(cat: IndexCatalog) -> None:
     """Heal corpus_stats.json if a crash separated a generation's commit
     marker from its stats refresh (replay then skips the generation, so
     this is the only place the refresh can catch up)."""
-    gens = _committed_gens(spark, cat.root)
+    gens = _committed_gens(cat.root)
     if not gens:
         return
     committed = [int(r["gen"]) for r in gens]
     if cat.has_corpus_stats():
         if cat.read_corpus_stats().get("generations") == committed:
             return
-    _refresh_corpus_stats(spark, cat)
+    _refresh_corpus_stats(cat)
 
 
-def _refresh_corpus_stats(spark: SparkSession, cat: IndexCatalog) -> dict:
+def _refresh_corpus_stats(cat: IndexCatalog) -> dict:
     """Derive corpus_stats.json purely from committed gen_stats + the
     frozen geometry file (both replay-safe inputs)."""
     frozen = _read_frozen(cat.root)
@@ -434,7 +559,7 @@ def _refresh_corpus_stats(spark: SparkSession, cat: IndexCatalog) -> dict:
     range_docs = int(frozen["range_docs"])
     block_docs = int(frozen["block_docs"])
     n_partitions = int(frozen["n_partitions"])
-    gens = _committed_gens(spark, cat.root)
+    gens = _committed_gens(cat.root)
     n_docs = sum(int(r["n_docs"]) for r in gens)
     total_dl = sum(int(r["sum_dl"]) for r in gens)
     avgdl = total_dl / max(1, n_docs)

@@ -81,6 +81,54 @@ INGEST_CFG = dict(
 )
 
 
+def spark_jobs(spark, fn):
+    """Run ``fn`` under a job group of its own -> (result, Spark job ids)."""
+    import uuid
+
+    sc, group = spark.sparkContext, uuid.uuid4().hex
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def landed_rows(spark, index_dir):
+    """Every row an index's tables hold, as sorted pandas frames (segments,
+    doc_stats, term_stats and gen_stats, the ``gen`` key included), the
+    manifest less ``committed_at``, and each table's Spark schema."""
+    from search_engine_spark.catalog import IndexCatalog
+
+    cat = IndexCatalog(index_dir)
+    out = {}
+    for name, path, keys in (
+        ("segments", cat.segments, ["pid", "term", "sseg", "block_id"]),
+        ("doc_stats", cat.doc_stats, ["doc_id"]),
+        ("term_stats", cat.term_stats, ["term"]),
+        ("gen_stats", os.path.join(index_dir, "gen_stats"), []),
+    ):
+        df = spark.read.parquet(path)
+        keys = (["gen"] if "gen" in df.columns else []) + keys
+        out[name] = df.toPandas().sort_values(keys).reset_index(drop=True)
+        out[name + ".schema"] = df.schema.simpleString()
+    out["manifest"] = (
+        cat.read_manifest().drop(["committed_at"]).to_pandas()
+        .sort_values(["run_id", "partition_id"]).reset_index(drop=True)
+    )
+    return out
+
+
+def assert_same_rows(a, b):
+    """``landed_rows`` of two indexes are equal, table by table."""
+    assert a.keys() == b.keys()
+    for name in a:
+        if name.endswith(".schema"):
+            assert a[name] == b[name], name
+        else:
+            assert a[name].equals(b[name]), name
+
+
 def write_waves(tbl, base, slices):
     """Write each (offset, n) slice of ``tbl`` as one parquet wave dir."""
     import pyarrow.parquet as pq

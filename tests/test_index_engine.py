@@ -243,3 +243,49 @@ def test_fuzzy_rank_identity_wand_mode(engine, oracle_tiny, kw, f):
     got = engine.search(kw, k=10, fuzzy=f, mode="wand", force_distributed=True)
     want = oracle_tiny.search_fuzzy(kw, k=10, fuzzy=f)
     assert_rank_identical(got, want, f"fuzzy-wand {kw} f={f}")
+
+
+def test_ids_at_or_above_2_31(spark, webtext_tiny, tmp_path, monkeypatch):
+    """Corpus-supplied ids (``id_col``) of 2^31 and up: the build records
+    the real max doc id and encodes int64 doc ids (the dense-rank bound
+    n_docs - 1 would pick int32 and overflow), and both query placements
+    return those ids with the oracle's scores; so does an ingest of the
+    same pages on each of its placements."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from search_engine_spark.index.builder import BuildConfig, build_index
+    from search_engine_spark.oracle import OracleIndex
+    from search_engine_spark.query.engine import SearchEngine
+    from search_engine_spark.streaming import ingest as ingest_mod
+
+    base = 1 << 31
+    tbl = pq.read_table(webtext_tiny).sort_by("url").slice(0, 100)
+    corpus = str(tmp_path / "corpus")
+    os.makedirs(corpus)
+    pq.write_table(tbl.append_column("my_id", pa.array(base + np.arange(100), pa.int64())),
+                   os.path.join(corpus, "part-0.parquet"))
+    oracle = OracleIndex(list(zip(tbl.column("url").to_pylist(), tbl.column("text").to_pylist())))
+    cfg = BuildConfig(block_docs=64, target_ranges=4, min_range_docs=16, n_partitions=4, waves=1)
+    built = str(tmp_path / "built")
+    build_index(spark, corpus, built, cfg=cfg, id_col="my_id")
+    assert SearchEngine(spark, built).stats["max_doc_id"] == base + 99
+    indexes = [built]
+    for bound in (100, 99):
+        monkeypatch.setattr(ingest_mod, "SMALL_BATCH_DOCS", bound)
+        indexes.append(str(tmp_path / f"ingested_{bound}"))
+        r = ingest_mod.ingest_batch(spark, spark.read.parquet(corpus), indexes[-1], 0,
+                                    cfg=cfg, id_col="my_id")
+        assert r.placement == ("driver" if bound == 100 else "distributed")
+    for idx in indexes:
+        eng = SearchEngine(spark, idx)
+        for kw in ["the", "milk", "oil"]:
+            want = oracle.search(kw, k=10)
+            for placed in ({}, {"force_distributed": True}):
+                got = eng.search(kw, k=10, **placed)
+                assert got.total == want.total, (idx, kw, placed)
+                assert [int(d) for d in got.page["doc_id"]] == [base + d for d, _ in want.hits]
+                np.testing.assert_allclose(got.page["score"], [s for _, s in want.hits],
+                                           rtol=0, atol=1e-9)

@@ -18,6 +18,8 @@ from search_engine_spark.analysis.text import preprocess_query, tokenize
 from search_engine_spark.oracle import QueryResult
 from search_engine_spark.query.engine import SearchEngine
 
+from conftest import spark_jobs
+
 K = 8
 
 
@@ -165,3 +167,18 @@ def test_residency_rule(spark, index_tiny, monkeypatch):
     monkeypatch.setattr(engine_mod, "_TERM_DICT_CACHE_MAX", 0)
     eng = SearchEngine(spark, index_tiny)
     assert eng._terms_arr is None and eng._resident is None
+
+
+@pytest.mark.parametrize("fixture", ["index_tiny", "inc_index"])
+def test_open_job_count(spark, fixture, request):
+    """Opening a resident engine runs 7 Spark jobs, on a batch index and a
+    generational one alike: doc_stats' schema inference (its doc-values
+    column types are not recorded), the dictionary's size and its load (two
+    each: a shuffle stage and a result) and the two resident tables.
+    Segments and term_stats open with their known schemas, so neither
+    infers one."""
+    idx = request.getfixturevalue(fixture)
+    SearchEngine(spark, idx)  # warm: the counts are of a steady open
+    eng, jobs = spark_jobs(spark, lambda: SearchEngine(spark, idx))
+    assert eng._resident is not None
+    assert len(jobs) == 7, jobs

@@ -121,36 +121,41 @@ def test_manifest_append_is_atomic(tmp_path):
 
 
 def test_distributed_vocab_build_identical_to_broadcast(
-    spark, webtext_tiny, index_tiny, sf_dv_index, tmp_path
+    spark, webtext_tiny, index_tiny, sf_dv_index, tmp_path, monkeypatch
 ):
     """The three segment writers agree byte for byte, without and with
     positions.  dict_budget=0 forces the distributed vocabulary path
     (shuffle-join term ids, id-emitting encoder, post-encode string join);
-    a single-generation ``ingest_batch`` of the same corpus and
-    ``compact_index`` of the build write through the same encoder.  All
-    four segment tables must equal the broadcast-dictionary build's
-    (``index_tiny``, or ``sf_dv_index`` with positions: the same layout;
-    doc values never reach the segments).
+    a single-generation ``ingest_batch`` of the same corpus, on each
+    placement (driver-staged within ``SMALL_BATCH_DOCS``, the distributed
+    plan above it), and ``compact_index`` of the build write through the
+    same encoder.  All five segment tables must equal the
+    broadcast-dictionary build's (``index_tiny``, or ``sf_dv_index`` with
+    positions: the same layout; doc values never reach the segments).
     """
     from search_engine_spark.index.builder import BuildConfig, build_index
     from search_engine_spark.index.compact import compact_index
     from search_engine_spark.query.engine import SearchEngine
-    from search_engine_spark.streaming.ingest import ingest_batch
+    from search_engine_spark.streaming import ingest as ingest_mod
 
     for positions, d_bcast in ((False, index_tiny), (True, sf_dv_index)):
         kw = dict(block_docs=64, target_ranges=16, min_range_docs=64, n_partitions=8,
                   positions=positions)
         d_dist = str(tmp_path / f"idx_dist_{positions}")
-        d_ingest = str(tmp_path / f"idx_ingest_{positions}")
         d_compact = str(tmp_path / f"idx_compact_{positions}")
         build_index(spark, webtext_tiny, d_dist, cfg=BuildConfig(**kw, waves=2, dict_budget=0))
-        r = ingest_batch(spark, spark.read.parquet(webtext_tiny), d_ingest, 0,
-                         cfg=BuildConfig(**kw))
-        assert not r.skipped and r.n_docs == 1000
+        d_ingest = {}
+        for placement, bound in (("driver", 1000), ("distributed", 999)):
+            monkeypatch.setattr(ingest_mod, "SMALL_BATCH_DOCS", bound)
+            d_ingest[placement] = str(tmp_path / f"idx_ingest_{placement}_{positions}")
+            r = ingest_mod.ingest_batch(spark, spark.read.parquet(webtext_tiny),
+                                        d_ingest[placement], 0, cfg=BuildConfig(**kw))
+            assert not r.skipped and r.n_docs == 1000 and r.placement == placement
+        monkeypatch.undo()
         compact_index(spark, d_bcast, d_compact)
         want = _segment_fingerprint(spark, d_bcast)
         assert want["n"] > 0
-        for d in (d_dist, d_ingest, d_compact):
+        for d in (d_dist, *d_ingest.values(), d_compact):
             assert _segment_fingerprint(spark, d) == want, d
 
         # the distributed index serves queries identically

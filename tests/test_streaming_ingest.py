@@ -21,7 +21,7 @@ from search_engine_spark.streaming.ingest import (
     stream_documents,
 )
 
-from conftest import INGEST_CFG, write_waves
+from conftest import INGEST_CFG, assert_same_rows, landed_rows, spark_jobs, write_waves
 
 _KWS = ["rice", "cadbury dairy milk", "belt", "oil", "milk", "the", "zzzzqqqq"]
 _SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -392,29 +392,79 @@ def test_gen0_crash_window_does_not_brick_replay(spark, corpora, rebuild_engine)
     assert len(eng.search("milk", k=5).page) > 0
 
 
-def test_ingest_id_mode_identical_to_broadcast_vocab(spark, corpora):
-    """dict_budget below the batch vocabulary forces the distributed-dim
-    path; the landed generations must be row-identical to the broadcast
-    path on the same waves."""
+def test_ingest_id_mode_identical_to_broadcast_vocab(spark, corpora, monkeypatch):
+    """On the distributed placement (forced: these batches fit
+    ``SMALL_BATCH_DOCS``), dict_budget below the batch vocabulary forces
+    the distributed-dim path; the landed generations must be row-identical
+    to the broadcast path on the same waves, and so must the driver
+    placement's (which keeps its vocabulary on the driver at any
+    budget)."""
+    from search_engine_spark.streaming import ingest as ingest_mod
+
     tbl, base = corpora
     slices = [(0, 500), (500, 500)]
     outs = {}
-    for name, budget in (("bcast", 2_000_000), ("idmode", 1)):
+    for name, budget, bound in (("bcast", 2_000_000, 0), ("idmode", 1, 0),
+                                ("driver", 1, 500)):
+        monkeypatch.setattr(ingest_mod, "SMALL_BATCH_DOCS", bound)
         idx = os.path.join(base, f"vocab_{name}_idx")
         waves = write_waves(tbl, os.path.join(base, f"vocab_{name}"), slices)
         for e, w in enumerate(waves):
-            ingest_batch(spark, spark.read.parquet(w), idx, e,
-                         cfg=BuildConfig(**INGEST_CFG, dict_budget=budget))
-        outs[name] = (
-            spark.read.parquet(os.path.join(idx, "segments"))
-            .select("gen", "term", "sseg", "block_id", "first_doc",
-                    "last_doc", "doc_count", "max_tf_norm", "nbytes",
-                    "postings")
-            .toPandas()
-            .sort_values(["gen", "term", "sseg", "block_id"])
-            .reset_index(drop=True)
-        )
-    assert outs["bcast"].equals(outs["idmode"])
+            r = ingest_batch(spark, spark.read.parquet(w), idx, e,
+                             cfg=BuildConfig(**INGEST_CFG, dict_budget=budget))
+            assert r.placement == ("driver" if bound else "distributed")
+        outs[name] = landed_rows(spark, idx)
+    assert_same_rows(outs["bcast"], outs["idmode"])
+    assert_same_rows(outs["bcast"], outs["driver"])
+
+
+def test_small_generation_jobs_and_placement_bound(spark, corpora, monkeypatch):
+    """A generation of ``SMALL_BATCH_DOCS`` documents is staged on the
+    driver in at most 10 Spark jobs (one collect of the keys, one of the
+    token rows, one write per table); one document more takes the
+    distributed plan.  Both write the same rows, positions and doc values
+    included."""
+    from search_engine_spark.streaming import ingest as ingest_mod
+
+    tbl, base = corpora
+    waves = write_waves(tbl, os.path.join(base, "bound"), [(0, 50), (50, 300)])
+    cfg = BuildConfig(**INGEST_CFG, positions=True, docvalues_cols=("lang", "warc_ts"))
+    outs = {}
+    for placement, bound in (("driver", 300), ("distributed", 299)):
+        monkeypatch.setattr(ingest_mod, "SMALL_BATCH_DOCS", bound)
+        idx = os.path.join(base, f"bound_{placement}_idx")
+        ingest_batch(spark, spark.read.parquet(waves[0]), idx, 0, cfg=cfg)
+        batch = spark.read.parquet(waves[1])
+        r, jobs = spark_jobs(spark, lambda: ingest_batch(spark, batch, idx, 1, cfg=cfg))
+        assert r.placement == placement and r.n_docs == 300
+        assert {"tokenize", "vocab", "encode", "commit", "stats_refresh"} <= r.phase_sec.keys()
+        if placement == "driver":
+            assert len(jobs) <= 10, len(jobs)
+        outs[placement] = landed_rows(spark, idx)
+    assert_same_rows(outs["driver"], outs["distributed"])
+
+
+def test_driver_url_rank_is_spark_string_order(spark, tmp_path, monkeypatch):
+    """The driver placement ranks urls by their UTF-8 bytes, as Spark
+    orders strings: on urls sharing a long prefix and differing in
+    characters whose UTF-16 order is not their code-point order, both
+    placements assign the same doc ids."""
+    import pandas as pd
+
+    from search_engine_spark.streaming import ingest as ingest_mod
+
+    prefix = "https://example.org/" + "a/" * 40
+    tails = ["b", "a", "é", "\uffff", "\U00010000", "Z", "aa", "a\x00"]
+    batch = spark.createDataFrame(pd.DataFrame(
+        {"url": [prefix + t for t in tails], "text": ["milk oil"] * len(tails)}))
+    ids = {}
+    for placement, bound in (("driver", len(tails)), ("distributed", 0)):
+        monkeypatch.setattr(ingest_mod, "SMALL_BATCH_DOCS", bound)
+        idx = str(tmp_path / placement)
+        assert ingest_batch(spark, batch, idx, 0, cfg=BuildConfig(**INGEST_CFG)).placement == placement
+        ids[placement] = landed_rows(spark, idx)["doc_stats"][["doc_id", "url"]]
+    assert ids["driver"].equals(ids["distributed"])
+    assert list(ids["driver"]["url"]) == sorted(ids["driver"]["url"], key=lambda u: u.encode())
 
 
 def test_tokenizer_frozen_at_gen0(spark, corpora):
