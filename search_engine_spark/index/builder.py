@@ -54,7 +54,6 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 from functools import reduce
-from types import SimpleNamespace
 
 import numpy as np
 import pandas as pd
@@ -660,9 +659,9 @@ def make_arrow_encoder(
 ):
     """mapInArrow kernel: Arrow batches in, encoded block batches out.
 
-    ``term_dict`` (a broadcast, or on the driver any holder, whose ``.value``
-    is ``(terms_arr, pids_arr)`` indexed by the dense ``term_id``) maps ids
-    back to strings and pids inside the kernel —
+    ``term_dict`` (a broadcast of ``(terms_arr, pids_arr)`` indexed by the
+    dense ``term_id``, or on the driver that tuple itself) maps ids back to
+    strings and pids inside the kernel —
     every input column is fixed-width (zero-copy out of Arrow) and only the
     dictionary's uniques ever materialize python strings.  With
     ``term_dict=None`` (vocabulary above the broadcast budget) the kernel
@@ -719,7 +718,8 @@ def make_arrow_encoder(
         if id_mode:
             terms_arr, pid_arr = None, None
         else:
-            terms_arr, pids_arr = term_dict.value
+            terms_arr, pids_arr = (
+                term_dict if isinstance(term_dict, tuple) else term_dict.value)
             pid_arr = pids_arr[codes].astype(np.int64)
         if packed:
             tfdl = tbl.column("tfdl").to_numpy(zero_copy_only=False).astype(np.int64)
@@ -793,10 +793,7 @@ class _SegmentWriter:
     the postings and a post-encode join of BLOCK rows (≈ postings /
     block_docs) restores term + pid.  Either way every column that shuffles
     is fixed-width (see :func:`make_arrow_encoder` for the row diet).
-
-    A caller whose postings are already on the driver passes the sorted
-    batch vocabulary as ``vocab`` and encodes with :meth:`write_local`
-    instead: no vocabulary read, no broadcast, no shuffle.
+    Postings already on the driver take :func:`write_segments_local`.
     """
 
     def __init__(
@@ -804,15 +801,11 @@ class _SegmentWriter:
         n_partitions: int, range_docs: int, block_docs: int, avgdl: float,
         max_dl: int, max_doc_id: int, positions: bool, dict_budget: int,
         shuffle_n: int | None = None, field_avgdl=None, dim: DataFrame | None = None,
-        vocab: np.ndarray | None = None,
     ):
         self.spark, self.range_docs, self.positions = spark, int(range_docs), positions
         self.shuffle_n = shuffle_n or int(spark.conf.get("spark.sql.shuffle.partitions"))
-        local = vocab is not None
-        self.id_mode = not local and n_terms > dict_budget
-        self._owned = self._dict = None
-        kernel = dict(avgdl=avgdl, block_docs=block_docs, range_docs=self.range_docs,
-                      with_positions=positions, field_avgdl=field_avgdl)
+        self.id_mode = n_terms > dict_budget
+        self._owned = None
         if self.id_mode:
             dict_b = None
             if dim is None:
@@ -822,33 +815,37 @@ class _SegmentWriter:
                 ranked_t.unpersist()
             self._term_ids = dim
         else:
-            if not local:
-                # the schema is given, so the read plans without a footer job
-                vocab = (spark.read.schema("term string").parquet(term_stats).toPandas()
-                         ["term"].sort_values().to_numpy(dtype=object))
-            pids_arr = np.searchsorted(np.array(cuts, dtype=object), vocab,
-                                       side="left").astype(np.int32)
-            self._dict = (vocab, pids_arr)
-            if not local:
-                # int32 ids: tighter shuffle rows
-                self._term_ids = F.broadcast(spark.createDataFrame(pd.DataFrame({
-                    "term": vocab, "term_id": np.arange(len(vocab), dtype=np.int32),
-                    "pid": pids_arr})))
-            dict_b = None if local else spark.sparkContext.broadcast(self._dict)
+            # the schema is given, so the read plans without a footer job
+            vocab = (
+                spark.read.schema("term string").parquet(term_stats).toPandas()
+                .sort_values("term").reset_index(drop=True)
+            )
+            terms_arr = vocab["term"].to_numpy(dtype=object)
+            pids_arr = _term_pids(cuts, terms_arr)
+            # int32 ids: tighter shuffle rows
+            vocab["term_id"] = np.arange(len(vocab), dtype=np.int32)
+            vocab["pid"] = pids_arr
+            self._term_ids = F.broadcast(spark.createDataFrame(vocab))
+            dict_b = spark.sparkContext.broadcast((terms_arr, pids_arr))
         # tf/dl pack into one int32 when the max doc length allows exact
-        # unpacking; doc_id narrows to int32 below 2^31 (both shuffle-row
-        # diets only; the driver encode reads its columns as they are)
+        # unpacking; doc_id narrows to int32 below 2^31
         self.packed = 0 < max_dl < 4096
         self.doc32 = max_doc_id < (1 << 31)
-        self._local_encoder = make_arrow_encoder(
-            term_dict=SimpleNamespace(value=self._dict), **kernel) if local else None
-        self.encoder = None if local else make_arrow_encoder(
-            term_dict=dict_b, packed=self.packed, **kernel)
+        self.encoder = make_arrow_encoder(
+            avgdl=avgdl, block_docs=block_docs, range_docs=self.range_docs,
+            term_dict=dict_b, packed=self.packed, with_positions=positions,
+            field_avgdl=field_avgdl,
+        )
 
-    def write(self, postings: DataFrame, seg_dir: str, pids: list[int] | None = None) -> None:
+    def write(self, postings: DataFrame, seg_dir: str, pids: list[int] | None = None,
+              file_per_pid: bool = False) -> None:
         """Encode ``postings`` (term, doc_id, tf, dl[, positions]) into
         ``seg_dir``/pid=P — only the build partitions ``pids`` when given
-        (one build wave; other partitions already on disk stay)."""
+        (one build wave; other partitions already on disk stay).  Every
+        encode task writes a file per pid; ``file_per_pid`` (a merge, whose
+        point is fewer files) shuffles the encoded blocks, about the index's
+        bytes, to one writer task per pid instead, so the encode keeps its
+        width."""
         from pyspark.sql.pandas.types import from_arrow_schema
 
         keyed = postings.join(self._term_ids, "term")
@@ -871,97 +868,121 @@ class _SegmentWriter:
             blocks = blocks.join(self._term_ids, "term_id").select(
                 *_segment_schema(False, self.positions).names
             )
+        if file_per_pid:
+            blocks = blocks.repartition("pid")
         w = blocks.write.mode("overwrite")
         if pids is not None:
             w = w.option("partitionOverwriteMode", "dynamic")
         w.partitionBy("pid").parquet(seg_dir)
 
-    def write_local(self, postings, seg_dir: str) -> dict[int, dict]:
-        """Driver form of :meth:`write` for postings already on the driver
-        (an Arrow table of term, doc_id, tf, dl[, positions]; ``term`` may
-        be dictionary-encoded).  Rows sort by (term_id, doc_id) once; every
-        pid's slab is then a contiguous run, sorted as a shuffle partition
-        is, and goes through the same encoder kernel one slab at a time (a
-        slab's temporaries, not the whole batch's, bound the driver's peak).
-        The blocks land with one Spark write, partitioned by pid as
-        :meth:`write` lands them.  Returns the per-pid aggregates
-        :meth:`lineage` would otherwise re-read from ``seg_dir``."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        terms, pids = self._dict
-        term = postings.column("term").combine_chunks()
-        if not pa.types.is_dictionary(term.type):
-            term = term.dictionary_encode()
-        # dense term ids by an Arrow hash lookup: no string becomes a
-        # python object here
-        tid = pc.index_in(term.dictionary, value_set=pa.array(terms, pa.string())).to_numpy()[
-            term.indices.to_numpy()]
-        doc = postings.column("doc_id").to_numpy()
-        order = np.lexsort((doc, tid))
-        tid, doc = tid[order], doc[order]
-        row_pid = pids[tid]  # non-decreasing: pids rise with term_id
-        cols = ["tf", "dl"] + (["positions"] if self.positions else [])
-        rest = postings.select(cols).combine_chunks()
-        schema = _segment_schema(False, self.positions)
-        starts = np.flatnonzero(np.diff(row_pid, prepend=-1))
-        blocks, landed = [], {}
-        for lo, hi in zip(starts, np.append(starts[1:], tid.size)):
-            slab = rest.take(order[lo:hi])
-            batch = pa.RecordBatch.from_arrays(
-                [pa.array(tid[lo:hi]), pa.array(doc[lo:hi])]
-                + [slab.column(c).combine_chunks() for c in cols],
-                names=["term_id", "doc_id"] + cols,
-            )
-            out = next(self._local_encoder(iter([batch])))
-            blocks.append(out)
-            landed[int(row_pid[lo])] = {
-                "term_lo": out.column("term")[0].as_py(),
-                "term_hi": out.column("term")[-1].as_py(),
-                "postings_count": pc.sum(out.column("doc_count")).as_py(),
-                "bytes": pc.sum(out.column("nbytes")).as_py(),
-            }
-        (self.spark.createDataFrame(pa.Table.from_batches(blocks, schema))
-         .write.mode("overwrite").partitionBy("pid").parquet(seg_dir))
-        return landed
-
     def lineage(
         self, seg_dir: str, run_id: str, segment: str, input_split: str,
-        pids: list[int] | None = None, landed: dict[int, dict] | None = None,
+        pids: list[int] | None = None,
     ) -> list[dict]:
-        """Manifest rows from what actually landed in ``seg_dir``: one per
-        pid (``segment``-p<pid>), and with ``pids`` an empty row for each
-        of them that produced no blocks (it still counts as done).
-        ``landed`` (from :meth:`write_local`) replaces the re-read."""
-        if landed is None:
-            seg = self.spark.read.parquet(seg_dir)
-            if pids is not None:
-                seg = seg.filter(F.col("pid").isin(pids))
-            landed = {
-                int(r["pid"]): r
-                for r in seg.groupBy("pid").agg(
-                    F.min("term").alias("term_lo"),
-                    F.max("term").alias("term_hi"),
-                    F.sum("doc_count").alias("postings_count"),
-                    F.sum("nbytes").alias("bytes"),
-                ).collect()
-            }
-        empty = {"term_lo": "", "term_hi": "", "postings_count": 0, "bytes": 0}
-        return [
-            {
-                "run_id": run_id,
-                "partition_id": p,
-                "segment_id": f"{segment}-p{p}",
-                "input_split": input_split,
-                **{k: (landed[p][k] if p in landed else v) for k, v in empty.items()},
-                "status": "done",
-            }
-            for p in list(landed) + [p for p in pids or () if p not in landed]
-        ]
+        """Manifest rows from what actually landed in ``seg_dir`` (see
+        :func:`lineage_rows`)."""
+        seg = self.spark.read.parquet(seg_dir)
+        if pids is not None:
+            seg = seg.filter(F.col("pid").isin(pids))
+        landed = {
+            int(r["pid"]): r
+            for r in seg.groupBy("pid").agg(
+                F.min("term").alias("term_lo"),
+                F.max("term").alias("term_hi"),
+                F.sum("doc_count").alias("postings_count"),
+                F.sum("nbytes").alias("bytes"),
+            ).collect()
+        }
+        return lineage_rows(landed, run_id, segment, input_split, pids)
 
     def close(self) -> None:
         if self._owned is not None:
             self._owned.unpersist()
+
+
+def _term_pids(cuts: list[str], terms: np.ndarray) -> np.ndarray:
+    """pid of each term: the count of cuts < term."""
+    return np.searchsorted(np.array(cuts, dtype=object), terms, side="left").astype(np.int32)
+
+
+def lineage_rows(
+    landed: dict[int, dict], run_id: str, segment: str, input_split: str,
+    pids: list[int] | None = None,
+) -> list[dict]:
+    """Manifest rows from the per-pid aggregates (term_lo, term_hi,
+    postings_count, bytes) of what landed: one per pid
+    (``segment``-p<pid>), and with ``pids`` an empty row for each of them
+    that produced no blocks (it still counts as done)."""
+    empty = {"term_lo": "", "term_hi": "", "postings_count": 0, "bytes": 0}
+    return [
+        {
+            "run_id": run_id,
+            "partition_id": p,
+            "segment_id": f"{segment}-p{p}",
+            "input_split": input_split,
+            **{k: (landed[p][k] if p in landed else v) for k, v in empty.items()},
+            "status": "done",
+        }
+        for p in list(landed) + [p for p in pids or () if p not in landed]
+    ]
+
+
+def write_segments_local(
+    spark: SparkSession, postings, seg_dir: str, terms: np.ndarray, cuts: list[str], *,
+    range_docs: int, block_docs: int, avgdl: float, positions: bool,
+) -> dict[int, dict]:
+    """Driver form of :meth:`_SegmentWriter.write` for postings already on
+    the driver: an Arrow table of term, doc_id, tf, dl[, positions]
+    (``term`` may be dictionary-encoded) over the sorted vocabulary
+    ``terms``.  Rows sort by (term_id, doc_id) once; every pid's slab is
+    then a contiguous run, sorted as a shuffle partition is, and goes
+    through the same encoder kernel one slab at a time (a slab's
+    temporaries, not the whole batch's, bound the driver's peak).  The
+    blocks land with one Spark write, partitioned by pid as the writer
+    lands them.  Returns the per-pid aggregates :func:`lineage_rows`
+    takes, so nothing is re-read."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    pids = _term_pids(cuts, terms)
+    encoder = make_arrow_encoder(
+        avgdl=avgdl, block_docs=block_docs, range_docs=int(range_docs),
+        term_dict=(terms, pids), with_positions=positions,
+    )
+    term = postings.column("term").combine_chunks()
+    if not pa.types.is_dictionary(term.type):
+        term = term.dictionary_encode()
+    # dense term ids by an Arrow hash lookup: no string becomes a
+    # python object here
+    tid = pc.index_in(term.dictionary, value_set=pa.array(terms, pa.string())).to_numpy()[
+        term.indices.to_numpy()]
+    doc = postings.column("doc_id").to_numpy()
+    order = np.lexsort((doc, tid))
+    tid, doc = tid[order], doc[order]
+    row_pid = pids[tid]  # non-decreasing: pids rise with term_id
+    cols = ["tf", "dl"] + (["positions"] if positions else [])
+    rest = postings.select(cols).combine_chunks()
+    schema = _segment_schema(False, positions)
+    starts = np.flatnonzero(np.diff(row_pid, prepend=-1))
+    blocks, landed = [], {}
+    for lo, hi in zip(starts, np.append(starts[1:], tid.size)):
+        slab = rest.take(order[lo:hi])
+        batch = pa.RecordBatch.from_arrays(
+            [pa.array(tid[lo:hi]), pa.array(doc[lo:hi])]
+            + [slab.column(c).combine_chunks() for c in cols],
+            names=["term_id", "doc_id"] + cols,
+        )
+        out = next(encoder(iter([batch])))
+        blocks.append(out)
+        landed[int(row_pid[lo])] = {
+            "term_lo": out.column("term")[0].as_py(),
+            "term_hi": out.column("term")[-1].as_py(),
+            "postings_count": pc.sum(out.column("doc_count")).as_py(),
+            "bytes": pc.sum(out.column("nbytes")).as_py(),
+        }
+    (spark.createDataFrame(pa.Table.from_batches(blocks, schema))
+     .write.mode("overwrite").partitionBy("pid").parquet(seg_dir))
+    return landed
 
 
 # ---------------------------------------------------------------------------

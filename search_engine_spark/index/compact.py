@@ -35,10 +35,6 @@ from ..catalog import IndexCatalog
 from .builder import TOKENS_SCHEMA, TOKENS_SCHEMA_POS, _SegmentWriter
 
 
-# postings per compaction encode task
-_TASK_POSTINGS = 1 << 20
-
-
 def _decode_blocks(it):
     """Segment blocks (term, postings[, positions]) back to posting rows
     (term, doc_id, tf, dl[, positions]); a block's position blob splits
@@ -123,9 +119,7 @@ def compact_index(
     ts.repartitionByRange(max(4, n_partitions // 4), "term").sortWithinPartitions(
         "term"
     ).write.mode("overwrite").parquet(out.term_stats)
-    agg = spark.read.parquet(out.term_stats).agg(
-        F.count("*").alias("n"), F.sum("df").alias("p")).collect()[0]
-    n_terms, n_postings = int(agg["n"]), int(agg["p"] or 0)
+    n_terms = spark.read.parquet(out.term_stats).count()
 
     # postings: decode every generation's blocks, re-encode them through
     # the one segment writer on the SAME frozen cuts and grid with the
@@ -139,12 +133,8 @@ def compact_index(
         spark, out.term_stats, n_terms, cuts, n_partitions=n_partitions,
         range_docs=range_docs, block_docs=block_docs, avgdl=avgdl, max_dl=max_dl,
         max_doc_id=max_doc_id, positions=use_pos, dict_budget=dict_budget,
-        # a merge exists to leave fewer, larger files: one encode task (one
-        # file per pid) per _TASK_POSTINGS postings, up to the session's width
-        shuffle_n=min(int(spark.conf.get("spark.sql.shuffle.partitions")),
-                      max(1, -(-n_postings // _TASK_POSTINGS))),
     )
-    writer.write(rows, out.segments)
+    writer.write(rows, out.segments, file_per_pid=True)
     writer.close()
     landed = writer.lineage(out.segments, "compact-0", "compact", f"compacted:{index_dir}")
     out.write_corpus_stats(

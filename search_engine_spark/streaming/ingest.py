@@ -57,25 +57,47 @@ input.
   same analyzer tokenizes ``docs ⋈ broadcast(ids)`` on the executors and
   one ``toArrow`` brings the token rows (never the text) to the driver;
   doc_stats, term df/cf, the batch aggregates and the vocabulary come from
-  numpy/pyarrow; the segment writer encodes one pid slab at a time on the
-  driver (``_SegmentWriter.write_local``, the same kernel) and every table
+  numpy/pyarrow; the batch builder's encoder kernel runs one pid slab at a
+  time on the driver (``builder.write_segments_local``) and every table
   lands with one Spark write.
 - **Distributed** (33 jobs for the same generation): distributed url rank,
   token stream staged as parquet, Spark aggregates, the writer's shuffle
   and ``mapInArrow`` encode, lineage re-read.
 
 Both placements write the same rows with the same column types (pinned by
-tests; only the file count differs: the driver placement writes one file
-per table, and per pid for the segments); generation 0 takes its term cuts
-from ``build_vocab`` over the landed term stats on both.  The bound is
-driver memory, which grows with the batch's (doc, term) rows: the
-collected token rows take ~26 B each as Arrow (term bytes and offset,
-doc_id, tf, dl; ~35 B with positions), and encoding adds a transient
-~140 B per row (sort keys, then one pid slab's kernel temporaries).  On
-the fixture's pages (77 distinct terms in 112 tokens) that is ~13 KB per
-document, so a batch at the bound of 4,096 peaks near 55 MB; web pages
-with ~300 distinct terms would reach ~200 MB.  The 300-page
-``ingest-fresh`` generation raises the driver's peak RSS by ~2 MB.
+tests; only the file count differs: the driver placement writes about one
+file per table, and per pid for the segments); generation 0 takes its term
+cuts from ``build_vocab`` over the landed term stats on both.
+
+The bound is driver memory, not speed.  ``scripts/ingest_placement_bench.py``
+ran both placements on url-sorted fixture batches after a 50-page
+generation 0 (``ingest-fresh`` layout, ``local[4]``, 3 runs each; medians,
+driver vs distributed; ``BENCH/ingest_placement.jsonl``):
+
+=======  =========  ===========  ============================
+pages    driver     distributed  driver peak-RSS rise
+=======  =========  ===========  ============================
+2,048     4.9 s     12.4 s        31 MB
+4,096     7.1 s     15.9 s        59 MB
+8,192    10.3 s     18.0 s       117 MB
+16,384   16.4 s     24.5 s       226 MB
+32,768   22.1 s     32.4 s       448 MB
+=======  =========  ===========  ============================
+
+The driver placement won at every size, and its lead shrank from 2.5x to
+1.5x; no crossover was reached on 4 cores, where both placements tokenize
+on the same executors and the distributed encode has 4 tasks.  On more
+cores the distributed encode scales out and the driver's does not, so the
+crossover moves down.  The driver's peak RSS grew linearly: ~14.5 KB per
+fixture page, ~190–205 B per (doc, term) row (the collected token rows plus
+the encode's transient sort keys and one pid slab's kernel temporaries).
+The distributed placement raised it by at most 15 MB, and the JVM's peak
+showed no trend by placement (GC heap growth dominated both).  The bound
+caps the driver's added peak at about 64 MB on the fixture's pages
+(~77 distinct terms each): 4,096 pages.  A corpus of pages with ~400
+distinct terms would take ~300 MB at the bound; that figure is the
+per-row cost scaled, not a measurement.  The 300-page ``ingest-fresh``
+generation raises the driver's peak RSS by ~2 MB.
 
 Doc-id contract: with ``id_col`` the corpus brings its own unique long ids
 (rebuild-identical by construction).  Without it, ids are
@@ -110,13 +132,16 @@ from ..index.builder import (
     _SegmentWriter,
     assign_doc_ids,
     build_vocab,
+    lineage_rows,
     tokens_from_docs,
     tokens_from_docs_pandas,
     with_extracted_text,
+    write_segments_local,
 )
 
 
-# The driver placement's size bound, in documents (module docstring).
+# The driver placement's size bound, in documents: ~64 MB of added driver
+# peak at ~14.5 KB per fixture page (measured; module docstring).
 SMALL_BATCH_DOCS = 4096
 
 
@@ -309,6 +334,14 @@ def ingest_batch(
     def tokens_of(with_ids: DataFrame) -> DataFrame:
         return tokenize(with_ids.select("doc_id", "url", "text"), positions=use_pos)
 
+    # the corpus' own ids (a missing url falls back to the id's string);
+    # without id_col each placement ranks the urls its own way
+    with_ids = None
+    if id_col is not None:
+        with_ids = docs.withColumn("doc_id", F.col(id_col).cast("long"))
+        if "url" not in with_ids.columns:
+            with_ids = with_ids.withColumn("url", F.col("doc_id").cast("string"))
+
     # per-generation doc stats (hydration + dl; docs with zero tokens keep
     # dl=0) and term-df deltas (the engine and later stats reads aggregate
     # SUM(df) by term across generations) land first; ``batch`` is the
@@ -317,11 +350,11 @@ def ingest_batch(
     tokens_tmp = _gen_dir(os.path.join(index_dir, "tokens_tmp"), epoch)
     if on_driver:
         tokens, vocab, batch = _stage_on_driver(
-            spark, docs, head, id_col, prior_n, dv_cols, tokens_of,
+            spark, docs, head, with_ids, prior_n, dv_cols, tokens_of,
             gen_ds_path, gen_ts_path, _mark)
     else:
-        tokens, vocab, batch = _stage_distributed(
-            spark, docs, id_col, prior_n, dv_cols, tokens_of, cfg.n_partitions,
+        tokens, batch = _stage_distributed(
+            spark, docs, with_ids, prior_n, dv_cols, tokens_of, cfg.n_partitions,
             gen_ds_path, gen_ts_path, tokens_tmp, _mark)
 
     # frozen corpus geometry: generation 0 computes it and commits it to
@@ -360,28 +393,37 @@ def ingest_batch(
     avgdl_build = (prior_dl + batch["sum_dl"]) / max(1, prior_n + batch["n_docs"])
 
     # the batch vocabulary keyed with the FROZEN cuts, encoded on the frozen
-    # grid by the one segment writer (builder._SegmentWriter)
-    writer = _SegmentWriter(
-        spark, gen_ts_path, batch["n_terms"], list(frozen["term_cuts"]),
-        n_partitions=int(frozen["n_partitions"]), range_docs=int(frozen["range_docs"]),
-        block_docs=int(frozen["block_docs"]), avgdl=avgdl_build, max_dl=batch["max_dl"],
-        max_doc_id=batch["max_doc_id"], positions=use_pos, dict_budget=cfg.dict_budget,
-        shuffle_n=cfg.shuffle_partitions, dim=gen0_dim, vocab=vocab,
-    )
-    _mark("vocab")
+    # grid by the batch builder's encoder: on the driver, or through the one
+    # segment writer (builder._SegmentWriter)
+    cuts = list(frozen["term_cuts"])
+    grid = dict(range_docs=int(frozen["range_docs"]), block_docs=int(frozen["block_docs"]),
+                avgdl=avgdl_build, positions=use_pos)
     seg_dir = _gen_dir(cat.segments, epoch)
-    landed = writer.write_local(tokens, seg_dir) if on_driver else writer.write(tokens, seg_dir)
-    _mark("encode")
-    writer.close()
+    lineage_ids = (f"stream-epoch{epoch}", f"gen{epoch}", f"stream-epoch{epoch}")
+    if on_driver:
+        _mark("vocab")
+        landed = write_segments_local(spark, tokens, seg_dir, vocab, cuts, **grid)
+        _mark("encode")
+        rows = lineage_rows(landed, *lineage_ids)
+    else:
+        writer = _SegmentWriter(
+            spark, gen_ts_path, batch["n_terms"], cuts,
+            n_partitions=int(frozen["n_partitions"]), max_dl=batch["max_dl"],
+            max_doc_id=batch["max_doc_id"], dict_budget=cfg.dict_budget,
+            shuffle_n=cfg.shuffle_partitions, dim=gen0_dim, **grid,
+        )
+        _mark("vocab")
+        writer.write(tokens, seg_dir)
+        _mark("encode")
+        writer.close()
+        rows = writer.lineage(seg_dir, *lineage_ids)
     if gen0_ranked is not None:
         gen0_ranked.unpersist()
     shutil.rmtree(tokens_tmp, ignore_errors=True)
+    _mark("lineage")
 
     # lineage (observability; a replay after this append but before the
     # gen_stats commit can duplicate rows — harmless, documented)
-    rows = writer.lineage(seg_dir, f"stream-epoch{epoch}", f"gen{epoch}",
-                          f"stream-epoch{epoch}", landed=landed)
-    _mark("lineage")
     postings = sum(r["postings_count"] for r in rows)
     cat.append_manifest(rows)
 
@@ -418,13 +460,13 @@ def _write_arrow(spark: SparkSession, columns: dict, path: str, schema=None) -> 
         "overwrite").parquet(path)
 
 
-def _stage_on_driver(spark, docs, head, id_col, prior_n, dv_cols, tokens_of,
+def _stage_on_driver(spark, docs, head, with_ids, prior_n, dv_cols, tokens_of,
                      doc_stats_path, term_stats_path, mark):
-    """The driver placement's staging: ids from the collected keys, one
-    collect of the token rows, numpy stats, one Arrow write per table.
-    Returns (token table with a dictionary-encoded ``term``, the sorted
-    vocabulary, the batch row)."""
-    if id_col is None:
+    """The driver placement's staging: ids from the collected keys (or the
+    corpus' own ``with_ids``), one collect of the token rows, numpy stats,
+    one Arrow write per table.  Returns (token table with a
+    dictionary-encoded ``term``, the sorted vocabulary, the batch row)."""
+    if with_ids is None:
         # the dense lexicographic url rank assign_doc_ids computes: Arrow
         # sorts strings by their UTF-8 bytes, which is Spark's string order
         head = head.sort_by("url")
@@ -432,11 +474,8 @@ def _stage_on_driver(spark, docs, head, id_col, prior_n, dv_cols, tokens_of,
             "doc_id", pa.array(prior_n + np.arange(head.num_rows), pa.int64()))
         ids = spark.createDataFrame(head.select(["url", "doc_id"]))
         with_ids = docs.join(F.broadcast(ids), "url")
-    else:
-        with_ids = docs.withColumn("doc_id", F.col(id_col).cast("long"))
-        if "url" not in with_ids.columns:
-            with_ids = with_ids.withColumn("url", F.col("doc_id").cast("string"))
-            head = head.append_column("url", pc.cast(head.column("doc_id"), pa.string()))
+    elif "url" not in head.column_names:
+        head = head.append_column("url", pc.cast(head.column("doc_id"), pa.string()))
     mark("ids")
     # the text stays in the executors: only token rows reach the driver
     tokens = tokens_of(with_ids).toArrow()
@@ -471,16 +510,13 @@ def _stage_on_driver(spark, docs, head, id_col, prior_n, dv_cols, tokens_of,
     return tokens, vocab.to_numpy(zero_copy_only=False), batch
 
 
-def _stage_distributed(spark, docs, id_col, prior_n, dv_cols, tokens_of, n_parts,
+def _stage_distributed(spark, docs, with_ids, prior_n, dv_cols, tokens_of, n_parts,
                        doc_stats_path, term_stats_path, tokens_tmp, mark):
-    """The distributed placement's staging: the token stream staged as
-    parquet, stats by Spark aggregates.  Returns (token DataFrame, None,
-    the batch row)."""
-    if id_col is not None:
+    """The distributed placement's staging: ids ranked by Spark (or the
+    corpus' own ``with_ids``), the token stream staged as parquet, stats by
+    Spark aggregates.  Returns (token DataFrame, the batch row)."""
+    if with_ids is not None:
         ranked = None
-        with_ids = docs.withColumn("doc_id", F.col(id_col).cast("long"))
-        if "url" not in with_ids.columns:
-            with_ids = with_ids.withColumn("url", F.col("doc_id").cast("string"))
         with_ids = with_ids.select("doc_id", "url", "text", *dv_cols)
     else:
         ids, ranked, n_pre = assign_doc_ids(docs, n_parts=n_parts)
@@ -529,7 +565,7 @@ def _stage_distributed(spark, docs, id_col, prior_n, dv_cols, tokens_of, n_parts
     batch = {"n_docs": int(agg["n"]), "sum_dl": int(agg["s"] or 0),
              "max_dl": int(agg["m"] or 0), "max_doc_id": int(agg["mx"] or 0),
              "n_terms": spark.read.parquet(term_stats_path).count()}
-    return tokens, None, batch
+    return tokens, batch
 
 
 def _ensure_stats_fresh(cat: IndexCatalog) -> None:
