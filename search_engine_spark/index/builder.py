@@ -47,6 +47,47 @@ kernel; no RDDs, no per-row Python):
    range, postings count, bytes; committed atomically after each wave so a
    killed build resumes from completed partitions (Iceberg MERGE at cluster
    scale; atomic-rename parquet here — see catalog.py).
+
+Placement: the pipeline above is the distributed plan.  A corpus of at most
+``SMALL_BATCH_DOCS`` documents is staged on the driver instead, the way
+Lucene flushes a small in-memory segment, by the driver stager
+``ingest_batch`` uses for its small generations (``stage_on_driver``).  One
+job decides: the ``limit(SMALL_BATCH_DOCS + 1).toArrow()`` collect of the
+keys (url or ``id_col``, plus the doc values), which on the driver is the
+ids' input; a resume decides from the committed ``n_docs``, with no job.
+On the driver, urls are ranked by Arrow (UTF-8 byte order, Spark's string
+order), the executors tokenize ``corpus ⋈ broadcast(ids)`` and one
+``toArrow`` brings the token rows (never the text) to the driver; doc,
+term and per-field stats come from numpy, the term cuts from
+``vocab_cuts`` (``build_vocab``'s rule, pinned equal), and each wave's pids
+are encoded by the same kernel one pid slab at a time
+(``write_segments_local``) and land with one Spark write, replacing only
+their own partitions.  Both placements write the same tables (pinned by
+tests).  Spark jobs of a 1,000-page build on 4 cores, one wave:
+
+- driver (9): the corpus read's schema job, the key collect, the NFC
+  sample, the token collect (three), one write each for doc_stats,
+  term_stats and the wave's segments;
+- distributed (40; 42 before the placement existed): the key collect, the
+  url rank, the NFC sample, the staged token stream and its Spark
+  aggregates, ``build_vocab`` and the term dimension, the dictionary load,
+  the encode and the lineage collect.
+
+The bound is driver memory, not speed.  ``scripts/ingest_placement_bench.py
+--mode build`` built url-sorted fixture corpora after a 50-page warm-up
+build (``serve-selective`` layout, ``local[4]``, a fresh process per run,
+2 runs each; ``BENCH/build_placement.jsonl``):
+
+=======  ==========  ============  =====================
+pages    driver      distributed   driver peak-RSS rise
+=======  ==========  ============  =====================
+1,000    3.2–3.8 s   11.2–12.3 s    17 MB
+4,096    4.6–5.1 s   12.0–14.1 s    59 MB
+8,192    7.6–8.6 s   18.0–19.6 s   117 MB
+=======  ==========  ============  =====================
+
+As for ingest, the driver placement won at every size and its peak grew
+~14.5 KB per fixture page, so the builds share ingest's bound: 4,096 pages.
 """
 
 from __future__ import annotations
@@ -82,11 +123,20 @@ FIELD_SEP = "\x1f"
 # there the text crosses the wire once, unavoidably.
 _BCAST_DOCS_MAX = 20_000_000
 
+# The driver placement's size bound, in documents, for a build and for an
+# ingest generation alike: ~60 MB of added driver peak at ~14.5 KB per
+# fixture page (measured; this module's and ingest's docstrings).
+SMALL_BATCH_DOCS = 4096
+
 TOKENS_SCHEMA = "term string, doc_id long, tf int, dl int"
 # positional builds carry each (doc, term)'s sorted occurrence offsets
 # through the token stream; the encoder folds them into a per-block varint
 # blob (codec.encode_position_lists) stored as a SEPARATE segment column
 TOKENS_SCHEMA_POS = TOKENS_SCHEMA + ", positions array<int>"
+# the (term, term_id, pid) dimension build_vocab computes; tables this
+# module writes are read back with their schema given, so a read plans
+# without a schema-inference job
+_TERM_DIM_SCHEMA = "term string, term_id long, pid int"
 
 
 @dataclass
@@ -254,7 +304,7 @@ def build_vocab(
     """
     from pyspark.sql import Window
 
-    ts = spark.read.parquet(term_stats_path).select("term", "df")
+    ts = spark.read.schema("term string, df long").parquet(term_stats_path)
     p = max(4, n_partitions // 4)
     ranked = (
         ts.repartitionByRange(p, "term")
@@ -483,7 +533,12 @@ def tokens_from_docs_pandas(docs_with_ids: DataFrame, positions: bool = False) -
 
 
 def with_extracted_text(docs: DataFrame) -> DataFrame:
-    """Fill missing ``text`` from ``html`` via the pinned extractor (Arrow UDF)."""
+    """Fill missing ``text`` from ``html`` via the pinned extractor (Arrow UDF).
+
+    Only the null-text rows go through the UDF: Spark evaluates a Python
+    UDF in its own ``ArrowEvalPython`` node over every row that reaches it,
+    even inside a ``CASE WHEN``, so the rows that carry text take a branch
+    of their own and never leave the JVM."""
     import pyspark.sql.types as T
 
     @F.pandas_udf(T.StringType())
@@ -491,9 +546,8 @@ def with_extracted_text(docs: DataFrame) -> DataFrame:
         return extract_text_series(html)
 
     if "html" in docs.columns and "text" in docs.columns:
-        return docs.withColumn(
-            "text", F.when(F.col("text").isNull(), extract_udf("html")).otherwise(F.col("text"))
-        )
+        missing = docs.filter(F.col("text").isNull()).withColumn("text", extract_udf("html"))
+        return docs.filter(F.col("text").isNotNull()).unionByName(missing)
     if "text" not in docs.columns:
         return docs.withColumn("text", extract_udf("html"))
     return docs
@@ -512,6 +566,17 @@ def _varint_nbytes(v: np.ndarray) -> np.ndarray:
         nb += tmp > 0
         tmp >>= np.uint64(7)
     return nb
+
+
+def _binary_slices(buf: bytes, offsets: np.ndarray):
+    """Arrow binary array whose value i is ``buf[offsets[i]:offsets[i + 1]]``
+    (``offsets`` ascending from 0), sharing ``buf``."""
+    import pyarrow as pa
+
+    if offsets[-1] > np.iinfo(np.int32).max:
+        raise ValueError(f"{offsets[-1]} bytes of blocks exceed one binary array's 2 GiB")
+    return pa.Array.from_buffers(pa.binary(), offsets.size - 1, [
+        None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(buf)])
 
 
 def encode_sorted_arrays(
@@ -569,34 +634,27 @@ def encode_sorted_arrays(
     gaps[1:] = doc[1:] - doc[:-1]
     gaps[blk_starts] = doc[blk_starts]
 
-    # per-value varint widths -> per-block byte spans for each section
-    def section_spans(vals):
-        nb = _varint_nbytes(vals)
-        cum = np.concatenate(([0], np.cumsum(nb)))
-        return cum[blk_starts], cum[blk_ends]  # byte [start, end) per block
-
-    g_lo, g_hi = section_spans(gaps)
-    t_lo, t_hi = section_spans(tf)
-    d_lo, d_hi = section_spans(dl)
-    gap_bytes, tf_bytes, dl_bytes = encode_varints(gaps), encode_varints(tf), encode_varints(dl)
-
     # per-block BM25 tf-norm upper bound (idf applied at query time)
     tf_norm = tf / (tf + K1 * (1.0 - B + B * dl / avgdl))
     max_tf_norm = np.maximum.reduceat(tf_norm, blk_starts)
 
-    # every block's header (gap-section length, tf-section length) in one
-    # encode; then each block is four python-bytes slices, no numpy call
-    # per block (blocks can be as many as a tenth of the postings)
-    h_len = np.stack([g_hi - g_lo, t_hi - t_lo], axis=1).ravel()
-    h_cum = np.concatenate(([0], np.cumsum(_varint_nbytes(h_len))))
-    h_bytes = encode_varints(h_len)
-    postings = [
-        h_bytes[hl:hh] + gap_bytes[gl:gh] + tf_bytes[tl:th] + dl_bytes[dlo:dhi]
-        for hl, hh, gl, gh, tl, th, dlo, dhi in zip(
-            *(a.tolist() for a in (h_cum[:-1:2], h_cum[2::2], g_lo, g_hi, t_lo, t_hi,
-                                   d_lo, d_hi))
-        )
-    ]
+    # every block's blob is varint(gap bytes) varint(tf bytes) gaps tfs
+    # dls: lay all blocks' values out in blob order and encode them in one
+    # pass, so the blobs are consecutive slices of one buffer (no python
+    # object per block; blocks can be as many as a tenth of the postings)
+    cnt = blk_ends - blk_starts
+    blk_of_row = np.repeat(np.arange(blk_starts.size), cnt)
+    header_at = np.concatenate(([0], np.cumsum(2 + 3 * cnt)[:-1]))
+    gap_at = np.arange(n) + (header_at + 2 - blk_starts)[blk_of_row]
+    vals = np.empty(2 * cnt.size + 3 * n, dtype=np.int64)
+    vals[header_at] = np.add.reduceat(_varint_nbytes(gaps), blk_starts)
+    vals[header_at + 1] = np.add.reduceat(_varint_nbytes(tf), blk_starts)
+    vals[gap_at] = gaps
+    vals[gap_at + cnt[blk_of_row]] = tf
+    vals[gap_at + 2 * cnt[blk_of_row]] = dl
+    blob_at = np.concatenate(([0], np.cumsum(_varint_nbytes(vals))))[
+        np.append(header_at, vals.size)]
+    postings = _binary_slices(encode_varints(vals), blob_at)
 
     pos_out = {}
     if pos_flat is not None:
@@ -607,14 +665,9 @@ def encode_sorted_arrays(
         if pos_flat.size:
             pdeltas[1:] = pos_flat[1:] - pos_flat[:-1]
             pdeltas[row_starts_flat] = pos_flat[row_starts_flat]
-        pnb = _varint_nbytes(pdeltas)
-        pcum = np.concatenate(([0], np.cumsum(pnb)))
-        p_lo = pcum[pos_offsets[blk_starts]]
-        p_hi = pcum[pos_offsets[blk_ends]]
-        pos_bytes = encode_varints(pdeltas)
-        pos_out = {
-            "positions": [pos_bytes[lo:hi] for lo, hi in zip(p_lo.tolist(), p_hi.tolist())]
-        }
+        pcum = np.concatenate(([0], np.cumsum(_varint_nbytes(pdeltas))))
+        pos_out = {"positions": _binary_slices(
+            encode_varints(pdeltas), pcum[pos_offsets[np.append(blk_starts, n)]])}
     term_out = (
         {"term": term_uniques.take(term_codes[blk_starts])}
         if term_uniques is not None
@@ -630,7 +683,7 @@ def encode_sorted_arrays(
         "last_doc": doc[blk_ends - 1],
         "doc_count": (blk_ends - blk_starts).astype(np.int32),
         "max_tf_norm": max_tf_norm,
-        "nbytes": np.array([len(p) for p in postings], dtype=np.int64),
+        "nbytes": np.diff(blob_at),
         "postings": postings,
         **pos_out,
     }
@@ -881,7 +934,8 @@ class _SegmentWriter:
     ) -> list[dict]:
         """Manifest rows from what actually landed in ``seg_dir`` (see
         :func:`lineage_rows`)."""
-        seg = self.spark.read.parquet(seg_dir)
+        seg = self.spark.read.schema(
+            "pid int, term string, doc_count int, nbytes long").parquet(seg_dir)
         if pids is not None:
             seg = seg.filter(F.col("pid").isin(pids))
         landed = {
@@ -930,24 +984,26 @@ def lineage_rows(
 def write_segments_local(
     spark: SparkSession, postings, seg_dir: str, terms: np.ndarray, cuts: list[str], *,
     range_docs: int, block_docs: int, avgdl: float, positions: bool,
+    pids: list[int] | None = None, field_avgdl=None,
 ) -> dict[int, dict]:
     """Driver form of :meth:`_SegmentWriter.write` for postings already on
     the driver: an Arrow table of term, doc_id, tf, dl[, positions]
     (``term`` may be dictionary-encoded) over the sorted vocabulary
     ``terms``.  Rows sort by (term_id, doc_id) once; every pid's slab is
-    then a contiguous run, sorted as a shuffle partition is, and goes
-    through the same encoder kernel one slab at a time (a slab's
-    temporaries, not the whole batch's, bound the driver's peak).  The
-    blocks land with one Spark write, partitioned by pid as the writer
-    lands them.  Returns the per-pid aggregates :func:`lineage_rows`
-    takes, so nothing is re-read."""
+    then a contiguous run of that order, sorted as a shuffle partition is,
+    and goes through the same encoder kernel one slab at a time (a slab's
+    temporaries, not the whole batch's, bound the driver's peak).  With
+    ``pids`` (one build wave) only those pids are encoded, and they replace
+    their own partitions only.  The blocks land with one Spark write,
+    partitioned by pid as the writer lands them.  Returns the per-pid
+    aggregates :func:`lineage_rows` takes, so nothing is re-read."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    pids = _term_pids(cuts, terms)
+    term_pid = _term_pids(cuts, terms)
     encoder = make_arrow_encoder(
         avgdl=avgdl, block_docs=block_docs, range_docs=int(range_docs),
-        term_dict=(terms, pids), with_positions=positions,
+        term_dict=(terms, term_pid), with_positions=positions, field_avgdl=field_avgdl,
     )
     term = postings.column("term").combine_chunks()
     if not pa.types.is_dictionary(term.type):
@@ -958,31 +1014,151 @@ def write_segments_local(
         term.indices.to_numpy()]
     doc = postings.column("doc_id").to_numpy()
     order = np.lexsort((doc, tid))
-    tid, doc = tid[order], doc[order]
-    row_pid = pids[tid]  # non-decreasing: pids rise with term_id
-    cols = ["tf", "dl"] + (["positions"] if positions else [])
-    rest = postings.select(cols).combine_chunks()
-    schema = _segment_schema(False, positions)
-    starts = np.flatnonzero(np.diff(row_pid, prepend=-1))
+    # pids rise with term_id, so pid p's rows are order[bound[p]:bound[p + 1]]
+    n_pids = max([len(cuts), *(pids or ())]) + 1
+    bound = np.concatenate(([0], np.cumsum(np.bincount(term_pid[tid], minlength=n_pids))))
+    rest = postings.select(["tf", "dl"] + (["positions"] if positions else []))
     blocks, landed = [], {}
-    for lo, hi in zip(starts, np.append(starts[1:], tid.size)):
-        slab = rest.take(order[lo:hi])
+    for p in range(n_pids) if pids is None else pids:
+        rows = order[bound[p]:bound[p + 1]]
+        if not rows.size:
+            continue
+        slab = rest.take(rows)
         batch = pa.RecordBatch.from_arrays(
-            [pa.array(tid[lo:hi]), pa.array(doc[lo:hi])]
-            + [slab.column(c).combine_chunks() for c in cols],
-            names=["term_id", "doc_id"] + cols,
+            [pa.array(tid[rows]), pa.array(doc[rows])]
+            + [c.combine_chunks() for c in slab.columns],
+            names=["term_id", "doc_id"] + slab.column_names,
         )
         out = next(encoder(iter([batch])))
         blocks.append(out)
-        landed[int(row_pid[lo])] = {
+        landed[p] = {
             "term_lo": out.column("term")[0].as_py(),
             "term_hi": out.column("term")[-1].as_py(),
             "postings_count": pc.sum(out.column("doc_count")).as_py(),
             "bytes": pc.sum(out.column("nbytes")).as_py(),
         }
-    (spark.createDataFrame(pa.Table.from_batches(blocks, schema))
-     .write.mode("overwrite").partitionBy("pid").parquet(seg_dir))
+    if blocks or pids is None:
+        w = spark.createDataFrame(
+            pa.Table.from_batches(blocks, _segment_schema(False, positions))
+        ).write.mode("overwrite")
+        if pids is not None:
+            w = w.option("partitionOverwriteMode", "dynamic")
+        w.partitionBy("pid").parquet(seg_dir)
     return landed
+
+
+def corpus_ids(docs: DataFrame, id_col: str) -> DataFrame:
+    """``docs`` keyed by the corpus' own unique ids: ``doc_id`` is
+    ``id_col`` as a long, and a corpus without urls gets the id's string as
+    its ``url``."""
+    out = docs.withColumn("doc_id", F.col(id_col).cast("long"))
+    if "url" not in out.columns:
+        out = out.withColumn("url", F.col("doc_id").cast("string"))
+    return out
+
+
+def vocab_cuts(terms: np.ndarray, df: np.ndarray, n_partitions: int) -> list[str]:
+    """:func:`build_vocab`'s postings-weighted term cuts, from the sorted
+    vocabulary and its dfs on the driver: cut k is the first term whose
+    cumulative df reaches ``k * (Σ df // n_partitions)``, for the k whose
+    target the vocabulary reaches (so a mega-term repeats a cut, and
+    ``n_partitions > Σ df`` gives fewer cuts, exactly as there)."""
+    if not len(terms):
+        return []
+    g = np.cumsum(df, dtype=np.int64)
+    per_part = max(1, int(g[-1]) // n_partitions)
+    k = per_part * np.arange(1, n_partitions, dtype=np.int64)
+    return [str(t) for t in terms[np.searchsorted(g, k[k <= g[-1]], "left")]]
+
+
+def write_arrow(spark: SparkSession, columns: dict, path: str, schema=None) -> None:
+    """One Spark write of driver-side Arrow columns to ``path``, through
+    Spark's committer (``_SUCCESS`` marker included).  ``schema`` pins Spark
+    types that Arrow cannot tell apart (a naive Arrow timestamp is either
+    TIMESTAMP or TIMESTAMP_NTZ)."""
+    import pyarrow as pa
+
+    spark.createDataFrame(pa.table(columns), schema=schema).write.mode(
+        "overwrite").parquet(path)
+
+
+def stage_on_driver(spark, docs, head, with_ids, prior_n, dv_cols, tokens_of,
+                    doc_stats_path, term_stats_path, mark, fields: bool = False):
+    """The driver placement's staging, shared by ``build_index`` and
+    ``ingest_batch``: ids from the collected keys ``head`` (url plus the
+    doc values; urls are ranked here, after ``prior_n`` earlier documents)
+    or the corpus' own ``with_ids``, one collect of the token rows (never
+    the text), numpy stats, one Arrow write each for doc_stats and
+    term_stats.  ``fields`` (a multi-field build) adds per-field doc
+    counts, avgdls and first term ids.  Returns (token table with a
+    dictionary-encoded ``term``, the sorted vocabulary, its dfs, the batch
+    aggregates)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql import types as T
+
+    if with_ids is None:
+        # the dense lexicographic url rank assign_doc_ids computes: Arrow
+        # sorts strings by their UTF-8 bytes, which is Spark's string order
+        head = head.sort_by("url")
+        head = head.append_column(
+            "doc_id", pa.array(prior_n + np.arange(head.num_rows), pa.int64()))
+        ids = spark.createDataFrame(head.select(["url", "doc_id"]))
+        with_ids = docs.join(F.broadcast(ids), "url")
+    mark("ids")
+    tokens = tokens_of(with_ids).toArrow()
+    mark("tokenize")
+
+    # the chunks share one dictionary: only their indices concatenate
+    term = tokens.column("term").dictionary_encode().combine_chunks()
+    tokens = tokens.set_column(tokens.schema.get_field_index("term"), "term", term)
+    codes = term.indices.to_numpy()
+    by_term = pc.array_sort_indices(term.dictionary).to_numpy()
+    vocab_arr = term.dictionary.take(by_term)
+    vocab = vocab_arr.to_numpy(zero_copy_only=False)
+    n_terms = len(vocab)
+    ids = head.column("doc_id").to_numpy()
+    by_id = np.argsort(ids, kind="stable")
+    row_doc = by_id[np.searchsorted(ids[by_id], tokens.column("doc_id").to_numpy())]
+    if fields:
+        # a multi-field row's dl is its field's length: one (doc, field)
+        # grid of lengths gives the doc's dl (their sum) and each field's
+        # doc count and avgdl; field keys are contiguous in the sorted
+        # vocabulary, so a field's first term id is where its prefix starts
+        prefix = np.array([t.split(FIELD_SEP, 1)[0] for t in vocab], dtype=object)
+        tid_lo = np.flatnonzero(np.r_[True, prefix[1:] != prefix[:-1]])
+        rank = np.empty(n_terms, dtype=np.int64)
+        rank[by_term] = np.arange(n_terms)
+        row_field = np.searchsorted(tid_lo, rank[codes], side="right") - 1
+        per_field = np.zeros((head.num_rows, tid_lo.size), dtype=np.int64)
+        per_field[row_doc, row_field] = tokens.column("dl").to_numpy()
+        dl = per_field.sum(axis=1).astype(np.int32)
+        doc_count, sum_dl = (per_field > 0).sum(axis=0), per_field.sum(axis=0)
+        field_stats = {
+            str(prefix[lo]): {"doc_count": int(n), "avgdl": float(s) / int(n), "tid_lo": int(lo)}
+            for lo, n, s in zip(tid_lo, doc_count, sum_dl)
+        }
+    else:
+        dl = np.zeros(head.num_rows, dtype=np.int32)
+        # every token row of a doc carries that doc's length
+        dl[row_doc] = tokens.column("dl").to_numpy()
+    write_arrow(spark, {"doc_id": head.column("doc_id"), "url": head.column("url"),
+                        "dl": pa.array(dl), **{c: head.column(c) for c in dv_cols}},
+                doc_stats_path, schema=T.StructType(
+                    [T.StructField("doc_id", T.LongType()), T.StructField("url", T.StringType()),
+                     T.StructField("dl", T.IntegerType())] + [docs.schema[c] for c in dv_cols]))
+    mark("doc_stats")
+
+    df = np.bincount(codes, minlength=n_terms)[by_term]
+    cf = np.bincount(codes, weights=tokens.column("tf").to_numpy(), minlength=n_terms)
+    write_arrow(spark, {"term": vocab_arr, "df": pa.array(df, pa.int64()),
+                        "cf": pa.array(cf[by_term].astype(np.int64))}, term_stats_path)
+    mark("term_stats")
+    batch = {"n_docs": head.num_rows, "sum_dl": int(dl.sum()), "max_dl": int(dl.max()),
+             "max_doc_id": int(ids.max()), "n_terms": n_terms}
+    if fields:
+        batch["fields"] = field_stats
+    return tokens, vocab, df, batch
 
 
 # ---------------------------------------------------------------------------
@@ -998,7 +1174,12 @@ def build_index(
     fail_after_wave: int | None = None,  # test hook for kill/resume
     id_col: str | None = None,  # pre-assigned unique long doc ids (skips rank)
 ) -> dict:
-    """Build (or resume) the index for ``corpus_path`` under ``index_dir``."""
+    """Build (or resume) the index for ``corpus_path`` under ``index_dir``.
+
+    A corpus of at most ``SMALL_BATCH_DOCS`` documents is staged on the
+    driver, a larger one by the distributed plan (module docstring); both
+    write the same tables.  A resume keeps the placement the committed
+    ``n_docs`` implies."""
     import time as _time
 
     phase_t: dict[str, float] = {}
@@ -1007,12 +1188,12 @@ def build_index(
     def _mark(name):
         nonlocal _t0
         now = _time.time()
-        phase_t[name] = round(now - _t0, 2)
+        phase_t[name] = round(phase_t.get(name, 0.0) + now - _t0, 2)
         _t0 = now
 
     cfg = cfg or BuildConfig()
     cat = IndexCatalog(index_dir)
-    docs_raw = spark.read.parquet(corpus_path)
+    docs = spark.read.parquet(corpus_path)
 
     done = cat.completed_partitions()
     phase1_done = -1 in done and cat.has_corpus_stats()
@@ -1027,49 +1208,73 @@ def build_index(
         use_pos = bool(_committed.get("with_positions", False))
         field_cols = tuple(_committed["field_cols"]) if _committed.get("field_cols") else None
         dv_cols = tuple(_committed.get("docvalues_cols") or ())
-    content_cols = list(field_cols) if field_cols else ["text"]
+    tokens_schema = TOKENS_SCHEMA_POS if use_pos else TOKENS_SCHEMA
+    # the corpus' own ids; without id_col each placement ranks the urls
+    with_ids = corpus_ids(docs, id_col) if id_col is not None else None
 
     # multi-field corpora carry their named field columns directly; the
-    # html->text extraction contract only applies to the single-field build
-    docs = docs_raw if field_cols else with_extracted_text(docs_raw)
-    if id_col is not None:
-        # corpus carries its own unique long id; synthesize a url key from it
-        # and drop the source column so later joins on doc_id are unambiguous
-        docs = docs.withColumn("doc_id_pre", F.col(id_col).cast("long")).drop(id_col)
-        if "url" not in docs.columns:
-            docs = docs.withColumn("url", F.col("doc_id_pre").cast("string"))
-
+    # html->text extraction contract only applies to the single-field build.
     # JVM tokenize assumes NFC input; the analyzer is resolved once per
     # build (on first use: resume paths that never re-tokenize never pay
     # the sample collect)
     tokenizer: list[str] = []
 
-    def _tokenize(df):
+    def tokens_of(df):
+        if not field_cols:
+            df = with_extracted_text(df)
         if not tokenizer:
-            tokenizer.append(_resolve_tokenizer(docs, cfg.tokenizer, field_cols))
+            tokenizer.append(_resolve_tokenizer(
+                docs if field_cols else with_extracted_text(docs), cfg.tokenizer, field_cols))
         if tokenizer[0] == "pandas":
             return tokens_from_docs_pandas(df, positions=use_pos)
         return tokens_from_docs(df, positions=use_pos, fields=field_cols)
 
-    if not phase1_done:
-        if id_col is not None:
-            doc_ids = docs.select("url", F.col("doc_id_pre").alias("doc_id"))
-            ranked = None
-            small = True
-        else:
+    tokens = None
+    if phase1_done:
+        on_driver = int(_committed["n_docs"]) <= SMALL_BATCH_DOCS
+    else:
+        missing = [c for c in dv_cols if c not in docs.columns]
+        if missing:
+            raise ValueError(
+                f"docvalues_cols not in the corpus: {missing}; "
+                f"corpus columns: {sorted(docs.columns)}"
+            )
+        # one job picks the placement: the keys (and doc values) of up to
+        # SMALL_BATCH_DOCS + 1 documents, on the driver the ids' input
+        head = (with_ids.select("doc_id", "url", *dv_cols) if with_ids is not None
+                else docs.select("url", *dv_cols)).limit(SMALL_BATCH_DOCS + 1).toArrow()
+        if head.num_rows == 0:
+            raise ValueError(f"corpus {corpus_path} holds no documents")
+        on_driver = head.num_rows <= SMALL_BATCH_DOCS
+
+    def stage_mark(name):
+        # the stager's ids and tokenize phases are the build's plan_phase1
+        _mark("plan_phase1" if name in ("ids", "tokenize") else name)
+
+    if not phase1_done and on_driver:
+        tokens, vocab, df, batch = stage_on_driver(
+            spark, docs, head, with_ids, 0, dv_cols, tokens_of, cat.doc_stats,
+            cat.term_stats, stage_mark, fields=bool(field_cols))
+        cuts = vocab_cuts(vocab, df, cfg.n_partitions)
+        _mark("term_dim")
+        n_docs, total_dl, n_terms = batch["n_docs"], batch["sum_dl"], batch["n_terms"]
+        max_dl, max_doc_id = batch["max_dl"], batch["max_doc_id"]
+        field_stats = batch.get("fields") or {}
+        total_postings = int(df.sum())
+    elif not phase1_done:
+        if with_ids is None:
             doc_ids, ranked, n_docs_pre = assign_doc_ids(docs, n_parts=cfg.n_partitions)
             small = n_docs_pre <= _BCAST_DOCS_MAX
-        joined = (
-            docs.join(F.broadcast(doc_ids) if small else doc_ids, "url")
-            .select("doc_id", "url", *content_cols)
-        )
+            with_ids = docs.join(F.broadcast(doc_ids) if small else doc_ids, "url")
+        else:
+            ranked = None
         # Materialize the token stream as compressed columnar parquet rather
         # than executor-memory cache: at 10^8+ rows an in-memory cache causes
         # GC pressure that *worsens* with core count (measured: doc_stats
         # slower at 32 cores than 8), while parquet gives column-pruned
         # re-reads for the stats passes and survives for resume.
-        _tokenize(joined).write.mode("overwrite").parquet(cat.tokens_tmp)
-        tokens = spark.read.parquet(cat.tokens_tmp)
+        tokens_of(with_ids).write.mode("overwrite").parquet(cat.tokens_tmp)
+        tokens = spark.read.schema(tokens_schema).parquet(cat.tokens_tmp)
 
         # corpus + term stats in one pass over tokens; url kept so results can
         # hydrate and so resume reuses the committed doc_id assignment
@@ -1082,36 +1287,15 @@ def build_index(
             dl_df = per_fd.groupBy("doc_id").agg(F.sum("dl").alias("dl"))
         else:
             dl_df = tokens.groupBy("doc_id").agg(F.max("dl").alias("dl"))
-        doc_stats = doc_ids.join(dl_df, "doc_id", "left").select(
-            "doc_id", "url", F.coalesce("dl", F.lit(0)).alias("dl")
-        )
-        if dv_cols:
-            # doc-values sidecar: ride the per-doc attribute columns on the
-            # doc_stats parquet (column-pruned away by every existing reader;
-            # predicate-pushed by the engine's range/equals filter scan).
-            # Join key = the corpus's identity: doc_id_pre when the caller
-            # supplied unique ids (urls may then repeat — a url join would
-            # multiply doc_stats rows and corrupt n_docs/avgdl), url
-            # otherwise (unique by contract; ids are its dense rank).
-            missing = [c for c in dv_cols if c not in docs.columns]
-            if missing:
-                raise ValueError(
-                    f"docvalues_cols not in the corpus: {missing}; "
-                    f"corpus columns: {sorted(docs.columns)}"
-                )
-            if id_col is not None:
-                dv_df = docs.select(
-                    F.col("doc_id_pre").alias("doc_id"), *dv_cols
-                )
-                doc_stats = doc_stats.join(dv_df, "doc_id", "left")
-            else:
-                doc_stats = doc_stats.join(
-                    docs.select("url", *dv_cols), "url", "left"
-                )
+        # the doc-values sidecar rides the per-doc attribute columns on the
+        # doc_stats parquet (column-pruned away by every existing reader;
+        # predicate-pushed by the engine's range/equals filter scan)
+        doc_stats = with_ids.select("doc_id", "url", *dv_cols).join(dl_df, "doc_id", "left").select(
+            "doc_id", "url", F.coalesce("dl", F.lit(0)).cast("int").alias("dl"), *dv_cols)
         _mark("plan_phase1")
         doc_stats.write.mode("overwrite").parquet(cat.doc_stats)
         _mark("doc_stats")
-        agg = spark.read.parquet(cat.doc_stats).agg(
+        agg = spark.read.schema("doc_id long, dl int").parquet(cat.doc_stats).agg(
             F.count("*").alias("n_docs"),
             F.sum("dl").alias("total_dl"),
             F.max("dl").alias("max_dl"),
@@ -1121,7 +1305,6 @@ def build_index(
         max_dl = int(agg["max_dl"] or 0)
         # ranked ids are dense (n_docs - 1), but id_col ids can be anything
         max_doc_id = int(agg["max_doc_id"] or 0)
-        avgdl = total_dl / n_docs
         field_stats: dict[str, dict] = {}
         if field_cols:
             frows = per_fd.groupBy("field").agg(
@@ -1134,15 +1317,6 @@ def build_index(
                 }
                 for r in frows
             }
-            # the scalar stat keeps the old "largest per-field avgdl"
-            # convention (any reader of stats["avgdl"] sees a value at which
-            # every baked bound would be sound), but the blocks themselves
-            # are baked per-field below (per_field_mtn): each posting's
-            # tf_norm is computed at ITS field's avgdl — the exact quantity
-            # query-time scoring uses — so block bounds are tight AND
-            # attained, which keeps the WAND θ floor sound on compound
-            # queries instead of merely keeping the upper bound sound.
-            avgdl = max(s["avgdl"] for s in field_stats.values())
 
         term_stats = tokens.groupBy("term").agg(
             F.count("*").alias("df"), F.sum("tf").alias("cf")
@@ -1169,7 +1343,7 @@ def build_index(
             # starts (works in BOTH dict and id mode — no strings needed
             # kernel-side).  #fields rows, asserted contiguous + exhaustive.
             frng = (
-                spark.read.parquet(cat.term_dim)
+                spark.read.schema(_TERM_DIM_SCHEMA).parquet(cat.term_dim)
                 .groupBy(F.substring_index("term", FIELD_SEP, 1).alias("field"))
                 .agg(
                     F.min("term_id").alias("lo"),
@@ -1190,6 +1364,21 @@ def build_index(
                         f"[{r['lo']}, {r['hi']}] holds {r['cnt']} terms"
                     )
                 field_stats[r["field"]]["tid_lo"] = int(r["lo"])
+        if ranked is not None:
+            ranked.unpersist()
+
+    if not phase1_done:
+        avgdl = total_dl / n_docs
+        if field_cols:
+            # the scalar stat keeps the old "largest per-field avgdl"
+            # convention (any reader of stats["avgdl"] sees a value at which
+            # every baked bound would be sound), but the blocks themselves
+            # are baked per-field below (per_field_mtn): each posting's
+            # tf_norm is computed at ITS field's avgdl — the exact quantity
+            # query-time scoring uses — so block bounds are tight AND
+            # attained, which keeps the WAND θ floor sound on compound
+            # queries instead of merely keeping the upper bound sound.
+            avgdl = max(s["avgdl"] for s in field_stats.values())
         range_docs = max(cfg.min_range_docs, -(-n_docs // cfg.target_ranges))
         cat.write_corpus_stats(
             {
@@ -1236,10 +1425,6 @@ def build_index(
                 }
             ]
         )
-        if ranked is not None:
-            ranked.unpersist()
-    else:
-        tokens = None
 
     stats = cat.read_corpus_stats()
     avgdl, range_docs, block_docs = stats["avgdl"], stats["range_docs"], stats["block_docs"]
@@ -1255,6 +1440,7 @@ def build_index(
             "avgdl": avgdl,
             "partitions_built": built,
             "partitions_skipped": len(done - {-1}),
+            "placement": "driver" if on_driver else "distributed",
             "manifest_rows": m.num_rows,
             "total_bytes": sum(
                 b
@@ -1269,29 +1455,6 @@ def build_index(
     if not pending:
         return _result(0)
 
-    if tokens is None:
-        # resume path: reuse the materialized token stream if it survived;
-        # else rebuild it deterministically, joining the COMMITTED doc_id
-        # assignment from doc_stats so segment contents are bit-identical to
-        # the interrupted run.
-        if os.path.exists(os.path.join(cat.tokens_tmp, "_SUCCESS")):
-            cand = spark.read.parquet(cat.tokens_tmp)
-            # a surviving stream from before the positional layout cannot
-            # serve a positional resume; fall through to the rebuild
-            if not use_pos or "positions" in cand.columns:
-                tokens = cand
-        if tokens is None:
-            committed = spark.read.parquet(cat.doc_stats).select("url", "doc_id")
-            small = stats["n_docs"] <= _BCAST_DOCS_MAX
-            docs_with_ids = docs.join(
-                F.broadcast(committed) if small else committed, "url"
-            ).select("doc_id", *content_cols)
-            _tokenize(docs_with_ids).write.mode("overwrite").parquet(cat.tokens_tmp)
-            tokens = spark.read.parquet(cat.tokens_tmp)
-
-    n_terms = int(stats.get("n_terms", -1))
-    if n_terms < 0:
-        n_terms = spark.read.parquet(cat.term_stats).count()
     # multi-field per-field bound bake: (sorted field tid starts, avgdls)
     # for the encoder's term_id -> field-avgdl searchsorted.  Requires the
     # tid_lo ranges written by THIS builder version; a resume of an older
@@ -1313,34 +1476,79 @@ def build_index(
             np.array([p[0] for p in pairs], dtype=np.int64),
             np.array([p[1] for p in pairs], dtype=np.float64),
         )
-    # the committed term dimension serves the id-mode joins; a resume that
-    # lost it rebuilds it from the COMMITTED cuts, so pids match the
-    # already-written segments
-    has_dim = os.path.exists(os.path.join(cat.term_dim, "_SUCCESS"))
-    writer = _SegmentWriter(
-        spark, cat.term_stats, n_terms, cuts, n_partitions=n_partitions,
-        range_docs=range_docs, block_docs=block_docs, avgdl=avgdl,
-        # an index whose stats predate max_doc_id resumes with int64 ids
-        max_dl=int(stats.get("max_dl", 1 << 30)), max_doc_id=int(stats.get("max_doc_id", 1 << 31)),
-        positions=use_pos, dict_budget=cfg.dict_budget,
-        shuffle_n=cfg.shuffle_partitions, field_avgdl=field_avgdl,
-        dim=spark.read.parquet(cat.term_dim) if has_dim else None,
-    )
+
+    if tokens is None:
+        # resume path: rebuild the token stream deterministically, joining
+        # the COMMITTED doc_id assignment from doc_stats so segment contents
+        # are bit-identical to the interrupted run (the distributed
+        # placement first reuses a surviving materialized stream)
+        if not on_driver and os.path.exists(os.path.join(cat.tokens_tmp, "_SUCCESS")):
+            cand = spark.read.parquet(cat.tokens_tmp)
+            # a surviving stream from before the positional layout cannot
+            # serve a positional resume; fall through to the rebuild
+            if not use_pos or "positions" in cand.columns:
+                tokens = cand
+        if tokens is None:
+            if with_ids is None:
+                committed = spark.read.parquet(cat.doc_stats).select("url", "doc_id")
+                small = stats["n_docs"] <= _BCAST_DOCS_MAX
+                with_ids = docs.join(F.broadcast(committed) if small else committed, "url")
+            tokens = tokens_of(with_ids)
+            if on_driver:
+                import pyarrow.compute as pc
+
+                tokens = tokens.toArrow()
+                terms = pc.unique(tokens.column("term"))
+                vocab = terms.take(pc.array_sort_indices(terms)).to_numpy(zero_copy_only=False)
+            else:
+                tokens.write.mode("overwrite").parquet(cat.tokens_tmp)
+                tokens = spark.read.schema(tokens_schema).parquet(cat.tokens_tmp)
+
+    if on_driver:
+        def write_wave(w: int, pids: list[int], split: str) -> list[dict]:
+            landed = write_segments_local(
+                spark, tokens, cat.segments, vocab, cuts, range_docs=range_docs,
+                block_docs=block_docs, avgdl=avgdl, positions=use_pos, pids=pids,
+                field_avgdl=field_avgdl)
+            _mark(f"wave{w}_segments")
+            return lineage_rows(landed, run_id, run_id, split, pids=pids)
+        close = None
+    else:
+        n_terms = int(stats.get("n_terms", -1))
+        if n_terms < 0:
+            n_terms = spark.read.parquet(cat.term_stats).count()
+        # the committed term dimension serves the id-mode joins; a resume
+        # that lost it rebuilds it from the COMMITTED cuts, so pids match
+        # the already-written segments
+        has_dim = os.path.exists(os.path.join(cat.term_dim, "_SUCCESS"))
+        writer = _SegmentWriter(
+            spark, cat.term_stats, n_terms, cuts, n_partitions=n_partitions,
+            range_docs=range_docs, block_docs=block_docs, avgdl=avgdl,
+            # an index whose stats predate max_doc_id resumes with int64 ids
+            max_dl=int(stats.get("max_dl", 1 << 30)),
+            max_doc_id=int(stats.get("max_doc_id", 1 << 31)),
+            positions=use_pos, dict_budget=cfg.dict_budget,
+            shuffle_n=cfg.shuffle_partitions, field_avgdl=field_avgdl,
+            dim=spark.read.schema(_TERM_DIM_SCHEMA).parquet(cat.term_dim) if has_dim else None,
+        )
+
+        def write_wave(w: int, pids: list[int], split: str) -> list[dict]:
+            writer.write(tokens, cat.segments, pids=pids)
+            _mark(f"wave{w}_segments")
+            return writer.lineage(cat.segments, run_id, run_id, split, pids=pids)
+        close = writer.close
 
     # wave loop: commit manifest rows per wave; resume skips done partitions
     wave_size = max(1, -(-n_partitions // cfg.waves))
     waves = [pending[i : i + wave_size] for i in range(0, len(pending), wave_size)]
     try:
         for w, wave_pids in enumerate(waves):
-            writer.write(tokens, cat.segments, pids=wave_pids)
-            _mark(f"wave{w}_segments")
-            cat.append_manifest(writer.lineage(
-                cat.segments, run_id, run_id, f"{corpus_path}#wave{w}", pids=wave_pids
-            ))
+            cat.append_manifest(write_wave(w, wave_pids, f"{corpus_path}#wave{w}"))
             if fail_after_wave is not None and w + 1 >= fail_after_wave:
                 raise RuntimeError(f"injected failure after wave {w}")
     finally:
-        writer.close()
+        if close is not None:
+            close()
 
     import shutil
 

@@ -754,12 +754,14 @@ class SearchEngine:
         self._fuzzy_cache: dict[tuple, list[str]] = {}
         # lazy per-dictionary-term Soundex keys (expand_phonetic)
         self._phonetic_keys: np.ndarray | None = None
-        n_terms = self._term_stats_df.count()
-        if n_terms <= _TERM_DICT_CACHE_MAX:
-            pdf = (
-                self._term_stats_df.groupBy("term").agg(F.sum("df").alias("df"))
-                .toPandas().sort_values("term")
-            )
+        # one collect both loads the dictionary and decides whether it fits:
+        # a limit one past the cache bound counts distinct terms
+        pdf = (
+            self._term_stats_df.groupBy("term").agg(F.sum("df").alias("df"))
+            .limit(_TERM_DICT_CACHE_MAX + 1).toPandas()
+        )
+        if len(pdf) <= _TERM_DICT_CACHE_MAX:
+            pdf = pdf.sort_values("term")
             self._terms_arr = pdf["term"].to_numpy(dtype=object)
             self._dfs_arr = pdf["df"].to_numpy(dtype=np.int64)
         # resident iff the dictionary is cached and the index's total

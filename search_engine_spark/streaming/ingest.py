@@ -44,8 +44,9 @@ generations merged at read time.  This module is that design on Spark:
 
 Placement: a small generation is staged on the driver, the way Lucene
 flushes a small in-memory segment without a distributed plan.  The rule is
-the batch's own size: a batch of at most ``SMALL_BATCH_DOCS`` documents
-takes the driver placement, a larger one the distributed plan.  Choosing
+the batch's own size: a batch of at most ``builder.SMALL_BATCH_DOCS``
+documents (the bound ``build_index`` places by too) takes the driver
+placement, a larger one the distributed plan.  Choosing
 costs no extra job: the one job that collects the keys (url or ``id_col``,
 plus the doc values) of up to ``SMALL_BATCH_DOCS + 1`` documents is also
 the emptiness check, and on the driver placement the keys are the doc-id
@@ -57,17 +58,21 @@ input.
   same analyzer tokenizes ``docs ⋈ broadcast(ids)`` on the executors and
   one ``toArrow`` brings the token rows (never the text) to the driver;
   doc_stats, term df/cf, the batch aggregates and the vocabulary come from
-  numpy/pyarrow; the batch builder's encoder kernel runs one pid slab at a
-  time on the driver (``builder.write_segments_local``) and every table
-  lands with one Spark write.
+  numpy/pyarrow (``builder.stage_on_driver``, the build's driver stager
+  too); the batch builder's encoder kernel runs one pid slab at a time on
+  the driver (``builder.write_segments_local``) and every table lands
+  with one Spark write.
 - **Distributed** (33 jobs for the same generation): distributed url rank,
   token stream staged as parquet, Spark aggregates, the writer's shuffle
   and ``mapInArrow`` encode, lineage re-read.
 
 Both placements write the same rows with the same column types (pinned by
 tests; only the file count differs: the driver placement writes about one
-file per table, and per pid for the segments); generation 0 takes its term
-cuts from ``build_vocab`` over the landed term stats on both.
+file per table, and per pid for the segments).  Generation 0 takes its
+term cuts from ``builder.vocab_cuts`` over the driver's vocabulary on the
+driver placement and from ``build_vocab`` over the landed term stats on
+the distributed one: the same cuts (pinned by test), without
+``build_vocab``'s Spark jobs where nothing needs its term dimension.
 
 The bound is driver memory, not speed.  ``scripts/ingest_placement_bench.py``
 ran both placements on url-sorted fixture batches after a 50-page
@@ -116,33 +121,32 @@ import shutil
 import time
 from dataclasses import dataclass
 
-import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..catalog import IndexCatalog
+from ..index import builder
 from ..index.builder import (
     _BCAST_DOCS_MAX,
+    TOKENS_SCHEMA,
+    TOKENS_SCHEMA_POS,
     BuildConfig,
     _resolve_tokenizer,
     _SegmentWriter,
     assign_doc_ids,
     build_vocab,
+    corpus_ids,
     lineage_rows,
+    stage_on_driver,
     tokens_from_docs,
     tokens_from_docs_pandas,
+    vocab_cuts,
     with_extracted_text,
+    write_arrow,
     write_segments_local,
 )
-
-
-# The driver placement's size bound, in documents: ~64 MB of added driver
-# peak at ~14.5 KB per fixture page (measured; module docstring).
-SMALL_BATCH_DOCS = 4096
 
 
 def _gen_dir(root: str, epoch: int) -> str:
@@ -263,19 +267,21 @@ def ingest_batch(
     frozen_pre = _read_frozen(index_dir)
     dv_cols = tuple(cfg.docvalues_cols or ()) if frozen_pre is None else tuple(
         frozen_pre.get("docvalues_cols") or ())
-    docs = with_extracted_text(batch_df)
+    # the corpus' own ids (a missing url falls back to the id's string);
+    # without id_col each placement ranks the urls its own way
+    with_ids = corpus_ids(batch_df, id_col) if id_col is not None else None
     # the placement choice doubles as the emptiness check: one job collects
     # the keys (and doc values) of up to SMALL_BATCH_DOCS + 1 documents
-    keys = ([F.col(id_col).cast("long").alias("doc_id")]
-            + (["url"] if "url" in docs.columns else [])) if id_col else ["url"]
-    head = docs.select(*keys, *[c for c in dv_cols if c in docs.columns]).limit(
-        SMALL_BATCH_DOCS + 1).toArrow()
+    keys = ["doc_id", "url"] if with_ids is not None else ["url"]
+    head = (with_ids if with_ids is not None else batch_df).select(
+        *keys, *[c for c in dv_cols if c in batch_df.columns]).limit(
+        builder.SMALL_BATCH_DOCS + 1).toArrow()
     if head.num_rows == 0:
         # an empty trigger must not become a generation — at gen 0 it would
         # freeze empty term cuts for the index's whole life
         _ensure_stats_fresh(cat)
         return IngestResult(epoch=epoch, skipped=True)
-    on_driver = head.num_rows <= SMALL_BATCH_DOCS
+    on_driver = head.num_rows <= builder.SMALL_BATCH_DOCS
 
     _mark("preamble")
     prior = _committed_gens(index_dir, before=epoch)
@@ -310,7 +316,7 @@ def ingest_batch(
     # field existed fall back to the old per-batch sampling).
     tokenizer = (frozen_pre or {}).get("tokenizer")
     if tokenizer is None:
-        tokenizer = _resolve_tokenizer(docs, cfg.tokenizer)
+        tokenizer = _resolve_tokenizer(with_extracted_text(batch_df), cfg.tokenizer)
     elif cfg.tokenizer not in ("auto", tokenizer):
         raise ValueError(
             f"index at {index_dir} was frozen with tokenizer={tokenizer!r}; "
@@ -323,24 +329,17 @@ def ingest_batch(
             f"{dv_cols}; ingest cfg.docvalues_cols="
             f"{tuple(cfg.docvalues_cols)} does not match"
         )
-    missing_dv = [c for c in dv_cols if c not in docs.columns]
+    missing_dv = [c for c in dv_cols if c not in batch_df.columns]
     if missing_dv:
         raise ValueError(
             f"batch is missing docvalues columns {missing_dv}; "
-            f"batch columns: {sorted(docs.columns)}"
+            f"batch columns: {sorted(batch_df.columns)}"
         )
     tokenize = tokens_from_docs if tokenizer == "jvm" else tokens_from_docs_pandas
 
     def tokens_of(with_ids: DataFrame) -> DataFrame:
-        return tokenize(with_ids.select("doc_id", "url", "text"), positions=use_pos)
-
-    # the corpus' own ids (a missing url falls back to the id's string);
-    # without id_col each placement ranks the urls its own way
-    with_ids = None
-    if id_col is not None:
-        with_ids = docs.withColumn("doc_id", F.col(id_col).cast("long"))
-        if "url" not in with_ids.columns:
-            with_ids = with_ids.withColumn("url", F.col("doc_id").cast("string"))
+        return tokenize(with_extracted_text(with_ids).select("doc_id", "url", "text"),
+                        positions=use_pos)
 
     # per-generation doc stats (hydration + dl; docs with zero tokens keep
     # dl=0) and term-df deltas (the engine and later stats reads aggregate
@@ -349,12 +348,13 @@ def ingest_batch(
     gen_ds_path, gen_ts_path = _gen_dir(cat.doc_stats, epoch), _gen_dir(cat.term_stats, epoch)
     tokens_tmp = _gen_dir(os.path.join(index_dir, "tokens_tmp"), epoch)
     if on_driver:
-        tokens, vocab, batch = _stage_on_driver(
-            spark, docs, head, with_ids, prior_n, dv_cols, tokens_of,
+        tokens, vocab, df, batch = stage_on_driver(
+            spark, batch_df, head, with_ids, prior_n, dv_cols, tokens_of,
             gen_ds_path, gen_ts_path, _mark)
     else:
         tokens, batch = _stage_distributed(
-            spark, docs, with_ids, prior_n, dv_cols, tokens_of, cfg.n_partitions,
+            spark, batch_df, with_ids, prior_n, dv_cols, tokens_of,
+            TOKENS_SCHEMA_POS if use_pos else TOKENS_SCHEMA, cfg.n_partitions,
             gen_ds_path, gen_ts_path, tokens_tmp, _mark)
 
     # frozen corpus geometry: generation 0 computes it and commits it to
@@ -368,12 +368,15 @@ def ingest_batch(
     gen0_dim = gen0_ranked = None
     if frozen is None:
         n_partitions = cfg.n_partitions
-        # the (term, term_id, pid) dim this pass computes alongside the cuts
-        # is exactly what an id-mode encode needs: hand it to the writer
-        # instead of paying the distributed vocabulary pass a second time
-        cuts, _, gen0_dim, gen0_ranked, _ = build_vocab(
-            spark, gen_ts_path, n_partitions
-        )
+        if on_driver:
+            cuts = vocab_cuts(vocab, df, n_partitions)
+        else:
+            # the (term, term_id, pid) dim this pass computes alongside the
+            # cuts is exactly what an id-mode encode needs: hand it to the
+            # writer instead of paying the distributed vocabulary pass twice
+            cuts, _, gen0_dim, gen0_ranked, _ = build_vocab(
+                spark, gen_ts_path, n_partitions
+            )
         size_basis = expected_docs or batch["n_docs"]
         frozen = {
             "term_cuts": cuts,
@@ -432,7 +435,7 @@ def ingest_batch(
     # the partition directory name (gen=E), not a data column — partition
     # discovery on the root supplies it at read time.  One Arrow row, so
     # the write needs no Python worker.
-    _write_arrow(spark, {
+    write_arrow(spark, {
         "n_docs": pa.array([batch["n_docs"]], pa.int64()),
         "sum_dl": pa.array([batch["sum_dl"]], pa.int64()),
         "max_dl": pa.array([batch["max_dl"]], pa.int32()),
@@ -451,80 +454,19 @@ def ingest_batch(
     )
 
 
-def _write_arrow(spark: SparkSession, columns: dict, path: str, schema=None) -> None:
-    """One Spark write of driver-side Arrow columns to ``path``, through
-    Spark's committer (``_SUCCESS`` marker included).  ``schema`` pins Spark
-    types that Arrow cannot tell apart (a naive Arrow timestamp is either
-    TIMESTAMP or TIMESTAMP_NTZ)."""
-    spark.createDataFrame(pa.table(columns), schema=schema).write.mode(
-        "overwrite").parquet(path)
-
-
-def _stage_on_driver(spark, docs, head, with_ids, prior_n, dv_cols, tokens_of,
-                     doc_stats_path, term_stats_path, mark):
-    """The driver placement's staging: ids from the collected keys (or the
-    corpus' own ``with_ids``), one collect of the token rows, numpy stats,
-    one Arrow write per table.  Returns (token table with a
-    dictionary-encoded ``term``, the sorted vocabulary, the batch row)."""
-    if with_ids is None:
-        # the dense lexicographic url rank assign_doc_ids computes: Arrow
-        # sorts strings by their UTF-8 bytes, which is Spark's string order
-        head = head.sort_by("url")
-        head = head.append_column(
-            "doc_id", pa.array(prior_n + np.arange(head.num_rows), pa.int64()))
-        ids = spark.createDataFrame(head.select(["url", "doc_id"]))
-        with_ids = docs.join(F.broadcast(ids), "url")
-    elif "url" not in head.column_names:
-        head = head.append_column("url", pc.cast(head.column("doc_id"), pa.string()))
-    mark("ids")
-    # the text stays in the executors: only token rows reach the driver
-    tokens = tokens_of(with_ids).toArrow()
-    mark("tokenize")
-
-    ids = head.column("doc_id").to_numpy()
-    by_id = np.argsort(ids, kind="stable")
-    dl = np.zeros(head.num_rows, dtype=np.int32)
-    # every token row of a doc carries that doc's length
-    dl[by_id[np.searchsorted(ids[by_id], tokens.column("doc_id").to_numpy())]] = (
-        tokens.column("dl").to_numpy())
-    _write_arrow(spark, {"doc_id": head.column("doc_id"), "url": head.column("url"),
-                         "dl": pa.array(dl), **{c: head.column(c) for c in dv_cols}},
-                 doc_stats_path, schema=T.StructType(
-                     [T.StructField("doc_id", T.LongType()), T.StructField("url", T.StringType()),
-                      T.StructField("dl", T.IntegerType())] + [docs.schema[c] for c in dv_cols]))
-    mark("doc_stats")
-
-    term = tokens.column("term").combine_chunks().dictionary_encode()
-    tokens = tokens.set_column(tokens.schema.get_field_index("term"), "term", term)
-    codes = term.indices.to_numpy()
-    by_term = pc.array_sort_indices(term.dictionary).to_numpy()
-    vocab = term.dictionary.take(by_term)
-    n_terms = len(vocab)
-    df = np.bincount(codes, minlength=n_terms)[by_term]
-    cf = np.bincount(codes, weights=tokens.column("tf").to_numpy(), minlength=n_terms)
-    _write_arrow(spark, {"term": vocab, "df": pa.array(df, pa.int64()),
-                         "cf": pa.array(cf[by_term].astype(np.int64))}, term_stats_path)
-    mark("term_stats")
-    batch = {"n_docs": head.num_rows, "sum_dl": int(dl.sum()), "max_dl": int(dl.max()),
-             "max_doc_id": int(ids.max()), "n_terms": n_terms}
-    return tokens, vocab.to_numpy(zero_copy_only=False), batch
-
-
-def _stage_distributed(spark, docs, with_ids, prior_n, dv_cols, tokens_of, n_parts,
-                       doc_stats_path, term_stats_path, tokens_tmp, mark):
+def _stage_distributed(spark, docs, with_ids, prior_n, dv_cols, tokens_of, tokens_schema,
+                       n_parts, doc_stats_path, term_stats_path, tokens_tmp, mark):
     """The distributed placement's staging: ids ranked by Spark (or the
     corpus' own ``with_ids``), the token stream staged as parquet, stats by
     Spark aggregates.  Returns (token DataFrame, the batch row)."""
-    if with_ids is not None:
-        ranked = None
-        with_ids = with_ids.select("doc_id", "url", "text", *dv_cols)
-    else:
+    ranked = None
+    if with_ids is None:
         ids, ranked, n_pre = assign_doc_ids(docs, n_parts=n_parts)
         ids = ids.select("url", (F.col("doc_id") + F.lit(prior_n)).alias("doc_id"))
         # broadcast budget mirrors build_index: a catch-up batch draining a
         # huge backlog must fall back to the shuffled join
         ids = F.broadcast(ids) if n_pre <= _BCAST_DOCS_MAX else ids
-        with_ids = docs.join(ids, "url").select("doc_id", "url", "text", *dv_cols)
+        with_ids = docs.join(ids, "url")
 
     mark("ids_plan")
     # Materialize the generation's token stream as compressed columnar
@@ -535,7 +477,7 @@ def _stage_distributed(spark, docs, with_ids, prior_n, dv_cols, tokens_of, n_par
     # Every downstream consumer (doc stats, term stats, encode) re-reads
     # column-pruned.
     tokens_of(with_ids).write.mode("overwrite").parquet(tokens_tmp)
-    tokens = spark.read.parquet(tokens_tmp)
+    tokens = spark.read.schema(tokens_schema).parquet(tokens_tmp)
     mark("tokenize")
 
     dl_df = tokens.groupBy("doc_id").agg(F.max("dl").alias("dl"))
@@ -546,7 +488,7 @@ def _stage_distributed(spark, docs, with_ids, prior_n, dv_cols, tokens_of, n_par
     )
     doc_stats.write.mode("overwrite").parquet(doc_stats_path)
     mark("doc_stats")
-    agg = spark.read.parquet(doc_stats_path).agg(
+    agg = spark.read.schema("doc_id long, dl int").parquet(doc_stats_path).agg(
         F.count("*").alias("n"),
         F.sum("dl").alias("s"),
         F.max("dl").alias("m"),
@@ -564,7 +506,7 @@ def _stage_distributed(spark, docs, with_ids, prior_n, dv_cols, tokens_of, n_par
     # size is a parquet row-count — no re-shuffle of the token table
     batch = {"n_docs": int(agg["n"]), "sum_dl": int(agg["s"] or 0),
              "max_dl": int(agg["m"] or 0), "max_doc_id": int(agg["mx"] or 0),
-             "n_terms": spark.read.parquet(term_stats_path).count()}
+             "n_terms": spark.read.schema("term string").parquet(term_stats_path).count()}
     return tokens, batch
 
 

@@ -96,8 +96,9 @@ def spark_jobs(spark, fn):
 
 def landed_rows(spark, index_dir):
     """Every row an index's tables hold, as sorted pandas frames (segments,
-    doc_stats, term_stats and gen_stats, the ``gen`` key included), the
-    manifest less ``committed_at``, and each table's Spark schema."""
+    doc_stats, term_stats and, on a generational index, gen_stats, the
+    ``gen`` key included), each table's Spark schema, ``corpus_stats.json``
+    and the manifest less ``committed_at``."""
     from search_engine_spark.catalog import IndexCatalog
 
     cat = IndexCatalog(index_dir)
@@ -108,10 +109,13 @@ def landed_rows(spark, index_dir):
         ("term_stats", cat.term_stats, ["term"]),
         ("gen_stats", os.path.join(index_dir, "gen_stats"), []),
     ):
+        if not os.path.exists(path):
+            continue
         df = spark.read.parquet(path)
         keys = (["gen"] if "gen" in df.columns else []) + keys
         out[name] = df.toPandas().sort_values(keys).reset_index(drop=True)
         out[name + ".schema"] = df.schema.simpleString()
+    out["corpus_stats"] = cat.read_corpus_stats()
     out["manifest"] = (
         cat.read_manifest().drop(["committed_at"]).to_pandas()
         .sort_values(["run_id", "partition_id"]).reset_index(drop=True)
@@ -123,7 +127,7 @@ def assert_same_rows(a, b):
     """``landed_rows`` of two indexes are equal, table by table."""
     assert a.keys() == b.keys()
     for name in a:
-        if name.endswith(".schema"):
+        if name.endswith(".schema") or name == "corpus_stats":
             assert a[name] == b[name], name
         else:
             assert a[name].equals(b[name]), name

@@ -117,3 +117,43 @@ def test_position_lists_deltas_restart_per_doc():
     buf = encode_position_lists(flat, counts)
     assert buf == bytes([2, 5, 2, 5])
     assert decode_position_lists(buf, counts).tolist() == [2, 7, 2, 7]
+
+
+def test_slab_encoder_matches_per_block_codec():
+    """The build's slab kernel (``encode_sorted_arrays``, every block's
+    blob cut from one varint stream) writes, block for block, what the
+    per-block codec writes: ``encode_postings`` of the block's doc ids, tfs
+    and dls, and ``encode_position_lists`` of its positions."""
+    from search_engine_spark.index.builder import encode_sorted_arrays
+    from search_engine_spark.index.codec import encode_position_lists
+
+    rng = np.random.default_rng(13)
+    for trial in range(24):
+        n = int(rng.integers(1, 3000))
+        codes = np.sort(rng.integers(0, int(rng.integers(1, 40)), n))
+        doc = np.concatenate([
+            np.sort(rng.choice(10 ** int(rng.integers(4, 12)), int((codes == t).sum()),
+                               replace=False))
+            for t in np.unique(codes)]).astype(np.int64)
+        tf = rng.integers(1, (2, 300, 1 << 20)[trial % 3], n)
+        dl = tf + rng.integers(0, 5000, n)
+        sseg = doc // int(rng.integers(1, 10 ** 6))
+        order = np.lexsort((doc, sseg, codes))
+        codes, doc, tf, dl, sseg = codes[order], doc[order], tf[order], dl[order], sseg[order]
+        lens = np.minimum(tf, 20)
+        pos_offsets = np.concatenate(([0], np.cumsum(lens)))
+        pos_flat = np.concatenate([np.sort(rng.choice(10 ** 6, k, replace=False)) for k in lens])
+        cols = encode_sorted_arrays(
+            codes, np.array([f"t{i}" for i in range(codes.max() + 1)], dtype=object), sseg,
+            doc, tf, dl, None, 100.0, int(rng.integers(1, 200)), pos_flat, pos_offsets)
+        lo = 0
+        for b, (blob, pos) in enumerate(zip(cols["postings"].to_pylist(),
+                                            cols["positions"].to_pylist())):
+            hi = lo + int(cols["doc_count"][b])
+            assert doc[lo] == cols["first_doc"][b] and doc[hi - 1] == cols["last_doc"][b]
+            assert blob == encode_postings(doc[lo:hi], tf[lo:hi], dl[lo:hi]), (trial, b)
+            assert len(blob) == cols["nbytes"][b]
+            assert pos == encode_position_lists(
+                pos_flat[pos_offsets[lo]:pos_offsets[hi]], lens[lo:hi]), (trial, b)
+            lo = hi
+        assert lo == n

@@ -256,6 +256,7 @@ def test_ids_at_or_above_2_31(spark, webtext_tiny, tmp_path, monkeypatch):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from search_engine_spark.index import builder
     from search_engine_spark.index.builder import BuildConfig, build_index
     from search_engine_spark.oracle import OracleIndex
     from search_engine_spark.query.engine import SearchEngine
@@ -274,7 +275,7 @@ def test_ids_at_or_above_2_31(spark, webtext_tiny, tmp_path, monkeypatch):
     assert SearchEngine(spark, built).stats["max_doc_id"] == base + 99
     indexes = [built]
     for bound in (100, 99):
-        monkeypatch.setattr(ingest_mod, "SMALL_BATCH_DOCS", bound)
+        monkeypatch.setattr(builder, "SMALL_BATCH_DOCS", bound)
         indexes.append(str(tmp_path / f"ingested_{bound}"))
         r = ingest_mod.ingest_batch(spark, spark.read.parquet(corpus), indexes[-1], 0,
                                     cfg=cfg, id_col="my_id")
@@ -289,3 +290,80 @@ def test_ids_at_or_above_2_31(spark, webtext_tiny, tmp_path, monkeypatch):
                 assert [int(d) for d in got.page["doc_id"]] == [base + d for d, _ in want.hits]
                 np.testing.assert_allclose(got.page["score"], [s for _, s in want.hits],
                                            rtol=0, atol=1e-9)
+
+
+def test_vocab_cuts_equal_build_vocab(spark, index_tiny, tmp_path):
+    """The driver placement's term cuts (``vocab_cuts``, numpy over the
+    sorted vocabulary's dfs) are ``build_vocab``'s, on the 1,000-page
+    vocabulary at several partition counts, on a table whose mega-terms
+    repeat a cut, and where the partitions outnumber the postings."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from search_engine_spark.catalog import IndexCatalog
+    from search_engine_spark.index.builder import build_vocab, vocab_cuts
+
+    tiny = pq.read_table(IndexCatalog(index_tiny).term_stats, columns=["term", "df"])
+    mega = pa.table({"term": [f"t{i:02d}" for i in range(12)],
+                     "df": pa.array([1, 1, 900, 2, 1, 400, 1, 1, 1, 3, 250, 1], pa.int64())})
+    few = pa.table({"term": ["a", "b", "c"], "df": pa.array([2, 1, 2], pa.int64())})
+    for name, tbl, ns in (("tiny", tiny, (1, 2, 4, 8, 64, 103, 104, 105, 257)),
+                          ("mega", mega, (2, 3, 8, 16)), ("few", few, (8,))):
+        tbl = tbl.sort_by("term")
+        path = str(tmp_path / name)
+        spark.createDataFrame(tbl).write.parquet(path)
+        terms = tbl.column("term").to_numpy(zero_copy_only=False)
+        df = tbl.column("df").to_numpy()
+        for n in ns:
+            cuts, total, _, ranked, _ = build_vocab(spark, path, n)
+            ranked.unpersist()
+            assert vocab_cuts(terms, df, n) == cuts, (name, n)
+            assert total == df.sum()
+            if name == "mega" and n == 16:
+                assert len(set(cuts)) < len(cuts)
+            if name == "few":
+                assert len(cuts) < n - 1
+
+
+def test_extraction_runs_only_on_null_text(spark, webtext_tiny, tmp_path):
+    """``with_extracted_text`` fills null ``text`` from ``html`` and sends
+    only those rows through the extraction UDF: a corpus of mixed null and
+    non-null text tokenizes as the same corpus filled on the driver does,
+    and the rows that carry text take a union branch with no
+    ``ArrowEvalPython`` in its physical plan."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from search_engine_spark.analysis.text import extract_text_series
+    from search_engine_spark.index.builder import tokens_from_docs, with_extracted_text
+
+    tbl = pq.read_table(webtext_tiny, columns=["url", "html", "text"]).slice(0, 90)
+    tbl = tbl.append_column("doc_id", pa.array(np.arange(90), pa.int64()))
+    null = pa.array(np.arange(90) % 3 == 0)
+    mixed = tbl.set_column(2, "text", pc.if_else(null, pa.nulls(90, pa.string()), tbl["text"]))
+    filled = extract_text_series(mixed.column("html").to_pandas()).where(
+        null.to_numpy(zero_copy_only=False), mixed.column("text").to_pandas())
+    want_tbl = mixed.set_column(2, "text", pa.array(filled, pa.string()))
+    dirs = {}
+    for name, t in (("mixed", mixed), ("filled", want_tbl)):
+        dirs[name] = str(tmp_path / name)
+        os.makedirs(dirs[name])
+        pq.write_table(t, os.path.join(dirs[name], "part-0.parquet"))
+
+    def tokens(df):
+        return tokens_from_docs(df).toPandas().sort_values(["doc_id", "term"]).reset_index(
+            drop=True)
+
+    docs = with_extracted_text(spark.read.parquet(dirs["mixed"]))
+    assert tokens(docs).equals(tokens(spark.read.parquet(dirs["filled"])))
+    # the physical plan is a Union; split it into its two children
+    plan = docs._jdf.queryExecution().executedPlan().toString().splitlines()
+    at = next(i for i, line in enumerate(plan) if line.lstrip(" +-:").startswith("Union"))
+    indent = len(plan[at]) - len(plan[at].lstrip(" +-:"))
+    second = next(i for i in range(at + 1, len(plan)) if plan[i][indent:].startswith("+- "))
+    with_text, without = "\n".join(plan[at + 1:second]), "\n".join(plan[second:])
+    assert "ArrowEvalPython" not in with_text and "isnotnull(text" in with_text, plan
+    assert "ArrowEvalPython" in without and "isnull(text" in without, plan

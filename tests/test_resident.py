@@ -171,14 +171,14 @@ def test_residency_rule(spark, index_tiny, monkeypatch):
 
 @pytest.mark.parametrize("fixture", ["index_tiny", "inc_index"])
 def test_open_job_count(spark, fixture, request):
-    """Opening a resident engine runs 7 Spark jobs, on a batch index and a
+    """Opening a resident engine runs 5 Spark jobs, on a batch index and a
     generational one alike: doc_stats' schema inference (its doc-values
-    column types are not recorded), the dictionary's size and its load (two
-    each: a shuffle stage and a result) and the two resident tables.
-    Segments and term_stats open with their known schemas, so neither
-    infers one."""
+    column types are not recorded), the dictionary's one grouped collect,
+    which also decides whether it is cached (a shuffle stage and a result),
+    and the two resident tables.  Segments and term_stats open with their
+    known schemas, so neither infers one."""
     idx = request.getfixturevalue(fixture)
     SearchEngine(spark, idx)  # warm: the counts are of a steady open
     eng, jobs = spark_jobs(spark, lambda: SearchEngine(spark, idx))
     assert eng._resident is not None
-    assert len(jobs) == 7, jobs
+    assert len(jobs) == 5, jobs

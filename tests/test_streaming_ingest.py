@@ -399,14 +399,14 @@ def test_ingest_id_mode_identical_to_broadcast_vocab(spark, corpora, monkeypatch
     to the broadcast path on the same waves, and so must the driver
     placement's (which keeps its vocabulary on the driver at any
     budget)."""
-    from search_engine_spark.streaming import ingest as ingest_mod
+    from search_engine_spark.index import builder
 
     tbl, base = corpora
     slices = [(0, 500), (500, 500)]
     outs = {}
     for name, budget, bound in (("bcast", 2_000_000, 0), ("idmode", 1, 0),
                                 ("driver", 1, 500)):
-        monkeypatch.setattr(ingest_mod, "SMALL_BATCH_DOCS", bound)
+        monkeypatch.setattr(builder, "SMALL_BATCH_DOCS", bound)
         idx = os.path.join(base, f"vocab_{name}_idx")
         waves = write_waves(tbl, os.path.join(base, f"vocab_{name}"), slices)
         for e, w in enumerate(waves):
@@ -424,14 +424,14 @@ def test_small_generation_jobs_and_placement_bound(spark, corpora, monkeypatch):
     token rows, one write per table); one document more takes the
     distributed plan.  Both write the same rows, positions and doc values
     included."""
-    from search_engine_spark.streaming import ingest as ingest_mod
+    from search_engine_spark.index import builder
 
     tbl, base = corpora
     waves = write_waves(tbl, os.path.join(base, "bound"), [(0, 50), (50, 300)])
     cfg = BuildConfig(**INGEST_CFG, positions=True, docvalues_cols=("lang", "warc_ts"))
     outs = {}
     for placement, bound in (("driver", 300), ("distributed", 299)):
-        monkeypatch.setattr(ingest_mod, "SMALL_BATCH_DOCS", bound)
+        monkeypatch.setattr(builder, "SMALL_BATCH_DOCS", bound)
         idx = os.path.join(base, f"bound_{placement}_idx")
         ingest_batch(spark, spark.read.parquet(waves[0]), idx, 0, cfg=cfg)
         batch = spark.read.parquet(waves[1])
@@ -451,7 +451,7 @@ def test_driver_url_rank_is_spark_string_order(spark, tmp_path, monkeypatch):
     placements assign the same doc ids."""
     import pandas as pd
 
-    from search_engine_spark.streaming import ingest as ingest_mod
+    from search_engine_spark.index import builder
 
     prefix = "https://example.org/" + "a/" * 40
     tails = ["b", "a", "é", "\uffff", "\U00010000", "Z", "aa", "a\x00"]
@@ -459,7 +459,7 @@ def test_driver_url_rank_is_spark_string_order(spark, tmp_path, monkeypatch):
         {"url": [prefix + t for t in tails], "text": ["milk oil"] * len(tails)}))
     ids = {}
     for placement, bound in (("driver", len(tails)), ("distributed", 0)):
-        monkeypatch.setattr(ingest_mod, "SMALL_BATCH_DOCS", bound)
+        monkeypatch.setattr(builder, "SMALL_BATCH_DOCS", bound)
         idx = str(tmp_path / placement)
         assert ingest_batch(spark, batch, idx, 0, cfg=BuildConfig(**INGEST_CFG)).placement == placement
         ids[placement] = landed_rows(spark, idx)["doc_stats"][["doc_id", "url"]]
